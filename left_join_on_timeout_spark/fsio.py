@@ -35,10 +35,13 @@ index lifecycle.
 
 from __future__ import annotations
 
+import atexit
 import os
 import shutil
 
 from pyspark.sql import SparkSession
+
+_exit_removed: set[str] = set()
 
 
 def _is_local(path: str) -> bool:
@@ -47,6 +50,18 @@ def _is_local(path: str) -> bool:
     FileSystem API, so tests can exercise the Hadoop branch with a
     ``file:`` URI on a local disk."""
     return "://" not in path and not path.startswith("file:")
+
+
+def process_dir(name: str, parent: str = "/tmp") -> str:
+    """``<parent>/<name>_<pid>``: a local directory this process owns,
+    removed at interpreter exit. Keyed by PID so two concurrent runs
+    (bench + tests, or two sessions) never share one; the removal is
+    registered once per path. Not created here."""
+    path = os.path.join(parent, f"{name}_{os.getpid()}")
+    if path not in _exit_removed:
+        atexit.register(shutil.rmtree, path, ignore_errors=True)
+        _exit_removed.add(path)
+    return path
 
 
 def _hadoop(spark: SparkSession, path: str):

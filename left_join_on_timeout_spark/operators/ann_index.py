@@ -109,9 +109,6 @@ from left_join_on_timeout_spark.partitioning import fan_out
 # them across runs.
 INDEX_FORMAT_VERSION = 3
 
-_cleanup_registered = False
-
-
 def default_index_root() -> str:
     """Root directory the registered queries save their indexes under.
     ``SPARK_GRAFT_INDEX_DIR`` pins a shared location (the deployment
@@ -121,18 +118,8 @@ def default_index_root() -> str:
     a sibling's lazy search plan is still reading (ADVICE r7). The
     PID-keyed default is removed at interpreter exit (ADVICE r8 — a
     bench/test process must not abandon a corpus-sized tree in /tmp)."""
-    root = os.environ.get("SPARK_GRAFT_INDEX_DIR")
-    if root:
-        return root
-    path = f"/tmp/spark_graft_index_{os.getpid()}"
-    global _cleanup_registered
-    if not _cleanup_registered:
-        import atexit
-        import shutil
-
-        atexit.register(shutil.rmtree, path, ignore_errors=True)
-        _cleanup_registered = True
-    return path
+    return (os.environ.get("SPARK_GRAFT_INDEX_DIR")
+            or fsio.process_dir("spark_graft_index"))
 
 
 def _postings_dir(path: str, seq: int) -> str:

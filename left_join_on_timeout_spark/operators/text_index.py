@@ -77,6 +77,13 @@ from left_join_on_timeout_spark.operators.retrieval import (
 
 DEFAULT_TERM_BUCKETS = 64
 
+
+class DuplicateIdsError(ValueError):
+    """An append batch re-offers ids the index already serves (see
+    :func:`text_index_append`); every other append error is a plain
+    ``ValueError``."""
+
+
 _META_SCHEMA = ("version INT, id_col STRING, id_type STRING, "
                 "n_buckets INT, n_docs BIGINT, avgdl DOUBLE, "
                 "token_mode STRING, ngram_n INT, seq INT")
@@ -751,7 +758,7 @@ def text_index_append(new_docs: DataFrame, spark: SparkSession,
                      .join(F.broadcast(batch_ids), "id", "left_semi")
                      .distinct().limit(3).collect())
             if clash:
-                raise ValueError(
+                raise DuplicateIdsError(
                     f"append batch re-inserts already-indexed ids "
                     f"{sorted(r.id for r in clash)}… at {path} — a "
                     f"same-id re-append double-counts tf (word tier) "

@@ -9,7 +9,6 @@ drift, and timestamp truncation in either text codec.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -17,6 +16,7 @@ from pyspark.sql import functions as F
 from left_join_on_timeout_spark.queries import query
 from left_join_on_timeout_spark.sources.formats import read_format, stage_as
 from left_join_on_timeout_spark.sources.tables import load_table
+from left_join_on_timeout_spark.streaming.harness import scratch_dir
 
 _COLS = ["event_id", "ts", "user_id", "event_type", "value"]
 
@@ -35,7 +35,7 @@ def q_multi_format_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     reads preserve longs, doubles, strings, and microsecond timestamps
     bit-for-bit — verified against the parquet original."""
     ev = load_table(spark, sf_dir, "events").select(*_COLS)
-    base = tempfile.mkdtemp(prefix="ljot_formats_")
+    base = scratch_dir("ljot_formats_")
     jpath = stage_as(ev.where(F.col("event_id") % 2 == 0), base, "json")
     cpath = stage_as(ev.where(F.col("event_id") % 2 == 1), base, "csv")
     schema = ev.schema
@@ -72,7 +72,7 @@ def q_schema_evolution_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     prove the merge behavior itself."""
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "lang")
-    base = tempfile.mkdtemp(prefix="ljot_evolve_")
+    base = scratch_dir("ljot_evolve_")
     v1_dir = os.path.join(base, "v1")
     v2_dir = os.path.join(base, "v2")
     docs.where(F.col("doc_id") % 2 == 0).select("doc_id", "text") \

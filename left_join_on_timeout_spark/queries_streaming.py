@@ -22,9 +22,12 @@ from left_join_on_timeout_spark.queries_sampling import (
     quality_gate,
 )
 from left_join_on_timeout_spark.sources.tables import load_table
-from left_join_on_timeout_spark.streaming.harness import drain_stream
-
-_FLUSH_TS = "2100-01-01 00:00:00"
+from left_join_on_timeout_spark.streaming.harness import (
+    drain_stream,
+    drain_two_streams,
+    scratch_dir,
+    with_flush_row,
+)
 
 
 @query("stream_dedup_keys", """
@@ -62,9 +65,6 @@ def q_stream_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch GROUP BY date_trunc is an exact oracle for the finalized
     windows."""
     ev = load_table(spark, sf_dir, "events").select("ts", "event_type")
-    sentinel = spark.range(1).select(
-        F.lit(_FLUSH_TS).cast("timestamp").alias("ts"),
-        F.lit("__flush__").alias("event_type"))
 
     def build(s: DataFrame) -> DataFrame:
         return (s.withWatermark("ts", "1 second")
@@ -73,7 +73,8 @@ def q_stream_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .select(F.col("window.start").alias("hour_start"),
                         "event_type", "n"))
 
-    out = drain_stream(spark, ev.unionAll(sentinel), build)
+    out = drain_stream(
+        spark, with_flush_row(ev, {"event_type": "__flush__"}), build)
     return out.where(F.col("event_type") != "__flush__")
 
 
@@ -89,8 +90,6 @@ def q_stream_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark passes its end, flushed by the sentinel. Oracle: the batch
     k-offset construction."""
     ev = load_table(spark, sf_dir, "events").select("ts")
-    sentinel = spark.range(1).select(
-        F.lit(_FLUSH_TS).cast("timestamp").alias("ts"))
 
     def build(s: DataFrame) -> DataFrame:
         return (s.withWatermark("ts", "1 second")
@@ -98,7 +97,7 @@ def q_stream_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .agg(F.count("*").alias("n"))
                 .select(F.col("w.start").alias("win_start"), "n"))
 
-    out = drain_stream(spark, ev.unionAll(sentinel), build)
+    out = drain_stream(spark, with_flush_row(ev), build)
     return out.where(F.col("win_start") < "2099-01-01")
 
 
@@ -127,9 +126,6 @@ def q_stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     filters itself out. Oracle: the batch gaps-and-islands rewrite (>= on
     the gap — Spark merges only on strict overlap)."""
     ev = load_table(spark, sf_dir, "events").select("user_id", "ts")
-    sentinel = spark.range(1).select(
-        F.lit(-1).cast("long").alias("user_id"),
-        F.lit(_FLUSH_TS).cast("timestamp").alias("ts"))
 
     def build(s: DataFrame) -> DataFrame:
         return (s.withWatermark("ts", "1 second")
@@ -140,7 +136,7 @@ def q_stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
                         F.col("w.start").alias("session_start"),
                         "n_events"))
 
-    out = drain_stream(spark, ev.unionAll(sentinel), build)
+    out = drain_stream(spark, with_flush_row(ev, {"user_id": -1}), build)
     return out.where(F.col("user_id") >= 0)
 
 
@@ -159,9 +155,6 @@ def q_stream_timeout_only(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows — stream-stream LEFT ANTI isn't supported, the filter drops
     matches before the sink). Same oracle as the batch ``timeout_only``."""
     from left_join_on_timeout_spark.queries import _events_split
-    from left_join_on_timeout_spark.streaming.harness import (
-        drain_two_streams,
-    )
     from left_join_on_timeout_spark.streaming.timeout_join import (
         timeout_only_stream,
     )
@@ -189,9 +182,6 @@ def q_stream_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     the reference's matched/timeout dichotomy as two driver-checked
     queries."""
     from left_join_on_timeout_spark.queries import _events_split
-    from left_join_on_timeout_spark.streaming.harness import (
-        drain_two_streams,
-    )
     from left_join_on_timeout_spark.streaming.timeout_join import (
         semi_join_stream,
     )
@@ -478,9 +468,6 @@ def q_stream_dynamic_timeout_left_join(spark: SparkSession,
     window's edge because the CASE fails beyond it. Same oracle as the
     batch form."""
     from left_join_on_timeout_spark.queries import _events_split
-    from left_join_on_timeout_spark.streaming.harness import (
-        drain_two_streams,
-    )
 
     left, right = _events_split(spark, sf_dir)
 
@@ -818,7 +805,6 @@ def q_stream_ann_probe_refresh(spark: SparkSession,
     UNCHANGED ``stream_ann_probe`` replay, and a match proves both the
     re-resolution plumbing and serve-after-rebuild row equality."""
     import os
-    import tempfile
 
     from left_join_on_timeout_spark.operators.ann_index import (
         default_index_root,
@@ -837,17 +823,9 @@ def q_stream_ann_probe_refresh(spark: SparkSession,
     ivf2_index_build(corpus, path, n_super=_ANN_PROBE_SUPER,
                      k2=_ANN_PROBE_K2, cell_cap=_ANN_PROBE_CAP)
     ivf2_index_rebuild(spark, path)  # pointer now names postings_v2
-    base = tempfile.mkdtemp(prefix="ljot_refresh_")
-    src, out, ckpt = (os.path.join(base, d) for d in ("in", "out", "ck"))
-    batch.write.mode("overwrite").parquet(src)
-    q = (spark.readStream.schema(batch.schema).parquet(src)
-         .writeStream.foreachBatch(
-             refreshing_probe_sink(out, path, threshold=_ANN_PROBE_T))
-         .option("checkpointLocation", ckpt).start())
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    out = scratch_dir("ljot_refresh_")
+    drain_stream(spark, batch, foreach_batch=refreshing_probe_sink(
+        out, path, threshold=_ANN_PROBE_T))
     return spark.read.parquet(out)
 
 
@@ -899,7 +877,6 @@ def q_stream_lsh_probe_refresh(spark: SparkSession,
     equal — pinned in pytest), so a match proves the re-resolution
     plumbing AND probe-after-rebuild row equality on the dedup tier."""
     import os
-    import tempfile
 
     from left_join_on_timeout_spark.operators.ann_index import (
         default_index_root,
@@ -919,18 +896,9 @@ def q_stream_lsh_probe_refresh(spark: SparkSession,
         root, "lshrfr_" + os.path.basename(os.path.normpath(sf_dir)))
     lsh_index_build(old_docs, path)
     lsh_index_rebuild(spark, path)  # pointer now names postings_v2
-    base = tempfile.mkdtemp(prefix="ljot_lshrfr_")
-    src, out, ckpt = (os.path.join(base, d) for d in ("in", "out", "ck"))
-    new_docs.write.mode("overwrite").parquet(src)
-    q = (spark.readStream.schema(new_docs.schema).parquet(src)
-         .writeStream.foreachBatch(
-             refreshing_probe_sink(out, path, tier="lsh",
-                                   id_col="doc_id"))
-         .option("checkpointLocation", ckpt).start())
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    out = scratch_dir("ljot_lshrfr_")
+    drain_stream(spark, new_docs, foreach_batch=refreshing_probe_sink(
+        out, path, tier="lsh", id_col="doc_id"))
     return spark.read.parquet(out).distinct()
 
 
@@ -1001,7 +969,6 @@ def q_stream_text_probe_refresh(spark: SparkSession,
     proves the re-resolution plumbing AND serve-after-rebuild value
     equality (stats refresh included) on the lexical tier."""
     import os
-    import tempfile
 
     from left_join_on_timeout_spark.operators.ann_index import (
         default_index_root,
@@ -1022,19 +989,9 @@ def q_stream_text_probe_refresh(spark: SparkSession,
     queries_df = spark.createDataFrame(
         [(qid, " ".join(terms)) for qid, terms in SWEEP_QUERIES],
         "query_id LONG, qtext STRING")
-    base = tempfile.mkdtemp(prefix="ljot_textrfr_")
-    src, out, ckpt = (os.path.join(base, d) for d in ("in", "out", "ck"))
-    queries_df.write.mode("overwrite").parquet(src)
-    q = (spark.readStream.schema(queries_df.schema).parquet(src)
-         .writeStream.foreachBatch(
-             refreshing_probe_sink(out, path, tier="text",
-                                   id_col="query_id",
-                                   text_col="qtext"))
-         .option("checkpointLocation", ckpt).start())
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    out = scratch_dir("ljot_textrfr_")
+    drain_stream(spark, queries_df, foreach_batch=refreshing_probe_sink(
+        out, path, tier="text", id_col="query_id", text_col="qtext"))
     # the sink is at-least-once across epoch retries; .distinct()
     # makes the read retry-proof like the LSH twin's (ADVICE r12)
     return spark.read.parquet(out).distinct()
@@ -1089,9 +1046,6 @@ def q_stream_contamination_screen(spark: SparkSession,
     NULL-text candidates are covered by the oracle, not by dataset
     accident (the zero-gram arm also stays a semantics test in
     tests/test_text_index.py)."""
-    import os
-    import tempfile
-
     from left_join_on_timeout_spark.functions.text import gram_digest_set
     from left_join_on_timeout_spark.operators.text_index import (
         contamination_screen,
@@ -1101,21 +1055,13 @@ def q_stream_contamination_screen(spark: SparkSession,
     bench = gram_digest_set(docs.where(F.col("doc_id") % 20 == 0))
     arrivals = (docs.where(F.col("doc_id") % 10 == 5)
                 .select("doc_id", "text"))
-    base = tempfile.mkdtemp(prefix="ljot_screen_")
-    src, out, ckpt = (os.path.join(base, d) for d in ("in", "out", "ck"))
-    arrivals.write.mode("overwrite").parquet(src)
+    out = scratch_dir("ljot_screen_")
 
     def _screen(batch_df: DataFrame, epoch_id: int) -> None:
         contamination_screen(batch_df, bench, ngram_n=5) \
             .write.mode("append").parquet(out)
 
-    q = (spark.readStream.schema(arrivals.schema).parquet(src)
-         .writeStream.foreachBatch(_screen)
-         .option("checkpointLocation", ckpt).start())
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain_stream(spark, arrivals, foreach_batch=_screen)
     return spark.read.parquet(out)
 
 
@@ -1187,7 +1133,6 @@ def q_stream_curation_ingest(spark: SparkSession,
     only ever face the STANDING indexes, so the oracle replays the
     union regardless of how the stream chopped the arrivals."""
     import os
-    import tempfile
 
     from pyspark import StorageLevel
 
@@ -1209,6 +1154,7 @@ def q_stream_curation_ingest(spark: SparkSession,
         srp_index_probe,
     )
     from left_join_on_timeout_spark.operators.text_index import (
+        DuplicateIdsError,
         contamination_screen,
         text_index_append,
         text_index_build,
@@ -1244,9 +1190,7 @@ def q_stream_curation_ingest(spark: SparkSession,
     ])
     emb_by_gid = emb.select(F.col("vec_id").alias("gid"), "embedding")
 
-    stage = tempfile.mkdtemp(prefix="ljot_strcur_")
-    src, out, ckpt = (os.path.join(stage, d) for d in ("in", "out", "ck"))
-    arrivals.write.mode("overwrite").parquet(src)
+    out = scratch_dir("ljot_strcur_")
 
     def _ingest(batch_df: DataFrame, epoch_id: int) -> None:
         # Each stage's drop set is consumed by the next stage's
@@ -1324,11 +1268,12 @@ def q_stream_curation_ingest(spark: SparkSession,
                 # clash check still reads the LIVE ids sidecar (r15)
                 text_index_append(admitted.select("doc_id", "text"),
                                   spark, gpath, index=gidx)
-            except ValueError:
+            except DuplicateIdsError:
                 # an epoch RETRY re-offers ids the first attempt
                 # already appended — the r14 duplicate enforcement
                 # refuses, which is exactly the wanted retry
-                # semantics (already-done)
+                # semantics (already-done); any other append error
+                # (e.g. an id dtype mismatch) propagates
                 pass
             dec = (screened.select("doc_id",
                                    F.lit("screened").alias("decision"))
@@ -1344,13 +1289,7 @@ def q_stream_curation_ingest(spark: SparkSession,
                        semdup):
                 df.unpersist()
 
-    q = (spark.readStream.schema(arrivals.schema).parquet(src)
-         .writeStream.foreachBatch(_ingest)
-         .option("checkpointLocation", ckpt).start())
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain_stream(spark, arrivals, foreach_batch=_ingest)
 
     # the at-least-once sink reads retry-proof; all accounting joins
     # are bounded by the arrival batch

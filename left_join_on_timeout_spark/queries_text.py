@@ -29,6 +29,7 @@ from left_join_on_timeout_spark.functions.text import (
 )
 from left_join_on_timeout_spark.queries import query
 from left_join_on_timeout_spark.sources.tables import load_table
+from left_join_on_timeout_spark.streaming.harness import drain_stream
 
 # --- SQL twins of the functions.text building blocks -----------------------
 
@@ -1695,7 +1696,6 @@ def q_stream_text_index_append(spark: SparkSession,
     republishes them — the bounded-staleness contract every appending
     tier documents, here driver-adjudicated through the value hash."""
     import os
-    import tempfile
 
     from left_join_on_timeout_spark.operators.ann_index import (
         default_index_root,
@@ -1718,22 +1718,13 @@ def q_stream_text_index_append(spark: SparkSession,
         default_index_root(),
         "textstream_" + os.path.basename(os.path.normpath(sf_dir)))
     bidx = text_index_build(base, path)
-    stage = tempfile.mkdtemp(prefix="ljot_textidx_")
-    src, ckpt = (os.path.join(stage, d) for d in ("in", "ck"))
-    arrivals.write.mode("overwrite").parquet(src)
 
     def _append(batch_df: DataFrame, epoch_id: int) -> None:
         # the manifest is loop-stable (no rebuild can land mid-
         # stream) — skip the per-batch pointer/meta re-read (r15)
         text_index_append(batch_df, spark, path, index=bidx)
 
-    q = (spark.readStream.schema(arrivals.schema).parquet(src)
-         .writeStream.foreachBatch(_append)
-         .option("checkpointLocation", ckpt).start())
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain_stream(spark, arrivals, foreach_batch=_append)
     index = text_index_load(spark, path)
     scored = text_index_search(index, list(BM25_TERMS),
                                k1=_BM25_K1, b=_BM25_B)
@@ -2261,7 +2252,6 @@ def q_stream_gram_index_append(spark: SparkSession,
     streamed-appends-audit-now contract (the gram twin of
     ``stream_text_index_append``'s tf/df-live pin)."""
     import os
-    import tempfile
 
     from left_join_on_timeout_spark.operators.ann_index import (
         default_index_root,
@@ -2283,21 +2273,12 @@ def q_stream_gram_index_append(spark: SparkSession,
         "gramstream_" + os.path.basename(os.path.normpath(sf_dir)))
     bidx = text_index_build(base, path, token_mode="ngram",
                              ngram_n=5)
-    stage = tempfile.mkdtemp(prefix="ljot_gramidx_")
-    src, ckpt = (os.path.join(stage, d) for d in ("in", "ck"))
-    arrivals.write.mode("overwrite").parquet(src)
 
     def _append(batch_df: DataFrame, epoch_id: int) -> None:
         # manifest loop-stable — skip per-batch meta re-read (r15)
         text_index_append(batch_df, spark, path, index=bidx)
 
-    q = (spark.readStream.schema(arrivals.schema).parquet(src)
-         .writeStream.foreachBatch(_append)
-         .option("checkpointLocation", ckpt).start())
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain_stream(spark, arrivals, foreach_batch=_append)
     index = text_index_load(spark, path)
     bench = gram_digest_set(docs.where(F.col("doc_id") % 20 == 0))
     return text_index_gram_probe(index, bench, threshold=0.05)

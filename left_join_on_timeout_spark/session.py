@@ -12,6 +12,9 @@ plan shape survives a 1000-executor / 100 TB deployment:
 * Broadcast threshold left at default (10 MB): dimension tables (region,
   nation, supplier, part at these SFs) broadcast automatically; fact-fact
   joins shuffle on their keys.
+* Codegen cache of 2000 compiled classes (Spark's default is 100): one
+  index build alone generates about 100, so a session that runs many
+  queries evicted and recompiled the same classes on every repeat.
 """
 
 from __future__ import annotations
@@ -45,5 +48,6 @@ def get_spark(app_name: str = "left_join_on_timeout_spark",
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", "2000")
     )
     return builder.getOrCreate()

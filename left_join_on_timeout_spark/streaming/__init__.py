@@ -11,4 +11,10 @@ operator), re-expressed on Structured Streaming.
   Semantics core in ``timer_core`` (pure Python); adapters on
   ``applyInPandasWithState`` (default, runs everywhere) and
   ``transformWithStateInPandas`` (PySpark 4.x native, needs protobuf).
+* ``harness`` — bounded drains: every registered streaming query runs
+  through its one primitive, ``drain_stream`` (stage → ``readStream``
+  → memory or ``foreachBatch`` sink → ``processAllAvailable`` → stop),
+  which deletes its staged inputs and checkpoint once the query stops;
+  ``run_timeout_join_stream`` / ``run_timer_join_stream`` /
+  ``run_tws_join_stream`` wrap it with one flush row per side.
 """

@@ -1,18 +1,28 @@
-"""Run a streaming timeout join to completion over bounded inputs.
+"""Run streaming operators to completion over bounded inputs.
 
 The driver's correctness gate compares batch DataFrames, and the reference
 tests assert on fully-drained topologies — this harness gives both: feed
-bounded keyed streams through the *real* streaming operator (file source →
-stream-stream join → memory sink), advance the watermark past everything
-with sentinel flush rows, and hand back the sink contents as a batch
-DataFrame.
+bounded inputs through the *real* streaming operator (file source →
+stateful plan → sink), drain it deterministically, and hand back the
+result as a batch DataFrame.
 
-Flush rows use negative keys (real keys in the test tables are ≥ 0) and a
-far-future timestamp; they advance both sides' watermarks so every
-pending left either matched or timed out, then are filtered from the
-result. This mirrors the reference tests' Awaitility polling
-(``LeftJoinOnTimeoutTest.java:221-235``) — wait-until-drained — without
-wall-clock races.
+Every drain goes through one primitive, :func:`drain_stream`: stage each
+batch input as parquet under one per-drain tree, hand the ``readStream``
+DataFrames to the caller's ``build``, run the sink (the memory sink, or
+the caller's ``foreachBatch`` function), ``processAllAvailable``, stop
+the query. **Cleanup rule:** the per-drain tree (staged inputs and
+checkpoint) is deleted as soon as the query stops. Memory-sink results
+live in driver memory and stay readable; output a ``foreachBatch``
+function writes for lazy reading after the call belongs in a
+:func:`scratch_dir`, under a PID-keyed root removed at interpreter exit.
+
+Flush rows (:func:`with_flush_row`, one per input) carry a far-future
+timestamp and a marker key (negative ids — real keys in the test tables
+are ≥ 0 — or a tag); they advance the watermark so every pending left
+either matched or timed out and every window closed, then are filtered
+from the result. This mirrors the reference tests' Awaitility
+polling (``LeftJoinOnTimeoutTest.java:221-235``) — wait-until-drained —
+without wall-clock races.
 """
 
 from __future__ import annotations
@@ -20,11 +30,12 @@ from __future__ import annotations
 import os
 import tempfile
 import uuid
-from contextlib import contextmanager
+from contextlib import contextmanager, nullcontext
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from left_join_on_timeout_spark import fsio
 from left_join_on_timeout_spark.operators.timeout_join import Joiner
 from left_join_on_timeout_spark.streaming.timeout_join import (
     left_join_on_timeout_stream,
@@ -52,6 +63,99 @@ def _drain_tuning(spark: SparkSession):
         spark.conf.set(key, prev)
 
 
+def scratch_dir(prefix: str) -> str:
+    """A fresh local directory for output read lazily after the call that
+    wrote it returns (``foreachBatch`` sinks, staged reads). It lives
+    under this process's scratch root, removed at interpreter exit."""
+    root = fsio.process_dir("spark_graft_scratch", tempfile.gettempdir())
+    os.makedirs(root, exist_ok=True)
+    return tempfile.mkdtemp(prefix=prefix, dir=root)
+
+
+def with_flush_row(df: DataFrame, keys: dict | None = None,
+                   ts_col: str = "ts") -> DataFrame:
+    """``df`` plus one sentinel row, present regardless of input contents
+    (an empty input still must advance its watermark): the far-future
+    event time in ``ts_col``, the marker value ``keys[c]`` in each key
+    column ``c`` (a negative id, or a tag the caller filters on), nulls
+    everywhere else."""
+    keys = keys or {}
+    cols = [
+        F.lit(FLUSH_TS).cast("timestamp").alias(ts_col)
+        if f.name == ts_col else
+        F.lit(keys.get(f.name)).cast(f.dataType).alias(f.name)
+        for f in df.schema.fields
+    ]
+    return df.unionAll(df.sparkSession.range(1).select(*cols))
+
+
+def drain_stream(spark: SparkSession,
+                 inputs: DataFrame | tuple[DataFrame, ...],
+                 build=None,
+                 foreach_batch=None) -> DataFrame | None:
+    """Feed bounded *batch* DataFrames through a streaming transform and
+    drain it.
+
+    ``inputs`` is one DataFrame or a tuple of them. Each is staged
+    through parquet (so event-time columns survive) and re-read with
+    ``readStream``; ``build(*streams)`` returns the streaming output
+    (default: the single stream unchanged). ``processAllAvailable`` plus
+    Spark's no-data micro-batches drain watermark-gated emissions, so
+    append-mode joins and aggregations finalize without wall-clock
+    waits.
+
+    Without ``foreach_batch`` the output goes to the memory sink under
+    :func:`_drain_tuning` and the sink is returned as a batch DataFrame.
+    With it, ``foreach_batch(batch_df, epoch_id)`` is the sink, the
+    session's partitioning stands, and None is returned. Either way the
+    staged inputs and the checkpoint are deleted once the query stops."""
+    inputs = inputs if isinstance(inputs, tuple) else (inputs,)
+    base = tempfile.mkdtemp(prefix="ljot_drain_")
+    try:
+        streams = []
+        for i, df in enumerate(inputs):
+            src = os.path.join(base, f"in{i}")
+            df.write.mode("overwrite").parquet(src)
+            streams.append(spark.readStream.schema(df.schema).parquet(src))
+        out = build(*streams) if build is not None else streams[0]
+        writer = out.writeStream.option(
+            "checkpointLocation", os.path.join(base, "ck"))
+        if foreach_batch is not None:
+            writer, tuning = writer.foreachBatch(foreach_batch), nullcontext()
+        else:
+            qname = "ljot_sink_" + uuid.uuid4().hex[:12]
+            writer = (writer.format("memory").queryName(qname)
+                      .outputMode("append"))
+            tuning = _drain_tuning(spark)
+        with tuning:
+            q = writer.start()
+            try:
+                q.processAllAvailable()
+            finally:
+                q.stop()
+    finally:
+        fsio.delete(spark, base)
+    return None if foreach_batch is not None else spark.table(qname)
+
+
+def drain_two_streams(
+    spark: SparkSession,
+    left: DataFrame,
+    right: DataFrame,
+    on: str,
+    build,
+    left_ts: str = "ts",
+    right_ts: str = "ts",
+) -> DataFrame:
+    """Two-input :func:`drain_stream` with a flush row on each side
+    (keys -1 and -2): ``build(lstream, rstream)`` is drained and
+    returned with flush keys filtered out."""
+    return drain_stream(
+        spark, (with_flush_row(left, {on: -1}, left_ts),
+                with_flush_row(right, {on: -2}, right_ts)),
+        build).where(F.col(on) >= 0)
+
+
 def run_timeout_join_stream(
     spark: SparkSession,
     left: DataFrame,
@@ -72,121 +176,19 @@ def run_timeout_join_stream(
     The inputs are staged as parquet and re-read with ``readStream`` so
     the plan under test is the real ``StreamingSymmetricHashJoinExec``
     with watermark state eviction, not a batch rewrite."""
-    base = tempfile.mkdtemp(prefix="ljot_stream_")
-    ldir, rdir, ckpt = (os.path.join(base, d) for d in ("l", "r", "ck"))
-    qname = "ljot_sink_" + uuid.uuid4().hex[:12]
-
-    def flush_row(df: DataFrame, key_val: int, ts_col: str) -> DataFrame:
-        """One sentinel row regardless of input contents (an empty input
-        still must advance its side's watermark): nulls everywhere except
-        the (negative) key and the far-future event time."""
-        cols = [
-            F.lit(key_val).cast(df.schema[on].dataType).alias(on)
-            if f.name == on else
-            F.lit(FLUSH_TS).cast("timestamp").alias(ts_col)
-            if f.name == ts_col else
-            F.lit(None).cast(f.dataType).alias(f.name)
-            for f in df.schema.fields
-        ]
-        return df.sparkSession.range(1).select(*cols)
-
-    left.unionAll(flush_row(left, -1, left_ts)) \
-        .write.mode("overwrite").parquet(ldir)
-    right.unionAll(flush_row(right, -2, right_ts)) \
-        .write.mode("overwrite").parquet(rdir)
-
-    lstream = spark.readStream.schema(left.schema).parquet(ldir)
-    rstream = spark.readStream.schema(right.schema).parquet(rdir)
-    out = left_join_on_timeout_stream(
-        lstream, rstream, on=on, window=window, left_ts=left_ts,
-        right_ts=right_ts, timeout=timeout, joiner=joiner,
-        joined_col=joined_col, right_prefix=right_prefix, how=how)
-
-    with _drain_tuning(spark):
-        q = (out.writeStream.format("memory").queryName(qname)
-             .outputMode("append").option("checkpointLocation", ckpt)
-             .start())
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+    out = drain_stream(
+        spark, (with_flush_row(left, {on: -1}, left_ts),
+                with_flush_row(right, {on: -2}, right_ts)),
+        lambda l, r: left_join_on_timeout_stream(
+            l, r, on=on, window=window, left_ts=left_ts,
+            right_ts=right_ts, timeout=timeout, joiner=joiner,
+            joined_col=joined_col, right_prefix=right_prefix, how=how))
     # drop flush sentinels: left-side key >= 0 keeps every left-join
     # row; under fullOuter, right-only rows have a null left key, so
     # judge them by the (renamed) right key instead
     keep = F.coalesce(F.col(on), F.col(f"{right_prefix}{on}")) >= 0 \
         if how == "fullOuter" else F.col(on) >= 0
-    return spark.table(qname).where(keep)
-
-
-def drain_stream(spark: SparkSession, inp: DataFrame, build) -> DataFrame:
-    """Feed one bounded *batch* DataFrame through a streaming transform
-    and return the drained sink as a batch DataFrame.
-
-    ``build(stream)`` gets the ``readStream`` DataFrame (same schema as
-    ``inp``, staged through parquet so event-time columns survive) and
-    returns the streaming output to materialize. ``processAllAvailable``
-    plus Spark's no-data micro-batches drain watermark-gated emissions,
-    so append-mode windowed aggregations finalize without wall-clock
-    waits — the single-stream sibling of :func:`run_timeout_join_stream`."""
-    base = tempfile.mkdtemp(prefix="ljot_stream1_")
-    src, ckpt = os.path.join(base, "in"), os.path.join(base, "ck")
-    qname = "ljot_sink_" + uuid.uuid4().hex[:12]
-    inp.write.mode("overwrite").parquet(src)
-    out = build(spark.readStream.schema(inp.schema).parquet(src))
-    with _drain_tuning(spark):
-        q = (out.writeStream.format("memory").queryName(qname)
-             .outputMode("append").option("checkpointLocation", ckpt)
-             .start())
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    return spark.table(qname)
-
-
-def drain_two_streams(
-    spark: SparkSession,
-    left: DataFrame,
-    right: DataFrame,
-    on: str,
-    build,
-    left_ts: str = "ts",
-    right_ts: str = "ts",
-) -> DataFrame:
-    """Two-input generalization of :func:`drain_stream`: stage both batch
-    inputs (plus watermark-advancing flush rows on each side), hand the
-    two ``readStream`` DataFrames to ``build(lstream, rstream)``, drain
-    the result, and return it with flush keys filtered out."""
-    base = tempfile.mkdtemp(prefix="ljot_stream2_")
-    ldir, rdir, ckpt = (os.path.join(base, d) for d in ("l", "r", "ck"))
-    qname = "ljot_sink_" + uuid.uuid4().hex[:12]
-
-    def flush_row(df: DataFrame, key_val: int, ts_col: str) -> DataFrame:
-        cols = [
-            F.lit(key_val).cast(df.schema[on].dataType).alias(on)
-            if f.name == on else
-            F.lit(FLUSH_TS).cast("timestamp").alias(ts_col)
-            if f.name == ts_col else
-            F.lit(None).cast(f.dataType).alias(f.name)
-            for f in df.schema.fields
-        ]
-        return df.sparkSession.range(1).select(*cols)
-
-    left.unionAll(flush_row(left, -1, left_ts)) \
-        .write.mode("overwrite").parquet(ldir)
-    right.unionAll(flush_row(right, -2, right_ts)) \
-        .write.mode("overwrite").parquet(rdir)
-    out = build(spark.readStream.schema(left.schema).parquet(ldir),
-                spark.readStream.schema(right.schema).parquet(rdir))
-    with _drain_tuning(spark):
-        q = (out.writeStream.format("memory").queryName(qname)
-             .outputMode("append").option("checkpointLocation", ckpt)
-             .start())
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    return spark.table(qname).where(F.col(on) >= 0)
+    return out.where(keep)
 
 
 def run_tws_join_stream(
@@ -247,36 +249,10 @@ def run_timer_join_stream(
         left_join_on_timeout_timers,
     )
 
-    base = tempfile.mkdtemp(prefix="ljot_timer_stream_")
-    ldir, rdir, ckpt = (os.path.join(base, d) for d in ("l", "r", "ck"))
-    qname = "ljot_timer_sink_" + uuid.uuid4().hex[:12]
-
-    def flush_row(df: DataFrame, key_val: int, ts_col: str) -> DataFrame:
-        cols = [
-            F.lit(key_val).cast(df.schema[on].dataType).alias(on)
-            if f.name == on else
-            F.lit(FLUSH_TS).cast("timestamp").alias(ts_col)
-            if f.name == ts_col else
-            F.lit(None).cast(f.dataType).alias(f.name)
-            for f in df.schema.fields
-        ]
-        return df.sparkSession.range(1).select(*cols)
-
-    left.unionAll(flush_row(left, -1, left_ts)) \
-        .write.mode("overwrite").parquet(ldir)
-    right.unionAll(flush_row(right, -2, right_ts)) \
-        .write.mode("overwrite").parquet(rdir)
-    out = left_join_on_timeout_timers(
-        spark.readStream.schema(left.schema).parquet(ldir),
-        spark.readStream.schema(right.schema).parquet(rdir),
-        on=on, window=window, left_ts=left_ts, right_ts=right_ts,
-        joiner=joiner, strict_reference_semantics=False)
-    with _drain_tuning(spark):
-        q = (out.writeStream.format("memory").queryName(qname)
-             .outputMode("append").option("checkpointLocation", ckpt)
-             .start())
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    return spark.table(qname).where(F.col(on) >= 0)
+    return drain_two_streams(
+        spark, left, right, on,
+        lambda l, r: left_join_on_timeout_timers(
+            l, r, on=on, window=window, left_ts=left_ts,
+            right_ts=right_ts, joiner=joiner,
+            strict_reference_semantics=False),
+        left_ts=left_ts, right_ts=right_ts)

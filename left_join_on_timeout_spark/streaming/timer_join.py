@@ -24,7 +24,8 @@ Two adapters over the same core:
   bridges in a public host copy when the pip package is absent (see
   that module), so the tier runs end-to-end here — under
   ``RocksDBStateStoreProvider``, which tws requires for column
-  families (``harness.run_tws_join_stream`` sets it per query).
+  families (``harness.run_tws_join_stream`` sets it around its
+  ``drain_stream`` call).
 
 Mechanism parity map (reference file:line):
 

@@ -3,7 +3,6 @@ property that justifies bucketing — no Exchange on either join side."""
 
 from __future__ import annotations
 
-import tempfile
 
 import pytest
 from pyspark.sql import functions as F
@@ -18,8 +17,8 @@ SF_DIR = "/root/testdata/sf0.001"
 
 
 @pytest.fixture(scope="module")
-def bucketed_tables(spark):
-    warehouse = tempfile.mkdtemp(prefix="ljot_buckets_")
+def bucketed_tables(spark, tmp_path_factory):
+    warehouse = tmp_path_factory.mktemp("buckets")
     o = load_table(spark, SF_DIR, "orders")
     li = (load_table(spark, SF_DIR, "lineitem")
           .withColumnRenamed("l_orderkey", "o_orderkey"))

@@ -6,7 +6,6 @@ from __future__ import annotations
 
 import datetime as dt
 import os
-import tempfile
 
 import pytest
 from pyspark.sql import functions as F
@@ -60,10 +59,10 @@ def test_start_requires_sink(spark):
         LeftJoinOnTimeoutBuilder(lhs, lhs, None, "10 seconds").start()
 
 
-def test_streaming_topology_end_to_end(spark):
+def test_streaming_topology_end_to_end(spark, tmp_path):
     """Streaming build + start into a memory sink: one matched key, one
     timed-out key, drained via a watermark-advancing flush row."""
-    base = tempfile.mkdtemp(prefix="ljot_builder_")
+    base = str(tmp_path)
     ldir, rdir = os.path.join(base, "l"), os.path.join(base, "r")
     spark.createDataFrame(
         [(1, "left_a", TS(0)), (2, "left_b", TS(0)),

@@ -6,7 +6,6 @@ from __future__ import annotations
 
 import datetime as dt
 import os
-import tempfile
 
 import pytest
 from pyspark.sql import functions as F
@@ -125,10 +124,10 @@ ROWS = [(1, "a", dt.datetime(2024, 1, 1)),
         (3, "c", dt.datetime(2024, 1, 3))]
 
 
-def test_file_stream_source_to_parquet_sink(spark):
+def test_file_stream_source_to_parquet_sink(spark, tmp_path):
     """O1 + O8 end to end: file stream in, durable parquet sink out,
     drained with availableNow — rows survive byte-identical."""
-    base = tempfile.mkdtemp(prefix="ljot_sink_")
+    base = str(tmp_path)
     src, out, ckpt = (os.path.join(base, d) for d in ("src", "out", "ck"))
     spark.createDataFrame(ROWS, SCHEMA).write.parquet(src)
     stream = read_keyed_stream(spark, src, SCHEMA, max_files_per_trigger=1)
@@ -165,9 +164,8 @@ def test_encode_json_records_binary_layout(spark):
     assert bytes(row.value) == b'{"v":"a"}'
 
 
-def test_start_sink_validates(spark):
-    stream = read_keyed_stream(
-        spark, tempfile.mkdtemp(prefix="ljot_v_"), SCHEMA)
+def test_start_sink_validates(spark, tmp_path):
+    stream = read_keyed_stream(spark, str(tmp_path), SCHEMA)
     with pytest.raises(ValueError, match="brokers and topic"):
         start_sink(stream, fmt="kafka")
     with pytest.raises(ValueError, match="needs a path"):

@@ -119,9 +119,17 @@ BATCH_QUERIES = sorted(
     if not n.startswith(("stream_", "timer_", "tws_")))
 
 
+# Executed plans by query name. Each query is planned once per session
+# and every guard reads that one plan: planning a saved-index query
+# builds its index first, so re-planning it per guard cost minutes.
+_PLANS: dict[str, str] = {}
+
+
 def plan_of(spark, name: str) -> str:
-    df = q.QUERIES[name](spark, SF_DIR)
-    return df._jdf.queryExecution().executedPlan().toString()
+    if name not in _PLANS:
+        df = q.QUERIES[name](spark, SF_DIR)
+        _PLANS[name] = df._jdf.queryExecution().executedPlan().toString()
+    return _PLANS[name]
 
 
 def strip_cached(plan: str) -> str:
@@ -422,14 +430,12 @@ def test_cluster_split_lineage_truncated(spark):
     assert plan.count("FileScan parquet") == 1
 
 
-def test_saved_index_search_plan_has_no_training(spark):
+def test_saved_index_search_plan_has_no_training(spark, tmp_path):
     """The lifecycle contract (VERDICT r6 item 1): a search over a
     SAVED index must plan ONLY loaded-relation scans + the probe —
     none of the training lineage (Lloyd's decimal-mean aggregates) may
     survive into the search plan, and the postings must come from the
     saved parquet, not be recomputed."""
-    import tempfile
-
     from left_join_on_timeout_spark.operators.ann_index import (
         ivf2_index_build,
         ivf2_index_load,
@@ -438,7 +444,7 @@ def test_saved_index_search_plan_has_no_training(spark):
     from left_join_on_timeout_spark.sources.tables import load_table
 
     emb = load_table(spark, SF_DIR, "embeddings")
-    path = tempfile.mkdtemp(prefix="ljot_idx_plan_")
+    path = str(tmp_path)
     ivf2_index_build(emb, path, n_super=4, k2=4)
     index = ivf2_index_load(spark, path)
     plan = (ivf2_index_search(emb, index)

@@ -6,7 +6,6 @@ directed (asymmetric) containment with a non-contained control."""
 from __future__ import annotations
 
 import os
-import tempfile
 
 import pytest
 from pyspark.sql import functions as F
@@ -14,9 +13,10 @@ from pyspark.sql import functions as F
 from left_join_on_timeout_spark.queries import QUERIES
 
 
-def _mk_docs(spark, texts: list[str]) -> str:
-    """Write a documents.parquet with the given texts; return its dir."""
-    d = tempfile.mkdtemp(prefix="ljot_docs_")
+def _mk_docs(spark, d, texts: list[str]) -> str:
+    """Write a documents.parquet with the given texts under ``d``;
+    return ``d``."""
+    d = str(d)
     rows = [(i, t, "en", "src0", len(t)) for i, t in enumerate(texts)]
     df = spark.createDataFrame(
         rows, "doc_id bigint, text string, lang string, source string, "
@@ -33,7 +33,7 @@ def _seq(lo: int, hi: int) -> str:
     return " ".join(WORDS % i for i in range(lo, hi))
 
 
-def test_dup_span_cross_doc_and_merge(spark):
+def test_dup_span_cross_doc_and_merge(spark, tmp_path):
     """Two docs share a 12-word run inside otherwise-unique text: the
     detector must emit ONE maximal span per doc covering exactly that
     run (the 5 duplicated 8-gram start positions merge into one island,
@@ -41,7 +41,7 @@ def test_dup_span_cross_doc_and_merge(spark):
     shared = _seq(1000, 1012)                       # 12 shared words
     a = _seq(0, 10) + " " + shared + " " + _seq(20, 30)
     b = _seq(40, 50) + " " + shared + " " + _seq(60, 70)
-    sf = _mk_docs(spark, [a, b])
+    sf = _mk_docs(spark, tmp_path, [a, b])
     out = QUERIES["dup_span_detection"](spark, sf).collect()
     spans = {(r.doc_id, r.span_start, r.span_end, r.span_words)
              for r in out}
@@ -50,40 +50,40 @@ def test_dup_span_cross_doc_and_merge(spark):
     assert spans == {(0, 11, 22, 12), (1, 11, 22, 12)}
 
 
-def test_dup_span_self_repetition(spark):
+def test_dup_span_self_repetition(spark, tmp_path):
     """A single document that repeats its own 10-word run twice must
     self-report both occurrences (corpus-wide occurrence counting, not
     distinct-per-doc), as two separate spans."""
     run = _seq(500, 510)                            # 10 words
     text = run + " " + _seq(0, 20) + " " + run
-    sf = _mk_docs(spark, [text])
+    sf = _mk_docs(spark, tmp_path, [text])
     out = QUERIES["dup_span_detection"](spark, sf).collect()
     spans = sorted((r.span_start, r.span_end) for r in out)
     assert spans == [(1, 10), (31, 40)]
 
 
-def test_containment_directed(spark):
+def test_containment_directed(spark, tmp_path):
     """Doc 0's shingles are a strict subset of doc 1's (a quote inside a
     longer doc): containment must report (0 ⊂ 1) and NOT (1 ⊂ 0), and an
     unrelated control doc must appear in no pair."""
     quote = _seq(100, 130)                          # 30 words
     book = _seq(0, 40) + " " + quote + " " + _seq(50, 90)
     control = _seq(200, 260)
-    sf = _mk_docs(spark, [quote, book, control])
+    sf = _mk_docs(spark, tmp_path, [quote, book, control])
     out = QUERIES["containment_pairs"](spark, sf).collect()
     pairs = {(r.inner_id, r.outer_id): r.containment for r in out}
     assert set(pairs) == {(0, 1)}
     assert pairs[(0, 1)] == pytest.approx(1.0)
 
 
-def test_span_removal_stats_consistency(spark):
+def test_span_removal_stats_consistency(spark, tmp_path):
     """kept_frac must equal 1 - dup_words/n_words and a span-free doc
     keeps 100%."""
     shared = _seq(1000, 1012)
     a = _seq(0, 10) + " " + shared + " " + _seq(20, 30)
     b = _seq(40, 50) + " " + shared + " " + _seq(60, 70)
     clean = _seq(300, 340)
-    sf = _mk_docs(spark, [a, b, clean])
+    sf = _mk_docs(spark, tmp_path, [a, b, clean])
     rows = {r.doc_id: r for r in
             QUERIES["dup_span_removal_stats"](spark, sf).collect()}
     assert rows[2].n_spans == 0 and rows[2].kept_frac == 1.0
@@ -93,7 +93,7 @@ def test_span_removal_stats_consistency(spark):
         assert r.kept_frac == pytest.approx(1 - 12 / r.n_words, abs=1e-6)
 
 
-def test_containment_matches_brute_force(spark):
+def test_containment_matches_brute_force(spark, tmp_path):
     """Completeness property: the prefix-filtered containment join must
     equal the brute-force all-pairs answer exactly — seeded corpora with
     a tiny vocabulary force heavy shingle sharing, the regime where a
@@ -114,7 +114,7 @@ def test_containment_matches_brute_force(spark):
             texts.append(" ".join(rng.choice(vocab) for _ in range(n)))
         # plant a guaranteed quote: doc 18 is a slice of doc 0
         texts.append(" ".join(texts[0].split()[:10]))
-        sf = _mk_docs(spark, texts)
+        sf = _mk_docs(spark, tmp_path / f"seed{seed}", texts)
         got = {(r.inner_id, r.outer_id)
                for r in prefix_filter_containment_pairs(
                    spark.read.parquet(
@@ -135,7 +135,7 @@ def test_containment_matches_brute_force(spark):
 
 
 
-def test_dynamic_window_respects_key_class(spark):
+def test_dynamic_window_respects_key_class(spark, tmp_path):
     """A purchase 45 minutes from the view must match ONLY for users in
     the 60-minute class (user_id % 3 == 2); 10- and 30-minute-class
     users time out on the same offset — the per-key CASE, not the
@@ -154,7 +154,7 @@ def test_dynamic_window_respects_key_class(spark):
         rows.append((eid, t0, uid, "view", 1.0, "{}")); eid += 1
         rows.append((eid, t0 + dt.timedelta(minutes=45), uid,
                      "purchase", 1.0, "{}")); eid += 1
-    d = tempfile.mkdtemp(prefix="ljot_dyn_")
+    d = str(tmp_path)
     # write via pyarrow with explicit µs timestamps so the fixture layout
     # is unambiguous (Spark's own INT96 default is covered by the
     # int96 regression test below)
@@ -174,7 +174,7 @@ def test_dynamic_window_respects_key_class(spark):
     assert out[5].r_event_id is not None and out[5].window_min == 60
 
 
-def test_load_table_reads_spark_written_int96(spark):
+def test_load_table_reads_spark_written_int96(spark, tmp_path):
     """Regression: Spark's default parquet output stores timestamps as
     INT96, which pyarrow also reports as timestamp[ns] — load_table must
     NOT apply the driver-layout nanosAsLong+div-1000 conversion to it
@@ -184,7 +184,7 @@ def test_load_table_reads_spark_written_int96(spark):
 
     from left_join_on_timeout_spark.sources.tables import load_table
 
-    d = tempfile.mkdtemp(prefix="ljot_int96_")
+    d = str(tmp_path)
     spark.createDataFrame(
         [(1, dt.datetime(2024, 1, 1, 12, 0, 0), 7, "view", 1.0, "{}")],
         "event_id bigint, ts timestamp, user_id bigint, "

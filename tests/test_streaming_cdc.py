@@ -11,7 +11,6 @@ Covers the three contract points:
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import types as T
 
@@ -68,8 +67,8 @@ def test_merge_cdc_batch_versioned(spark):
         sorted((r.k, r.v, r.seq) for r in out.collect())
 
 
-def test_apply_cdc_stream_end_to_end(spark):
-    base = tempfile.mkdtemp(prefix="ljot_cdc_stream_")
+def test_apply_cdc_stream_end_to_end(spark, tmp_path):
+    base = str(tmp_path)
     src = os.path.join(base, "changes")
     ckpt = os.path.join(base, "ck")
     target = os.path.join(base, "snapshot")

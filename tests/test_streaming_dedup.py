@@ -6,7 +6,6 @@ from __future__ import annotations
 
 import datetime as dt
 import os
-import tempfile
 
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -24,8 +23,8 @@ def TS(seconds: float) -> dt.datetime:
     return dt.datetime(2024, 1, 1) + dt.timedelta(seconds=seconds)
 
 
-def test_streaming_dedup_within_watermark(spark):
-    base = tempfile.mkdtemp(prefix="ljot_dedup_stream_")
+def test_streaming_dedup_within_watermark(spark, tmp_path):
+    base = str(tmp_path)
     src, ckpt = os.path.join(base, "in"), os.path.join(base, "ck")
     os.makedirs(src)
 

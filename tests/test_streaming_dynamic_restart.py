@@ -11,7 +11,6 @@ from __future__ import annotations
 
 import datetime as dt
 import os
-import tempfile
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -50,8 +49,8 @@ def _build(ls: DataFrame, rs: DataFrame) -> DataFrame:
                     .alias("joined")))
 
 
-def test_dynamic_window_refinement_survives_restart(spark):
-    base = tempfile.mkdtemp(prefix="ljot_dyn_restart_")
+def test_dynamic_window_refinement_survives_restart(spark, tmp_path):
+    base = str(tmp_path)
     ldir, rdir, ckpt, sink = (os.path.join(base, d)
                               for d in ("l", "r", "ck", "out"))
     os.makedirs(ldir); os.makedirs(rdir)
@@ -87,7 +86,7 @@ def test_dynamic_window_refinement_survives_restart(spark):
     assert got == [(1, "l1+"), (2, "l2+r2")]
 
 
-def test_dynamic_window_state_bounded_by_widest_class(spark):
+def test_dynamic_window_state_bounded_by_widest_class(spark, tmp_path):
     """The SURVEY claim behind the streaming dynamic-window form,
     asserted on the state store itself (VERDICT r5 item 7): the
     constant widest-class conjuncts give Spark a watermark eviction
@@ -96,7 +95,7 @@ def test_dynamic_window_state_bounded_by_widest_class(spark):
     10,000 s apart (≫ the 100 s widest window) each ingest the same
     row volume; after every epoch the join's numRowsTotal stays at the
     one-epoch level while the total ingested volume triples."""
-    base = tempfile.mkdtemp(prefix="ljot_dyn_state_")
+    base = str(tmp_path)
     ldir, rdir, ckpt, sink = (os.path.join(base, d)
                               for d in ("l", "r", "ck", "out"))
     os.makedirs(ldir); os.makedirs(rdir)

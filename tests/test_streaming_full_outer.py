@@ -12,7 +12,6 @@ from __future__ import annotations
 
 import datetime as dt
 import os
-import tempfile
 
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -39,8 +38,8 @@ def symmetric_joiner(l, r):
                     F.coalesce(r["v"], F.lit("")))
 
 
-def test_full_outer_both_sides_timeout_after_restart(spark):
-    base = tempfile.mkdtemp(prefix="ljot_fo_restart_")
+def test_full_outer_both_sides_timeout_after_restart(spark, tmp_path):
+    base = str(tmp_path)
     ldir, rdir, ckpt, sink = (os.path.join(base, d)
                               for d in ("l", "r", "ck", "out"))
     os.makedirs(ldir); os.makedirs(rdir)

@@ -9,7 +9,6 @@ from __future__ import annotations
 
 import datetime as dt
 import os
-import tempfile
 
 import pytest
 from pyspark.sql import functions as F
@@ -89,10 +88,10 @@ def test_out_of_window_right_still_times_out(spark):
     assert got == [(1, "left+")]
 
 
-def test_timeout_only_stream(spark):
+def test_timeout_only_stream(spark, tmp_path):
     """O6 streaming form: only the timeout emissions, original left
     columns and event timestamp preserved."""
-    base = tempfile.mkdtemp(prefix="ljot_toe_")
+    base = str(tmp_path)
     ldir, rdir, ckpt = (os.path.join(base, d) for d in ("l", "r", "ck"))
     lrows = [(1, "match_me", TS(1)), (2, "lonely", TS(2)),
              (-1, "flush", TS(10_000))]
@@ -113,12 +112,12 @@ def test_timeout_only_stream(spark):
     assert [(r.k, r.v, r.ts) for r in rows] == [(2, "lonely", TS(2))]
 
 
-def test_timeout_after_checkpoint_restart(spark):
+def test_timeout_after_checkpoint_restart(spark, tmp_path):
     """O9/O10 — the Spark analog of reference
     ``shouldLeftJoinOnTimeoutAfterRestoration`` (:131-153): a pending
     left survives a stop/restart through the checkpoint, and the timeout
     fires after the restart with no loss and no duplication."""
-    base = tempfile.mkdtemp(prefix="ljot_restart_")
+    base = str(tmp_path)
     ldir, rdir, ckpt, sink = (os.path.join(base, d)
                               for d in ("l", "r", "ck", "out"))
     os.makedirs(ldir); os.makedirs(rdir)
@@ -157,7 +156,7 @@ def test_timeout_after_checkpoint_restart(spark):
     assert got == [(1, "left_a+"), (2, "left_b+")]
 
 
-def test_restart_exactly_once_across_partitions(spark):
+def test_restart_exactly_once_across_partitions(spark, tmp_path):
     """Partition-handoff analog of reference
     ``LeftJoinOnTimeoutTest.java:155-177`` (``shouldLeftJoinOnTimeout
     AfterRebalancing``): Kafka Streams migrates state between consumers
@@ -173,7 +172,7 @@ def test_restart_exactly_once_across_partitions(spark):
     the boundary (plus an idle third run: pure re-open, zero new
     emissions)."""
     n_keys, n_parts = 40, spark.conf.get("spark.sql.shuffle.partitions")
-    base = tempfile.mkdtemp(prefix="ljot_rebalance_")
+    base = str(tmp_path)
     ldir, rdir, ckpt, sink = (os.path.join(base, d)
                               for d in ("l", "r", "ck", "out"))
     os.makedirs(ldir); os.makedirs(rdir)

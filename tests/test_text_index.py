@@ -12,6 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from left_join_on_timeout_spark.operators.text_index import (
+    DuplicateIdsError,
     _term_bucket_py,
     text_index_append,
     text_index_build,
@@ -270,8 +271,10 @@ def test_append_id_dtype_mismatch_fails_loud(spark, tmp_path):
     text_index_build(_docs(spark), path)
     bad = spark.createDataFrame([("9", "spark")],
                                 "doc_id STRING, text STRING")
-    with pytest.raises(ValueError, match="id dtype"):
+    with pytest.raises(ValueError, match="id dtype") as err:
         text_index_append(bad, spark, path)
+    assert not isinstance(err.value, DuplicateIdsError), (
+        "a dtype mismatch must not pass for an epoch-retry re-append")
 
 
 def test_stats_drift_telemetry_flips_maintenance(spark, tmp_path):
@@ -733,7 +736,8 @@ def test_reappend_refuses_loud_and_update_recipe_serves_fresh(
 
     dup = spark.createDataFrame([(1, "changed text"), (9, "fresh")],
                                 "doc_id LONG, text STRING")
-    with pytest.raises(ValueError, match=r"already-indexed ids \[1\]"):
+    with pytest.raises(DuplicateIdsError,
+                       match=r"already-indexed ids \[1\]"):
         text_index_append(dup, spark, path)
 
     fresh = spark.createDataFrame([(9, "fresh doc")],

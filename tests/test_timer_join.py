@@ -7,7 +7,6 @@ from __future__ import annotations
 
 import datetime as dt
 import os
-import tempfile
 import uuid
 
 import pytest
@@ -279,8 +278,7 @@ def concat_joiner(l, r):
             .otherwise(F.concat(l["v"], F.lit("+"), r["v"]))
 
 
-def run_timer(spark, lrows, rrows, window="100 seconds", **kw):
-    base = tempfile.mkdtemp(prefix="ljot_timer_")
+def run_timer(spark, base, lrows, rrows, window="100 seconds", **kw):
     ldir, rdir, ckpt = (os.path.join(base, d) for d in ("l", "r", "ck"))
     spark.createDataFrame(lrows + [(-1, "flushL", TS(100_000))], SCHEMA) \
         .coalesce(1).write.parquet(ldir)
@@ -302,41 +300,42 @@ def run_timer(spark, lrows, rrows, window="100 seconds", **kw):
                   .select("k", "joined").collect())
 
 
-def test_timers_join_left_with_right(spark):
+def test_timers_join_left_with_right(spark, tmp_path):
     """Reference shouldJoinLeftWithRight through the timer mechanism."""
-    got = run_timer(spark,
+    got = run_timer(spark, tmp_path,
                     [(1, "left_1", TS(1)), (1, "left_2", TS(20))],
                     [(1, "right", TS(1))])
     assert got == [(1, "left_1+right"), (1, "left_2+right")]
 
 
-def test_timers_left_join_on_timeout(spark):
+def test_timers_left_join_on_timeout(spark, tmp_path):
     """Reference shouldLeftJoinOnTimeout through the timer mechanism."""
-    got = run_timer(spark, [(1, "left", TS(1))], [], window="100 ms")
+    got = run_timer(spark, tmp_path, [(1, "left", TS(1))], [],
+                    window="100 ms")
     assert got == [(1, "left+")]
 
 
-def test_timers_strict_cancel_all_quirk(spark):
+def test_timers_strict_cancel_all_quirk(spark, tmp_path):
     """End-to-end quirk reproduction: R matches L2 only; strict mode
     cancels L1's timer too — L1 emits nothing at all."""
-    got = run_timer(spark,
+    got = run_timer(spark, tmp_path,
                     [(1, "L1", TS(1)), (1, "L2", TS(50))],
                     [(1, "R", TS(120))])
     assert got == [(1, "L2+R")]
 
 
-def test_timers_sql_mode_times_out_unmatched(spark):
-    got = run_timer(spark,
+def test_timers_sql_mode_times_out_unmatched(spark, tmp_path):
+    got = run_timer(spark, tmp_path,
                     [(1, "L1", TS(1)), (1, "L2", TS(50))],
                     [(1, "R", TS(120))],
                     strict_reference_semantics=False)
     assert got == [(1, "L1+"), (1, "L2+R")]
 
 
-def test_timers_capacity_drop_sheds_timeouts(spark):
+def test_timers_capacity_drop_sheds_timeouts(spark, tmp_path):
     """O11 'drop' policy: the third pending left never times out (but
     still joined nothing here), the first two do."""
-    got = run_timer(spark,
+    got = run_timer(spark, tmp_path,
                     [(1, "a", TS(1)), (1, "b", TS(2)), (1, "c", TS(3))],
                     [], window="1 second",
                     scheduled_capacity=2, capacity_policy="drop")
@@ -394,7 +393,7 @@ def test_tws_join_and_timeout_e2e(spark):
     assert got == [(1, "left_a+right_a"), (2, "left_b+")]
 
 
-def test_tws_processing_time_mode(spark):
+def test_tws_processing_time_mode(spark, tmp_path):
     """Wall-clock timers on the *tws* tier (VERDICT r3 item 4 — the
     reference's literal clock, ``ScheduledStateStore.java:45``, now on
     the structural-parity adapter too): ``registerTimer(now + delay)``
@@ -409,7 +408,7 @@ def test_tws_processing_time_mode(spark):
         pytest.skip("no google.protobuf for the tws worker protocol")
     import time
 
-    base = tempfile.mkdtemp(prefix="ljot_tws_proc_")
+    base = str(tmp_path)
     ldir, rdir, ckpt = (os.path.join(base, d) for d in ("l", "r", "ck"))
     os.makedirs(ldir); os.makedirs(rdir)
 
@@ -452,7 +451,7 @@ def test_tws_processing_time_mode(spark):
             spark.conf.set(key, prev)
 
 
-def test_tws_checkpoint_restart(spark):
+def test_tws_checkpoint_restart(spark, tmp_path):
     """O9/O10 for the tws tier: ListState and *native* registered timers
     must survive a stop/restart through the RocksDB checkpoint — the
     reference's ``shouldLeftJoinOnTimeoutAfterRestoration`` on the
@@ -465,7 +464,7 @@ def test_tws_checkpoint_restart(spark):
     if not _tws_available():
         pytest.skip("no google.protobuf for the tws worker protocol")
 
-    base = tempfile.mkdtemp(prefix="ljot_tws_restart_")
+    base = str(tmp_path)
     ldir, rdir, ckpt, sink = (os.path.join(base, d)
                               for d in ("l", "r", "ck", "out"))
     os.makedirs(ldir); os.makedirs(rdir)
@@ -512,14 +511,14 @@ def test_tws_checkpoint_restart(spark):
             spark.conf.set(key, prev)
 
 
-def test_timers_checkpoint_restart(spark):
+def test_timers_checkpoint_restart(spark, tmp_path):
     """O9/O10 for the exact-timer tier: pending-left ListState and armed
     timers survive a stop/restart through the checkpoint (the reference's
     ``shouldLeftJoinOnTimeoutAfterRestoration``, LeftJoinOnTimeoutTest
     .java:131-153, where the state store is rebuilt from the changelog).
     After restart, one left matches and one times out — each exactly
     once."""
-    base = tempfile.mkdtemp(prefix="ljot_timer_restart_")
+    base = str(tmp_path)
     ldir, rdir, ckpt, sink = (os.path.join(base, d)
                               for d in ("l", "r", "ck", "out"))
     os.makedirs(ldir); os.makedirs(rdir)
@@ -558,7 +557,7 @@ def test_timers_checkpoint_restart(spark):
     assert got == [(1, "left_a+right_a"), (2, "left_b+")]
 
 
-def test_timers_processing_time_mode(spark):
+def test_timers_processing_time_mode(spark, tmp_path):
     """The reference's literal wall-clock mode
     (``ScheduledStateStore.java:45``): timers fire on the processing
     clock, independent of event times. With ProcessingTimeTimeout the
@@ -570,7 +569,7 @@ def test_timers_processing_time_mode(spark):
     (``LeftJoinOnTimeoutTest.java:221-235``)."""
     import time
 
-    base = tempfile.mkdtemp(prefix="ljot_timer_proc_")
+    base = str(tmp_path)
     ldir, rdir, ckpt = (os.path.join(base, d) for d in ("l", "r", "ck"))
     os.makedirs(ldir); os.makedirs(rdir)
 
