@@ -25,8 +25,6 @@ streaming inputs (``df.isStreaming`` picks the operator tier).
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
@@ -40,8 +38,11 @@ from left_join_on_timeout_spark.operators.timeout_join import (
     left_join_on_timeout,
 )
 from left_join_on_timeout_spark.sinks import encode_json_records, start_sink
+from left_join_on_timeout_spark.streaming.harness import scratch_dir
 from left_join_on_timeout_spark.streaming.timeout_join import (
     left_join_on_timeout_stream,
+    start_conf,
+    state_partitions,
 )
 
 
@@ -100,8 +101,9 @@ class LeftJoinOnTimeoutBuilder:
 
     def enable_state_log(self, checkpoint_dir: str) -> "LeftJoinOnTimeoutBuilder":
         """Durable state (reference changelog → Spark checkpoint). Without
-        it, ``start()`` uses a temp checkpoint — running but not
-        restart-durable, like the reference with logging disabled
+        it, ``start()`` uses a checkpoint under the process scratch root,
+        removed at interpreter exit — running but not restart-durable,
+        like the reference with logging disabled
         (``LeftJoinOnTimeoutTest.java:97-115``)."""
         self._checkpoint = checkpoint_dir
         return self
@@ -132,7 +134,9 @@ class LeftJoinOnTimeoutBuilder:
 
     def start(self) -> StreamingQuery:
         """Build and start the streaming topology into the configured
-        sink (reference ``KafkaStreams.start()``)."""
+        sink (reference ``KafkaStreams.start()``). A new checkpoint
+        starts at ``state_partitions`` (one state-store instance per
+        core); a restart keeps the count its checkpoint holds."""
         if self._sink_fmt is None:
             raise ValueError("sink_to(...) is required before start()")
         out = self.build_topology()
@@ -142,6 +146,10 @@ class LeftJoinOnTimeoutBuilder:
         if self._json_sink:
             out = encode_json_records(out, key_col=self._on,
                                       binary=self._sink_fmt == "kafka")
-        ckpt = self._checkpoint or tempfile.mkdtemp(prefix="ljot_ck_")
-        return start_sink(out, fmt=self._sink_fmt, checkpoint=ckpt,
-                          **self._sink_kwargs)
+        ckpt = self._checkpoint or scratch_dir("ljot_ck_")
+        width = state_partitions(out)
+        conf = {} if width is None else {
+            "spark.sql.shuffle.partitions": str(width)}
+        with start_conf(out.sparkSession, conf):
+            return start_sink(out, fmt=self._sink_fmt, checkpoint=ckpt,
+                              **self._sink_kwargs)

@@ -41,11 +41,6 @@ def parse_interval_ms(interval: str | int | float) -> int:
     return int(qty * _UNIT_MS[unit])
 
 
-def interval_sql(ms: int) -> str:
-    """Milliseconds → a Spark/ANSI `INTERVAL` literal body."""
-    return f"INTERVAL {ms / 1000.0} SECOND"
-
-
 @dataclass(frozen=True)
 class TimeoutJoinConfig:
     """Validated knobs of the timeout join.

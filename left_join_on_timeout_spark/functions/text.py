@@ -62,11 +62,6 @@ def punct_ratio(text: Column | str) -> Column:
     return _count_re(t, r"[^\w\s]") / F.greatest(F.length(t), F.lit(1))
 
 
-def digit_ratio(text: Column | str) -> Column:
-    t = F.col(text) if isinstance(text, str) else text
-    return _count_re(t, r"[0-9]") / F.greatest(F.length(t), F.lit(1))
-
-
 def stopword_count(text: Column | str) -> Column:
     t = normalize(text)
     pat = r"\b(" + "|".join(STOPWORDS) + r")\b"

@@ -119,15 +119,6 @@ def shingles_of(w: Column, n: int = DEFAULT_SHINGLE) -> Column:
         F.array(F.concat_ws(" ", w)))
 
 
-def shingle_rows(df: DataFrame, id_col: str, text_col: str,
-                 n: int = DEFAULT_SHINGLE) -> DataFrame:
-    """(id, shingle) rows: tokenize once into a words column, then
-    explode the n-gram shingles of that column."""
-    return (df.select(F.col(id_col), words(text_col).alias("_w"))
-            .select(F.col(id_col),
-                    F.explode(shingles_of(F.col("_w"), n)).alias("shingle")))
-
-
 def shingle_sets(df: DataFrame, id_col: str, text_col: str,
                  n: int = DEFAULT_SHINGLE) -> DataFrame:
     """(id, sh_set): the *distinct* shingle set of each document as one
@@ -265,31 +256,6 @@ def lsh_probe_pairs(index_sig: DataFrame, probe_sig: DataFrame, id_col: str,
                   ["band", "h"])
             .select("probe_id", "index_id")
             .distinct())
-
-
-def jaccard_verify(candidates: DataFrame, sh: DataFrame, id_col: str,
-                   threshold: float) -> DataFrame:
-    """Exact shingle-Jaccard verification restricted to LSH candidate
-    pairs — the scale-path composition (candidates from equi-joins, exact
-    scoring only on candidates). ``candidates`` is (id_a, id_b); ``sh``
-    is distinct (id, shingle) rows. Shingles of non-candidate documents
-    are pruned by the id join *before* any per-pair work, so the verify
-    stage costs O(candidate shingles), not O(corpus shingles²)."""
-    sizes = sh.groupBy(id_col).agg(F.count("*").alias("n_sh"))
-    a = sh.select(F.col(id_col).alias("id_a"), "shingle")
-    b = sh.select(F.col(id_col).alias("id_b"), "shingle")
-    inter = (candidates.join(a, "id_a")
-             .join(b, ["id_b", "shingle"])
-             .groupBy("id_a", "id_b")
-             .agg(F.count("*").alias("inter")))
-    na = sizes.select(F.col(id_col).alias("id_a"), F.col("n_sh").alias("n_a"))
-    nb = sizes.select(F.col(id_col).alias("id_b"), F.col("n_sh").alias("n_b"))
-    jac = (inter.join(na, "id_a").join(nb, "id_b")
-           .withColumn("jaccard",
-                       F.col("inter") /
-                       (F.col("n_a") + F.col("n_b") - F.col("inter"))))
-    return (jac.where(F.col("jaccard") >= threshold)
-            .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard")))
 
 
 def lsh_verified_near_dups(df: DataFrame, id_col: str, text_col: str,

@@ -33,6 +33,9 @@ def get_spark(app_name: str = "left_join_on_timeout_spark",
 
     ``shuffle_partitions`` defaults to the core count: right for local SFs;
     on a real cluster you'd size it to ~2-3× total cores and let AQE coalesce.
+    That width is for batch plans. Join streams the library starts run one
+    state-store instance per core instead
+    (``streaming.timeout_join.state_partitions``).
     """
     cpus = str(cpus or DEFAULT_CPUS)
     shuffle = str(shuffle_partitions or cpus)

@@ -16,8 +16,10 @@ emissions through a raw producer (``:165-170``). Spark's equivalents:
   leave through the one sink with exactly-once file/Kafka semantics from
   checkpointing (O9 — built-in).
 
-Scale notes: sink parallelism = shuffle partitions of the final stage;
-parquet sinks write one file per partition per micro-batch (compact with
+Scale notes: sink parallelism = partitions of the final stage, which for
+a join stream is its state partitions (``streaming.timeout_join.
+state_partitions`` when the library starts it); parquet sinks write one
+file per state partition per micro-batch (compact with
 ``spark.sql.streaming.fileSink.compactInterval`` or downstream OPTIMIZE);
 Kafka sinks partition by record key — same key-routing as the reference's
 producer (O14).

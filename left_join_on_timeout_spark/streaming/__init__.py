@@ -4,7 +4,9 @@ operator), re-expressed on Structured Streaming.
 * ``timeout_join`` — watermarked stream-stream ``leftOuter`` join: the
   watermark passing ``left.ts + window + timeout_gap`` plays the role of
   the reference's wall-clock timer (O3/O4/O5 implicit; O9/O10 come from
-  checkpointing).
+  checkpointing). ``state_partitions`` sizes the join streams the library
+  starts at one state-store instance per core; ``start_conf`` is the one
+  place that flips session conf around a query's ``start()``.
 * ``timer_join`` — exact-timer parity variant: explicit per-key list
   state + timers reproducing the reference's mechanism and its
   cancel-all-per-key quirk behind ``strict_reference_semantics``.

@@ -16,6 +16,18 @@ live in driver memory and stay readable; output a ``foreachBatch``
 function writes for lazy reading after the call belongs in a
 :func:`scratch_dir`, under a PID-keyed root removed at interpreter exit.
 
+**State width:** every stateful micro-batch costs one task per state
+partition per stateful operator, and a vanilla session's 200 partitions
+turn a 60k-row drain into thousands of near-empty state-store tasks.
+A memory-sink drain therefore starts a stream-stream join at
+``timeout_join.state_partitions`` (one state-store instance per core)
+and any other plan at ``min(session, 16)``; a ``foreachBatch`` drain
+keeps the session's width, because its batch work runs at the stream's
+width. The count is set only around ``start()`` (the query copies it,
+and its checkpoint pins it), so the session value is back before the
+drain runs. On a real cluster the session default stands for every
+other query — this is drain sizing, not an engine default.
+
 Flush rows (:func:`with_flush_row`, one per input) carry a far-future
 timestamp and a marker key (negative ids — real keys in the test tables
 are ≥ 0 — or a tag); they advance the watermark so every pending left
@@ -30,7 +42,6 @@ from __future__ import annotations
 import os
 import tempfile
 import uuid
-from contextlib import contextmanager, nullcontext
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -39,28 +50,11 @@ from left_join_on_timeout_spark import fsio
 from left_join_on_timeout_spark.operators.timeout_join import Joiner
 from left_join_on_timeout_spark.streaming.timeout_join import (
     left_join_on_timeout_stream,
+    start_conf,
+    state_partitions,
 )
 
 FLUSH_TS = "2100-01-01 00:00:00"
-
-
-@contextmanager
-def _drain_tuning(spark: SparkSession):
-    """Size state partitioning for a bounded drain. Every stateful
-    micro-batch costs one task per shuffle partition per stateful
-    operator — a vanilla session's 200 partitions turn a 60k-row drain
-    into thousands of near-empty state-store tasks. The count is
-    snapshotted per query at stream start (state partitioning is pinned
-    for the checkpoint's life), so capping it here affects only this
-    drain; the session value is restored afterwards. On a real cluster
-    the default stands — this is drain sizing, not an engine default."""
-    key = "spark.sql.shuffle.partitions"
-    prev = spark.conf.get(key)
-    spark.conf.set(key, str(min(int(prev), 16)))
-    try:
-        yield
-    finally:
-        spark.conf.set(key, prev)
 
 
 def scratch_dir(prefix: str) -> str:
@@ -92,7 +86,8 @@ def with_flush_row(df: DataFrame, keys: dict | None = None,
 def drain_stream(spark: SparkSession,
                  inputs: DataFrame | tuple[DataFrame, ...],
                  build=None,
-                 foreach_batch=None) -> DataFrame | None:
+                 foreach_batch=None,
+                 conf: dict[str, str] | None = None) -> DataFrame | None:
     """Feed bounded *batch* DataFrames through a streaming transform and
     drain it.
 
@@ -104,11 +99,13 @@ def drain_stream(spark: SparkSession,
     append-mode joins and aggregations finalize without wall-clock
     waits.
 
-    Without ``foreach_batch`` the output goes to the memory sink under
-    :func:`_drain_tuning` and the sink is returned as a batch DataFrame.
-    With it, ``foreach_batch(batch_df, epoch_id)`` is the sink, the
-    session's partitioning stands, and None is returned. Either way the
-    staged inputs and the checkpoint are deleted once the query stops."""
+    Without ``foreach_batch`` the output goes to the memory sink, started
+    at the state width in the module docstring, and the sink is returned
+    as a batch DataFrame. With it, ``foreach_batch(batch_df, epoch_id)``
+    is the sink, the session's partitioning stands, and None is
+    returned. ``conf`` is extra session conf for the query's start (a
+    state-store provider, say). Either way the staged inputs and the
+    checkpoint are deleted once the query stops."""
     inputs = inputs if isinstance(inputs, tuple) else (inputs,)
     base = tempfile.mkdtemp(prefix="ljot_drain_")
     try:
@@ -120,19 +117,22 @@ def drain_stream(spark: SparkSession,
         out = build(*streams) if build is not None else streams[0]
         writer = out.writeStream.option(
             "checkpointLocation", os.path.join(base, "ck"))
+        conf = dict(conf or {})
         if foreach_batch is not None:
-            writer, tuning = writer.foreachBatch(foreach_batch), nullcontext()
+            writer = writer.foreachBatch(foreach_batch)
         else:
             qname = "ljot_sink_" + uuid.uuid4().hex[:12]
             writer = (writer.format("memory").queryName(qname)
                       .outputMode("append"))
-            tuning = _drain_tuning(spark)
-        with tuning:
+            width = state_partitions(out) or min(
+                int(spark.conf.get("spark.sql.shuffle.partitions")), 16)
+            conf["spark.sql.shuffle.partitions"] = str(width)
+        with start_conf(spark, conf):
             q = writer.start()
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
     finally:
         fsio.delete(spark, base)
     return None if foreach_batch is not None else spark.table(qname)
@@ -146,6 +146,7 @@ def drain_two_streams(
     build,
     left_ts: str = "ts",
     right_ts: str = "ts",
+    conf: dict[str, str] | None = None,
 ) -> DataFrame:
     """Two-input :func:`drain_stream` with a flush row on each side
     (keys -1 and -2): ``build(lstream, rstream)`` is drained and
@@ -153,7 +154,7 @@ def drain_two_streams(
     return drain_stream(
         spark, (with_flush_row(left, {on: -1}, left_ts),
                 with_flush_row(right, {on: -2}, right_ts)),
-        build).where(F.col(on) >= 0)
+        build, conf=conf).where(F.col(on) >= 0)
 
 
 def run_timeout_join_stream(
@@ -203,31 +204,25 @@ def run_tws_join_stream(
 ) -> DataFrame:
     """Drain the ``transformWithStateInPandas`` tier over bounded inputs.
 
-    tws requires a state store with column families, so the query runs
+    tws requires a state store with column families, so the query starts
     under ``RocksDBStateStoreProvider`` (bundled rocksdbjni); the
-    session's provider conf is restored afterwards. Same SQL-equivalent
-    mode and flush discipline as :func:`run_timer_join_stream`."""
+    session's provider conf is restored once it has started. Same
+    SQL-equivalent mode and flush discipline as
+    :func:`run_timer_join_stream`."""
     from left_join_on_timeout_spark.streaming.timer_join import (
         left_join_on_timeout_tws,
     )
 
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, "org.apache.spark.sql.execution.streaming."
-                        "state.RocksDBStateStoreProvider")
-    try:
-        return drain_two_streams(
-            spark, left, right, on,
-            lambda l, r: left_join_on_timeout_tws(
-                l, r, on=on, window=window, left_ts=left_ts,
-                right_ts=right_ts, joiner=joiner,
-                strict_reference_semantics=False),
-            left_ts=left_ts, right_ts=right_ts)
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
+    return drain_two_streams(
+        spark, left, right, on,
+        lambda l, r: left_join_on_timeout_tws(
+            l, r, on=on, window=window, left_ts=left_ts,
+            right_ts=right_ts, joiner=joiner,
+            strict_reference_semantics=False),
+        left_ts=left_ts, right_ts=right_ts,
+        conf={"spark.sql.streaming.stateStore.providerClass":
+              "org.apache.spark.sql.execution.streaming."
+              "state.RocksDBStateStoreProvider"})
 
 
 def run_timer_join_stream(

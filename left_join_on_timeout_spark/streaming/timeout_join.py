@@ -30,17 +30,82 @@ shuffled on the key — state is per shuffle-partition, watermark-evicted
 (retention bounded by ``window + delay``), RocksDB-backed with changelog
 checkpointing on a real cluster. Nothing here collects to the driver,
 and the joiner is a Column expression (whole-stage codegen).
+
+State width: each state partition of the join holds four state-store
+instances (``keyToNumValues`` and ``keyWithIndexToValue`` per side), and
+every micro-batch loads, copies and commits each one — a delta file, a
+checksum sidecar and a rename. Queries the library starts therefore run
+a join at :func:`state_partitions` (one store instance per core) instead
+of the session's shuffle width. Spark copies the count into the
+checkpoint at batch 0, so a restarted query keeps the count it started
+with.
 """
 
 from __future__ import annotations
 
+import threading
 from collections.abc import Sequence
+from contextlib import contextmanager
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from left_join_on_timeout_spark.config import TimeoutJoinConfig
 from left_join_on_timeout_spark.operators.timeout_join import Joiner, _prepare
+
+
+# stateful operators whose per-batch work is Python per group, one task
+# per state partition: they keep the session's width, since fewer
+# partitions would serialize that Python work rather than store commits
+_PYTHON_STATEFUL = ("FlatMapGroupsInPandasWithState",
+                    "TransformWithStateInPySpark")
+_START_LOCK = threading.Lock()
+
+
+def state_partitions(df: DataFrame) -> int | None:
+    """The state partition count to start ``df`` at: one state-store
+    instance per core (``defaultParallelism // 4`` partitions of four
+    join stores, at least 1) when the analyzed plan holds a stream-stream
+    join and no Python stateful operator; None otherwise, and the
+    caller's width stands."""
+    if not df.isStreaming:
+        return None
+    todo, stream_join = [df._jdf.queryExecution().analyzed()], False
+    while todo:
+        node = todo.pop()
+        name = node.nodeName()
+        if name in _PYTHON_STATEFUL:
+            return None
+        stream_join = stream_join or (
+            name == "Join" and node.left().isStreaming()
+            and node.right().isStreaming())
+        kids = node.children()
+        todo.extend(kids.apply(i) for i in range(kids.size()))
+    if not stream_join:
+        return None
+    return max(1, df.sparkSession.sparkContext.defaultParallelism // 4)
+
+
+@contextmanager
+def start_conf(spark: SparkSession, conf: dict[str, str]):
+    """Set ``conf`` on the session for one query's ``start()`` and
+    restore the previous values (unset keys are unset again) after it.
+    A query copies the session conf when it starts, so nothing later in
+    its life reads these values from the session. Start sites share one
+    lock, so two threads starting queries on one session never see each
+    other's values."""
+    with _START_LOCK:
+        prev = {k: spark.conf.get(k, None) for k in conf}
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        try:
+            yield
+        finally:
+            for k, v in prev.items():
+                if v is None:
+                    spark.conf.unset(k)
+                else:
+                    spark.conf.set(k, v)
 
 
 def _delay_str(ms: int) -> str:

@@ -49,3 +49,26 @@ def test_drains_remove_their_temp_trees(spark, tmp_path, monkeypatch):
     assert [r.v for r in single.collect()] == ["b"]
     assert sorted(r.v for r in spark.read.parquet(out).collect()) == \
         ["a", "b"]
+
+
+def test_builder_default_checkpoint_lives_under_scratch_root(
+        spark, tmp_path, monkeypatch):
+    """A builder started without ``enable_state_log`` checkpoints under
+    the process scratch root, not in a bare ``ljot_ck_*`` temp dir."""
+    from left_join_on_timeout_spark.builder import LeftJoinOnTimeoutBuilder
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    src = os.path.join(str(tmp_path), "in")
+    spark.createDataFrame([(1, "a", TS(0))], SCHEMA).write.parquet(src)
+    stream = spark.readStream.schema(SCHEMA).parquet(src)
+    q = (LeftJoinOnTimeoutBuilder(stream, stream, None, "1 second", on="k")
+         .sink_to("memory", query_name="hygiene_builder_sink").start())
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+
+    left_behind = [n for n in os.listdir(tmp_path) if n.startswith("ljot_")]
+    assert left_behind == [], f"builder left {left_behind} behind"
+    root = os.path.join(str(tmp_path), f"spark_graft_scratch_{os.getpid()}")
+    assert [n for n in os.listdir(root) if n.startswith("ljot_ck_")]

@@ -14,6 +14,7 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from left_join_on_timeout_spark.builder import LeftJoinOnTimeoutBuilder
 from left_join_on_timeout_spark.operators.timeout_join import left_join_on_timeout
 from left_join_on_timeout_spark.streaming.harness import run_timeout_join_stream
 from left_join_on_timeout_spark.streaming.timeout_join import (
@@ -156,7 +157,8 @@ def test_timeout_after_checkpoint_restart(spark, tmp_path):
     assert got == [(1, "left_a+"), (2, "left_b+")]
 
 
-def test_restart_exactly_once_across_partitions(spark, tmp_path):
+@pytest.mark.parametrize("restart", ["writeStream", "builder"])
+def test_restart_exactly_once_across_partitions(spark, tmp_path, restart):
     """Partition-handoff analog of reference
     ``LeftJoinOnTimeoutTest.java:155-177`` (``shouldLeftJoinOnTimeout
     AfterRebalancing``): Kafka Streams migrates state between consumers
@@ -170,7 +172,10 @@ def test_restart_exactly_once_across_partitions(spark, tmp_path):
     with pending state in every partition, then per-key exactly-once
     accounting — no partition may lose or duplicate an emission across
     the boundary (plus an idle third run: pure re-open, zero new
-    emissions)."""
+    emissions). Phase 1 always starts through raw ``writeStream`` at
+    the session's width; with ``restart="builder"`` phase 2 restarts
+    through ``LeftJoinOnTimeoutBuilder.start()``, which would start a new
+    checkpoint narrower, and must keep the checkpoint's count."""
     n_keys, n_parts = 40, spark.conf.get("spark.sql.shuffle.partitions")
     base = str(tmp_path)
     ldir, rdir, ckpt, sink = (os.path.join(base, d)
@@ -181,11 +186,16 @@ def test_restart_exactly_once_across_partitions(spark, tmp_path):
         spark.createDataFrame(rows, SCHEMA).coalesce(1) \
             .write.mode("append").parquet(d)
 
-    def start_query():
+    def start_query(via="writeStream"):
+        lhs = spark.readStream.schema(SCHEMA).parquet(ldir)
+        rhs = spark.readStream.schema(SCHEMA).parquet(rdir)
+        if via == "builder":
+            return (LeftJoinOnTimeoutBuilder(lhs, rhs, concat_joiner,
+                                             "10 seconds", on="k")
+                    .enable_state_log(ckpt)
+                    .sink_to("parquet", path=sink).start())
         out = left_join_on_timeout_stream(
-            spark.readStream.schema(SCHEMA).parquet(ldir),
-            spark.readStream.schema(SCHEMA).parquet(rdir),
-            on="k", window="10 seconds", joiner=concat_joiner)
+            lhs, rhs, on="k", window="10 seconds", joiner=concat_joiner)
         return (out.writeStream.format("parquet").option("path", sink)
                 .outputMode("append").option("checkpointLocation", ckpt)
                 .start())
@@ -209,9 +219,14 @@ def test_restart_exactly_once_across_partitions(spark, tmp_path):
     write(ldir, [(-1, "flushL", TS(10_000))])
     write(rdir, [(k, f"R{k}", TS(3)) for k in range(1, n_keys, 4)]
           + [(-2, "flushR", TS(10_000))])
-    q = start_query()
-    q.processAllAvailable()
-    q.stop()
+    q = start_query(restart)
+    try:
+        q.processAllAvailable()
+        # four join stores per state partition, as the checkpoint has it
+        assert q.lastProgress["stateOperators"][0][
+            "numStateStoreInstances"] == 4 * int(n_parts)
+    finally:
+        q.stop()
 
     rows = spark.read.parquet(sink).where(F.col("k") >= 0).collect()
     per_key = {}

@@ -1,11 +1,12 @@
 #!/usr/bin/env python
 """Capture .explain("formatted") for registered queries into
-plans/r14/<query>_<tag>.txt (the judge checks plan claims against these).
+plans/<round>/<query>_<tag>.txt (the judge checks plan claims against these).
 
-Usage: python tools/capture_plans.py <tag> <query> [query ...]
+Usage: python tools/capture_plans.py <round> <tag> <query> [query ...]
+e.g. ``python tools/capture_plans.py r15 after q3_shipping_priority``.
 Streaming/multi-action queries capture the plan of the RETURNED frame
 (the adjudicated output); their internal stages are documented in
-OPTIMIZATION_r14.md instead.
+that round's OPTIMIZATION_<round>.md instead.
 """
 
 from __future__ import annotations
@@ -13,27 +14,28 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from left_join_on_timeout_spark import queries as q  # noqa: E402
 from left_join_on_timeout_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-OUT = os.path.join(os.path.dirname(os.path.dirname(
-    os.path.abspath(__file__))), "plans", "r14")
 
 
 def main() -> None:
-    tag = sys.argv[1]
-    names = sys.argv[2:]
-    os.makedirs(OUT, exist_ok=True)
+    if len(sys.argv) < 4:
+        sys.exit(__doc__)
+    out = os.path.join(ROOT, "plans", sys.argv[1])
+    tag, names = sys.argv[2], sys.argv[3:]
+    os.makedirs(out, exist_ok=True)
     spark = get_spark(app_name="capture_plans")
     spark.sparkContext.setLogLevel("ERROR")
     for name in names:
         df = q.QUERIES[name](spark, SF_DIR)
         plan = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted")
-        path = os.path.join(OUT, f"{name}_{tag}.txt")
+        path = os.path.join(out, f"{name}_{tag}.txt")
         with open(path, "w") as fh:
             fh.write(plan)
         print(f"wrote {path} ({len(plan)} chars)")
