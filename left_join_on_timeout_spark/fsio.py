@@ -4,7 +4,7 @@ item 2).
 Every metadata operation the saved-index lifecycle performs outside a
 DataFrame write — version GC, tombstone discovery, manifest-pointer
 read/write, stale-directory reset — routes through this module, so the
-versioned-manifest pattern (:mod:`operators.ann_index`) actually runs
+versioned-manifest pattern (:mod:`operators.index_store`) actually runs
 wherever Spark runs: a scheme-less path takes the local ``os`` fast
 path; any URI with a scheme (``file:``, ``hdfs:``, ``s3a:``, ``gs:``,
 …) goes through the JVM's ``org.apache.hadoop.fs.FileSystem`` API —
@@ -22,7 +22,7 @@ The pointer-file write is the one atomicity-sensitive call:
 on the local fast path and a single-object ``FileSystem.create``
 (an atomic PUT on object stores) on the Hadoop path. On filesystems
 where neither is atomic for readers (HDFS truncate-then-write), the
-manifest reader's LISTING FALLBACK (``ann_index._read_meta``) keeps a
+manifest reader's LISTING FALLBACK (``index_store.read_meta``) keeps a
 concurrent load from ever erroring — the Iceberg ``version-hint``
 discipline: the pointer is an optimization, the versioned metadata
 directories are the truth.

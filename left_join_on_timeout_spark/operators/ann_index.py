@@ -20,20 +20,8 @@ pushable; the format the rest of the engine already speaks):
   once per build, partitioned on ``sid`` so a probe prunes to its own
   super-cell's files (partition pruning does the cell routing a
   serving system would do with an explicit shard map).
-* ``meta_v{seq}``   one row of knobs — load-time validation, the
-  contract that search uses the SAME cap/probe semantics the build
-  baked into the postings, and a ``seq`` counter: the live postings
-  live at ``postings_v{seq}``. The meta is VERSIONED like the
-  postings (VERDICT r9 item 1 — the pointer flip must be atomic,
-  and a parquet-directory overwrite is not): a rebuild writes
-  ``meta_v{seq+1}`` as a fresh directory and then flips ``latest``,
-  a single tiny pointer object holding the seq — write-aside +
-  atomic rename locally, a single-object PUT on object stores. A
-  reader that catches the pointer mid-write falls back to LISTING
-  the ``meta_v*`` directories and takes the newest readable one
-  (the Iceberg version-hint discipline: the pointer is an
-  optimization, the versioned directories are the truth), so a
-  concurrent load never errors during a publish.
+* ``meta_v{seq}``   one row of knobs, versioned with the postings
+  under the shared manifest protocol of :mod:`operators.index_store`.
 
 ``attr_cols`` lets a build carry attribute columns (label / source /
 date) into the postings so a serving search can push an attribute
@@ -57,16 +45,10 @@ PartitionFilter, so the scan reads only the probed sid directories
 MAINTENANCE closes the loop (VERDICT r7 item 4, r8 items 2-3):
 ``*_index_append`` assigns/encodes new batches through the loaded
 (immutable) quantizer and appends postings; ``*_index_delete`` writes
-id TOMBSTONES that every search anti-joins out (broadcast — deletes
-are small between rebuilds) so a dropped document never surfaces from
-a standing index; ``*_index_rebuild`` re-applies the build cap over
-base+appended postings MINUS tombstones, and publishes the result as
-a new VERSIONED directory ``postings_v{seq+1}`` before flipping the
-``meta.seq`` manifest pointer — no renames anywhere (object-store
-safe), a reader that loaded the previous version keeps scanning its
-own files (old versions are garbage-collected only once they fall two
-seqs behind), and a crash mid-rebuild leaves the old version live
-because the pointer flips last.
+id tombstones every search anti-joins out; ``*_index_rebuild``
+re-applies the build cap over base + appended postings minus
+tombstones and publishes the next version. The versioning, pointer,
+tombstone and GC rules are :mod:`operators.index_store`'s.
 
 Reference parity note: the reference engine (kptfh/left-join-on-timeout)
 has no ANN surface — this module belongs to the LLM-data-pipeline
@@ -76,14 +58,12 @@ extension mandated by the build spec.
 from __future__ import annotations
 
 import os
-import re
 
-from pyspark.sql import DataFrame, Row, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from left_join_on_timeout_spark import fsio
-
 from left_join_on_timeout_spark.functions.vectors import as_double, l2_norm
+from left_join_on_timeout_spark.operators import index_store as store
 from left_join_on_timeout_spark.operators.similarity import (
     DEFAULT_CELL_CAP,
     DEFAULT_IVF_CELLS,
@@ -91,231 +71,15 @@ from left_join_on_timeout_spark.operators.similarity import (
     DEFAULT_PQ_CODEWORDS,
     DEFAULT_SUB_CELLS,
     DEFAULT_SUPER_CELLS,
-    _assign_to_anchors,
-    _assign_to_subs,
-    _bidir_top1,
-    _pq_best,
-    _score,
-    _train_two_level,
+    assign_to_anchors,
+    assign_to_subs,
+    bidir_top1,
+    pq_best,
+    score_pairs,
+    train_two_level,
     probe_assign_multi,
 )
 from left_join_on_timeout_spark.partitioning import fan_out
-
-# v3: postings AND meta are VERSIONED directories (postings_v{seq},
-# meta_v{seq}) resolved through the single-object ``latest`` pointer
-# (listing fallback), with optional versioned id tombstones — older
-# layouts (v1 rename-in-place, v2 overwritten-meta) fail loud at load;
-# indexes are cheap to rebuild and nothing in this sandbox persists
-# them across runs.
-INDEX_FORMAT_VERSION = 3
-
-def default_index_root() -> str:
-    """Root directory the registered queries save their indexes under.
-    ``SPARK_GRAFT_INDEX_DIR`` pins a shared location (the deployment
-    case: one serving path, versioned rebuilds GC themselves); the
-    DEFAULT is keyed by PID so two concurrent runs at the same SF
-    (bench + tests, or two sessions) can never overwrite parquet files
-    a sibling's lazy search plan is still reading (ADVICE r7). The
-    PID-keyed default is removed at interpreter exit (ADVICE r8 — a
-    bench/test process must not abandon a corpus-sized tree in /tmp)."""
-    return (os.environ.get("SPARK_GRAFT_INDEX_DIR")
-            or fsio.process_dir("spark_graft_index"))
-
-
-def _postings_dir(path: str, seq: int) -> str:
-    return os.path.join(path, f"postings_v{int(seq)}")
-
-
-def _meta_dir(path: str, seq: int) -> str:
-    return os.path.join(path, f"meta_v{int(seq)}")
-
-
-_POINTER = "latest"
-
-
-def _gc_versions(spark: SparkSession, path: str, live_seq: int,
-                 keep: int = 2) -> None:
-    """Remove postings/tombstone/meta versions ``keep`` or more behind
-    the live pointer — the grace period that lets a reader who loaded
-    a PREVIOUS version finish its scans after a rebuild publishes a
-    new one (the versioned-manifest pattern; `_publish_postings` flips
-    the pointer first). The default retention (live + one prior)
-    matches the streaming-reader contract; a deployment that serves
-    snapshot (``as_of``) readers raises ``keep_versions`` on its
-    rebuilds to widen the time-travel horizon. All FS ops route
-    through :mod:`fsio` so GC runs on any Hadoop-compatible store
-    (VERDICT r9 item 2)."""
-    keep = max(1, int(keep))
-    for name in fsio.list_names(spark, path):
-        m = re.fullmatch(r"(?:postings|tombstones|meta|ids)_v(\d+)", name)
-        if m and int(m.group(1)) <= int(live_seq) - keep:
-            fsio.delete(spark, os.path.join(path, name))
-
-
-def index_versions(spark: SparkSession, path: str) -> list[int]:
-    """The version sequence numbers still LIVE under a saved index
-    path (ascending): the manifest pointer's target plus however many
-    prior versions the rebuilds' ``keep_versions`` retention has not
-    yet GC'd. Any of them can be pinned by ``*_index_load(...,
-    as_of=seq)`` — the snapshot/time-travel read. One directory
-    listing; nothing corpus-sized is touched."""
-    return sorted(
-        int(m.group(1)) for name in fsio.list_names(spark, path)
-        if (m := re.fullmatch(r"meta_v(\d+)", name)))
-
-
-def _tombstones_dir(path: str, seq: int) -> str:
-    """Tombstones are VERSIONED like the postings (``tombstones_v{seq}``
-    pairs with ``postings_v{seq}``): a pre-rebuild reader keeps BOTH
-    sides of its loaded plan alive through one rebuild (the grace
-    period must cover the anti-join scan too, not just the postings),
-    a post-rebuild load sees no tombstones at all (the rebuild dropped
-    the rows physically — a later re-insert of a deleted id is
-    servable), and nothing is ever deleted at publish time, so there
-    is no crash window between the pointer flip and a cleanup."""
-    return os.path.join(path, f"tombstones_v{int(seq)}")
-
-
-def _load_tombstones(spark: SparkSession, path: str, seq: int):
-    """The live version's deleted-id relation, or None. Kept tiny by
-    contract: deletes accumulate only between rebuilds (the rebuild
-    drops the rows physically; its new version starts with none), so
-    search-side anti-joins broadcast it."""
-    tdir = _tombstones_dir(path, seq)
-    if not any(f.endswith(".parquet")
-               for f in fsio.list_names(spark, tdir)):
-        return None
-    return spark.read.parquet(tdir)
-
-
-def _apply_tombstones(postings: DataFrame, tomb) -> DataFrame:
-    """Anti-join deleted ids out of the postings — applied at LOAD so
-    every consumer (search, probe, rerank shortlist, rebuild's recap)
-    inherits delete semantics from one place. Left-side predicates
-    (attribute pushdown, sid partition pruning) still reach the scan:
-    Catalyst pushes filters through the left side of a LeftAnti join
-    (plan-gated in tests/test_plans.py)."""
-    if tomb is None:
-        return postings
-    return postings.join(F.broadcast(tomb.select("id")), "id", "left_anti")
-
-
-def _index_delete(spark: SparkSession, path: str, ids) -> None:
-    """Append id TOMBSTONES to a saved index (either tier): ``ids`` is
-    a one-column DataFrame of posting ids or an iterable of ints.
-    Deleted ids stop appearing in every search/probe immediately (load
-    anti-joins them out) and are dropped PHYSICALLY at the next
-    rebuild, which also clears the tombstones — the delete-at-compact
-    contract of every LSM-shaped index. Deleting an id that was never
-    indexed is a no-op (anti-join semantics), so callers can feed the
-    dedup stage's removal list verbatim. Deletes take effect at the
-    next LOAD (the anti-join is wired into ``*_index_load``); a
-    consumer holding an already-loaded index keeps its as-of-load view
-    until it re-loads — same staleness rule as any snapshot reader.
-
-    Ordering contract: a DELETE wins over any append of the same id
-    until the next rebuild (the anti-join is by id, not by version),
-    and the rebuild drops the id's rows physically into a NEW version
-    whose tombstone set starts empty — so a re-insert of a deleted id
-    only takes effect if appended AFTER the rebuild that dropped it.
-    Same rule as any id-keyed tombstone log.
-
-    Long-running STREAMING readers: a loaded index pins its resolved
-    ``postings_v{seq}`` files for the plan's lifetime; the versioned GC
-    keeps one prior version, so a stream survives ONE rebuild under it
-    and should re-load the index (re-resolve the pointer) at least
-    once per rebuild cycle — or run through the foreachBatch
-    re-resolution of :func:`refreshing_probe`, which re-reads the
-    pointer every micro-batch and survives arbitrary rebuilds.
-
-    Tombstones are TYPED (VERDICT r9 item 4): the tombstone relation
-    is built in the id type the LIVE POSTINGS actually carry (read
-    from their schema — the one source that cannot drift from the
-    truth), so a string-keyed index deletes string ids and an
-    int-keyed one deletes ints; ids that cannot cast losslessly into
-    the postings' id type raise loudly instead of null-casting into a
-    silent no-op delete."""
-    meta = _read_meta(spark, path)
-    id_type = _read_postings(spark, path, meta.seq).schema["id"].dataType
-    if isinstance(ids, DataFrame):
-        src = ids.select(F.col(ids.columns[0]).alias("id"))
-    else:
-        vals = [(v,) for v in ids]
-        if not vals:
-            return
-        src = spark.createDataFrame(vals, ["id"])
-    if src.schema["id"].dataType != id_type:
-        try:
-            checked = src.select(
-                F.col("id").alias("_orig"),
-                F.col("id").try_cast(id_type).alias("id"))
-        except Exception as e:
-            got = src.schema["id"].dataType.simpleString()
-            raise TypeError(
-                f"delete ids of type {got} cannot cast to the index's "
-                f"id type {id_type.simpleString()}") from e
-        # deletes are tiny by contract (they accumulate only between
-        # rebuilds), so the lossless-cast check is a bounded action
-        bad = (checked.where(F.col("id").isNull()
-                             & F.col("_orig").isNotNull())
-               .limit(3).collect())
-        if bad:
-            raise TypeError(
-                f"delete ids {[r._orig for r in bad]} do not cast to "
-                f"the index's id type {id_type.simpleString()} — "
-                f"refusing a silent no-op delete")
-        src = checked.select("id")
-    src.write.mode("append").parquet(_tombstones_dir(path, meta.seq))
-
-
-def ivf2_index_delete(spark: SparkSession, path: str, ids) -> None:
-    """Tombstone-delete ids from a saved two-level index (VERDICT r8
-    item 2). See :func:`_index_delete` for the contract."""
-    _index_delete(spark, path, ids)
-
-
-def pq_index_delete(spark: SparkSession, path: str, ids) -> None:
-    """Tombstone-delete ids from a saved IVF-PQ index (VERDICT r8
-    item 2). See :func:`_index_delete` for the contract."""
-    _index_delete(spark, path, ids)
-
-
-def _check_id_col(meta, id_col: str, action: str) -> None:
-    """Cross-check a search/append ``id_col`` against the build-time
-    ``meta.id_col`` (ADVICE r7): an APPEND with a different id column
-    writes rows from a different id namespace into the postings —
-    refuse; a SEARCH may legitimately name its query frame's column
-    differently, so only warn."""
-    built = getattr(meta, "id_col", None)
-    if built is None or id_col == built:
-        return
-    if action == "append":
-        raise ValueError(
-            f"append id_col={id_col!r} differs from the index's build "
-            f"id_col={built!r} — appended ids would come from a "
-            f"different namespace; rebuild the index instead")
-    import warnings
-
-    warnings.warn(
-        f"{action} id_col={id_col!r} differs from the index's build "
-        f"id_col={built!r} — make sure the query ids share the "
-        f"postings' id namespace", stacklevel=3)
-
-
-def _read_postings(spark: SparkSession, path: str, seq: int):
-    """Read the LIVE postings version (``postings_v{seq}`` — the
-    directory ``meta.seq`` points at) with a clear error on the
-    degenerate builds (ADVICE r7): if every cell exceeded ``cell_cap``
-    or the corpus was empty, the postings directory has no parquet
-    footers and schema inference fails with an opaque 'Unable to infer
-    schema' — surface it as a corrupt/empty-index error instead."""
-    try:
-        return spark.read.parquet(_postings_dir(path, seq))
-    except Exception as e:
-        raise ValueError(
-            f"empty or corrupt index postings at {path} (every cell/"
-            f"bucket over its build cap, or an empty corpus at "
-            f"build?): {e}") from e
 
 
 def ivf2_index_build(emb: DataFrame, path: str,
@@ -330,7 +94,7 @@ def ivf2_index_build(emb: DataFrame, path: str,
                      attr_cols: list[str] | None = None) -> dict:
     """TRAIN the two-level quantizer and persist the index under
     ``path`` (overwrite semantics — a rebuild atomically replaces each
-    relation). Training is the exact :func:`_train_two_level` recipe
+    relation). Training is the exact :func:`train_two_level` recipe
     (optionally sample-trained via ``train_frac`` — the md5-gated
     deterministic sample); the postings are the PRIMARY assignment with
     the degenerate-cell cap already applied, so every future search
@@ -350,7 +114,7 @@ def ivf2_index_build(emb: DataFrame, path: str,
     repeated builds in one session must not accumulate cache)."""
     persisted: list = []
     try:
-        v, sup_anchors, sup, sub_anchors = _train_two_level(
+        v, sup_anchors, sup, sub_anchors = train_two_level(
             emb, id_col, vec_col, n_super, k2, iters, train_frac,
             train_seed, persisted)
         sup_anchors.write.mode("overwrite").parquet(
@@ -363,7 +127,7 @@ def ivf2_index_build(emb: DataFrame, path: str,
         # single consumer, pure overhead (round 15, guide §5: persist
         # only what is reused); `sup` stays cached in the trainer, so
         # the write recomputes only the O(k2) grouped argmax
-        assigned = _assign_to_subs(sup, sub_anchors, id_col)
+        assigned = assign_to_subs(sup, sub_anchors, id_col)
         # partitioned by super-cell: a probe's scan prunes to its own
         # sid directory — the file-layout analog of inverted-list
         # sharding (the pruned-search path proves the filter fires).
@@ -393,74 +157,20 @@ def ivf2_index_build(emb: DataFrame, path: str,
                       .repartition(F.col("sid"), F.col("sub")))
         else:
             capped = capped.select(*posting_cols)
-        (capped.write.mode("overwrite").partitionBy("sid")
-         .parquet(_postings_dir(path, 1)))
         # the postings id TYPE is part of the meta contract (VERDICT
         # r10 wrong #3): load validates against it instead of
         # hard-pinning bigint, so string-keyed vector corpora are
         # first-class on the saved tier (as they already are on LSH)
-        id_type = dict(capped.dtypes)["id"]
-        spark = assigned.sparkSession
-        meta = spark.createDataFrame(
-            [(INDEX_FORMAT_VERSION, n_super, k2, iters, cell_cap,
-              float(train_frac) if train_frac is not None else 1.0,
-              train_seed, id_col, id_type, 1)],
-            "version INT, n_super INT, k2 INT, iters INT, cell_cap INT, "
-            "train_frac DOUBLE, train_seed STRING, id_col STRING, "
-            "id_type STRING, seq INT")
-        _write_meta(meta, path, 1)
-        _reset_maintenance_state(spark, path)
-        # the just-published version's handle (same dict as
-        # ivf2_index_load, no tombstones by construction) — a
-        # build-then-search caller skips the load's pointer read +
-        # meta collect (round 15, VERDICT r14 next #6)
-        return {
-            "meta": Row(version=INDEX_FORMAT_VERSION,
-                        n_super=int(n_super), k2=int(k2),
-                        iters=int(iters), cell_cap=int(cell_cap),
-                        train_frac=(float(train_frac)
-                                    if train_frac is not None else 1.0),
-                        train_seed=train_seed, id_col=id_col,
-                        id_type=id_type, seq=1),
-            "path": path,
-            "sup_anchors": spark.read.parquet(
-                os.path.join(path, "sup_anchors")),
-            "sub_anchors": spark.read.parquet(
-                os.path.join(path, "sub_anchors")),
-            "postings": _read_postings(spark, path, 1)
-            .withColumn("sid", F.col("sid").cast("long")),
-        }
+        return store.publish(
+            assigned.sparkSession, path, "ivf2",
+            dict(n_super=n_super, k2=k2, iters=iters, cell_cap=cell_cap,
+                 train_frac=1.0 if train_frac is None else train_frac,
+                 train_seed=train_seed, id_col=id_col,
+                 id_type=dict(capped.dtypes)["id"], seq=1),
+            capped)
     finally:
         for df in persisted:
             df.unpersist()
-
-
-def _reset_maintenance_state(spark: SparkSession, path: str) -> None:
-    """A fresh BUILD resets the maintenance state a previous lifetime
-    of this path may have left: stale postings/meta versions (the
-    build publishes v1) and tombstones (the build's postings are the
-    new truth). Runs after the v1 write + pointer flip, so a
-    concurrent reader of the old index keeps its grace period only up
-    to a full rebuild-from-scratch — the documented overwrite
-    semantics. FS ops route through :mod:`fsio` (VERDICT r9 item 2)."""
-    for name in fsio.list_names(spark, path):
-        m = re.fullmatch(r"(?:postings|tombstones|meta|ids)_v(\d+)", name)
-        if (m and int(m.group(1)) != 1) or name == "tombstones_v1":
-            fsio.delete(spark, os.path.join(path, name))
-    # legacy directories, if this path held an older-format index
-    for legacy in ("tombstones", "postings", "meta"):
-        fsio.delete(spark, os.path.join(path, legacy))
-
-
-def _write_meta(meta_df: DataFrame, path: str, seq: int) -> None:
-    """Publish the manifest for ``seq``: write ``meta_v{seq}`` as its
-    own directory (never overwriting a live reader's meta), then flip
-    the ``latest`` pointer — a single tiny object whose write is
-    atomic where the store allows it and whose failure modes are
-    covered by the reader's listing fallback (VERDICT r9 item 1)."""
-    spark = meta_df.sparkSession
-    meta_df.write.mode("overwrite").parquet(_meta_dir(path, seq))
-    fsio.write_text(spark, os.path.join(path, _POINTER), str(int(seq)))
 
 
 def ivf2_index_load(spark: SparkSession, path: str,
@@ -481,120 +191,7 @@ def ivf2_index_load(spark: SparkSession, path: str,
     anchors are version-independent (the trained quantizer is
     immutable between full builds — rebuilds reuse it), so pinning
     the postings version pins the whole search semantics."""
-    meta = _read_meta(spark, path, as_of)
-    # sid comes back from directory-partition inference (int for small
-    # values) — restore the long the assignment relations use, then
-    # VALIDATE the full fixed-column contract so schema drift (or a
-    # foreign directory) fails loud at load, not as a join-time
-    # resolution error three operators later (VERDICT r7 note: the
-    # cast is a contract, make it checked rather than remembered)
-    postings = _read_postings(spark, path, meta.seq) \
-        .withColumn("sid", F.col("sid").cast("long"))
-    # the id column validates against the TYPE THE BUILD RECORDED
-    # (meta.id_type — VERDICT r10 wrong #3), not a hard-pinned bigint:
-    # string-keyed corpora serve from the saved tier like the LSH
-    # family; pre-r11 metas without the field keep the old contract
-    expected = {"id": getattr(meta, "id_type", None) or "bigint",
-                "sid": "bigint", "sub": "bigint",
-                "v": "array<double>", "nrm": "double"}
-    got = dict(postings.dtypes)
-    bad = {c: (t, got.get(c)) for c, t in expected.items()
-           if got.get(c) != t}
-    if bad:
-        raise ValueError(
-            f"postings schema drift at {path}: expected vs got {bad}")
-    return {
-        "meta": meta,
-        "path": path,
-        "sup_anchors": spark.read.parquet(
-            os.path.join(path, "sup_anchors")),
-        "sub_anchors": spark.read.parquet(
-            os.path.join(path, "sub_anchors")),
-        "postings": _apply_tombstones(
-            postings, _load_tombstones(spark, path, meta.seq)),
-    }
-
-
-def _read_meta(spark: SparkSession, path: str, as_of: int | None = None):
-    """Resolve the live manifest: read the ``latest`` pointer and load
-    ``meta_v{seq}``; if the pointer is missing, mid-write, or points at
-    an unreadable version, FALL BACK to listing the ``meta_v*``
-    directories newest-first and take the first readable one — so a
-    reader racing a rebuild's publish never errors (VERDICT r9
-    item 1; the publish writes ``meta_v{new}`` before flipping the
-    pointer, and GC keeps one version of grace behind the flip).
-
-    ``as_of`` pins a SPECIFIC version instead (the snapshot read): no
-    pointer, no fallback — either ``meta_v{as_of}`` is still live or
-    the error names the versions that are (so a reader whose snapshot
-    aged out of the retention window gets "re-pin to one of [...]",
-    not an opaque missing-file failure)."""
-    if as_of is not None:
-        as_of = int(as_of)
-        try:
-            meta_rows = spark.read.parquet(
-                _meta_dir(path, as_of)).collect()
-        except Exception as e:
-            live = index_versions(spark, path)
-            raise ValueError(
-                f"index version {as_of} at {path} is not live "
-                f"(GC'd by a later rebuild's retention, or never "
-                f"published) — live versions: {live}; re-pin as_of to "
-                f"one of them or raise keep_versions on the rebuild "
-                f"side") from e
-        if len(meta_rows) != 1:
-            raise ValueError(f"corrupt index meta at {path} "
-                             f"(v{as_of}): {len(meta_rows)} rows")
-        meta = meta_rows[0]
-        if meta.version != INDEX_FORMAT_VERSION:
-            raise ValueError(
-                f"index format version {meta.version} at {path}; "
-                f"this build reads version {INDEX_FORMAT_VERSION}")
-        return meta
-
-    def _candidates():
-        # pointer first (the fast path pays ONE tiny read per load);
-        # the LIST fallback runs only when the pointer is missing,
-        # mid-write, or names an unreadable version
-        seen: set[int] = set()
-        txt = fsio.read_text(spark, os.path.join(path, _POINTER))
-        if txt:
-            try:
-                seq = int(txt.strip())
-            except ValueError:
-                pass
-            else:
-                seen.add(seq)
-                yield seq
-        listed = sorted(
-            (int(m.group(1)) for name in fsio.list_names(spark, path)
-             if (m := re.fullmatch(r"meta_v(\d+)", name))), reverse=True)
-        yield from (s for s in listed if s not in seen)
-
-    last_err: Exception | None = None
-    for seq in _candidates():
-        try:
-            meta_rows = spark.read.parquet(_meta_dir(path, seq)).collect()
-        except Exception as e:  # mid-write/GC'd version: try the next
-            last_err = e
-            continue
-        if len(meta_rows) != 1:
-            raise ValueError(f"corrupt index meta at {path}: "
-                             f"{len(meta_rows)} rows")
-        meta = meta_rows[0]
-        if meta.version != INDEX_FORMAT_VERSION:
-            raise ValueError(
-                f"index format version {meta.version} at {path}; "
-                f"this build reads version {INDEX_FORMAT_VERSION}")
-        return meta
-    if fsio.is_dir(spark, os.path.join(path, "meta")):
-        raise ValueError(
-            f"index at {path} uses the pre-v{INDEX_FORMAT_VERSION} "
-            f"overwritten-meta layout — rebuild it with the current "
-            f"*_index_build")
-    raise ValueError(
-        f"no readable index manifest at {path} (not an index, or "
-        f"every meta_v* unreadable)") from last_err
+    return store.load(spark, path, "ivf2", as_of)
 
 
 def ivf2_index_append(new_vectors: DataFrame, spark: SparkSession,
@@ -617,13 +214,12 @@ def ivf2_index_append(new_vectors: DataFrame, spark: SparkSession,
     Dedup/idempotency is the caller's concern (replaying a batch
     appends twice), as with any append-only log."""
     index = ivf2_index_load(spark, path)
-    _check_id_col(index["meta"], id_col, "append")
     vq = fan_out(new_vectors).select(F.col(id_col),
                                      as_double(vec_col).alias("v"))
     vq = vq.select(id_col, "v", l2_norm(F.col("v")).alias("nrm"))
-    sup = (_assign_to_anchors(vq, index["sup_anchors"], id_col)
+    sup = (assign_to_anchors(vq, index["sup_anchors"], id_col)
            .withColumnRenamed("cell", "sid"))
-    assigned = _assign_to_subs(sup, index["sub_anchors"], id_col)
+    assigned = assign_to_subs(sup, index["sub_anchors"], id_col)
     out = assigned.select(F.col(id_col).alias("id"), "sid", "sub",
                           "v", "nrm")
     # an index built with attr_cols must stay schema-consistent: carry
@@ -634,12 +230,7 @@ def ivf2_index_append(new_vectors: DataFrame, spark: SparkSession,
     if extra:
         attrs = new_vectors.select(F.col(id_col).alias("id"), *extra)
         out = out.join(attrs, "id")
-    # cluster by the directory key so a batch writes ≈ one file per
-    # touched sid instead of tasks × dirs (the small-files field a
-    # steady ingest stream would otherwise leave for every search)
-    (out.repartition(F.col("sid"))
-     .write.mode("append").partitionBy("sid")
-     .parquet(_postings_dir(path, index["meta"].seq)))
+    store.append(index, out, id_col)
 
 
 def ivf2_index_search(queries: DataFrame, index: dict,
@@ -680,7 +271,7 @@ def ivf2_index_search(queries: DataFrame, index: dict,
     primary-assignment postings only (the standard IVF discipline —
     multi-probe happens on the QUERY side at serve time, the lists are
     built once)."""
-    _check_id_col(index["meta"], id_col, "search")
+    store.check_id_col(index["meta"], id_col, "search")
     sup_anchors = index["sup_anchors"]
     sub_anchors = index["sub_anchors"]
     postings = index["postings"]
@@ -693,9 +284,9 @@ def ivf2_index_search(queries: DataFrame, index: dict,
         probed = probe_assign_multi(vq, sup_anchors, sub_anchors, id_col,
                                     nprobe).drop("pri")
     else:
-        sup = (_assign_to_anchors(vq, sup_anchors, id_col)
+        sup = (assign_to_anchors(vq, sup_anchors, id_col)
                .withColumnRenamed("cell", "sid"))
-        probed = _assign_to_subs(sup, sub_anchors, id_col)
+        probed = assign_to_subs(sup, sub_anchors, id_col)
     if prune:
         # one tiny action (≤ nprobe·|batch| deduped sids) off the
         # UNPERSISTED assignment; the pairing join below recomputes the
@@ -712,7 +303,7 @@ def ivf2_index_search(queries: DataFrame, index: dict,
     pairs = (q.join(p, ["sid", "sub"])
              .where(F.col("id_a") != F.col("id_b"))
              .select("id_a", "id_b", "va", "na", "vb", "nb"))
-    scored = _score(pairs)
+    scored = score_pairs(pairs)
     if k > 1:
         # a posting lives in exactly ONE (sid, sub) cell, but nprobe>1
         # can pair a query with the same posting through two probed
@@ -760,9 +351,9 @@ def ivf2_index_probe_hits(queries: DataFrame, index: dict,
     postings = index["postings"]
     vq = queries.select(F.col(id_col), as_double(vec_col).alias("v"))
     vq = vq.select(id_col, "v", l2_norm(F.col("v")).alias("nrm"))
-    sup = (_assign_to_anchors(vq, sup_anchors, id_col)
+    sup = (assign_to_anchors(vq, sup_anchors, id_col)
            .withColumnRenamed("cell", "sid"))
-    probed = _assign_to_subs(sup, sub_anchors, id_col)
+    probed = assign_to_subs(sup, sub_anchors, id_col)
     q = probed.select(F.col(id_col).alias("new_id"), "sid", "sub",
                       F.col("v").alias("va"), F.col("nrm").alias("na"))
     p = postings.select(F.col("id").alias("old_id"), "sid", "sub",
@@ -813,9 +404,9 @@ def ivf2_self_search_saved(emb: DataFrame, path: str,
     postings = index["postings"]
     vq = fan_out(emb).select(F.col(id_col), as_double(vec_col).alias("v"))
     vq = vq.select(id_col, "v", l2_norm(F.col("v")).alias("nrm"))
-    sup = (_assign_to_anchors(vq, sup_anchors, id_col)
+    sup = (assign_to_anchors(vq, sup_anchors, id_col)
            .withColumnRenamed("cell", "sid"))
-    probed = _assign_to_subs(sup, sub_anchors, id_col)
+    probed = assign_to_subs(sup, sub_anchors, id_col)
     q = probed.select(F.col(id_col).alias("id_a"), "sid", "sub",
                       F.col("v").alias("va"), F.col("nrm").alias("na"))
     p = postings.select(F.col("id").alias("id_b"), "sid", "sub",
@@ -825,11 +416,11 @@ def ivf2_self_search_saved(emb: DataFrame, path: str,
              .select("id_a", "id_b", "va", "na", "vb", "nb"))
     if k > 1:
         from left_join_on_timeout_spark.operators.similarity import (
-            _bidir_topk,
+            bidir_topk,
         )
 
-        return _bidir_topk(_score(pairs), k)
-    return _bidir_top1(_score(pairs))
+        return bidir_topk(score_pairs(pairs), k)
+    return bidir_top1(score_pairs(pairs))
 
 
 def pq_index_build(emb: DataFrame, path: str,
@@ -892,7 +483,7 @@ def pq_index_build(emb: DataFrame, path: str,
     from pyspark.sql import Window
 
     from left_join_on_timeout_spark.operators.similarity import (
-        _check_seed_id_dtype,
+        check_seed_id_dtype,
     )
 
     # Both coarse modes seed the CODEBOOK by the id<k rule (the flat
@@ -900,14 +491,14 @@ def pq_index_build(emb: DataFrame, path: str,
     # would mis-seed through an implicit cast instead of failing —
     # loud build-entry guard (VERDICT r12 wrong #1). String-keyed
     # corpora belong on the rank-seeded IVF2 tier.
-    _check_seed_id_dtype(emb, id_col, "pq_index_build")
+    check_seed_id_dtype(emb, id_col, "pq_index_build")
     sub = dim // m
     v = fan_out(emb).select(F.col(id_col), as_double(vec_col).alias("v"))
     v = v.select(id_col, "v", l2_norm(F.col("v")).alias("nrm"))
     tree_persisted: list = []
     try:
         if coarse == "tree":
-            _v, sup_anchors, sup_assigned, sub_anchors = _train_two_level(
+            _v, sup_anchors, sup_assigned, sub_anchors = train_two_level(
                 emb, id_col, vec_col, n_super, k2, 1, train_frac,
                 train_seed, tree_persisted)
             sup_anchors.write.mode("overwrite").parquet(
@@ -939,10 +530,10 @@ def pq_index_build(emb: DataFrame, path: str,
             # production codebook (VERDICT r7 item 3); code ids keep
             # their seed ranks, so the LUT arithmetic is unchanged
             from left_join_on_timeout_spark.operators.similarity import (
-                _train_pq_codebook,
+                train_pq_codebook,
             )
 
-            cb = _train_pq_codebook(v, id_col, dim, m, k, train_iters,
+            cb = train_pq_codebook(v, id_col, dim, m, k, train_iters,
                                     train_frac, train_seed, seeds=cb)
         cb.write.mode("overwrite").parquet(os.path.join(path, "codebook"))
         k_eff = cb.count()
@@ -967,12 +558,12 @@ def pq_index_build(emb: DataFrame, path: str,
         # builds — k2 cells per directory, the directory count a 32 000-
         # cell corpus budget needs — and the cell itself for flat ones
         if coarse == "tree":
-            assigned = (_assign_to_subs(sup_assigned, sub_anchors, id_col)
+            assigned = (assign_to_subs(sup_assigned, sub_anchors, id_col)
                         .withColumn("cell",
                                     F.col("sid") * k2 + F.col("sub"))
                         .drop("sub"))
         else:
-            assigned = (_assign_to_anchors(v, anchors, id_col)
+            assigned = (assign_to_anchors(v, anchors, id_col)
                         .withColumn("sid", F.col("cell")))
         assigned = assigned.withColumn(
             "vu", F.transform(F.col("v"), lambda x: x / F.col("nrm")))
@@ -981,7 +572,7 @@ def pq_index_build(emb: DataFrame, path: str,
                     F.col("sid")]
         for b in range(m):
             s = F.slice(F.col("vu"), b * sub + 1, sub)
-            best = _pq_best(F.col("cb"), s, b, sub)
+            best = pq_best(F.col("cb"), s, b, sub)
             enc_cols.append(best["code"].alias(f"code{b}"))
         index = assigned.join(F.broadcast(cb_arr)).select(*enc_cols)
         w = Window.partitionBy("cell")
@@ -1001,8 +592,6 @@ def pq_index_build(emb: DataFrame, path: str,
         # window's full shuffle parallelism. The previous explicit
         # repartition(sid) here both ADDED an exchange and capped the
         # tree-coarse write at n_super tasks (VERDICT r14 wrong #1).
-        (capped.write.mode("overwrite").partitionBy("sid")
-         .parquet(_postings_dir(path, 1)))
         # meta.k is the EFFECTIVE codeword count (rows actually in the
         # codebook), which is what the LUT position arithmetic needs —
         # it can be < the requested ``k`` on a sub-k-seed corpus.
@@ -1010,40 +599,13 @@ def pq_index_build(emb: DataFrame, path: str,
         # note the PQ BUILD itself still needs numeric ids for its
         # codebook seeds (``id < k``), so this records rather than
         # widens; the IVF2 tier is the string-keyed path.
-        id_type = dict(capped.dtypes)["id"]
-        spark = emb.sparkSession
-        meta = spark.createDataFrame(
-            [(INDEX_FORMAT_VERSION, dim, m, k_eff, n_cells, cell_cap,
-              id_col, id_type, 1, coarse, n_super, k2)],
-            "version INT, dim INT, m INT, k INT, n_cells INT, "
-            "cell_cap INT, id_col STRING, id_type STRING, seq INT, "
-            "coarse STRING, n_super INT, k2 INT")
-        _write_meta(meta, path, 1)
-        _reset_maintenance_state(spark, path)
-        # the just-published version's handle (same dict as
-        # pq_index_load, no tombstones by construction) — round 15
-        out = {
-            "meta": Row(version=INDEX_FORMAT_VERSION, dim=int(dim),
-                        m=int(m), k=int(k_eff), n_cells=int(n_cells),
-                        cell_cap=int(cell_cap), id_col=id_col,
-                        id_type=id_type, seq=1, coarse=coarse,
-                        n_super=int(n_super), k2=int(k2)),
-            "path": path,
-            "codebook": spark.read.parquet(
-                os.path.join(path, "codebook")),
-            "lut": spark.read.parquet(os.path.join(path, "lut")),
-            "postings": _read_postings(spark, path, 1)
-            .withColumn("sid", F.col("sid").cast("long")),
-        }
-        if coarse == "tree":
-            out["sup_anchors"] = spark.read.parquet(
-                os.path.join(path, "sup_anchors"))
-            out["sub_anchors"] = spark.read.parquet(
-                os.path.join(path, "sub_anchors"))
-        else:
-            out["anchors"] = spark.read.parquet(
-                os.path.join(path, "anchors"))
-        return out
+        return store.publish(
+            emb.sparkSession, path, "pq",
+            dict(dim=dim, m=m, k=k_eff, n_cells=n_cells,
+                 cell_cap=cell_cap, id_col=id_col,
+                 id_type=dict(capped.dtypes)["id"], seq=1, coarse=coarse,
+                 n_super=n_super, k2=k2),
+            capped)
     finally:
         # a failed write mid-build must not leave the Lloyd relations
         # cached (ADVICE r8 — the ivf2 builder's existing discipline)
@@ -1062,35 +624,7 @@ def pq_index_load(spark: SparkSession, path: str,
     the snapshot read (see :func:`ivf2_index_load`); the codebook/LUT
     are immutable between full builds, so the pinned postings version
     pins the whole search semantics."""
-    meta = _read_meta(spark, path, as_of)
-    postings = _read_postings(spark, path, meta.seq) \
-        .withColumn("sid", F.col("sid").cast("long"))
-    expected = {"id": getattr(meta, "id_type", None) or "bigint",
-                "cell": "bigint", "sid": "bigint"}
-    expected.update({f"code{b}": "int" for b in range(meta.m)})
-    got = dict(postings.dtypes)
-    bad = {c: (t, got.get(c)) for c, t in expected.items()
-           if got.get(c) != t}
-    if bad:
-        raise ValueError(
-            f"postings schema drift at {path}: expected vs got {bad}")
-    out = {
-        "meta": meta,
-        "path": path,
-        "codebook": spark.read.parquet(os.path.join(path, "codebook")),
-        "lut": spark.read.parquet(os.path.join(path, "lut")),
-        "postings": _apply_tombstones(
-            postings, _load_tombstones(spark, path, meta.seq)),
-    }
-    if getattr(meta, "coarse", "flat") == "tree":
-        out["sup_anchors"] = spark.read.parquet(
-            os.path.join(path, "sup_anchors"))
-        out["sub_anchors"] = spark.read.parquet(
-            os.path.join(path, "sub_anchors"))
-    else:
-        out["anchors"] = spark.read.parquet(
-            os.path.join(path, "anchors"))
-    return out
+    return store.load(spark, path, "pq", as_of)
 
 
 def _pq_encode_and_assign(queries: DataFrame, index: dict,
@@ -1112,7 +646,7 @@ def _pq_encode_and_assign(queries: DataFrame, index: dict,
     vq = fan_out(queries).select(F.col(id_col),
                                  as_double(vec_col).alias("v"))
     vq = vq.select(id_col, "v", l2_norm(F.col("v")).alias("nrm"))
-    if getattr(meta, "coarse", "flat") == "tree":
+    if meta.coarse == "tree":
         if nprobe > 1:
             assigned = (probe_assign_multi(
                 vq, index["sup_anchors"], index["sub_anchors"],
@@ -1121,9 +655,9 @@ def _pq_encode_and_assign(queries: DataFrame, index: dict,
                             F.col("sid") * meta.k2 + F.col("sub"))
                 .drop("sub"))
         else:
-            sup = (_assign_to_anchors(vq, index["sup_anchors"], id_col)
+            sup = (assign_to_anchors(vq, index["sup_anchors"], id_col)
                    .withColumnRenamed("cell", "sid"))
-            assigned = (_assign_to_subs(sup, index["sub_anchors"],
+            assigned = (assign_to_subs(sup, index["sub_anchors"],
                                         id_col)
                         .withColumn("cell",
                                     F.col("sid") * meta.k2
@@ -1131,15 +665,15 @@ def _pq_encode_and_assign(queries: DataFrame, index: dict,
                         .drop("sub"))
     elif nprobe > 1:
         from left_join_on_timeout_spark.operators.similarity import (
-            _assign_to_anchors_multi,
+            assign_to_anchors_multi,
         )
 
-        assigned = (_assign_to_anchors_multi(vq, index["anchors"],
+        assigned = (assign_to_anchors_multi(vq, index["anchors"],
                                              id_col, nprobe)
                     .drop("pri")
                     .withColumn("sid", F.col("cell")))
     else:
-        assigned = (_assign_to_anchors(vq, index["anchors"], id_col)
+        assigned = (assign_to_anchors(vq, index["anchors"], id_col)
                     .withColumn("sid", F.col("cell")))
     assigned = assigned.withColumn(
         "vu", F.transform(F.col("v"), lambda x: x / F.col("nrm")))
@@ -1148,7 +682,7 @@ def _pq_encode_and_assign(queries: DataFrame, index: dict,
     enc_cols = [F.col(id_col), F.col("cell"), F.col("sid")]
     for b in range(meta.m):
         s = F.slice(F.col("vu"), b * sub + 1, sub)
-        best = _pq_best(F.col("cb"), s, b, sub)
+        best = pq_best(F.col("cb"), s, b, sub)
         enc_cols.append(best["code"].alias(f"code{b}"))
     return assigned.join(F.broadcast(cb_arr)).select(*enc_cols)
 
@@ -1255,7 +789,7 @@ def pq_index_search(queries: DataFrame, index: dict,
     query-side), completing knob parity with ``ivf2_index_search``."""
     from pyspark.sql import Window
 
-    _check_id_col(index["meta"], id_col, "search")
+    store.check_id_col(index["meta"], id_col, "search")
     meta = index["meta"]
     kk, mm = meta.k, meta.m
     postings = index["postings"]
@@ -1363,7 +897,6 @@ def pq_index_append(new_vectors: DataFrame, spark: SparkSession,
     re-capped at the next :func:`pq_index_rebuild` (bounded
     staleness), and idempotency is the caller's concern."""
     index = pq_index_load(spark, path)
-    _check_id_col(index["meta"], id_col, "append")
     codes = (_pq_encode_and_assign(new_vectors, index, id_col, vec_col)
              .withColumnRenamed(id_col, "id"))
     # an index built with attr_cols stays schema-consistent on append
@@ -1374,63 +907,7 @@ def pq_index_append(new_vectors: DataFrame, spark: SparkSession,
     if extra:
         attrs = new_vectors.select(F.col(id_col).alias("id"), *extra)
         codes = codes.join(attrs, "id")
-    # cluster by the directory key before the write (same rationale
-    # as ivf2_index_append — batch files ≈ touched dirs, not tasks ×
-    # dirs)
-    (codes.repartition(F.col("sid"))
-     .write.mode("append").partitionBy("sid")
-     .parquet(_postings_dir(path, index["meta"].seq)))
-
-
-def _publish_postings(spark: SparkSession, path: str,
-                      recapped: DataFrame, partition_by: str | None,
-                      meta_df, new_seq: int,
-                      keep_versions: int = 2,
-                      already_clustered: bool = False) -> None:
-    """Publish a rebuild as a NEW postings version (VERDICT r8 item 3
-    — the versioned-manifest pattern, replacing the r7 rename-in-place
-    swap that was neither object-store-portable nor safe for in-flight
-    readers):
-
-    1. materialize ``recapped`` into ``postings_v{new_seq}`` — the
-       live version is never touched, so the plan can read it;
-    2. write ``meta_v{new_seq}`` as its own directory, then flip the
-       ``latest`` pointer — a SINGLE tiny object (VERDICT r9 item 1:
-       the old parquet-directory meta overwrite had a delete-then-
-       rewrite window a concurrent reader could fall into; the
-       versioned meta + pointer has none, and the reader's listing
-       fallback covers even a non-atomic pointer write). A load
-       started after the flip sees only the new version; a crash
-       before it leaves the old version fully live (the stray
-       ``postings_v{new_seq}``/``meta_v{new_seq}`` are rewritten by
-       the next rebuild, ``mode("overwrite")``); the new version has
-       no tombstones (``recapped`` came from the tombstone-filtered
-       load, so the deletes are now physical) — tombstones are
-       versioned alongside the postings, nothing is cleared here;
-    3. GC postings, tombstone, AND meta versions ``keep_versions`` or
-       more behind — a reader that loaded a PREVIOUS version keeps
-       scanning its own files (both sides of its anti-join) through
-       one full rebuild by default (the grace period), instead of
-       racing an immediate delete; snapshot (``as_of``) deployments
-       raise the retention to widen the time-travel horizon.
-
-    No renames of live data anywhere: every step is a directory
-    write, a single-object pointer publish, or a delete of a
-    no-longer-referenced directory — the operations an object store
-    does natively (all routed through :mod:`fsio`)."""
-    if partition_by and not already_clustered:
-        # cluster by the directory key so the rewritten version keeps
-        # ~one file per directory (files ≈ tasks × dirs otherwise);
-        # a caller that already repartitioned by the key upstream (to
-        # share the exchange with its cap window — guide §2.4) passes
-        # already_clustered=True and skips this second shuffle
-        recapped = recapped.repartition(F.col(partition_by))
-    w = recapped.write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(partition_by)
-    w.parquet(_postings_dir(path, new_seq))
-    _write_meta(meta_df, path, new_seq)
-    _gc_versions(spark, path, new_seq, keep_versions)
+    store.append(index, codes, id_col)
 
 
 def ivf2_index_rebuild(spark: SparkSession, path: str,
@@ -1464,34 +941,9 @@ def ivf2_index_rebuild(spark: SparkSession, path: str,
     recapped = (index["postings"].repartition(F.col("sid"), F.col("sub"))
                 .withColumn("csz", F.count("*").over(w))
                 .where(F.col("csz") <= cap).drop("csz"))
-    new_seq = int(getattr(meta, "seq", 1) or 1) + 1
-    meta_df = spark.createDataFrame(
-        [(meta.version, meta.n_super, meta.k2, meta.iters, meta.cell_cap,
-          meta.train_frac, meta.train_seed, meta.id_col,
-          getattr(meta, "id_type", None) or "bigint", new_seq)],
-        "version INT, n_super INT, k2 INT, iters INT, cell_cap INT, "
-        "train_frac DOUBLE, train_seed STRING, id_col STRING, "
-        "id_type STRING, seq INT")
-    _publish_postings(spark, path, recapped, "sid", meta_df, new_seq,
-                      keep_versions, already_clustered=True)
-    # just-published version's handle (no tombstones by contract) —
-    # a rebuild-then-serve caller skips the manifest re-read (r15)
-    return {
-        "meta": Row(version=meta.version, n_super=int(meta.n_super),
-                    k2=int(meta.k2), iters=int(meta.iters),
-                    cell_cap=int(meta.cell_cap),
-                    train_frac=float(meta.train_frac),
-                    train_seed=meta.train_seed, id_col=meta.id_col,
-                    id_type=getattr(meta, "id_type", None) or "bigint",
-                    seq=new_seq),
-        "path": path,
-        "sup_anchors": spark.read.parquet(
-            os.path.join(path, "sup_anchors")),
-        "sub_anchors": spark.read.parquet(
-            os.path.join(path, "sub_anchors")),
-        "postings": _read_postings(spark, path, new_seq)
-        .withColumn("sid", F.col("sid").cast("long")),
-    }
+    return store.publish(spark, path, "ivf2",
+                         {**meta.asDict(), "seq": meta.seq + 1}, recapped,
+                         keep_versions)
 
 
 def pq_index_rebuild(spark: SparkSession, path: str,
@@ -1514,475 +966,9 @@ def pq_index_rebuild(spark: SparkSession, path: str,
     recapped = (index["postings"]
                 .withColumn("csz", F.count("*").over(w))
                 .where(F.col("csz") <= meta.cell_cap).drop("csz"))
-    new_seq = int(getattr(meta, "seq", 1) or 1) + 1
-    meta_df = spark.createDataFrame(
-        [(meta.version, meta.dim, meta.m, meta.k, meta.n_cells,
-          meta.cell_cap, meta.id_col,
-          getattr(meta, "id_type", None) or "bigint", new_seq,
-          getattr(meta, "coarse", "flat"),
-          int(getattr(meta, "n_super", -1) or -1),
-          int(getattr(meta, "k2", -1) or -1))],
-        "version INT, dim INT, m INT, k INT, n_cells INT, cell_cap INT, "
-        "id_col STRING, id_type STRING, seq INT, coarse STRING, "
-        "n_super INT, k2 INT")
-    _publish_postings(spark, path, recapped, "sid", meta_df, new_seq,
-                      keep_versions, already_clustered=True)
-    # just-published version's handle (no tombstones by contract) —
-    # a rebuild-then-serve caller skips the manifest re-read (r15)
-    out = {
-        "meta": Row(version=meta.version, dim=int(meta.dim),
-                    m=int(meta.m), k=int(meta.k),
-                    n_cells=int(meta.n_cells),
-                    cell_cap=int(meta.cell_cap), id_col=meta.id_col,
-                    id_type=getattr(meta, "id_type", None) or "bigint",
-                    seq=new_seq,
-                    coarse=getattr(meta, "coarse", "flat") or "flat",
-                    n_super=int(getattr(meta, "n_super", -1) or -1),
-                    k2=int(getattr(meta, "k2", -1) or -1)),
-        "path": path,
-        "codebook": spark.read.parquet(os.path.join(path, "codebook")),
-        "lut": spark.read.parquet(os.path.join(path, "lut")),
-        "postings": _read_postings(spark, path, new_seq)
-        .withColumn("sid", F.col("sid").cast("long")),
-    }
-    if getattr(meta, "coarse", "flat") == "tree":
-        out["sup_anchors"] = spark.read.parquet(
-            os.path.join(path, "sup_anchors"))
-        out["sub_anchors"] = spark.read.parquet(
-            os.path.join(path, "sub_anchors"))
-    else:
-        out["anchors"] = spark.read.parquet(os.path.join(path, "anchors"))
-    return out
-
-
-def _tier_of(meta) -> tuple[str, tuple[str, ...], int]:
-    """Infer the index family from its meta row: (tier, cell-key
-    columns, cap). The three schemas are disjoint on these fields, so
-    one load-free probe of the manifest classifies the index."""
-    fields = set(meta.asDict())
-    if "avgdl" in fields:
-        # inverted text index: no build cap exists on this tier —
-        # rebuilds drop tombstones and refresh stats, nothing re-caps
-        return "text", (), None
-    if "n_bits" in fields:
-        return "srp", ("band", "h"), int(meta.bucket_cap)
-    if "bucket_cap" in fields:
-        return "lsh", ("band", "h"), int(meta.bucket_cap)
-    if "m" in fields:
-        return "pq", ("cell",), int(meta.cell_cap)
-    return "ivf2", ("sid", "sub"), int(meta.cell_cap)
-
-
-def index_stats(spark: SparkSession, path: str,
-                cap_pressure: bool = False,
-                stats_drift: bool = False) -> dict:
-    """Maintenance telemetry for a saved index (any family): the live
-    ``seq``, the pinnable version list, live postings rows, tombstone
-    rows, and ``tombstone_frac`` — the LSM compaction-trigger inputs.
-    Cost: one postings ``count()`` (column-pruned parquet row-count
-    pass — no vector/digest bytes are decoded) plus a tiny tombstone
-    count; cheap enough for a scheduler to poll between ingest
-    batches.
-
-    ``cap_pressure=True`` additionally computes ``over_cap_rows`` —
-    rows sitting in cells/buckets that ingest pushed past the build
-    cap, i.e. exactly the rows the next rebuild would drop back out of
-    the search space. The aggregate runs over the TOMBSTONE-FILTERED
-    postings (ADVICE r10) — the rebuild re-caps the live relation, so
-    a cell only over the cap because of already-deleted rows must not
-    count as pressure (it would trigger a spurious rebuild). That is a
-    corpus-sized groupBy over the cell key, so it is opt-in: poll
-    tombstone_frac cheaply, pay for cap pressure when deciding a
-    rebuild.
-
-    ``stats_drift=True`` (text tier only — VERDICT r11 wrong #2) adds
-    ``live_n_docs`` / ``live_avgdl`` — the corpus statistics
-    recomputed over the LIVE postings (tombstones anti-joined) — and
-    ``n_docs_drift_frac`` / ``avgdl_drift_frac``, the relative gap
-    between them and the manifest's build-time scalars. BM25's idf
-    uses N directly, so a corpus that doubles via appends scores with
-    a stale idf scale until rebuild; the drift fractions are the
-    signal :func:`index_maintenance_due` turns into a stats-refresh
-    rebuild. Cost: one doc-count-sized aggregate over the postings —
-    the same opt-in class as cap pressure. On a GRAM index the same
-    aggregate reports under the tier's own names instead
-    (``appended_docs_frac`` / ``dl_drift_frac`` — no BM25 lives
-    there; the drift that matters is the append backlog and the
-    contamination DENOMINATOR's staleness, VERDICT r12 wrong #3)."""
-    meta = _read_meta(spark, path)
-    tier, cell_key, cap = _tier_of(meta)
-    postings = _read_postings(spark, path, meta.seq)
-    n_rows = postings.count()
-    tomb = _load_tombstones(spark, path, meta.seq)
-    n_tomb = (tomb.select("id").distinct().count()
-              if tomb is not None else 0)
-    out = {
-        "tier": tier,
-        "seq": int(meta.seq),
-        "versions": index_versions(spark, path),
-        "postings_rows": n_rows,
-        "tombstone_rows": n_tomb,
-        "tombstone_frac": n_tomb / max(n_rows, 1),
-    }
-    if tier == "text":
-        # word vs gram pick different maintenance budgets (r14)
-        out["token_mode"] = getattr(meta, "token_mode", None) or "word"
-    if cap_pressure:
-        if cap is None:
-            raise ValueError(
-                f"the {tier} tier has no build cap — cap pressure is "
-                f"undefined; poll tombstone_frac instead")
-        over = (_apply_tombstones(postings, tomb).groupBy(*cell_key)
-                .agg(F.count("*").alias("csz"))
-                .where(F.col("csz") > cap)
-                .agg(F.coalesce(F.sum("csz"), F.lit(0)).alias("n"))
-                .collect()[0].n)
-        out["over_cap_rows"] = int(over)
-        out["over_cap_frac"] = int(over) / max(n_rows, 1)
-    if stats_drift:
-        if tier != "text":
-            raise ValueError(
-                f"stats_drift is a text-tier signal (manifest-carried "
-                f"corpus statistics); the {tier} tier has none")
-        from left_join_on_timeout_spark.operators.text_index import (
-            _corpus_stats,
-        )
-
-        live_n, live_avgdl = _corpus_stats(
-            _apply_tombstones(postings, tomb))
-        base_n = int(getattr(meta, "n_docs", 0) or 0)
-        base_avgdl = float(getattr(meta, "avgdl", 0.0) or 0.0)
-        out["live_n_docs"] = live_n
-        out["live_avgdl"] = live_avgdl
-        mode = getattr(meta, "token_mode", None) or "word"
-        if mode == "ngram":
-            # GRAM tier (VERDICT r12 wrong #3): no BM25 lives here —
-            # the maintenance-relevant drift is the appended-docs
-            # fraction (docs probing with an append-time denominator
-            # while dup/df statistics ignore them until rebuild) and
-            # the dl-DENOMINATOR drift (the stored per-doc
-            # distinct-gram counts' average vs the manifest's — the
-            # contamination denominator's staleness), so the signals
-            # carry the tier's own names. The backlog counts RAW
-            # (pre-tombstone) ids: deletes leave rows until rebuild,
-            # so raw_n − base_n is exactly the appended-doc count and
-            # a concurrent delete can never mask the append backlog
-            # (a live-count net delta would read 0 after equal-sized
-            # delete+append — the staleness this signal exists to
-            # catch). A delete-then-re-append of the SAME id is the
-            # one undercount, and that flow is a rebuild-requiring
-            # contract violation anyway (delete-first update).
-            raw_n = postings.select("id").distinct().count()
-            out["appended_docs_frac"] = (
-                max(raw_n - base_n, 0) / max(base_n, 1))
-            out["dl_drift_frac"] = (
-                abs(live_avgdl - base_avgdl) / base_avgdl
-                if base_avgdl > 0 else 0.0)
-        else:
-            out["n_docs_drift_frac"] = (
-                abs(live_n - base_n) / max(base_n, 1))
-            out["avgdl_drift_frac"] = (
-                abs(live_avgdl - base_avgdl) / base_avgdl
-                if base_avgdl > 0 else 0.0)
-    return out
-
-
-def index_version_diff(spark: SparkSession, path: str,
-                       from_seq: int, to_seq: int) -> DataFrame:
-    """Audit diff between two still-live versions of a saved index
-    (any family): ``(id, change)`` with ``change`` ∈ {'added',
-    'dropped'} — what a rebuild physically changed, as SERVABLE
-    content (each side is its version's postings with that version's
-    tombstones anti-joined out, exactly what an ``as_of`` reader of
-    that seq gets). 'dropped' ids are the compaction's work: rows the
-    re-cap pushed out plus tombstones made physical; 'added' ids
-    appear when the target version carries appends the source never
-    saw. Ids present in both versions are omitted — the output is
-    bounded by the CHANGE volume, not the corpus, and both inputs are
-    column-pruned id scans. Either seq outside the retention window
-    fails loud with the live version list (the ``as_of`` contract)."""
-    def _ids(seq: int):
-        meta = _read_meta(spark, path, seq)
-        return _apply_tombstones(
-            _read_postings(spark, path, meta.seq),
-            _load_tombstones(spark, path, meta.seq)) \
-            .select("id").distinct()
-
-    src, dst = _ids(from_seq), _ids(to_seq)
-    return (src.join(dst, "id", "left_anti")
-            .select("id", F.lit("dropped").alias("change"))
-            .unionByName(
-                dst.join(src, "id", "left_anti")
-                .select("id", F.lit("added").alias("change"))))
-
-
-# Fifth-decade compaction economics, measured in PLANS.md (rebuild
-# wall / warm serve wall, same host and index): how many serves one
-# rebuild costs, per tier. These are the VALUE-PINNED inputs of
-# `maintenance_budgets` (the `auto_knobs` discipline — measured
-# scaling rules as code, VERDICT r13 wrong #2):
-#   text[ngram]  138.4 s rebuild / 19.8 s warm audit probe   (r13)
-#   text[word]   36.1 s rebuild / 0.94 s warm 3-term serve
-#                at 5 M docs (r14, tools/word_rebuild_fifth.py)
-#   lsh          72.4 s rebuild / 19.2 s warm probe at 20 M  (r9)
-#   ivf2         25.9 s rebuild / 13.7 s warm pruned serve   (r10)
-# srp shares lsh's ratio (same banded-digest postings, same re-cap
-# compaction); pq shares ivf2's (same cell-keyed postings rewrite).
-REBUILD_OVER_SERVE = {
-    "text[ngram]": 7.0,
-    "text[word]": 38.0,
-    "lsh": 3.8,
-    "srp": 3.8,
-    "ivf2": 1.9,
-    "pq": 1.9,
-}
-
-# Stats drift IS relative scoring error (idf scale ≈ n_docs drift,
-# contamination denominator ≈ dl drift, appended mass bounds the idf
-# error of every standing doc), so its budget is a SCORE-ERROR
-# tolerance, not a cost tradeoff: 1% by default. The r13 lifecycle's
-# single 0.1% append batch correctly does NOT trigger (0.1% score
-# error is noise); ~10 such batches do.
-SCORE_DRIFT_BUDGET = 0.01
-
-# Tombstones must stay broadcast-small (every load anti-joins them),
-# whatever the amortization says — the hard ceiling on the derived
-# tombstone budget.
-TOMBSTONE_BROADCAST_CEILING = 0.05
-
-
-def maintenance_budgets(tier: str,
-                        serves_per_cycle: int = 100) -> dict:
-    """PER-TIER maintenance thresholds derived from the measured
-    compaction economics (VERDICT r13 wrong #2: one 10% default for
-    every tier effectively never fired for append-staleness at
-    realistic batch sizes, and ignored that a cheap-to-rebuild tier
-    should compact sooner than an expensive one).
-
-    * ``max_tombstone_frac`` — the LSM amortization rule: carry
-      garbage until the serve tax paid since the last rebuild matches
-      the rebuild's cost. With tax ≈ proportional to tombstone mass
-      and mass growing roughly linearly between compactions, the
-      break-even trigger is ``2·(R/S)/serves_per_cycle`` — a tier
-      whose rebuild costs few serve-equivalents (ivf2: 1.9) compacts
-      at a lower garbage mass than one whose rebuild is expensive
-      (gram: 7.0). Clamped to [0.005, TOMBSTONE_BROADCAST_CEILING]:
-      the broadcast-tombstone contract caps it above, and below 0.5%
-      a rebuild churns for noise.
-    * ``max_stats_drift_frac`` — SCORE_DRIFT_BUDGET: drift fracs
-      bound relative scoring error, so the budget is an accuracy
-      tolerance independent of serve economics.
-    * ``max_over_cap_frac`` — 10%, unchanged: cap overflow is a
-      recall-contract violation, not a cost tradeoff.
-
-    ``serves_per_cycle`` is the deployment's expected serve count per
-    maintenance window (default 100 — a daily-compacted index serving
-    ~4/hour); a hot serving tier (1000+/cycle) derives a much tighter
-    tombstone budget, which is the point."""
-    if tier not in REBUILD_OVER_SERVE:
-        raise ValueError(
-            f"unknown tier {tier!r}; expected one of "
-            f"{sorted(REBUILD_OVER_SERVE)}")
-    rs = REBUILD_OVER_SERVE[tier]
-    tomb = min(TOMBSTONE_BROADCAST_CEILING,
-               max(0.005, 2.0 * rs / max(serves_per_cycle, 1)))
-    return {
-        "max_tombstone_frac": tomb,
-        "max_over_cap_frac": 0.10,
-        "max_stats_drift_frac": SCORE_DRIFT_BUDGET,
-    }
-
-
-def index_maintenance_due(stats: dict,
-                          max_tombstone_frac: float | None = None,
-                          max_over_cap_frac: float | None = None,
-                          max_stats_drift_frac: float | None = None,
-                          serves_per_cycle: int = 100) -> bool:
-    """The rebuild decision over :func:`index_stats` output — pure
-    policy, no I/O, so a scheduler can log WHY it rebuilt. True when
-    the tombstone mass (every search pays the anti-join on it), the
-    over-cap mass (rows ingest added that a probe can see but a
-    rebuild would re-drop — recall the index serves above its build
-    contract), or the text tier's corpus-stats drift (appends moved
-    the live (n_docs, avgdl) away from the manifest's build-time
-    scalars, so BM25 scores with a stale idf scale — VERDICT r11
-    wrong #2) crosses its threshold.
-
-    Thresholds default to the PER-TIER derivation of
-    :func:`maintenance_budgets` (VERDICT r13 wrong #2) using the
-    ``tier``/``token_mode`` the telemetry carries; explicit keyword
-    thresholds override per-arm (they remain the deployment's knobs).
-    A hand-built stats dict without a ``tier`` key falls back to the
-    pre-r14 literals (2% / 10% / 10%). The stats-drift arm consumes
-    the WORD tier's (n_docs, avgdl) drift and the GRAM tier's own
-    signal pair — appended-docs fraction and dl-denominator drift
-    (VERDICT r12 wrong #3) — whichever the telemetry carries."""
-    tier = stats.get("tier")
-    if tier == "text":
-        tier = f"text[{stats.get('token_mode') or 'word'}]"
-    if tier in REBUILD_OVER_SERVE:
-        budgets = maintenance_budgets(tier, serves_per_cycle)
-    else:
-        budgets = {"max_tombstone_frac": 0.02,
-                   "max_over_cap_frac": 0.10,
-                   "max_stats_drift_frac": 0.10}
-    if max_tombstone_frac is None:
-        max_tombstone_frac = budgets["max_tombstone_frac"]
-    if max_over_cap_frac is None:
-        max_over_cap_frac = budgets["max_over_cap_frac"]
-    if max_stats_drift_frac is None:
-        max_stats_drift_frac = budgets["max_stats_drift_frac"]
-    if stats.get("tombstone_frac", 0.0) > max_tombstone_frac:
-        return True
-    if stats.get("over_cap_frac", 0.0) > max_over_cap_frac:
-        return True
-    return max(stats.get("n_docs_drift_frac", 0.0),
-               stats.get("avgdl_drift_frac", 0.0),
-               stats.get("appended_docs_frac", 0.0),
-               stats.get("dl_drift_frac", 0.0)) > max_stats_drift_frac
-
-
-def refreshing_probe(path: str, threshold: float | None = None,
-                     tier: str = "ivf2",
-                     id_col: str = "vec_id",
-                     vec_col: str = "embedding",
-                     text_col: str = "text"):
-    """Per-micro-batch manifest RE-RESOLUTION for streaming ingest
-    probes (VERDICT r9 item 3). The plain stream-static probes
-    (``stream_ann_probe``/``stream_pq_probe``/LSH) load the index ONCE
-    at plan time and pin its resolved ``postings_v{seq}`` files for
-    the stream's lifetime — the versioned GC keeps one prior version,
-    so such a stream survives exactly ONE rebuild under it. This
-    factory returns ``probe(batch_df) -> DataFrame`` for use inside
-    ``foreachBatch``, where each invocation RE-READS the manifest
-    pointer (``*_index_load``) and builds a fresh batch-side plan —
-    an ingest stream running through it survives ARBITRARY rebuilds,
-    deletes take effect at the next micro-batch, and the per-batch
-    cost of the re-resolution is one tiny pointer read + one meta
-    parquet footer (never a corpus-sized pass).
-
-    ``tier`` picks the index family: ``"ivf2"``/``"pq"`` threshold-
-    screen new vectors (:func:`ivf2_index_probe_hits` /
-    :func:`pq_index_probe_hits`; ``threshold`` required), ``"lsh"``
-    emits banded near-dup candidates
-    (:func:`operators.lsh_index.lsh_index_probe`; ``threshold``
-    unused — LSH's recall knob is the band layout baked into the
-    index), and ``"text"`` (round 12 — VERDICT r11 missing #2, the
-    read-stream twin of ``stream_text_index_append``) scores each
-    micro-batch of QUERY rows (``id_col`` = query id, ``text_col`` =
-    raw query text, tokenized through the shared normalizer) against
-    the CURRENT saved inverted index via the one-pass sweep
-    (:func:`operators.text_index.text_index_search_many`) — a
-    long-running query stream survives arbitrary rebuilds under it,
-    scoring each batch with the stats the live manifest publishes.
-    Wire it with :func:`refreshing_probe_sink` or hand-roll the
-    foreachBatch body around it."""
-    if tier in ("ivf2", "pq") and threshold is None:
-        raise ValueError(f"tier {tier!r} needs a threshold")
-
-    def probe(batch_df: DataFrame) -> DataFrame:
-        spark = batch_df.sparkSession
-        if tier == "ivf2":
-            return ivf2_index_probe_hits(
-                batch_df, ivf2_index_load(spark, path), threshold,
-                id_col, vec_col)
-        if tier == "pq":
-            return pq_index_probe_hits(
-                batch_df, pq_index_load(spark, path), threshold,
-                id_col, vec_col)
-        if tier == "lsh":
-            from left_join_on_timeout_spark.operators.lsh_index import (
-                lsh_index_load,
-                lsh_index_probe,
-            )
-
-            return lsh_index_probe(
-                batch_df, lsh_index_load(spark, path), id_col, text_col)
-        if tier == "text":
-            from left_join_on_timeout_spark.functions.text import words
-            from left_join_on_timeout_spark.operators.text_index import (
-                text_index_load,
-                text_index_search_many,
-            )
-
-            qdf = batch_df.select(F.col(id_col),
-                                  words(text_col).alias("terms"))
-            return text_index_search_many(
-                text_index_load(spark, path), qdf,
-                query_id_col=id_col, terms_col="terms")
-        raise ValueError(f"unknown index tier {tier!r}")
-
-    return probe
-
-
-def refreshing_probe_sink(out_dir: str, path: str,
-                          threshold: float | None = None,
-                          tier: str = "ivf2",
-                          id_col: str = "vec_id",
-                          vec_col: str = "embedding",
-                          text_col: str = "text"):
-    """``foreachBatch`` body wiring :func:`refreshing_probe` to an
-    append-mode parquet sink: each micro-batch re-resolves the
-    manifest, probes the CURRENT index version, and appends its hits
-    to ``out_dir`` — the long-running-ingest deployment shape
-    (``stream.writeStream.foreachBatch(refreshing_probe_sink(...))``).
-    Exactly-once caveat: parquet appends from foreachBatch are
-    at-least-once across epoch retries, the standard foreachBatch
-    contract — use :func:`refreshing_probe_exactly_once_sink` (the
-    epoch-partition idempotent overwrite) when the sink must be
-    exact."""
-    probe = refreshing_probe(path, threshold, tier, id_col, vec_col,
-                             text_col)
-
-    def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        probe(batch_df).write.mode("append").parquet(out_dir)
-
-    return write_batch
-
-
-def refreshing_probe_exactly_once_sink(out_dir: str, path: str,
-                                       threshold: float | None = None,
-                                       tier: str = "ivf2",
-                                       id_col: str = "vec_id",
-                                       vec_col: str = "embedding",
-                                       text_col: str = "text"):
-    """EXACTLY-ONCE variant of :func:`refreshing_probe_sink` (VERDICT
-    r10 wrong #2): the sink is laid out as ``epoch=<id>`` partition
-    directories and each micro-batch publishes through a STATIC
-    OVERWRITE of its own epoch's directory — an epoch retry REPLACES
-    the partial rows the failed attempt may have written instead of
-    appending a duplicate set, so the sink converges to exactly one
-    row set per epoch. Writing the partition path directly (rather
-    than a dynamic partition overwrite of the base dir) closes the
-    EMPTY-RETRY hole (ADVICE r11): a dynamic overwrite with zero hit
-    rows writes no partition at all, leaving a failed attempt's
-    partial rows standing — the static overwrite clears the epoch
-    directory even when the retried probe returns nothing (possible
-    because the probe re-resolves the manifest per call, so a
-    delete/rebuild can land between attempts).
-
-    This is the idempotent MERGE keyed on (epoch, id): because the
-    epoch is in the key, a MERGE from a replayed batch can only ever
-    touch its own epoch's rows — which is precisely the directory the
-    overwrite replaces — so the semantics match
-    ``operators.merge.merge_into`` on those keys while the execution
-    stays O(batch) per epoch (a relational MERGE would read and
-    rewrite the standing sink per micro-batch — O(sink), the wrong
-    cost at 100 TB). Consumers read the base dir and see ``epoch`` as
-    a discovered partition column (lineage); the foreachBatch epoch
-    id is stable across retries by Spark's contract, which is what
-    makes the overwrite idempotent. A reader holding a DataFrame over
-    the sink across a retry must re-read (the overwrite replaces that
-    epoch's files, so a pre-overwrite file listing goes stale — the
-    usual overwrite-reader contract)."""
-    probe = refreshing_probe(path, threshold, tier, id_col, vec_col,
-                             text_col)
-
-    def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        (probe(batch_df).write.mode("overwrite")
-         .parquet(f"{out_dir}/epoch={int(epoch_id)}"))
-
-    return write_batch
+    return store.publish(spark, path, "pq",
+                         {**meta.asDict(), "seq": meta.seq + 1}, recapped,
+                         keep_versions)
 
 
 def pq_index_probe_hits(queries: DataFrame, index: dict,
@@ -2026,3 +1012,6 @@ def pq_index_probe_hits(queries: DataFrame, index: dict,
     return (pairs.select("new_id", "old_id",
                          F.round(sdc, 6).alias("sdc"))
             .where(F.col("sdc") <= threshold))
+
+
+ivf2_index_delete = pq_index_delete = store.delete

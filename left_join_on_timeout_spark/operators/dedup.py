@@ -145,7 +145,7 @@ def minhash_digest_plan(k: int) -> list[tuple[int, int]]:
             for j in range(k)]
 
 
-def _with_minhash(sets: DataFrame, id_col: str, k: int) -> DataFrame:
+def with_minhash(sets: DataFrame, id_col: str, k: int) -> DataFrame:
     """Append m0..m{k-1} minhash columns to a (id, sh_set) frame as pure
     per-row array expressions: one projection concatenates the ceil(k/4)
     md5 digests of each shingle into ``_hcat`` (md5 runs once per shingle
@@ -177,7 +177,7 @@ def minhash_signature(df: DataFrame, id_col: str, text_col: str,
     group-by, no shuffle (duplicate shingles can't change a min, so
     array_distinct is semantics-preserving)."""
     sets = shingle_sets(df, id_col, text_col, shingle_n)
-    return _with_minhash(sets, id_col, k).drop("sh_set")
+    return with_minhash(sets, id_col, k).drop("sh_set")
 
 
 DEFAULT_LSH_BUCKET_CAP = 200
@@ -291,7 +291,7 @@ def lsh_verified_near_dups(df: DataFrame, id_col: str, text_col: str,
     # instead of shingling the corpus three times
     sets = shingle_sets(df, id_col, text_col, shingle_n) \
         .persist(StorageLevel.MEMORY_AND_DISK)
-    sig = _with_minhash(sets, id_col, k).drop("sh_set")
+    sig = with_minhash(sets, id_col, k).drop("sh_set")
     cand = lsh_candidate_pairs(sig, id_col, k, bands, bucket_cap)
     sized = sets.select(F.col(id_col), "sh_set",
                         F.size("sh_set").alias("n_sh"))

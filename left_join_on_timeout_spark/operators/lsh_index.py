@@ -7,20 +7,14 @@ yesterday's index instead of re-banding 100 TB of documents per batch,
 and the per-call persist the in-session probe needs disappears
 entirely (the saved postings ARE the reusable relation).
 
-Layout under ``path`` — the exact maintenance contract of the ANN
-tiers, sharing their helpers (versioned manifest, tombstones, GC):
-
-* ``postings_v{seq}``  (id, band, h) — the CAPPED banded buckets,
-  partitioned by ``band`` (bands are few and uniformly sized — every
-  probe touches all bands, so the partition key here is layout
-  hygiene, not pruning; the bucket digest ``h`` carries the join).
-  32-char digests only: a few bytes per document per band, never text
-  or shingles — the index of an 18 M-doc corpus is ~2.4 GB.
-* ``meta``             versioned knobs (k, bands, shingle_n,
-  bucket_cap, id_col) + the ``seq`` manifest pointer.
-* ``tombstones_v{seq}``  optional deleted-id relation
-  (:func:`lsh_index_delete`); probes anti-join it out immediately,
-  rebuilds drop the rows physically.
+Postings ``(id, band, h)`` — the CAPPED banded buckets, partitioned by
+``band`` (bands are few and uniformly sized — every probe touches all
+bands, so the partition key here is layout hygiene, not pruning; the
+bucket digest ``h`` carries the join). 32-char digests only: a few
+bytes per document per band, never text or shingles — the index of an
+18 M-doc corpus is ~2.4 GB. The manifest (k, bands, shingle_n,
+bucket_cap, id_col), tombstones and versioning follow
+:mod:`operators.index_store`.
 
 The build applies the bucket CAP (degenerate boilerplate buckets drop
 — the explicit recall tradeoff `lsh_candidate_pairs` documents) so
@@ -35,32 +29,18 @@ extension mandated by the build spec.
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import DataFrame, Row, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from left_join_on_timeout_spark.operators.ann_index import (
-    INDEX_FORMAT_VERSION,
-    _apply_tombstones,
-    _check_id_col,
-    _index_delete,
-    _load_tombstones,
-    _postings_dir,
-    _publish_postings,
-    _read_meta,
-    _read_postings,
-    _reset_maintenance_state,
-    _write_meta,
-)
+from left_join_on_timeout_spark.operators import index_store as store
 from left_join_on_timeout_spark.operators.dedup import (
     DEFAULT_BANDS,
     DEFAULT_K,
     DEFAULT_LSH_BUCKET_CAP,
     DEFAULT_SHINGLE,
-    _with_minhash,
     band_rows,
     shingle_sets,
+    with_minhash,
 )
 
 
@@ -70,7 +50,7 @@ def _banded(docs: DataFrame, id_col: str, text_col: str,
     signature → per-band bucket digests — all row-local projections
     (zero shuffles), the exact arithmetic of the fused LSH family."""
     sets = shingle_sets(docs, id_col, text_col, shingle_n)
-    sig = _with_minhash(sets, id_col, k).drop("sh_set")
+    sig = with_minhash(sets, id_col, k).drop("sh_set")
     return band_rows(sig, id_col, k, bands)
 
 
@@ -103,27 +83,11 @@ def lsh_index_build(docs: DataFrame, path: str,
     capped = (banded.withColumn("bsz", F.count("*").over(w))
               .where(F.col("bsz") <= bucket_cap).drop("bsz")
               .select(F.col(id_col).alias("id"), "band", "h"))
-    (capped.write.mode("overwrite").partitionBy("band")
-     .parquet(_postings_dir(path, 1)))
-    meta = docs.sparkSession.createDataFrame(
-        [(INDEX_FORMAT_VERSION, k, bands, shingle_n, bucket_cap,
-          id_col, 1)],
-        "version INT, k INT, bands INT, shingle_n INT, bucket_cap INT, "
-        "id_col STRING, seq INT")
-    _write_meta(meta, path, 1)
-    _reset_maintenance_state(meta.sparkSession, path)
-    # the just-published version's handle (same dict as
-    # lsh_index_load, no tombstones by construction) — a build-then-
-    # probe caller skips the load's pointer read + meta collect
-    # (round 15, VERDICT r14 next #6)
-    return {
-        "meta": Row(version=INDEX_FORMAT_VERSION, k=int(k),
-                    bands=int(bands), shingle_n=int(shingle_n),
-                    bucket_cap=int(bucket_cap), id_col=id_col, seq=1),
-        "path": path,
-        "postings": _read_postings(docs.sparkSession, path, 1)
-        .withColumn("band", F.col("band").cast("long")),
-    }
+    return store.publish(
+        docs.sparkSession, path, "lsh",
+        dict(k=k, bands=bands, shingle_n=shingle_n, bucket_cap=bucket_cap,
+             id_col=id_col, seq=1),
+        capped)
 
 
 def lsh_index_load(spark: SparkSession, path: str,
@@ -135,28 +99,7 @@ def lsh_index_load(spark: SparkSession, path: str,
     (see :func:`operators.ann_index.ivf2_index_load`); the banding
     knobs live in the pinned meta itself, so the snapshot probes with
     exactly the layout that version served."""
-    meta = _read_meta(spark, path, as_of)
-    postings = _read_postings(spark, path, meta.seq) \
-        .withColumn("band", F.col("band").cast("long"))
-    # doc ids may be int- or string-keyed (VERDICT r9 item 4 — the
-    # typed-tombstone contract needs the string-keyed corpus to be a
-    # first-class citizen of the dedup index); the banding arithmetic
-    # never inspects the id, only groups by it
-    expected = {"band": "bigint", "h": "string"}
-    got = dict(postings.dtypes)
-    bad = {c: (t, got.get(c)) for c, t in expected.items()
-           if got.get(c) != t}
-    if got.get("id") not in ("bigint", "string"):
-        bad["id"] = ("bigint|string", got.get("id"))
-    if bad:
-        raise ValueError(
-            f"postings schema drift at {path}: expected vs got {bad}")
-    return {
-        "meta": meta,
-        "path": path,
-        "postings": _apply_tombstones(
-            postings, _load_tombstones(spark, path, meta.seq)),
-    }
+    return store.load(spark, path, "lsh", as_of)
 
 
 def lsh_index_probe(new_docs: DataFrame, index: dict,
@@ -170,7 +113,7 @@ def lsh_index_probe(new_docs: DataFrame, index: dict,
     re-bands or persists the standing side — it is a parquet scan.
     Self-pairs (a doc probing an index that contains it) are excluded
     like the fused probe's id inequality."""
-    _check_id_col(index["meta"], id_col, "search")
+    store.check_id_col(index["meta"], id_col, "search")
     meta = index["meta"]
     prb = _banded(new_docs, id_col, text_col, meta.k, meta.bands,
                   meta.shingle_n)
@@ -193,25 +136,11 @@ def lsh_index_append(new_docs: DataFrame, spark: SparkSession, path: str,
     :func:`lsh_index_rebuild` — the same bounded-staleness contract as
     the ANN appends. Idempotency is the caller's concern."""
     index = lsh_index_load(spark, path)
-    _check_id_col(index["meta"], id_col, "append")
     meta = index["meta"]
     out = _banded(new_docs, id_col, text_col, meta.k, meta.bands,
                   meta.shingle_n).select(
         F.col(id_col).alias("id"), "band", "h")
-    # cluster by the directory key before the write (the builders'
-    # files ≈ tasks × dirs note, applied to the per-batch append)
-    (out.repartition(F.col("band"))
-     .write.mode("append").partitionBy("band")
-     .parquet(_postings_dir(path, meta.seq)))
-
-
-def lsh_index_delete(spark: SparkSession, path: str, ids) -> None:
-    """Tombstone-delete document ids from a saved LSH index — the
-    consumer shape: the engine's own ``dedup_keep_canonical`` stage
-    produces doc REMOVALS, and the standing near-dup index serving
-    that corpus must stop surfacing them immediately. See
-    :func:`operators.ann_index._index_delete` for the contract."""
-    _index_delete(spark, path, ids)
+    store.append(index, out, id_col)
 
 
 def lsh_index_rebuild(spark: SparkSession, path: str,
@@ -230,24 +159,9 @@ def lsh_index_rebuild(spark: SparkSession, path: str,
     recapped = (index["postings"].repartition(F.col("band"), F.col("h"))
                 .withColumn("bsz", F.count("*").over(w))
                 .where(F.col("bsz") <= meta.bucket_cap).drop("bsz"))
-    new_seq = int(getattr(meta, "seq", 1) or 1) + 1
-    meta_df = spark.createDataFrame(
-        [(meta.version, meta.k, meta.bands, meta.shingle_n,
-          meta.bucket_cap, meta.id_col, new_seq)],
-        "version INT, k INT, bands INT, shingle_n INT, bucket_cap INT, "
-        "id_col STRING, seq INT")
-    _publish_postings(spark, path, recapped, "band", meta_df, new_seq,
-                      keep_versions, already_clustered=True)
-    # the just-published version's handle — a rebuild-then-probe
-    # caller skips the load's manifest re-read (round 15); the new
-    # version starts with no tombstones by the publish contract
-    return {
-        "meta": Row(version=meta.version, k=int(meta.k),
-                    bands=int(meta.bands),
-                    shingle_n=int(meta.shingle_n),
-                    bucket_cap=int(meta.bucket_cap),
-                    id_col=meta.id_col, seq=new_seq),
-        "path": path,
-        "postings": _read_postings(spark, path, new_seq)
-        .withColumn("band", F.col("band").cast("long")),
-    }
+    return store.publish(spark, path, "lsh",
+                         {**meta.asDict(), "seq": meta.seq + 1}, recapped,
+                         keep_versions)
+
+
+lsh_index_delete = store.delete

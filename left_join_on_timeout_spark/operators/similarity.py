@@ -126,7 +126,7 @@ def srp_candidate_pairs(emb: DataFrame,
     return pairs.join(va, "id_a").join(vb, "id_b")
 
 
-def _score(pairs: DataFrame) -> DataFrame:
+def score_pairs(pairs: DataFrame) -> DataFrame:
     """(id_a, id_b, cos_sim): cosine from the pair's single dot product
     and the precomputed norms — same IEEE operation order as
     ``functions.vectors.cosine`` (dot / (norm_a * norm_b))."""
@@ -136,7 +136,7 @@ def _score(pairs: DataFrame) -> DataFrame:
                 / (F.col("na") * F.col("nb")), 6).alias("cos_sim"))
 
 
-def _bidir_top1(scored: DataFrame) -> DataFrame:
+def bidir_top1(scored: DataFrame) -> DataFrame:
     """(vec_id, neighbor_id, cos_sim): each pair feeds BOTH directions
     from one evaluation of the scoring subtree (a union of two selects
     would re-run the whole candidate+score plan per branch), then a
@@ -159,10 +159,10 @@ def _bidir_top1(scored: DataFrame) -> DataFrame:
         F.col("best.cos_sim").alias("cos_sim"))
 
 
-def _bidir_topk(scored: DataFrame, k: int) -> DataFrame:
+def bidir_topk(scored: DataFrame, k: int) -> DataFrame:
     """(vec_id, neighbor_id, cos_sim, rank): each vector's top-``k``
     candidates by cosine — the k>1 generalization of
-    :func:`_bidir_top1`. Same both-directions explode from one scoring
+    :func:`bidir_top1`. Same both-directions explode from one scoring
     evaluation; the per-vector head is a rank window (desc cos_sim,
     ties to the smaller neighbor id), k rows out per vector instead of
     the argmax's one. Retrieval surfaces (k-NN graphs, rerank
@@ -224,7 +224,7 @@ def ann_top_neighbor(emb: DataFrame,
         n_bits = auto_knobs(corpus_rows(emb))["n_bits"]
     pairs = srp_candidate_pairs(emb, id_col, vec_col, dim, bands, n_bits,
                                 seed, bucket_cap)
-    return _bidir_top1(_score(pairs))
+    return bidir_top1(score_pairs(pairs))
 
 
 DEFAULT_IVF_CELLS = 32
@@ -339,7 +339,7 @@ def auto_knobs(n_rows: int) -> dict:
 _SEED_ID_TYPES = ("tinyint", "smallint", "int", "bigint")
 
 
-def _check_seed_id_dtype(emb: DataFrame, id_col: str, fn: str) -> None:
+def check_seed_id_dtype(emb: DataFrame, id_col: str, fn: str) -> None:
     """The flat IVF/PQ tiers seed anchors and codebooks via the
     deterministic ``id < n`` rule (seedless; a k-means pass drops in
     unchanged). On a non-integer id column that comparison would run
@@ -369,18 +369,18 @@ def ivf_assign(emb: DataFrame,
     in here unchanged). The anchors collapse into one broadcast array
     row, so the n_cells dot products and the argmax run as a per-row
     array reduction in the scanning tasks
-    (see :func:`_assign_to_anchors`) — no shuffle anywhere."""
-    _check_seed_id_dtype(emb, id_col, "ivf_assign")
+    (see :func:`assign_to_anchors`) — no shuffle anywhere."""
+    check_seed_id_dtype(emb, id_col, "ivf_assign")
     v = fan_out(emb).select(F.col(id_col), as_double(vec_col).alias("v"))
     v = v.select(id_col, "v", l2_norm(F.col("v")).alias("nrm"))
     anchors = (v.where(F.col(id_col) < n_cells)
                .select(F.col(id_col).alias("cell"),
                        F.col("v").alias("av"),
                        F.col("nrm").alias("anrm")))
-    return _assign_to_anchors(v, anchors, id_col)
+    return assign_to_anchors(v, anchors, id_col)
 
 
-def _assign_to_anchors(v: DataFrame, anchors: DataFrame,
+def assign_to_anchors(v: DataFrame, anchors: DataFrame,
                        id_col: str) -> DataFrame:
     """(id, v, nrm, cell): nearest anchor by cosine, ties to the lowest
     cell id — fully map-side: the anchors collapse into ONE broadcast
@@ -456,17 +456,17 @@ def ivf_assign_multi(emb: DataFrame,
     shuffles the n·n_cells candidate relation: the only exchange left
     is the n_cells→1 anchor collect, so the stage scales like a
     map-side argmax instead of a per-id window."""
-    _check_seed_id_dtype(emb, id_col, "ivf_assign_multi")
+    check_seed_id_dtype(emb, id_col, "ivf_assign_multi")
     v = fan_out(emb).select(F.col(id_col), as_double(vec_col).alias("v"))
     v = v.select(id_col, "v", l2_norm(F.col("v")).alias("nrm"))
     anchors = (v.where(F.col(id_col) < n_cells)
                .select(F.col(id_col).alias("cell"),
                        F.col("v").alias("av"),
                        F.col("nrm").alias("anrm")))
-    return _assign_to_anchors_multi(v, anchors, id_col, nprobe)
+    return assign_to_anchors_multi(v, anchors, id_col, nprobe)
 
 
-def _assign_to_anchors_multi(v: DataFrame, anchors: DataFrame,
+def assign_to_anchors_multi(v: DataFrame, anchors: DataFrame,
                              id_col: str, nprobe: int) -> DataFrame:
     """The multi-probe body of :func:`ivf_assign_multi`, factored so a
     SAVED index can run the identical top-``nprobe`` argmax through its
@@ -539,7 +539,7 @@ def _lloyd(v: DataFrame, anchors: DataFrame, id_col: str,
     from pyspark import StorageLevel
 
     for _ in range(iters):
-        assigned = _assign_to_anchors(v, anchors, id_col)
+        assigned = assign_to_anchors(v, anchors, id_col)
         dims = (assigned.select("cell", F.posexplode("v").alias("pos", "x"))
                 .groupBy("cell", "pos")
                 .agg((F.sum(F.col("x").cast("decimal(25,6)")).cast("double")
@@ -584,7 +584,7 @@ def kmeans_refined_cells(emb: DataFrame,
     truncate lineage, so every pass over the data runs exactly once."""
     from pyspark import StorageLevel
 
-    _check_seed_id_dtype(emb, id_col, "kmeans_refined_cells")
+    check_seed_id_dtype(emb, id_col, "kmeans_refined_cells")
     v = fan_out(emb).select(F.col(id_col), as_double(vec_col).alias("v"))
     v = v.select(id_col, "v", l2_norm(F.col("v")).alias("nrm")) \
         .persist(StorageLevel.MEMORY_AND_DISK)
@@ -593,7 +593,7 @@ def kmeans_refined_cells(emb: DataFrame,
                        F.col("v").alias("av"),
                        F.col("nrm").alias("anrm")))
     anchors = _lloyd(v, anchors, id_col, iters)
-    final = _assign_to_anchors(v, anchors, id_col)
+    final = assign_to_anchors(v, anchors, id_col)
     sizes = final.groupBy("cell").agg(F.count("*").alias("n_members"))
     return (sizes.join(anchors.select("cell", "anrm"), "cell")
             .select("cell", "n_members",
@@ -647,7 +647,7 @@ def _sub_anchor_buckets(sub_anchors: DataFrame) -> DataFrame:
 def _best_sub(cells) -> F.Column:
     """argmax over one bucket's sub-anchors by cosine, ties to the
     lowest sub id (the (sim, -sub) struct-max discipline shared with
-    ``_assign_to_anchors``)."""
+    ``assign_to_anchors``)."""
     return F.array_max(F.transform(
         cells,
         lambda a: F.struct(
@@ -656,7 +656,7 @@ def _best_sub(cells) -> F.Column:
             (-a["sub"]).alias("negs"))))
 
 
-def _assign_to_subs(sup: DataFrame, sub_anchors: DataFrame,
+def assign_to_subs(sup: DataFrame, sub_anchors: DataFrame,
                     id_col: str) -> DataFrame:
     """(id, v, nrm, sid, sub): nearest sub-anchor *within the row's own
     super-cell* by cosine, ties to the lowest sub id — a broadcast HASH
@@ -676,7 +676,7 @@ def _assign_to_subs(sup: DataFrame, sub_anchors: DataFrame,
             .select(id_col, "v", "nrm", "sid",
                     _best_sub(F.col("cells")).alias("b")))
     # non-nullable via unreachable sentinel — same
-    # InferFiltersFromConstraints hazard as _assign_to_anchors
+    # InferFiltersFromConstraints hazard as assign_to_anchors
     return best.select(F.col(id_col), "v", "nrm", "sid",
                        F.coalesce(-F.col("b")["negs"],
                                   F.lit(-1).cast("long")).alias("sub"))
@@ -692,7 +692,7 @@ def _lloyd_grouped(sup: DataFrame, sub_anchors: DataFrame, id_col: str,
     from pyspark import StorageLevel
 
     for _ in range(iters):
-        assigned = _assign_to_subs(sup, sub_anchors, id_col)
+        assigned = assign_to_subs(sup, sub_anchors, id_col)
         dims = (assigned
                 .select("sid", "sub", F.posexplode("v").alias("pos", "x"))
                 .groupBy("sid", "sub", "pos")
@@ -711,7 +711,7 @@ def _lloyd_grouped(sup: DataFrame, sub_anchors: DataFrame, id_col: str,
     return sub_anchors
 
 
-def _train_two_level(
+def train_two_level(
         emb: DataFrame, id_col: str, vec_col: str, n_super: int, k2: int,
         iters: int, train_frac: float | None = None,
         train_seed: str = "42", persisted: list | None = None,
@@ -776,7 +776,7 @@ def _train_two_level(
                            F.col("v").alias("av"),
                            F.col("nrm").alias("anrm")))
     sup_anchors = _lloyd(vt, sup_anchors, id_col, iters, persisted)
-    sup = (_assign_to_anchors(v, sup_anchors, id_col)
+    sup = (assign_to_anchors(v, sup_anchors, id_col)
            .withColumnRenamed("cell", "sid")
            .persist(StorageLevel.MEMORY_AND_DISK))
     if persisted is not None:
@@ -867,9 +867,9 @@ def two_level_assign(emb: DataFrame,
     centroid aggregations (n_super·k2 rows) and the decimal means. The
     parsed corpus is persisted once (the standing cost of any iterative
     pass, as in ``kmeans_refined_cells``)."""
-    v, _sup_anchors, sup, sub_anchors = _train_two_level(
+    v, _sup_anchors, sup, sub_anchors = train_two_level(
         emb, id_col, vec_col, n_super, k2, iters, train_frac, train_seed)
-    return _assign_to_subs(sup, sub_anchors, id_col)
+    return assign_to_subs(sup, sub_anchors, id_col)
 
 
 def two_level_assign_multi(emb: DataFrame,
@@ -901,7 +901,7 @@ def two_level_assign_multi(emb: DataFrame,
     against the per-super buckets — so neither the whole sub-anchor
     index nor any bucket rides through the probe chain's fallback-eval
     row copies (see :func:`_sub_anchor_buckets`)."""
-    v, sup_anchors, _sup, sub_anchors = _train_two_level(
+    v, sup_anchors, _sup, sub_anchors = train_two_level(
         emb, id_col, vec_col, n_super, k2, iters, train_frac, train_seed)
     return probe_assign_multi(v, sup_anchors, sub_anchors, id_col, nprobe)
 
@@ -992,7 +992,7 @@ def ivf2_top_neighbor(emb: DataFrame,
     capped = _ivf2_capped(emb, id_col, vec_col, n_super, k2, iters,
                           cell_cap, nprobe, train_frac, train_seed)
     pairs = _pair_within_cells(capped, ["sid", "sub"], id_col)
-    return _bidir_top1(_score(pairs))
+    return bidir_top1(score_pairs(pairs))
 
 
 def ivf2_top_neighbors(emb: DataFrame, k: int = 3,
@@ -1016,7 +1016,7 @@ def ivf2_top_neighbors(emb: DataFrame, k: int = 3,
     capped = _ivf2_capped(emb, id_col, vec_col, n_super, k2, iters,
                           cell_cap, nprobe, train_frac, train_seed)
     pairs = _pair_within_cells(capped, ["sid", "sub"], id_col)
-    return _bidir_topk(_score(pairs), k)
+    return bidir_topk(score_pairs(pairs), k)
 
 
 def _ivf2_capped(emb: DataFrame, id_col: str, vec_col: str,
@@ -1151,7 +1151,7 @@ def ivf_top_neighbor(emb: DataFrame,
               .drop("csz", "srk", "pri")) \
         .persist(StorageLevel.MEMORY_AND_DISK)
     pairs = _pair_within_cells(capped, ["cell"], id_col)
-    return _bidir_top1(_score(pairs))
+    return bidir_top1(score_pairs(pairs))
 
 
 def ivf_top_neighbors(emb: DataFrame, k: int = 3,
@@ -1200,7 +1200,7 @@ def ivf_top_neighbors(emb: DataFrame, k: int = 3,
               .drop("csz", "srk", "pri")) \
         .persist(StorageLevel.MEMORY_AND_DISK)
     pairs = _pair_within_cells(capped, ["cell"], id_col)
-    return _bidir_topk(_score(pairs), k)
+    return bidir_topk(score_pairs(pairs), k)
 
 
 def embedding_near_dup_pairs(emb: DataFrame, threshold: float,
@@ -1216,7 +1216,7 @@ def embedding_near_dup_pairs(emb: DataFrame, threshold: float,
     cosine verify only on candidates)."""
     pairs = srp_candidate_pairs(emb, id_col, vec_col, dim, bands, n_bits,
                                 seed, bucket_cap)
-    return _score(pairs).where(F.col("cos_sim") >= threshold)
+    return score_pairs(pairs).where(F.col("cos_sim") >= threshold)
 
 
 def srp_cross_candidates(x: DataFrame, y: DataFrame,
@@ -1423,7 +1423,7 @@ def _pq_cand_fn(s: F.Column, b: int, sub: int):
     return _cand
 
 
-def _pq_best(cb: F.Column, s: F.Column, b: int, sub: int) -> F.Column:
+def pq_best(cb: F.Column, s: F.Column, b: int, sub: int) -> F.Column:
     """The per-block PQ argmin — ``struct(d2, code)`` of the nearest
     codeword: a LINEAR native ``array_min`` struct-compare over the
     broadcast codebook array (min d2, ties to the lowest code — the
@@ -1476,7 +1476,7 @@ def _slot_lookup(cb: DataFrame) -> DataFrame | None:
     return None
 
 
-def _train_pq_codebook(v: DataFrame, id_col: str, dim: int, m: int,
+def train_pq_codebook(v: DataFrame, id_col: str, dim: int, m: int,
                        k: int, iters: int = 1,
                        train_frac: float | None = None,
                        train_seed: str = "42",
@@ -1522,7 +1522,7 @@ def _train_pq_codebook(v: DataFrame, id_col: str, dim: int, m: int,
     if seeds is not None:
         cb = seeds
     else:
-        _check_seed_id_dtype(vu, id_col, "_train_pq_codebook")
+        check_seed_id_dtype(vu, id_col, "train_pq_codebook")
         cb = vu.where(F.col(id_col) < k).select(
             F.col(id_col).cast("int").alias("code"),
             F.col("vu").alias("cv"))
@@ -1532,7 +1532,7 @@ def _train_pq_codebook(v: DataFrame, id_col: str, dim: int, m: int,
         entries = []
         for b in range(m):
             s = F.slice(F.col("vu"), b * sub + 1, sub)
-            best = _pq_best(F.col("cb"), s, b, sub)
+            best = pq_best(F.col("cb"), s, b, sub)
             entries.append(F.struct(F.lit(b).alias("b"),
                                     best["code"].alias("code"),
                                     s.alias("s")))
@@ -1601,7 +1601,7 @@ def pq_codes(emb: DataFrame,
     Returns (id, code_0..code_{m-1}, recon_err) where recon_err is the
     total squared quantization error — the distortion metric PQ
     codebook training monitors."""
-    _check_seed_id_dtype(emb, id_col, "pq_codes")
+    check_seed_id_dtype(emb, id_col, "pq_codes")
     sub = dim // m
     v = fan_out(emb).select(F.col(id_col), as_double(vec_col).alias("v"))
     cb = (v.where(F.col(id_col) < k)
@@ -1614,7 +1614,7 @@ def pq_codes(emb: DataFrame,
     d2_cols = []
     for b in range(m):
         s = F.slice(F.col("v"), b * sub + 1, sub)
-        best = _pq_best(F.col("cb"), s, b, sub)
+        best = pq_best(F.col("cb"), s, b, sub)
         out_cols.append(best["code"].alias(f"code{b}"))
         d2_cols.append(best["d2"])
     recon = d2_cols[0]
@@ -1662,12 +1662,12 @@ def pq_sdc_top_neighbor(emb: DataFrame,
     exact-scoring ~R rows per vector instead of the whole cell.
 
     ``train_iters`` > 0 swaps the first-``k`` seed codebook for the
-    per-block-Lloyd TRAINED one (:func:`_train_pq_codebook`, optionally
+    per-block-Lloyd TRAINED one (:func:`train_pq_codebook`, optionally
     gate-sampled via ``train_frac``) — the production codebook; the
     measured recall lift is in PLANS.md (VERDICT r7 item 3)."""
     from pyspark import StorageLevel
 
-    _check_seed_id_dtype(emb, id_col, "pq_sdc_top_neighbor")
+    check_seed_id_dtype(emb, id_col, "pq_sdc_top_neighbor")
     sub = dim // m
     v = fan_out(emb).select(F.col(id_col), as_double(vec_col).alias("v"))
     v = v.select(id_col, "v", l2_norm(F.col("v")).alias("nrm"))
@@ -1675,7 +1675,7 @@ def pq_sdc_top_neighbor(emb: DataFrame,
                .select(F.col(id_col).alias("cell"),
                        F.col("v").alias("av"),
                        F.col("nrm").alias("anrm")))
-    assigned = _assign_to_anchors(v, anchors, id_col)
+    assigned = assign_to_anchors(v, anchors, id_col)
     # Cosine metric: encode UNIT vectors, so argmin-L2 over codes is
     # argmax-cosine (L2² = 2 − 2·cos on the unit sphere). Without this
     # the SDC ranking answers "nearest by raw L2", which for
@@ -1685,7 +1685,7 @@ def pq_sdc_top_neighbor(emb: DataFrame,
         "vu", F.transform(F.col("v"), lambda x: x / F.col("nrm")))
 
     if train_iters > 0:
-        cb = _train_pq_codebook(v, id_col, dim, m, k, train_iters,
+        cb = train_pq_codebook(v, id_col, dim, m, k, train_iters,
                                 train_frac, train_seed)
     else:
         cb = (v.where(F.col(id_col) < k)
@@ -1697,7 +1697,7 @@ def pq_sdc_top_neighbor(emb: DataFrame,
     enc_cols = [F.col(id_col), F.col("cell")]
     for b in range(m):
         s = F.slice(F.col("vu"), b * sub + 1, sub)
-        best = _pq_best(F.col("cb"), s, b, sub)
+        best = pq_best(F.col("cb"), s, b, sub)
         enc_cols.append(best["code"].alias(f"code{b}"))
     index = assigned.join(F.broadcast(cb_arr)).select(*enc_cols)
     w = Window.partitionBy("cell")

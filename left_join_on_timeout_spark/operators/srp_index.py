@@ -7,23 +7,16 @@ standing side's banded buckets become a SAVED parquet relation and a
 repeated mining run pays only the probe side's banding plus one
 equi-join.
 
-Layout under ``path`` — the maintenance contract of the other tiers,
-sharing their helpers (versioned manifest + atomic ``latest`` pointer,
-typed tombstones, GC, snapshot reads):
-
-* ``postings_v{seq}``  (id, band, h) — the CAPPED banded buckets,
-  partitioned by ``band``; ``h`` is the n_bits sign string (the same
-  column name as the LSH tier's digest, so the whole maintenance
-  plane — ``index_stats``, ``_tier_of``, rebuild re-cap — speaks the
-  (band, h) cell key unchanged). Ids and short bit-strings only,
-  never vectors.
-* ``meta_v{seq}`` + ``latest``  versioned knobs (dim, bands, n_bits,
-  seed, bucket_cap, id_col, id_type): the PROBE side re-derives the
-  hyperplanes from (dim, n_bits, seed) — deterministic, so no plane
-  relation needs persisting; probing with the saved knobs is what
-  makes build-time and probe-time buckets collide.
-* ``tombstones_v{seq}``  typed deleted-id relation; probes anti-join
-  it out immediately, rebuilds drop rows physically.
+Postings ``(id, band, h)`` — the CAPPED banded buckets, partitioned by
+``band``; ``h`` is the n_bits sign string (the same column name as the
+LSH tier's digest, so the maintenance plane — ``index_stats``, the
+rebuild re-cap — speaks the (band, h) cell key unchanged). Ids and
+short bit-strings only, never vectors. The manifest carries (dim,
+bands, n_bits, seed, bucket_cap, id_col, id_type): the PROBE side
+re-derives the hyperplanes from (dim, n_bits, seed) — deterministic,
+so no plane relation needs persisting; probing with the saved knobs is
+what makes build-time and probe-time buckets collide. Versioning,
+tombstones and snapshot reads follow :mod:`operators.index_store`.
 
 The BUCKET CAP applies to EACH SIDE INDEPENDENTLY — a deliberate
 difference from ``srp_cross_candidates``' global both-sides cap: the
@@ -45,7 +38,7 @@ extension mandated by the build spec.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Row, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from left_join_on_timeout_spark.functions.vectors import (
@@ -53,19 +46,7 @@ from left_join_on_timeout_spark.functions.vectors import (
     srp_bucket,
     srp_planes,
 )
-from left_join_on_timeout_spark.operators.ann_index import (
-    INDEX_FORMAT_VERSION,
-    _apply_tombstones,
-    _check_id_col,
-    _index_delete,
-    _load_tombstones,
-    _postings_dir,
-    _publish_postings,
-    _read_meta,
-    _read_postings,
-    _reset_maintenance_state,
-    _write_meta,
-)
+from left_join_on_timeout_spark.operators import index_store as store
 from left_join_on_timeout_spark.operators.similarity import (
     DEFAULT_BANDS,
     DEFAULT_BITS,
@@ -73,11 +54,6 @@ from left_join_on_timeout_spark.operators.similarity import (
     DEFAULT_SEED,
 )
 from left_join_on_timeout_spark.partitioning import fan_out
-
-_META_SCHEMA = ("version INT, dim INT, bands INT, n_bits INT, "
-                "seed INT, bucket_cap INT, id_col STRING, "
-                "id_type STRING, seq INT")
-
 
 def _srp_rows(emb: DataFrame, id_col: str, vec_col: str, dim: int,
               bands: int, n_bits: int, seed: int) -> DataFrame:
@@ -125,29 +101,12 @@ def srp_index_build(emb: DataFrame, path: str,
     capped = (banded.withColumn("bsz", F.count("*").over(w))
               .where(F.col("bsz") <= bucket_cap).drop("bsz")
               .select(F.col(id_col).alias("id"), "band", "h"))
-    (capped.write.mode("overwrite").partitionBy("band")
-     .parquet(_postings_dir(path, 1)))
-    spark = emb.sparkSession
-    id_type = dict(
-        emb.select(F.col(id_col).alias("id")).dtypes)["id"]
-    meta = spark.createDataFrame(
-        [(INDEX_FORMAT_VERSION, int(dim), int(bands), int(n_bits),
-          int(seed), int(bucket_cap), id_col, id_type, 1)],
-        _META_SCHEMA)
-    _write_meta(meta, path, 1)
-    _reset_maintenance_state(spark, path)
-    # the just-published version's handle (same dict as
-    # srp_index_load, no tombstones by construction) — a build-then-
-    # probe caller skips the load's manifest re-read (round 15)
-    return {
-        "meta": Row(version=INDEX_FORMAT_VERSION, dim=int(dim),
-                    bands=int(bands), n_bits=int(n_bits),
-                    seed=int(seed), bucket_cap=int(bucket_cap),
-                    id_col=id_col, id_type=id_type, seq=1),
-        "path": path,
-        "postings": _read_postings(spark, path, 1)
-        .withColumn("band", F.col("band").cast("long")),
-    }
+    return store.publish(
+        emb.sparkSession, path, "srp",
+        dict(dim=dim, bands=bands, n_bits=n_bits, seed=seed,
+             bucket_cap=bucket_cap, id_col=id_col,
+             id_type=dict(capped.dtypes)["id"], seq=1),
+        capped)
 
 
 def srp_index_load(spark: SparkSession, path: str,
@@ -157,23 +116,7 @@ def srp_index_load(spark: SparkSession, path: str,
     anti-joined out; ``as_of`` pins a still-live prior version (the
     snapshot read). The banding knobs live in the pinned meta, so a
     snapshot probes with exactly the layout that version served."""
-    meta = _read_meta(spark, path, as_of)
-    postings = _read_postings(spark, path, meta.seq) \
-        .withColumn("band", F.col("band").cast("long"))
-    expected = {"id": getattr(meta, "id_type", None) or "bigint",
-                "band": "bigint", "h": "string"}
-    got = dict(postings.dtypes)
-    bad = {c: (t, got.get(c)) for c, t in expected.items()
-           if got.get(c) != t}
-    if bad:
-        raise ValueError(
-            f"postings schema drift at {path}: expected vs got {bad}")
-    return {
-        "meta": meta,
-        "path": path,
-        "postings": _apply_tombstones(
-            postings, _load_tombstones(spark, path, meta.seq)),
-    }
+    return store.load(spark, path, "srp", as_of)
 
 
 def srp_index_probe(queries: DataFrame, index: dict,
@@ -195,7 +138,7 @@ def srp_index_probe(queries: DataFrame, index: dict,
     to exclude); feed the output to
     ``margin_mine_pairs(candidates=...)`` after renaming to
     (x_id, y_id)."""
-    _check_id_col(index["meta"], id_col, "search")
+    store.check_id_col(index["meta"], id_col, "search")
     meta = index["meta"]
     cap = int(probe_cap if probe_cap is not None else meta.bucket_cap)
     prb = _srp_rows(queries, id_col, vec_col, meta.dim, meta.bands,
@@ -261,17 +204,9 @@ def srp_index_append(new_vectors: DataFrame, spark: SparkSession,
     would hash through mismatched hyperplane literals into silently
     unreachable buckets, and an id-dtype drift would only surface at
     the NEXT load's schema check — both now fail loud here, like
-    ``_index_delete``'s lossless-cast check."""
+    ``index_store.delete``'s lossless-cast check."""
     index = srp_index_load(spark, path)
-    _check_id_col(index["meta"], id_col, "append")
     meta = index["meta"]
-    batch_id_type = dict(
-        new_vectors.select(F.col(id_col).alias("id")).dtypes)["id"]
-    meta_id_type = getattr(meta, "id_type", None) or "bigint"
-    if batch_id_type != meta_id_type:
-        raise ValueError(
-            f"append id dtype {batch_id_type!r} != index id_type "
-            f"{meta_id_type!r} at {path}")
     # one-row dim probe: cheap (limit(1) off the batch), catches the
     # whole-batch dim drift case before any posting lands
     probe = (new_vectors
@@ -284,18 +219,7 @@ def srp_index_append(new_vectors: DataFrame, spark: SparkSession,
     out = _srp_rows(new_vectors, id_col, vec_col, meta.dim,
                     meta.bands, meta.n_bits, meta.seed).select(
         F.col(id_col).alias("id"), "band", "h")
-    # cluster by the directory key before the write (the builders'
-    # files ≈ tasks × dirs note, applied to the per-batch append)
-    (out.repartition(F.col("band"))
-     .write.mode("append").partitionBy("band")
-     .parquet(_postings_dir(path, meta.seq)))
-
-
-def srp_index_delete(spark: SparkSession, path: str, ids) -> None:
-    """Tombstone-delete ids from a saved SRP index — a y-side row the
-    curation pipeline dropped stops generating candidates at the next
-    load. See :func:`operators.ann_index._index_delete`."""
-    _index_delete(spark, path, ids)
+    store.append(index, out, id_col)
 
 
 def srp_index_rebuild(spark: SparkSession, path: str,
@@ -313,25 +237,9 @@ def srp_index_rebuild(spark: SparkSession, path: str,
     recapped = (index["postings"].repartition(F.col("band"), F.col("h"))
                 .withColumn("bsz", F.count("*").over(w))
                 .where(F.col("bsz") <= meta.bucket_cap).drop("bsz"))
-    new_seq = int(getattr(meta, "seq", 1) or 1) + 1
-    meta_df = spark.createDataFrame(
-        [(meta.version, meta.dim, meta.bands, meta.n_bits, meta.seed,
-          meta.bucket_cap, meta.id_col,
-          getattr(meta, "id_type", None) or "bigint", new_seq)],
-        _META_SCHEMA)
-    _publish_postings(spark, path, recapped, "band", meta_df, new_seq,
-                      keep_versions, already_clustered=True)
-    # just-published version's handle (no tombstones by contract) —
-    # a rebuild-then-probe caller skips the manifest re-read (r15)
-    return {
-        "meta": Row(version=meta.version, dim=int(meta.dim),
-                    bands=int(meta.bands), n_bits=int(meta.n_bits),
-                    seed=int(meta.seed),
-                    bucket_cap=int(meta.bucket_cap),
-                    id_col=meta.id_col,
-                    id_type=getattr(meta, "id_type", None) or "bigint",
-                    seq=new_seq),
-        "path": path,
-        "postings": _read_postings(spark, path, new_seq)
-        .withColumn("band", F.col("band").cast("long")),
-    }
+    return store.publish(spark, path, "srp",
+                         {**meta.asDict(), "seq": meta.seq + 1}, recapped,
+                         keep_versions)
+
+
+srp_index_delete = store.delete

@@ -624,7 +624,7 @@ def q_dedup_incremental_probe(spark: SparkSession,
     from pyspark.sql import Window
 
     from left_join_on_timeout_spark.operators.dedup import (
-        _with_minhash,
+        with_minhash,
         lsh_probe_pairs,
         shingle_sets,
     )
@@ -634,8 +634,8 @@ def q_dedup_incremental_probe(spark: SparkSession,
         .persist(StorageLevel.MEMORY_AND_DISK)
     old_sets = sets.where(F.col("doc_id") % 10 != 0)
     new_sets = sets.where(F.col("doc_id") % 10 == 0)
-    sig_old = _with_minhash(old_sets, "doc_id", DEFAULT_K).drop("sh_set")
-    sig_new = _with_minhash(new_sets, "doc_id", DEFAULT_K).drop("sh_set")
+    sig_old = with_minhash(old_sets, "doc_id", DEFAULT_K).drop("sh_set")
+    sig_new = with_minhash(new_sets, "doc_id", DEFAULT_K).drop("sh_set")
     cand = (lsh_probe_pairs(sig_old, sig_new, "doc_id")
             .withColumnRenamed("probe_id", "new_id")
             .withColumnRenamed("index_id", "old_id"))
@@ -918,7 +918,7 @@ def q_containment_minhash_est(spark: SparkSession,
     from pyspark import StorageLevel
 
     from left_join_on_timeout_spark.operators.dedup import (
-        _with_minhash,
+        with_minhash,
         shingle_sets,
     )
 
@@ -926,7 +926,7 @@ def q_containment_minhash_est(spark: SparkSession,
 
     sets = shingle_sets(docs, "doc_id", "text") \
         .persist(StorageLevel.MEMORY_AND_DISK)
-    sig = _with_minhash(sets, "doc_id", DEFAULT_K).drop("sh_set") \
+    sig = with_minhash(sets, "doc_id", DEFAULT_K).drop("sh_set") \
         .persist(StorageLevel.MEMORY_AND_DISK)
     pairs = lsh_candidate_pairs(sig, "doc_id")
     a = sig.select(F.col("doc_id").alias("id_a"),
@@ -1132,7 +1132,7 @@ def q_dedup_lsh_probe_saved(spark: SparkSession,
     from pyspark import StorageLevel
     from pyspark.sql import Window
 
-    from left_join_on_timeout_spark.operators.ann_index import (
+    from left_join_on_timeout_spark.operators.index_store import (
         default_index_root,
     )
     from left_join_on_timeout_spark.operators.dedup import shingle_sets

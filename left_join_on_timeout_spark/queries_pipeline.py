@@ -1477,7 +1477,7 @@ def q_curation_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         token_count,
         words,
     )
-    from left_join_on_timeout_spark.operators.ann_index import (
+    from left_join_on_timeout_spark.operators.index_store import (
         default_index_root,
     )
     from left_join_on_timeout_spark.operators.components import (
@@ -1953,7 +1953,7 @@ def q_curation_pipeline_semantic(spark: SparkSession,
         dot,
         l2_norm,
     )
-    from left_join_on_timeout_spark.operators.ann_index import (
+    from left_join_on_timeout_spark.operators.index_store import (
         default_index_root,
     )
     from left_join_on_timeout_spark.operators.dedup import shingle_sets

@@ -55,7 +55,7 @@ def _band_selects(bands: int, n_bits: int) -> str:
 def _pairs_cte(bands: int, n_bits: int) -> str:
     """Candidate-generation CTE: banded → bucket-capped → distinct
     pairs; norms precomputed per vector, cosine = dot / (na * nb) — the
-    exact operation order of operators.similarity._score."""
+    exact operation order of operators.similarity.score_pairs."""
     return f"""
 e AS (SELECT vec_id, embedding::DOUBLE[] AS v,
              sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm
@@ -485,7 +485,7 @@ def _ivf2_oracle(n_super: int, k2: int, dim: int = 64,
 
     ``topk`` > 1 emits the bidirectional top-``k`` head with a
     ``rank`` column instead of the argmax — with an explicit DISTINCT
-    pair dedup, mirroring ``_bidir_topk``'s (exact: cos_sim is a pure
+    pair dedup, mirroring ``bidir_topk``'s (exact: cos_sim is a pure
     function of the pair)."""
     prefix = _ivf2_train_prefix(n_super, k2, dim, cell_cap, nprobe,
                                 train_frac, train_seed)
@@ -721,8 +721,10 @@ def q_ann_top1_ivf2_saved(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from left_join_on_timeout_spark.operators.ann_index import (
-        default_index_root,
         ivf2_self_search_saved,
+    )
+    from left_join_on_timeout_spark.operators.index_store import (
+        default_index_root,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -747,8 +749,10 @@ def q_ann_topk_ivf2_saved(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from left_join_on_timeout_spark.operators.ann_index import (
-        default_index_root,
         ivf2_self_search_saved,
+    )
+    from left_join_on_timeout_spark.operators.index_store import (
+        default_index_root,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -776,9 +780,11 @@ def q_ann_filtered_ivf2_saved(spark: SparkSession,
     import os
 
     from left_join_on_timeout_spark.operators.ann_index import (
-        default_index_root,
         ivf2_index_build,
         ivf2_index_search,
+    )
+    from left_join_on_timeout_spark.operators.index_store import (
+        default_index_root,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -808,9 +814,11 @@ def q_ann_pruned_ivf2_saved(spark: SparkSession,
     import os
 
     from left_join_on_timeout_spark.operators.ann_index import (
-        default_index_root,
         ivf2_index_build,
         ivf2_index_search,
+    )
+    from left_join_on_timeout_spark.operators.index_store import (
+        default_index_root,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -838,9 +846,11 @@ def q_ann_top1_ivf2_saved_probe2(spark: SparkSession,
     import os
 
     from left_join_on_timeout_spark.operators.ann_index import (
-        default_index_root,
         ivf2_index_build,
         ivf2_index_search,
+    )
+    from left_join_on_timeout_spark.operators.index_store import (
+        default_index_root,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -868,11 +878,13 @@ def q_ann_deleted_ivf2_saved(spark: SparkSession,
     import os
 
     from left_join_on_timeout_spark.operators.ann_index import (
-        default_index_root,
         ivf2_index_build,
         ivf2_index_delete,
         ivf2_index_load,
         ivf2_index_search,
+    )
+    from left_join_on_timeout_spark.operators.index_store import (
+        default_index_root,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -904,11 +916,13 @@ def q_ann_rebuild_ivf2_saved(spark: SparkSession,
     import os
 
     from left_join_on_timeout_spark.operators.ann_index import (
-        default_index_root,
         ivf2_index_append,
         ivf2_index_build,
         ivf2_index_rebuild,
         ivf2_index_search,
+    )
+    from left_join_on_timeout_spark.operators.index_store import (
+        default_index_root,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -1002,12 +1016,14 @@ def q_ann_asof_ivf2_saved(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from left_join_on_timeout_spark.operators.ann_index import (
-        default_index_root,
         ivf2_index_append,
         ivf2_index_build,
         ivf2_index_load,
         ivf2_index_rebuild,
         ivf2_index_search,
+    )
+    from left_join_on_timeout_spark.operators.index_store import (
+        default_index_root,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -1466,8 +1482,10 @@ def q_ann_top1_ivfpq_saved(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from left_join_on_timeout_spark.operators.ann_index import (
-        default_index_root,
         pq_self_search_saved,
+    )
+    from left_join_on_timeout_spark.operators.index_store import (
+        default_index_root,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -1601,9 +1619,11 @@ def q_ann_filtered_pq_saved(spark: SparkSession,
     import os
 
     from left_join_on_timeout_spark.operators.ann_index import (
-        default_index_root,
         pq_index_build,
         pq_index_search,
+    )
+    from left_join_on_timeout_spark.operators.index_store import (
+        default_index_root,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -1630,9 +1650,11 @@ def q_ann_pruned_pq_saved(spark: SparkSession,
     import os
 
     from left_join_on_timeout_spark.operators.ann_index import (
-        default_index_root,
         pq_index_build,
         pq_index_search,
+    )
+    from left_join_on_timeout_spark.operators.index_store import (
+        default_index_root,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -1663,9 +1685,11 @@ def q_ann_rerank_pq_saved(spark: SparkSession,
     import os
 
     from left_join_on_timeout_spark.operators.ann_index import (
-        default_index_root,
         pq_index_build,
         pq_index_search,
+    )
+    from left_join_on_timeout_spark.operators.index_store import (
+        default_index_root,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -1692,9 +1716,11 @@ def q_ann_top1_ivfpq_saved_probe2(spark: SparkSession,
     import os
 
     from left_join_on_timeout_spark.operators.ann_index import (
-        default_index_root,
         pq_index_build,
         pq_index_search,
+    )
+    from left_join_on_timeout_spark.operators.index_store import (
+        default_index_root,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -2178,7 +2204,7 @@ def q_bitext_margin_mine_saved(spark: SparkSession,
     difference from the fused query's single global cap."""
     import os
 
-    from left_join_on_timeout_spark.operators.ann_index import (
+    from left_join_on_timeout_spark.operators.index_store import (
         default_index_root,
     )
     from left_join_on_timeout_spark.operators.srp_index import (

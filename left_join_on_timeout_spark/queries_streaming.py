@@ -623,9 +623,11 @@ def q_stream_ann_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from left_join_on_timeout_spark.operators.ann_index import (
-        default_index_root,
         ivf2_index_build,
         ivf2_index_probe_hits,
+    )
+    from left_join_on_timeout_spark.operators.index_store import (
+        default_index_root,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -767,9 +769,11 @@ def q_stream_pq_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from left_join_on_timeout_spark.operators.ann_index import (
-        default_index_root,
         pq_index_build,
         pq_index_probe_hits,
+    )
+    from left_join_on_timeout_spark.operators.index_store import (
+        default_index_root,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -807,9 +811,13 @@ def q_stream_ann_probe_refresh(spark: SparkSession,
     import os
 
     from left_join_on_timeout_spark.operators.ann_index import (
-        default_index_root,
         ivf2_index_build,
         ivf2_index_rebuild,
+    )
+    from left_join_on_timeout_spark.operators.index_store import (
+        default_index_root,
+    )
+    from left_join_on_timeout_spark.operators.index_admin import (
         refreshing_probe_sink,
     )
 
@@ -878,8 +886,10 @@ def q_stream_lsh_probe_refresh(spark: SparkSession,
     plumbing AND probe-after-rebuild row equality on the dedup tier."""
     import os
 
-    from left_join_on_timeout_spark.operators.ann_index import (
+    from left_join_on_timeout_spark.operators.index_store import (
         default_index_root,
+    )
+    from left_join_on_timeout_spark.operators.index_admin import (
         refreshing_probe_sink,
     )
     from left_join_on_timeout_spark.operators.lsh_index import (
@@ -970,8 +980,10 @@ def q_stream_text_probe_refresh(spark: SparkSession,
     equality (stats refresh included) on the lexical tier."""
     import os
 
-    from left_join_on_timeout_spark.operators.ann_index import (
+    from left_join_on_timeout_spark.operators.index_store import (
         default_index_root,
+    )
+    from left_join_on_timeout_spark.operators.index_admin import (
         refreshing_probe_sink,
     )
     from left_join_on_timeout_spark.operators.text_index import (
@@ -1141,7 +1153,7 @@ def q_stream_curation_ingest(spark: SparkSession,
         dot,
         l2_norm,
     )
-    from left_join_on_timeout_spark.operators.ann_index import (
+    from left_join_on_timeout_spark.operators.index_store import (
         default_index_root,
     )
     from left_join_on_timeout_spark.operators.dedup import shingle_sets

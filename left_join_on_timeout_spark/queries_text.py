@@ -1416,7 +1416,7 @@ def q_text_bm25_saved(spark: SparkSession, sf_dir: str) -> DataFrame:
     The global top-k stays a distributed TakeOrdered (plan-gated)."""
     import os
 
-    from left_join_on_timeout_spark.operators.ann_index import (
+    from left_join_on_timeout_spark.operators.index_store import (
         default_index_root,
     )
     from left_join_on_timeout_spark.operators.retrieval import (
@@ -1507,9 +1507,11 @@ def q_hybrid_search_rrf_saved(spark: SparkSession,
     import os
 
     from left_join_on_timeout_spark.operators.ann_index import (
-        default_index_root,
         ivf2_index_build,
         ivf2_index_search,
+    )
+    from left_join_on_timeout_spark.operators.index_store import (
+        default_index_root,
     )
     from left_join_on_timeout_spark.operators.retrieval import (
         rrf_fuse,
@@ -1622,7 +1624,7 @@ def q_text_bm25_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql import Window
 
-    from left_join_on_timeout_spark.operators.ann_index import (
+    from left_join_on_timeout_spark.operators.index_store import (
         default_index_root,
     )
     from left_join_on_timeout_spark.operators.text_index import (
@@ -1697,7 +1699,7 @@ def q_stream_text_index_append(spark: SparkSession,
     tier documents, here driver-adjudicated through the value hash."""
     import os
 
-    from left_join_on_timeout_spark.operators.ann_index import (
+    from left_join_on_timeout_spark.operators.index_store import (
         default_index_root,
     )
     from left_join_on_timeout_spark.operators.retrieval import (
@@ -1769,7 +1771,7 @@ def q_contamination_sweep_saved(spark: SparkSession,
     arithmetic as ``contamination_ngram_overlap``."""
     import os
 
-    from left_join_on_timeout_spark.operators.ann_index import (
+    from left_join_on_timeout_spark.operators.index_store import (
         default_index_root,
     )
     from left_join_on_timeout_spark.operators.text_index import (
@@ -1825,7 +1827,7 @@ def q_text_bm25_rebuilt_saved(spark: SparkSession,
     neither score nor support df."""
     import os
 
-    from left_join_on_timeout_spark.operators.ann_index import (
+    from left_join_on_timeout_spark.operators.index_store import (
         default_index_root,
     )
     from left_join_on_timeout_spark.operators.retrieval import (
@@ -1942,9 +1944,11 @@ def q_hybrid_search_sweep_saved(spark: SparkSession,
     from pyspark.sql import Window
 
     from left_join_on_timeout_spark.operators.ann_index import (
-        default_index_root,
         ivf2_index_build,
         ivf2_index_search,
+    )
+    from left_join_on_timeout_spark.operators.index_store import (
+        default_index_root,
     )
     from left_join_on_timeout_spark.operators.retrieval import (
         rrf_fuse,
@@ -2009,7 +2013,7 @@ def q_crossdoc_dup_saved(spark: SparkSession, sf_dir: str) -> DataFrame:
     fused query: identical per-doc numbers, different lifecycle."""
     import os
 
-    from left_join_on_timeout_spark.operators.ann_index import (
+    from left_join_on_timeout_spark.operators.index_store import (
         default_index_root,
     )
     from left_join_on_timeout_spark.operators.text_index import (
@@ -2057,7 +2061,7 @@ def q_contamination_suites_saved(spark: SparkSession,
     ``contamination_sweep_saved``'s."""
     import os
 
-    from left_join_on_timeout_spark.operators.ann_index import (
+    from left_join_on_timeout_spark.operators.index_store import (
         default_index_root,
     )
     from left_join_on_timeout_spark.operators.text_index import (
@@ -2118,7 +2122,7 @@ def q_decontaminate_corpus_saved(spark: SparkSession,
     but must appear in the denominator)."""
     import os
 
-    from left_join_on_timeout_spark.operators.ann_index import (
+    from left_join_on_timeout_spark.operators.index_store import (
         default_index_root,
     )
     from left_join_on_timeout_spark.operators.text_index import (
@@ -2191,7 +2195,7 @@ def q_contamination_rebuilt_saved(spark: SparkSession,
     the same arc ``text_bm25_rebuilt_saved`` pins for the word tier."""
     import os
 
-    from left_join_on_timeout_spark.operators.ann_index import (
+    from left_join_on_timeout_spark.operators.index_store import (
         default_index_root,
     )
     from left_join_on_timeout_spark.operators.text_index import (
@@ -2253,7 +2257,7 @@ def q_stream_gram_index_append(spark: SparkSession,
     ``stream_text_index_append``'s tf/df-live pin)."""
     import os
 
-    from left_join_on_timeout_spark.operators.ann_index import (
+    from left_join_on_timeout_spark.operators.index_store import (
         default_index_root,
     )
     from left_join_on_timeout_spark.operators.text_index import (
@@ -2339,7 +2343,7 @@ def q_decontaminate_indexes_saved(spark: SparkSession,
     BM25 search and IVF2 neighbors at the next load)."""
     import os
 
-    from left_join_on_timeout_spark.operators.ann_index import (
+    from left_join_on_timeout_spark.operators.index_store import (
         default_index_root,
     )
     from left_join_on_timeout_spark.operators.text_index import (
@@ -2533,10 +2537,12 @@ def q_decontaminate_all_tiers_saved(spark: SparkSession,
     from pyspark import StorageLevel
 
     from left_join_on_timeout_spark.operators.ann_index import (
-        default_index_root,
         ivf2_index_build,
         ivf2_index_load,
         ivf2_index_search,
+    )
+    from left_join_on_timeout_spark.operators.index_store import (
+        default_index_root,
     )
     from left_join_on_timeout_spark.concurrency import overlap
     from left_join_on_timeout_spark.operators.index_admin import (

@@ -10,11 +10,13 @@ import pytest
 from pyspark.sql import functions as F
 
 from left_join_on_timeout_spark.operators.ann_index import (
-    INDEX_FORMAT_VERSION,
     ivf2_index_build,
     ivf2_index_load,
     ivf2_index_search,
     ivf2_self_search_saved,
+)
+from left_join_on_timeout_spark.operators.index_store import (
+    INDEX_FORMAT_VERSION,
 )
 from left_join_on_timeout_spark.operators.similarity import (
     ivf2_top_neighbor,
@@ -839,7 +841,7 @@ def test_pruned_serve_does_not_accumulate_cache(spark, tmp_path):
 
 
 def test_trained_pq_builds_do_not_accumulate_cache(spark, tmp_path):
-    """ADVICE r8: _train_pq_codebook's per-iteration persists and the
+    """ADVICE r8: train_pq_codebook's per-iteration persists and the
     tree-coarse builder's Lloyd relations are all released by the time
     pq_index_build returns — including the trained + tree path."""
     from left_join_on_timeout_spark.operators.ann_index import (
@@ -1024,6 +1026,8 @@ def test_refreshing_probe_survives_two_rebuilds(spark, tmp_path):
     from left_join_on_timeout_spark.operators.ann_index import (
         ivf2_index_delete,
         ivf2_index_rebuild,
+    )
+    from left_join_on_timeout_spark.operators.index_admin import (
         refreshing_probe_sink,
     )
 
@@ -1065,6 +1069,8 @@ def test_exactly_once_sink_epoch_replay_no_duplicates(spark, tmp_path):
     probe's content."""
     from left_join_on_timeout_spark.operators.ann_index import (
         ivf2_index_probe_hits,
+    )
+    from left_join_on_timeout_spark.operators.index_admin import (
         refreshing_probe_exactly_once_sink,
     )
 
@@ -1109,10 +1115,12 @@ def test_maintenance_loop_closed_loop_with_stream(spark, tmp_path):
     post-rebuild batches never see a deleted id; cap pressure stays
     zero throughout — the single cell remains under its cap)."""
     from left_join_on_timeout_spark.operators.ann_index import (
-        index_maintenance_due,
-        index_stats,
         ivf2_index_delete,
         ivf2_index_rebuild,
+    )
+    from left_join_on_timeout_spark.operators.index_admin import (
+        index_maintenance_due,
+        index_stats,
         refreshing_probe_sink,
     )
 
@@ -1175,11 +1183,11 @@ def test_as_of_snapshot_pins_prerebuild_postings_and_tombstones(
     must not leak into the pinned snapshot (tombstones are versioned
     alongside the postings)."""
     from left_join_on_timeout_spark.operators.ann_index import (
-        index_versions,
         ivf2_index_append,
         ivf2_index_delete,
         ivf2_index_rebuild,
     )
+    from left_join_on_timeout_spark.operators.index_store import index_versions
 
     emb = _corpus(spark)
     base = emb.where(F.col("vec_id") % 5 != 0)
@@ -1221,9 +1229,9 @@ def test_keep_versions_widens_and_default_gc_reclaims(spark, tmp_path):
     default-retention rebuild GCs back down to live+1 and a pinned
     read of the reclaimed version fails loud with the live list."""
     from left_join_on_timeout_spark.operators.ann_index import (
-        index_versions,
         ivf2_index_rebuild,
     )
+    from left_join_on_timeout_spark.operators.index_store import index_versions
 
     emb = _corpus(spark)
     path = str(tmp_path / "idx")
@@ -1277,11 +1285,13 @@ def test_index_stats_and_maintenance_policy(spark, tmp_path):
     rows a rebuild would re-drop; index_maintenance_due turns both
     into the rebuild decision."""
     from left_join_on_timeout_spark.operators.ann_index import (
-        index_maintenance_due,
-        index_stats,
         ivf2_index_append,
         ivf2_index_delete,
         ivf2_index_rebuild,
+    )
+    from left_join_on_timeout_spark.operators.index_admin import (
+        index_maintenance_due,
+        index_stats,
     )
 
     emb = _corpus(spark, n=40, dim=4)
@@ -1371,10 +1381,12 @@ def test_cap_pressure_ignores_tombstoned_rows(spark, tmp_path):
     spurious rebuild and break the 'exactly what the next rebuild
     drops' contract)."""
     from left_join_on_timeout_spark.operators.ann_index import (
-        index_maintenance_due,
-        index_stats,
         ivf2_index_append,
         ivf2_index_delete,
+    )
+    from left_join_on_timeout_spark.operators.index_admin import (
+        index_maintenance_due,
+        index_stats,
     )
 
     emb = _corpus(spark, n=13, dim=4)
@@ -1397,10 +1409,8 @@ def test_cap_pressure_ignores_tombstoned_rows(spark, tmp_path):
 
 
 def test_index_stats_other_tiers(spark, tmp_path):
-    from left_join_on_timeout_spark.operators.ann_index import (
-        index_stats,
-        pq_index_build,
-    )
+    from left_join_on_timeout_spark.operators.ann_index import pq_index_build
+    from left_join_on_timeout_spark.operators.index_admin import index_stats
     from left_join_on_timeout_spark.operators.lsh_index import (
         lsh_index_build,
     )
@@ -1426,10 +1436,12 @@ def test_index_version_diff(spark, tmp_path):
     deletes physical), nothing as 'added' (appends were already in
     v1), and a diff against a GC'd version fails loud."""
     from left_join_on_timeout_spark.operators.ann_index import (
-        index_version_diff,
         ivf2_index_append,
         ivf2_index_delete,
         ivf2_index_rebuild,
+    )
+    from left_join_on_timeout_spark.operators.index_admin import (
+        index_version_diff,
     )
 
     emb = _corpus(spark, n=40, dim=4)
@@ -1459,10 +1471,12 @@ def test_index_version_diff_shows_recap_drops(spark, tmp_path):
     """When ingest pushed a cell past the build cap, the rebuild drops
     that whole cell — and the version diff names those rows."""
     from left_join_on_timeout_spark.operators.ann_index import (
-        index_stats,
-        index_version_diff,
         ivf2_index_append,
         ivf2_index_rebuild,
+    )
+    from left_join_on_timeout_spark.operators.index_admin import (
+        index_stats,
+        index_version_diff,
     )
 
     emb = _corpus(spark, n=48, dim=4)
@@ -1490,6 +1504,8 @@ def test_exactly_once_sink_empty_retry_clears_epoch(spark, tmp_path):
     from left_join_on_timeout_spark.operators.ann_index import (
         ivf2_index_delete,
         ivf2_index_rebuild,
+    )
+    from left_join_on_timeout_spark.operators.index_admin import (
         refreshing_probe_exactly_once_sink,
     )
 

@@ -371,10 +371,10 @@ def test_maintenance_budgets_derivation_value_pinned():
     that changes the economics is caught. The amortization rule:
     tombstone budget = 2·(R/S)/serves_per_cycle, clamped to the
     broadcast ceiling; stats budget = the 1% score-error tolerance."""
-    from left_join_on_timeout_spark.operators.ann_index import (
+    from left_join_on_timeout_spark.operators.index_admin import (
+        maintenance_budgets,
         SCORE_DRIFT_BUDGET,
         TOMBSTONE_BROADCAST_CEILING,
-        maintenance_budgets,
     )
 
     # default cycle (100 serves): expensive-rebuild tiers clamp at
@@ -407,7 +407,7 @@ def test_maintenance_due_fires_at_documented_batch_sizes():
     (0.1% score error is noise — the economically right call), a
     ~10-batch backlog (1.2%) DOES, and the tombstone arm fires at
     each tier's derived budget instead of one global 2%."""
-    from left_join_on_timeout_spark.operators.ann_index import (
+    from left_join_on_timeout_spark.operators.index_admin import (
         index_maintenance_due,
     )
 

@@ -13,7 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from left_join_on_timeout_spark.operators.dedup import (
-    _with_minhash,
+    with_minhash,
     lsh_probe_pairs,
     shingle_sets,
 )
@@ -41,9 +41,9 @@ def test_saved_probe_equals_fused_probe(spark, tmp_path):
     old = docs.where(F.col("doc_id") % 5 != 0)
     new = docs.where(F.col("doc_id") % 5 == 0)
     sets = shingle_sets(docs, "doc_id", "text")
-    sig_old = _with_minhash(sets.where(F.col("doc_id") % 5 != 0),
+    sig_old = with_minhash(sets.where(F.col("doc_id") % 5 != 0),
                             "doc_id", 12).drop("sh_set")
-    sig_new = _with_minhash(sets.where(F.col("doc_id") % 5 == 0),
+    sig_new = with_minhash(sets.where(F.col("doc_id") % 5 == 0),
                             "doc_id", 12).drop("sh_set")
     fused = {(r.probe_id, r.index_id)
              for r in lsh_probe_pairs(sig_old, sig_new, "doc_id").collect()}
@@ -172,9 +172,7 @@ def test_lsh_as_of_snapshot_and_retention(spark, tmp_path):
     """The LSH tier shares the snapshot contract (round 10): pinning
     v1 after an append+rebuild probes the pre-rebuild bucket set, and
     the rebuild's ``keep_versions`` widens the horizon."""
-    from left_join_on_timeout_spark.operators.ann_index import (
-        index_versions,
-    )
+    from left_join_on_timeout_spark.operators.index_store import index_versions
 
     docs = _docs(spark)
     base = docs.where(F.col("doc_id") < 20)
@@ -209,7 +207,7 @@ def test_lsh_refreshing_probe_survives_two_rebuilds(spark, tmp_path):
     stream keeps emitting correct banded candidates across TWO
     rebuilds under it, and a doc deleted from the standing index
     vanishes from the first post-rebuild micro-batch."""
-    from left_join_on_timeout_spark.operators.ann_index import (
+    from left_join_on_timeout_spark.operators.index_admin import (
         refreshing_probe_sink,
     )
 

@@ -114,9 +114,7 @@ def test_rebuild_recaps_hub_bucket(spark, tmp_path):
     """A bucket ingest pushed past the cap drops WHOLE at rebuild —
     the build-cap semantics, not a truncation — and index_stats
     classifies the tier as srp."""
-    from left_join_on_timeout_spark.operators.ann_index import (
-        index_stats,
-    )
+    from left_join_on_timeout_spark.operators.index_admin import index_stats
 
     v = _vec(50, 16)
     neg = [-c for c in v]  # opposite signs → a different bucket in

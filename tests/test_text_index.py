@@ -174,9 +174,7 @@ def test_bucket_routing_and_stats_tier(spark, tmp_path):
     (the probe's partition filter must route to the directory the
     build wrote), index_stats classifies the tier, and cap pressure —
     undefined here — refuses loudly."""
-    from left_join_on_timeout_spark.operators.ann_index import (
-        index_stats,
-    )
+    from left_join_on_timeout_spark.operators.index_admin import index_stats
     from left_join_on_timeout_spark.operators.text_index import (
         _term_bucket_col,
     )
@@ -283,7 +281,7 @@ def test_stats_drift_telemetry_flips_maintenance(spark, tmp_path):
     fractions in index_stats(stats_drift=True), index_maintenance_due
     flips, the rebuild refreshes the stats, and the drift returns to
     zero. The signal is text-tier-only."""
-    from left_join_on_timeout_spark.operators.ann_index import (
+    from left_join_on_timeout_spark.operators.index_admin import (
         index_maintenance_due,
         index_stats,
     )
@@ -349,7 +347,7 @@ def test_text_refreshing_probe_survives_two_rebuilds(spark, tmp_path):
     across TWO rebuilds under it, appended docs score from the first
     post-append micro-batch, and a deleted doc vanishes from the
     first post-delete batch."""
-    from left_join_on_timeout_spark.operators.ann_index import (
+    from left_join_on_timeout_spark.operators.index_admin import (
         refreshing_probe_sink,
     )
 
@@ -468,7 +466,7 @@ def test_text_maintenance_closed_loop_with_stream(spark, tmp_path):
     flips index_maintenance_due, the loop rebuilds (stats refresh),
     and the NEXT query batch scores with the REFRESHED (n_docs,
     avgdl) — both staleness regimes pinned by hand-computed BM25."""
-    from left_join_on_timeout_spark.operators.ann_index import (
+    from left_join_on_timeout_spark.operators.index_admin import (
         index_maintenance_due,
         index_stats,
         refreshing_probe_sink,
@@ -565,7 +563,7 @@ def test_gram_stats_drift_uses_gram_tier_naming(spark, tmp_path):
     backlog) and dl_drift_frac (the contamination denominator's
     staleness) — not the word tier's BM25 wording; the maintenance
     trigger consumes them, and the rebuild clears them."""
-    from left_join_on_timeout_spark.operators.ann_index import (
+    from left_join_on_timeout_spark.operators.index_admin import (
         index_maintenance_due,
         index_stats,
     )

@@ -10,10 +10,12 @@ sys.path.insert(0, "/root/repo")
 
 from pyspark.sql import functions as F
 
-from left_join_on_timeout_spark.operators.ann_index import _read_meta
+from left_join_on_timeout_spark.operators.index_store import (
+    postings_dir,
+    read_meta,
+)
 from left_join_on_timeout_spark.operators.text_index import (
     _ids_dir,
-    _postings_dir,
     _write_ids,
     text_index_append,
 )
@@ -24,9 +26,9 @@ DOCS = "/root/repo/.scale/sf1000x_dense/documents.parquet"
 
 spark = get_spark(app_name="append_check_sidecar", cpus=32,
                   shuffle_partitions=64)
-meta = _read_meta(spark, WORK)
+meta = read_meta(spark, WORK)
 t0 = time.time()
-_write_ids(spark.read.parquet(_postings_dir(WORK, meta.seq)),
+_write_ids(spark.read.parquet(postings_dir(WORK, meta.seq)),
            WORK, meta.seq)
 print(f"RESULT sidecar_backfill {time.time()-t0:.1f}s "
       f"(a rebuild pays this as part of its publish)", flush=True)

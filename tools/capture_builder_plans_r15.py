@@ -113,15 +113,15 @@ def main() -> None:
 
     # --- IVF2 build: (sid, sub) assignment -> clustering -> cap window
     from left_join_on_timeout_spark.operators.similarity import (
-        _assign_to_subs,
-        _train_two_level,
+        assign_to_subs,
+        train_two_level,
     )
 
     persisted: list = []
     try:
-        _v, _sa, sup, sub_anchors = _train_two_level(
+        _v, _sa, sup, sub_anchors = train_two_level(
             emb, "vec_id", "embedding", 8, 8, 1, None, "42", persisted)
-        assigned = _assign_to_subs(sup, sub_anchors, "vec_id")
+        assigned = assign_to_subs(sup, sub_anchors, "vec_id")
         a2 = (assigned.repartition(F.col("sid")) if before
               else assigned.repartition(F.col("sid"), F.col("sub")))
         wi = Window.partitionBy("sid", "sub")

@@ -44,7 +44,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F
 
 from left_join_on_timeout_spark.functions.text import word_ngrams
-from left_join_on_timeout_spark.operators.ann_index import (
+from left_join_on_timeout_spark.operators.index_admin import (
     index_maintenance_due,
     index_stats,
 )
