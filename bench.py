@@ -232,8 +232,8 @@ def main() -> None:
     for n in names:
         try:
             run_query(spark, n, "/root/testdata/sf0.001")
-        except Exception:
-            pass
+        except Exception as exc:  # warm-up only: say which, and go on
+            print(f"bench: warm-up {n} failed: {exc!r}", file=sys.stderr)
     # three measured passes, keep the per-query minimum: steady-state
     # throughput, robust to transient host contention / GC pauses (the
     # PLANS.md variance study measured a 16-21% same-code noise band on

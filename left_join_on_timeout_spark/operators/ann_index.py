@@ -395,10 +395,8 @@ def ivf2_self_search_saved(emb: DataFrame, path: str,
     vectors; nothing from the training session's lineage survives into
     the search plan — the separation a deployment needs to serve from
     yesterday's index."""
-    spark = emb.sparkSession
-    ivf2_index_build(emb, path, id_col, vec_col, n_super, k2, iters,
-                     cell_cap, train_frac, train_seed)
-    index = ivf2_index_load(spark, path)
+    index = ivf2_index_build(emb, path, id_col, vec_col, n_super, k2,
+                             iters, cell_cap, train_frac, train_seed)
     sup_anchors = index["sup_anchors"]
     sub_anchors = index["sub_anchors"]
     postings = index["postings"]
@@ -703,10 +701,8 @@ def pq_self_search_saved(emb: DataFrame, path: str,
     LUT lookups, and the bidirectional per-vector argmin is taken over
     both directions. Raw vectors appear NOWHERE after encoding — the
     pairing join moves (cell, m small ints) per row."""
-    spark = emb.sparkSession
-    pq_index_build(emb, path, id_col, vec_col, dim, m, k, n_cells,
-                   cell_cap)
-    index = pq_index_load(spark, path)
+    index = pq_index_build(emb, path, id_col, vec_col, dim, m, k, n_cells,
+                           cell_cap)
     kk = index["meta"].k
     mm = index["meta"].m
     lut_arr = index["lut"].agg(F.array_sort(

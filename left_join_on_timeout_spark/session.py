@@ -15,6 +15,17 @@ plan shape survives a 1000-executor / 100 TB deployment:
 * Codegen cache of 2000 compiled classes (Spark's default is 100): one
   index build alone generates about 100, so a session that runs many
   queries evicted and recompiled the same classes on every repeat.
+* Streaming checkpoints are written through Hadoop's ``FileSystem`` API
+  (``FileSystemBasedCheckpointFileManager``), not Spark's default
+  ``FileContext`` manager. ``FileContext``'s rename reads the link status
+  of source, destination and parent, and on a local filesystem without
+  ``libhadoop`` each read forks a ``readlink`` process: about 100 forks per
+  micro-batch, 37–42 ms per atomic 1 KB write against 12.5–13 ms through
+  ``FileSystem`` (4 vCPUs). On local disk both managers check, then
+  rename (Hadoop documents ``AbstractFileSystem.renameInternal``'s
+  overwrite handling as non-atomic), and the files, ``.crc`` files and
+  checkpoint checksums are the same, so a checkpoint written by either
+  restarts under the other.
 """
 
 from __future__ import annotations
@@ -24,6 +35,8 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+CHECKPOINT_FILE_MANAGER = ("org.apache.spark.sql.execution.streaming."
+                           "checkpointing.FileSystemBasedCheckpointFileManager")
 
 
 def get_spark(app_name: str = "left_join_on_timeout_spark",
@@ -52,5 +65,7 @@ def get_spark(app_name: str = "left_join_on_timeout_spark",
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.codegen.cache.maxEntries", "2000")
+        .config("spark.sql.streaming.checkpointFileManagerClass",
+                CHECKPOINT_FILE_MANAGER)
     )
     return builder.getOrCreate()

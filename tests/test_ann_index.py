@@ -9,6 +9,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from left_join_on_timeout_spark.operators import index_store
 from left_join_on_timeout_spark.operators.ann_index import (
     ivf2_index_build,
     ivf2_index_load,
@@ -31,10 +32,19 @@ def _corpus(spark, n=24, dim=4):
         rows, "vec_id LONG, embedding ARRAY<DOUBLE>")
 
 
-def test_self_search_saved_equals_fused(spark, tmp_path):
+def _forbid_manifest_reads(monkeypatch):
+    """A saved self-search serves the handle its build returns: reading
+    the manifest back (pointer, meta collect) is a wasted pass."""
+    def read_meta(*args, **kwargs):
+        raise AssertionError("self-search re-read the manifest it wrote")
+    monkeypatch.setattr(index_store, "read_meta", read_meta)
+
+
+def test_self_search_saved_equals_fused(spark, tmp_path, monkeypatch):
     emb = _corpus(spark)
     fused = {(r.vec_id, r.neighbor_id, r.cos_sim)
              for r in ivf2_top_neighbor(emb, n_super=2, k2=2).collect()}
+    _forbid_manifest_reads(monkeypatch)
     saved = {(r.vec_id, r.neighbor_id, r.cos_sim)
              for r in ivf2_self_search_saved(
                  emb, str(tmp_path / "idx"), n_super=2, k2=2).collect()}
@@ -92,7 +102,8 @@ def test_sample_trained_fallback_keeps_every_vector(spark):
         assert assigned.select("vec_id").distinct().count() == 30
 
 
-def test_pq_saved_equals_fused_and_postings_are_codes_only(spark, tmp_path):
+def test_pq_saved_equals_fused_and_postings_are_codes_only(spark, tmp_path,
+                                                           monkeypatch):
     """The IVF-PQ lifecycle: self-search over the saved index equals
     the fused pq_sdc_top_neighbor (rerank=0) exactly, and the persisted
     postings carry CODES ONLY — no vector column may reach the index
@@ -110,9 +121,11 @@ def test_pq_saved_equals_fused_and_postings_are_codes_only(spark, tmp_path):
              for r in pq_sdc_top_neighbor(
                  emb, dim=8, m=2, k=4, n_cells=4).collect()}
     path = str(tmp_path / "pqidx")
-    saved = {(r.vec_id, r.neighbor_id, r.sdc)
-             for r in pq_self_search_saved(
-                 emb, path, dim=8, m=2, k=4, n_cells=4).collect()}
+    with monkeypatch.context() as m:
+        _forbid_manifest_reads(m)
+        saved = {(r.vec_id, r.neighbor_id, r.sdc)
+                 for r in pq_self_search_saved(
+                     emb, path, dim=8, m=2, k=4, n_cells=4).collect()}
     assert saved == fused
     index = pq_index_load(spark, path)
     cols = set(index["postings"].columns)
