@@ -12,10 +12,13 @@ surface without displacing round-4's curated correctness rotation.
 
 from __future__ import annotations
 
+import os
+
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from left_join_on_timeout_spark import fsio
 from left_join_on_timeout_spark.functions.text import fingerprint, words
 from left_join_on_timeout_spark.operators.ranking import global_rank
 from left_join_on_timeout_spark.operators.sampling import sample_gate
@@ -61,15 +64,12 @@ def _tracked_persist(df: DataFrame) -> DataFrame:
     return df
 
 
-def _tracked_index_path(root: str, name: str) -> str:
+def tracked_index_path(spark: SparkSession, root: str, name: str) -> str:
     """A fresh, never-before-used index path for this invocation,
-    registered for removal at the NEXT release."""
-    import os
-    import shutil
-
+    registered for removal (through ``fsio``, so a ``file:`` or
+    ``hdfs:`` root is removed too) at the NEXT release."""
     path = os.path.join(root, f"{name}_i{next(_INVOCATION_SEQ)}")
-    _TRACKED_CLEANUPS.append(
-        lambda: shutil.rmtree(path, ignore_errors=True))
+    _TRACKED_CLEANUPS.append(lambda: fsio.delete(spark, path))
     return path
 
 
@@ -1497,7 +1497,6 @@ def q_curation_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         text_index_build,
         text_index_gram_probe,
     )
-    import os
 
     # release the PREVIOUS curation-family invocation's decision-set
     # persists (VERDICT r14 wrong #3 — bounded cache churn in a
@@ -1541,8 +1540,8 @@ def q_curation_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     base = os.path.basename(os.path.normpath(sf_dir))
     root = default_index_root()
-    lpath = _tracked_index_path(root, "caplsh_" + base)
-    gpath = _tracked_index_path(root, "capgix_" + base)
+    lpath = tracked_index_path(spark, root, "caplsh_" + base)
+    gpath = tracked_index_path(spark, root, "capgix_" + base)
     lidx, gidx = overlap([
         lambda: lsh_index_build(standing, lpath),
         lambda: text_index_build(standing, gpath, token_mode="ngram",
@@ -1946,8 +1945,6 @@ def q_curation_pipeline_semantic(spark: SparkSession,
     The IVF2 retrieval tier stays the top-k serving surface
     (`decontaminate_all_tiers_saved`); candidate GENERATION for dedup
     is the banded tier's job."""
-    import os
-
     from left_join_on_timeout_spark.functions.vectors import (
         as_double,
         dot,
@@ -1985,8 +1982,8 @@ def q_curation_pipeline_semantic(spark: SparkSession,
     # build inside its stage
     base = os.path.basename(os.path.normpath(sf_dir))
     root = default_index_root()
-    lpath = _tracked_index_path(root, "semlsh_" + base)
-    spath = _tracked_index_path(root, "semsrp_" + base)
+    lpath = tracked_index_path(spark, root, "semlsh_" + base)
+    spath = tracked_index_path(spark, root, "semsrp_" + base)
     lidx, sidx = overlap([
         lambda: lsh_index_build(standing, lpath),
         lambda: srp_index_build(emb_standing, spath, dim=64),

@@ -1175,8 +1175,8 @@ def q_stream_curation_ingest(spark: SparkSession,
     from left_join_on_timeout_spark.queries_pipeline import (
         SEM_DUP_THRESHOLD,
         _curation_fixtures,
-        _tracked_index_path,
         release_tracked_persists,
+        tracked_index_path,
     )
 
     # release the previous curation-family invocation's persists
@@ -1188,9 +1188,9 @@ def q_stream_curation_ingest(spark: SparkSession,
     emb_standing = fx["emb_standing"]
     base = os.path.basename(os.path.normpath(sf_dir))
     root = default_index_root()
-    lpath = _tracked_index_path(root, "strlsh_" + base)
-    spath = _tracked_index_path(root, "strsrp_" + base)
-    gpath = _tracked_index_path(root, "strgix_" + base)
+    lpath = tracked_index_path(spark, root, "strlsh_" + base)
+    spath = tracked_index_path(spark, root, "strsrp_" + base)
+    gpath = tracked_index_path(spark, root, "strgix_" + base)
     # three independent standing-index builds (disjoint roots) —
     # overlap them from driver threads (guide §2.6)
     from left_join_on_timeout_spark.concurrency import overlap

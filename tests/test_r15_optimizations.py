@@ -5,8 +5,7 @@ the load-after-write manifest re-read, VERDICT r14 next #6), the
 scale-adaptive write clustering helper, the linear PQ argmin
 (pq_best ≡ array_sort(...)[1]), the bench line's self-reported
 parallelism (VERDICT r14 next #2), overlap()'s multi-error notes
-(ADVICE r14), the tracked-persist release (VERDICT r14 wrong #3), and
-the empty-corpus build guard (ADVICE r14)."""
+(ADVICE r14), and the empty-corpus build guard (ADVICE r14)."""
 
 from __future__ import annotations
 
@@ -259,28 +258,6 @@ def test_overlap_notes_other_failures():
         overlap([boom_a, boom_b, lambda: 1])
     notes = getattr(ei.value, "__notes__", [])
     assert any("second failure" in n for n in notes), notes
-
-
-# ---------------------------------------------------------------------------
-# tracked persists: released on demand, registry drains
-# ---------------------------------------------------------------------------
-
-def test_tracked_persists_release(spark):
-    from pyspark import StorageLevel
-
-    from left_join_on_timeout_spark.queries_pipeline import (
-        _TRACKED_PERSISTS,
-        _tracked_persist,
-        release_tracked_persists,
-    )
-
-    release_tracked_persists()
-    df = _tracked_persist(spark.range(10).toDF("id"))
-    assert df.storageLevel != StorageLevel.NONE
-    assert len(_TRACKED_PERSISTS) == 1
-    release_tracked_persists()
-    assert len(_TRACKED_PERSISTS) == 0
-    assert df.storageLevel == StorageLevel.NONE
 
 
 # ---------------------------------------------------------------------------

@@ -1,0 +1,45 @@
+"""The curation family's per-invocation bookkeeping: decision-set
+persists and index trees a query registers are released at the next
+query's entry, whatever filesystem the index root is on."""
+
+from __future__ import annotations
+
+import os
+
+# the query registry first: it imports queries_pipeline in its order
+import left_join_on_timeout_spark.queries  # noqa: F401
+
+
+def test_tracked_persists_release(spark):
+    from pyspark import StorageLevel
+
+    from left_join_on_timeout_spark.queries_pipeline import (
+        _TRACKED_PERSISTS,
+        _tracked_persist,
+        release_tracked_persists,
+    )
+
+    release_tracked_persists()
+    df = _tracked_persist(spark.range(10).toDF("id"))
+    assert df.storageLevel != StorageLevel.NONE
+    assert len(_TRACKED_PERSISTS) == 1
+    release_tracked_persists()
+    assert len(_TRACKED_PERSISTS) == 0
+    assert df.storageLevel == StorageLevel.NONE
+
+
+def test_tracked_index_tree_under_a_file_uri_root_is_removed(spark, tmp_path):
+    from left_join_on_timeout_spark.queries_pipeline import (
+        release_tracked_persists,
+        tracked_index_path,
+    )
+
+    release_tracked_persists()
+    path = tracked_index_path(spark, f"file://{tmp_path}", "tix")
+    assert path.startswith("file://")
+    spark.range(5).write.parquet(f"{path}/postings_v1")
+    local = path[len("file://"):]
+    assert os.path.isdir(os.path.join(local, "postings_v1"))
+    release_tracked_persists()
+    assert not os.path.exists(local)
+    assert os.path.isdir(tmp_path)
