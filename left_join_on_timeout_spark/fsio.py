@@ -39,6 +39,7 @@ import atexit
 import os
 import shutil
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import SparkSession
 
 _exit_removed: set[str] = set()
@@ -106,8 +107,9 @@ def delete(spark: SparkSession, path: str) -> None:
 
 def read_text(spark: SparkSession, path: str) -> str | None:
     """Contents of a small text object, or None if missing/unreadable
-    — the manifest-pointer read. Never raises: an unreadable pointer
-    means 'fall back to listing', not an error (the pointer is an
+    — the manifest-pointer read. A filesystem error (``OSError``
+    locally, a JVM exception on Hadoop) is not raised: an unreadable
+    pointer means 'fall back to listing' (the pointer is an
     optimization by contract)."""
     if _is_local(path):
         try:
@@ -127,7 +129,7 @@ def read_text(spark: SparkSession, path: str) -> str | None:
             return line if line is not None else ""
         finally:
             stream.close()
-    except Exception:
+    except Py4JJavaError:
         return None
 
 

@@ -9,6 +9,7 @@ exactly, without rounding slop.
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -48,8 +49,6 @@ def srp_planes(dim: int, n_bits: int, seed: int) -> list[list[float]]:
     buckets bit-for-bit (weights rendered as identical double literals in
     both engines). Rounded to 6 dp to keep SQL literals short; rounding
     does not affect the LSH guarantee."""
-    import numpy as np
-
     rng = np.random.RandomState(seed)
     return [[round(float(w), 6) for w in row]
             for row in rng.standard_normal((n_bits, dim))]

@@ -62,7 +62,11 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from left_join_on_timeout_spark.functions.vectors import as_double, l2_norm
+from left_join_on_timeout_spark.functions.vectors import (
+    as_double,
+    dot,
+    l2_norm,
+)
 from left_join_on_timeout_spark.operators import index_store as store
 from left_join_on_timeout_spark.operators.similarity import (
     DEFAULT_CELL_CAP,
@@ -72,12 +76,16 @@ from left_join_on_timeout_spark.operators.similarity import (
     DEFAULT_SUB_CELLS,
     DEFAULT_SUPER_CELLS,
     assign_to_anchors,
+    assign_to_anchors_multi,
     assign_to_subs,
     bidir_top1,
+    bidir_topk,
+    check_seed_id_dtype,
     pq_best,
-    score_pairs,
-    train_two_level,
     probe_assign_multi,
+    score_pairs,
+    train_pq_codebook,
+    train_two_level,
 )
 from left_join_on_timeout_spark.partitioning import fan_out
 
@@ -358,7 +366,6 @@ def ivf2_index_probe_hits(queries: DataFrame, index: dict,
                       F.col("v").alias("va"), F.col("nrm").alias("na"))
     p = postings.select(F.col("id").alias("old_id"), "sid", "sub",
                         F.col("v").alias("vb"), F.col("nrm").alias("nb"))
-    from left_join_on_timeout_spark.functions.vectors import dot
 
     return (q.join(p, ["sid", "sub"])
             .where(F.col("new_id") != F.col("old_id"))
@@ -413,10 +420,6 @@ def ivf2_self_search_saved(emb: DataFrame, path: str,
              .where(F.col("id_a") < F.col("id_b"))
              .select("id_a", "id_b", "va", "na", "vb", "nb"))
     if k > 1:
-        from left_join_on_timeout_spark.operators.similarity import (
-            bidir_topk,
-        )
-
         return bidir_topk(score_pairs(pairs), k)
     return bidir_top1(score_pairs(pairs))
 
@@ -478,12 +481,6 @@ def pq_index_build(emb: DataFrame, path: str,
     coded postings so ``pq_index_search(where=...)`` pushes the
     predicate into the scan (PushedFilters) — the tier whose index
     actually fits a serving node gets the same serving knobs."""
-    from pyspark.sql import Window
-
-    from left_join_on_timeout_spark.operators.similarity import (
-        check_seed_id_dtype,
-    )
-
     # Both coarse modes seed the CODEBOOK by the id<k rule (the flat
     # mode also seeds its anchors that way); a string-keyed corpus
     # would mis-seed through an implicit cast instead of failing —
@@ -527,10 +524,6 @@ def pq_index_build(emb: DataFrame, path: str,
             # per-block Lloyd over the (densified) seeds — the
             # production codebook (VERDICT r7 item 3); code ids keep
             # their seed ranks, so the LUT arithmetic is unchanged
-            from left_join_on_timeout_spark.operators.similarity import (
-                train_pq_codebook,
-            )
-
             cb = train_pq_codebook(v, id_col, dim, m, k, train_iters,
                                     train_frac, train_seed, seeds=cb)
         cb.write.mode("overwrite").parquet(os.path.join(path, "codebook"))
@@ -541,7 +534,6 @@ def pq_index_build(emb: DataFrame, path: str,
         for b in range(m):
             sa = F.slice(F.col("cva"), b * sub + 1, sub)
             sb = F.slice(F.col("cvb"), b * sub + 1, sub)
-            from left_join_on_timeout_spark.functions.vectors import dot
             d2 = dot(sa, sa) - F.lit(2.0) * dot(sa, sb) + dot(sb, sb)
             lut_structs.append(F.struct(
                 F.lit(b).alias("b"), F.col("ca"), F.col("cbc"),
@@ -662,10 +654,6 @@ def _pq_encode_and_assign(queries: DataFrame, index: dict,
                                     + F.col("sub"))
                         .drop("sub"))
     elif nprobe > 1:
-        from left_join_on_timeout_spark.operators.similarity import (
-            assign_to_anchors_multi,
-        )
-
         assigned = (assign_to_anchors_multi(vq, index["anchors"],
                                              id_col, nprobe)
                     .drop("pri")
@@ -783,8 +771,6 @@ def pq_index_search(queries: DataFrame, index: dict,
     probes the top-``nprobe`` coarse cells per query (the serving
     recall knob — postings stay the primary assignment, multi-probe is
     query-side), completing knob parity with ``ivf2_index_search``."""
-    from pyspark.sql import Window
-
     store.check_id_col(index["meta"], id_col, "search")
     meta = index["meta"]
     kk, mm = meta.k, meta.m
@@ -846,7 +832,6 @@ def pq_index_search(queries: DataFrame, index: dict,
     ws = Window.partitionBy("vec_id").orderBy(F.asc("sdc"), F.asc("nbr"))
     short = (scored.withColumn("rn", F.row_number().over(ws))
              .where(F.col("rn") <= rerank).select("vec_id", "nbr"))
-    from left_join_on_timeout_spark.functions.vectors import dot
 
     vq = fan_out(queries).select(F.col(id_col).alias("vec_id"),
                                  as_double(vec_col).alias("va"))

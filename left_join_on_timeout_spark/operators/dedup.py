@@ -25,6 +25,7 @@ Design for 100 TB:
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -217,7 +218,6 @@ def lsh_candidate_pairs(sig: DataFrame, id_col: str,
     # would otherwise plan the whole upstream signature subtree — k
     # row-local minhashes over every shingle — twice (ReusedExchange
     # never fires across self-join sides; measured r4, PLANS.md)
-    from pyspark import StorageLevel
     banded = (banded.withColumn("bsz", F.count("*").over(w))
               .where(F.col("bsz") <= bucket_cap)
               .drop("bsz")).persist(StorageLevel.MEMORY_AND_DISK)
@@ -243,8 +243,6 @@ def lsh_probe_pairs(index_sig: DataFrame, probe_sig: DataFrame, id_col: str,
     a pre-bucketed (band, digest) relation a real deployment keeps
     materialized between ingests. Returns distinct
     ``(probe_id, index_id)``."""
-    from pyspark import StorageLevel
-
     idx = band_rows(index_sig, id_col, k, bands)
     w = Window.partitionBy("band", "h")
     idx = (idx.withColumn("bsz", F.count("*").over(w))
@@ -281,8 +279,6 @@ def lsh_verified_near_dups(df: DataFrame, id_col: str, text_col: str,
     ``dense=False`` (recall-first, for corpora with measured-sparse dup
     density — the fourth-decade study in PLANS.md). Pass an explicit
     value to pin the banding regardless of threshold."""
-    from pyspark import StorageLevel
-
     if bands is None:
         bands = lsh_band_knobs(threshold, k, dense=dense)["bands"]
 
@@ -363,7 +359,6 @@ def simhash_hamming_pairs(sig: DataFrame, id_col: str,
     # persisted index (id + 16-char signature + slice key): the slice
     # self-join would otherwise plan the simhash16 subtree (token
     # explode + 16-bit groupBy) twice
-    from pyspark import StorageLevel
     s = (s.withColumn("bsz", F.count("*").over(w))
          .where(F.col("bsz") <= bucket_cap).drop("bsz")) \
         .persist(StorageLevel.MEMORY_AND_DISK)
@@ -396,8 +391,6 @@ def jaccard_pairs(df: DataFrame, id_col: str, text_col: str,
     shared-shingle self-join AND both size lookups — four evaluations
     of the shingle subtree otherwise (the persisted-index pattern,
     PLANS.md)."""
-    from pyspark import StorageLevel
-
     sets = shingle_sets(df, id_col, text_col, shingle_n) \
         .persist(StorageLevel.MEMORY_AND_DISK)
     sh = sets.select(F.col(id_col), F.explode("sh_set").alias("shingle"))
@@ -446,7 +439,6 @@ def edit_distance_near_dups(df: DataFrame, id_col: str, text_col: str,
     # persisted index (id + lang + 80-char key + bucket): the probe
     # self-join below would otherwise plan the normalize/regexp/prefix
     # subtree over the full text twice
-    from pyspark import StorageLevel
     base = (base.withColumn("bsz", F.count("*").over(w))
             .where(F.col("bsz") <= bucket_cap).drop("bsz")) \
         .persist(StorageLevel.MEMORY_AND_DISK)
@@ -496,8 +488,6 @@ def prefix_filter_jaccard_pairs(df: DataFrame, id_col: str, text_col: str,
     The (id, token-with-df) relation is persisted — it feeds the
     prefix build, both verification sides, and the size lookups (the
     persisted-index pattern, PLANS.md)."""
-    from pyspark import StorageLevel
-
     sets = shingle_sets(df, id_col, text_col, shingle_n)
     sh = (sets.select(F.col(id_col), F.explode("sh_set").alias("s"))
           .select(F.col(id_col), F.md5("s").alias("h"))
@@ -577,8 +567,6 @@ def prefix_filter_containment_pairs(df: DataFrame, id_col: str,
     Σ_probe-token df — the price of EXACT asymmetric results (the
     sibling of :func:`prefix_filter_jaccard_pairs`'s analysis in
     PLANS.md)."""
-    from pyspark import StorageLevel
-
     sets = shingle_sets(df, id_col, text_col, shingle_n) \
         .persist(StorageLevel.MEMORY_AND_DISK)
     sh = (sets.select(F.col(id_col), F.explode("sh_set").alias("s"))

@@ -32,9 +32,9 @@ from __future__ import annotations
 
 import hashlib
 from collections.abc import Iterator
+from io import BytesIO
 
 import pandas as pd
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -203,9 +203,7 @@ def decode_image(content: bytes):
     if content is not None and content[:2] == b"P6":
         return decode_ppm(content)
     try:
-        from io import BytesIO
-
-        from PIL import Image  # noqa: F401
+        from PIL import Image  # optional: Pillow is absent in many hosts
     except ImportError as e:
         raise NotImplementedError(
             "image decode needs Pillow for non-PPM formats (not installed "

@@ -34,6 +34,7 @@ tied rows would then depend on placement.
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -45,8 +46,6 @@ def global_rank(df: DataFrame, order: list[Column | str],
                 num_partitions: int | None = None) -> DataFrame:
     """All input columns plus ``rank_col`` = the row's 1-based position
     in the global ``order`` (which must be a total order)."""
-    from pyspark import StorageLevel
-
     n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
     parted = (df.repartitionByRange(n, *order)
                 .sortWithinPartitions(*order)

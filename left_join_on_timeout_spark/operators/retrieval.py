@@ -34,6 +34,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from left_join_on_timeout_spark.functions.text import words
+
 DEFAULT_BM25_K1 = 1.2
 DEFAULT_BM25_B = 0.75
 DEFAULT_RRF_K = 60
@@ -61,8 +63,6 @@ def bm25_scores(docs: DataFrame, query_terms: list[str],
     one-row broadcast. Document length comes from the same normalized
     tokenization as the term explode, computed with ``F.size`` on the
     split array — no second pass over the text."""
-    from left_join_on_timeout_spark.functions.text import words
-
     terms = sorted({str(t).strip().lower() for t in query_terms})
     split = words(text_col)
     dl = docs.select(F.col(id_col),

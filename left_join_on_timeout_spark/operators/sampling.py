@@ -25,7 +25,7 @@ HASH_WIDTH = 4
 _SPACE = 16 ** HASH_WIDTH
 
 
-def _threshold(rate: float) -> str:
+def gate_threshold(rate: float) -> str:
     if not 0.0 <= rate <= 1.0:
         raise ValueError(f"rate must be in [0, 1], got {rate}")
     return format(min(int(rate * _SPACE), _SPACE - 1), f"0{HASH_WIDTH}x")
@@ -44,7 +44,7 @@ def sample_gate(id_col: str | Column, rate: float,
     """The boolean keep-gate as a composable Column (True for the
     ~``rate`` fraction) — for queries mixing per-tier rates in one
     predicate."""
-    return sample_key(id_col, seed) < F.lit(_threshold(rate))
+    return sample_key(id_col, seed) < F.lit(gate_threshold(rate))
 
 
 def hash_sample(df: DataFrame, id_col: str, rate: float,
@@ -53,7 +53,7 @@ def hash_sample(df: DataFrame, id_col: str, rate: float,
     row by the hash gate (rate 1.0 keeps everything exactly)."""
     if rate >= 1.0:
         return df
-    return df.where(sample_key(id_col, seed) < _threshold(rate))
+    return df.where(sample_key(id_col, seed) < gate_threshold(rate))
 
 
 def stratified_sample(
@@ -69,10 +69,10 @@ def stratified_sample(
     ones). ``rates`` maps stratum value -> keep rate; anything absent
     uses ``default_rate``. The threshold is a CASE expression, so the
     whole gate stays one codegen predicate with no join."""
-    thr = F.lit(_threshold(default_rate))
+    thr = F.lit(gate_threshold(default_rate))
     for val, rate in sorted(rates.items()):
         thr = F.when(F.col(strata_col) == val,
-                     F.lit(_threshold(rate))).otherwise(thr)
+                     F.lit(gate_threshold(rate))).otherwise(thr)
     keep_all = F.lit(default_rate >= 1.0)
     for val, rate in sorted(rates.items()):
         if rate >= 1.0:

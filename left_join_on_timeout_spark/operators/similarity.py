@@ -20,6 +20,9 @@ All vector math is JVM-side higher-order functions in double
 
 from __future__ import annotations
 
+import math
+
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -31,7 +34,11 @@ from left_join_on_timeout_spark.functions.vectors import (
     srp_bucket,
     srp_planes,
 )
-from left_join_on_timeout_spark.partitioning import fan_out
+from left_join_on_timeout_spark.operators.sampling import sample_gate
+from left_join_on_timeout_spark.partitioning import (
+    fan_out,
+    session_shuffle_partitions,
+)
 
 DEFAULT_BANDS = 4
 DEFAULT_BITS = 8
@@ -105,8 +112,6 @@ def srp_candidate_pairs(emb: DataFrame,
     ReusedExchange fires across self-join sides (measured, r4, same as
     the IVF index). This is the SRP *index* materialization every LSH
     deployment does once per corpus pass."""
-    from pyspark import StorageLevel
-
     banded = _banded(emb, id_col, vec_col, dim, bands, n_bits, seed,
                      bucket_cap).persist(StorageLevel.MEMORY_AND_DISK)
     a = banded.select(F.col(id_col).alias("id_a"), "band", "bucket")
@@ -324,8 +329,6 @@ def auto_knobs(n_rows: int) -> dict:
     deliberately NOT derived here: (bands, rows-per-band) encode the
     target Jaccard threshold, not a corpus-size tradeoff, and bucket
     growth there is bounded by the per-bucket cap instead."""
-    import math
-
     scale = max(n_rows, 1) / ANN_REF_ROWS
     n_cells = max(DEFAULT_IVF_CELLS, round(DEFAULT_IVF_CELLS * scale))
     return {
@@ -536,8 +539,6 @@ def _lloyd(v: DataFrame, anchors: DataFrame, id_col: str,
     materializing caller can unpersist them after its actions run
     (ADVICE r7 — repeated builds must not accumulate cached
     relations)."""
-    from pyspark import StorageLevel
-
     for _ in range(iters):
         assigned = assign_to_anchors(v, anchors, id_col)
         dims = (assigned.select("cell", F.posexplode("v").alias("pos", "x"))
@@ -582,8 +583,6 @@ def kmeans_refined_cells(emb: DataFrame,
     cluster memory+disk, the standing cost of any iterative pass), and
     each iteration's centroid table (n_cells rows) is persisted to
     truncate lineage, so every pass over the data runs exactly once."""
-    from pyspark import StorageLevel
-
     check_seed_id_dtype(emb, id_col, "kmeans_refined_cells")
     v = fan_out(emb).select(F.col(id_col), as_double(vec_col).alias("v"))
     v = v.select(id_col, "v", l2_norm(F.col("v")).alias("nrm")) \
@@ -613,8 +612,6 @@ def two_level_knobs(n_cells: int) -> dict[str, int]:
     product-split IMI prototype was measured and rejected at 0.42
     assignment agreement, PLANS.md §"fourth decade"). ``k2`` is the
     sub-cell budget per super-cell."""
-    import math
-
     n_super = max(DEFAULT_SUPER_CELLS, round(math.sqrt(n_cells)))
     k2 = max(DEFAULT_SUB_CELLS, -(-n_cells // n_super))
     return {"n_super": n_super, "k2": k2}
@@ -689,8 +686,6 @@ def _lloyd_grouped(sup: DataFrame, sub_anchors: DataFrame, id_col: str,
     (sid, sub). DECIMAL(25,6) means keep both engines bit-identical.
     ``persisted`` collects the per-iteration anchor persists for a
     materializing caller to release (ADVICE r7)."""
-    from pyspark import StorageLevel
-
     for _ in range(iters):
         assigned = assign_to_subs(sup, sub_anchors, id_col)
         dims = (assigned
@@ -744,17 +739,12 @@ def train_two_level(
     one session must not accumulate cached relations (ADVICE r7).
     Fused-searcher callers leave it None: their results are lazy and
     the persists ARE the standing index cost."""
-    from pyspark import StorageLevel
-
     v = fan_out(emb).select(F.col(id_col), as_double(vec_col).alias("v"))
     v = v.select(id_col, "v", l2_norm(F.col("v")).alias("nrm")) \
         .persist(StorageLevel.MEMORY_AND_DISK)
     if persisted is not None:
         persisted.append(v)
     if train_frac is not None and train_frac < 1.0:
-        from left_join_on_timeout_spark.operators.sampling import (
-            sample_gate,
-        )
         gate = sample_gate(id_col, train_frac, train_seed)
         vt = v.where(gate).persist(StorageLevel.MEMORY_AND_DISK)
         if persisted is not None:
@@ -791,10 +781,6 @@ def train_two_level(
     # ranks only the ≤ k2·n_salt survivors. Any cell-wide top-k2 row
     # is also its salt group's top-k2, so the seed set is
     # bit-identical to the single-window form (round 15).
-    from left_join_on_timeout_spark.partitioning import (
-        session_shuffle_partitions,
-    )
-
     n_salt = max(1, session_shuffle_partitions(sup))
     pre = supt.withColumn(
         "_salt", F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_salt)))
@@ -1026,8 +1012,6 @@ def _ivf2_capped(emb: DataFrame, id_col: str, vec_col: str,
     """The shared front half of the two-level searchers: knob
     derivation, trained (multi-probe-aware) assignment, and the
     two-sided cell cap, persisted as the standing index relation."""
-    from pyspark import StorageLevel
-
     if n_super is None or k2 is None:
         budget = auto_knobs(corpus_rows(emb))["n_cells"]
         if n_super is None and k2 is None:
@@ -1100,8 +1084,6 @@ def ivf_top_neighbor(emb: DataFrame,
     cannot be written by default; pass an explicit value to pin it. The
     derivation runs an eager ``count()`` at construction (memoized per
     source, see :func:`corpus_rows`)."""
-    from pyspark import StorageLevel
-
     if n_cells is None:
         knobs = auto_knobs(corpus_rows(emb))
         if knobs["assign"] == "tree":
@@ -1179,8 +1161,6 @@ def ivf_top_neighbors(emb: DataFrame, k: int = 3,
     crossover measurements show is up to 42.8× slower at the fourth
     decade. Explicit ``n_cells`` pins the flat arm (the oracle-paired
     query does)."""
-    from pyspark import StorageLevel
-
     if n_cells is None:
         knobs = auto_knobs(corpus_rows(emb))
         if knobs["assign"] == "tree":
@@ -1254,8 +1234,6 @@ def srp_cross_candidates(x: DataFrame, y: DataFrame,
     ``localCheckpoint`` and the banded cache RELEASED before
     returning, instead of pinning a corpus-sized relation for the
     session (ADVICE r10)."""
-    from pyspark import StorageLevel
-
     both = (x.select(F.col(id_col), F.col(vec_col),
                      F.lit("x").alias("side"))
             .unionByName(y.select(F.col(id_col), F.col(vec_col),
@@ -1340,8 +1318,6 @@ def margin_mine_pairs(x: DataFrame, y: DataFrame,
     construction, each side matched at most once — is materialized
     eagerly via ``localCheckpoint`` so the cache can be RELEASED
     before returning instead of pinning for the session."""
-    from pyspark import StorageLevel
-
     xv = fan_out(x).select(F.col(id_col).alias("x_id"),
                            as_double(vec_col).alias("xv"))
     xv = xv.select("x_id", "xv", l2_norm(F.col("xv")).alias("xn"))
@@ -1506,16 +1482,11 @@ def train_pq_codebook(v: DataFrame, id_col: str, dim: int, m: int,
     lazily (no intermediate persists — with the production iters of
     1-2 the worst case is one recompute of the previous pass inside
     the single consuming action)."""
-    from pyspark import StorageLevel
-
     sub = dim // m
     vu = v.select(F.col(id_col),
                   F.transform(F.col("v"), lambda x: x / F.col("nrm"))
                   .alias("vu"))
     if train_frac is not None and train_frac < 1.0:
-        from left_join_on_timeout_spark.operators.sampling import (
-            sample_gate,
-        )
         vt = vu.where(sample_gate(id_col, train_frac, train_seed))
     else:
         vt = vu
@@ -1665,8 +1636,6 @@ def pq_sdc_top_neighbor(emb: DataFrame,
     per-block-Lloyd TRAINED one (:func:`train_pq_codebook`, optionally
     gate-sampled via ``train_frac``) — the production codebook; the
     measured recall lift is in PLANS.md (VERDICT r7 item 3)."""
-    from pyspark import StorageLevel
-
     check_seed_id_dtype(emb, id_col, "pq_sdc_top_neighbor")
     sub = dim // m
     v = fan_out(emb).select(F.col(id_col), as_double(vec_col).alias("v"))

@@ -43,7 +43,7 @@ from pyspark.sql import functions as F
 from left_join_on_timeout_spark.config import TimeoutJoinConfig, parse_interval_ms
 
 
-class _Side(Mapping):
+class Side(Mapping):
     """Column accessor handed to the joiner: ``side['value']`` resolves to
     the post-rename column, so user joiners stay side-symmetric."""
 
@@ -60,16 +60,16 @@ class _Side(Mapping):
         return len(self._names)
 
 
-Joiner = Callable[[_Side, _Side], Column]
+Joiner = Callable[[Side, Side], Column]
 
 
 def _keys(on: str | Sequence[str]) -> list[str]:
     return [on] if isinstance(on, str) else list(on)
 
 
-def _prepare(left: DataFrame, right: DataFrame, on: str | Sequence[str],
-             left_ts: str, right_ts: str, window_ms: int,
-             right_prefix: str):
+def prepare(left: DataFrame, right: DataFrame, on: str | Sequence[str],
+            left_ts: str, right_ts: str, window_ms: int,
+            right_prefix: str):
     """Rename right cols to {prefix}{col}; build key+range condition."""
     collisions = {f"{right_prefix}{c}" for c in right.columns} & set(left.columns)
     if collisions:
@@ -98,18 +98,18 @@ def _prepare(left: DataFrame, right: DataFrame, on: str | Sequence[str],
     rng = F.col(f"{right_prefix}{right_ts}").between(
         F.col(left_ts) - w, F.col(left_ts) + w)
     cond = cond & rng if cond is not None else rng
-    l_side = _Side({c: c for c in left.columns})
-    r_side = _Side({c: f"{right_prefix}{c}" for c in right.columns})
+    l_side = Side({c: c for c in left.columns})
+    r_side = Side({c: f"{right_prefix}{c}" for c in right.columns})
     return r, cond, l_side, r_side
 
 
 def _join(left: DataFrame, right: DataFrame, on, window, left_ts, right_ts,
           joiner, joined_col, right_prefix, broadcast, how) -> DataFrame:
     if isinstance(window, Column):
-        window_ms: int | Column = window  # per-row; range-guarded in _prepare
+        window_ms: int | Column = window  # per-row; range-guarded in prepare
     else:
         window_ms = TimeoutJoinConfig.of(window).window_ms  # validates (O15)
-    r, cond, l_side, r_side = _prepare(
+    r, cond, l_side, r_side = prepare(
         left, right, on, left_ts, right_ts, window_ms, right_prefix)
     rhs = F.broadcast(r) if broadcast else r
     out = left.join(rhs, cond, how)
@@ -178,7 +178,7 @@ def timeout_only(
     null-padding or match-row multiplication.
     """
     window_ms = parse_interval_ms(window)
-    r, cond, _, _ = _prepare(
+    r, cond, _, _ = prepare(
         left, right, on, left_ts, right_ts, window_ms, right_prefix)
     return left.join(r, cond, "left_anti")
 

@@ -21,13 +21,10 @@ from pyspark.sql import functions as F
 
 
 def session_shuffle_partitions(df: DataFrame) -> int:
-    """The session's static shuffle-partition count (falls back to
-    ``defaultParallelism`` if the conf is unreadable) — the width
-    scale-adaptive operators size their synthetic keys against."""
-    try:
-        return int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    except Exception:
-        return df.sparkSession.sparkContext.defaultParallelism
+    """The session's static shuffle-partition count — the width
+    scale-adaptive operators size their synthetic keys against. Spark
+    rejects a non-integer value when the conf is set, so it parses."""
+    return int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
 
 
 def cluster_for_partitioned_write(df: DataFrame, dir_col: str,

@@ -11,13 +11,13 @@ documented greatest-tiebreak-wins rule for duplicate timestamps.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from left_join_on_timeout_spark.operators.asof_join import (
     asof_join,
     asof_join_range,
 )
-from left_join_on_timeout_spark.queries import _events_split, query
+from left_join_on_timeout_spark.registry import query
+from left_join_on_timeout_spark.sources.tables import events_split
 
 _BACKWARD_ORACLE = """
 WITH l AS (SELECT user_id, event_id, ts FROM events WHERE event_type = 'view'),
@@ -35,7 +35,7 @@ def q_asof_backward(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Backward as-of: each view joins the most recent purchase at or
     before it (per user), within 30 minutes — single-shuffle
     union-window plan, output exactly |views| rows."""
-    left, right = _events_split(spark, sf_dir)
+    left, right = events_split(spark, sf_dir)
     return asof_join(left, right, on="user_id", tolerance="30 minutes",
                      direction="backward")
 
@@ -52,7 +52,7 @@ FROM l ASOF LEFT JOIN r ON l.user_id = r.user_id AND l.ts <= r.ts
 def q_asof_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Forward as-of: each view joins the next purchase at or after it
     (per user) within 30 minutes — the attribution-lookahead direction."""
-    left, right = _events_split(spark, sf_dir)
+    left, right = events_split(spark, sf_dir)
     return asof_join(left, right, on="user_id", tolerance="30 minutes",
                      direction="forward")
 
@@ -62,6 +62,6 @@ def q_asof_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The range-join twin of asof_backward_join (candidates then
     max_by) — hash-checked against the *same* oracle as the union-window
     plan, so the two physical strategies are proven result-identical."""
-    left, right = _events_split(spark, sf_dir)
+    left, right = events_split(spark, sf_dir)
     return asof_join_range(left, right, on="user_id",
                            tolerance="30 minutes")

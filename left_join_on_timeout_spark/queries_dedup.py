@@ -5,37 +5,49 @@ extensions)."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import os
+
+from pyspark import StorageLevel
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from left_join_on_timeout_spark.functions.text import n_words, quality_score
+from left_join_on_timeout_spark.operators.components import (
+    connected_components,
+)
 from left_join_on_timeout_spark.operators.dedup import (
-    DEFAULT_BANDS,
-    edit_distance_near_dups,
     DEFAULT_K,
     DEFAULT_LSH_BUCKET_CAP,
+    edit_distance_near_dups,
     exact_dedup_groups,
     jaccard_pairs,
     lsh_candidate_pairs,
+    lsh_probe_pairs,
     lsh_verified_near_dups,
-    minhash_digest_plan,
     minhash_signature,
+    prefix_filter_containment_pairs,
+    prefix_filter_jaccard_pairs,
+    shingle_sets,
     simhash16,
     simhash_hamming_pairs,
+    with_minhash,
 )
-from left_join_on_timeout_spark.queries import query
+from left_join_on_timeout_spark.operators.index_store import default_index_root
+from left_join_on_timeout_spark.operators.lsh_index import (
+    lsh_index_build,
+    lsh_index_probe,
+)
+from left_join_on_timeout_spark.operators.ranking import global_rank
+from left_join_on_timeout_spark.queries_text import QUALITY_SQL
+from left_join_on_timeout_spark.registry import query
 from left_join_on_timeout_spark.sources.tables import load_table
-
-# --- shared SQL fragments (the DuckDB twins of functions/text helpers) ---
-# canonical definitions live in the leaf module sql_lsh (no registry
-# imports → no cycles); the underscore aliases keep this module's many
-# f-string oracle bodies unchanged
-from left_join_on_timeout_spark.sql_lsh import (  # noqa: E402
-    BAND_SELECTS as _BAND_SELECTS,
-    DIGEST_COLS as _DIGEST_COLS,
-    SHINGLES_CTE as _SHINGLES_CTE,
-    SIG_COLS as _SIG_COLS,
-    WORDS_SQL as _WORDS,
+from left_join_on_timeout_spark.sql_lsh import (
+    BAND_SELECTS,
+    DIGEST_COLS,
+    SHINGLES_CTE,
+    SIG_COLS,
 )
+from left_join_on_timeout_spark.sql_lsh import WORDS_SQL as _WORDS
 
 
 @query("dedup_exact", """
@@ -53,10 +65,10 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query("dedup_minhash_lsh", f"""
-WITH {_SHINGLES_CTE},
-hashed AS (SELECT doc_id, {_DIGEST_COLS} FROM sh),
-sig AS (SELECT doc_id, {_SIG_COLS} FROM hashed GROUP BY doc_id),
-bands AS ({_BAND_SELECTS}),
+WITH {SHINGLES_CTE},
+hashed AS (SELECT doc_id, {DIGEST_COLS} FROM sh),
+sig AS (SELECT doc_id, {SIG_COLS} FROM hashed GROUP BY doc_id),
+bands AS ({BAND_SELECTS}),
 capped AS (
   SELECT doc_id, band, h FROM (
     SELECT doc_id, band, h,
@@ -96,9 +108,9 @@ pairs AS (
 
 
 @query("dedup_lsh_jaccard", f"""
-WITH {_SHINGLES_CTE},
-{_LSH_PAIRS_CTE.format(digests=_DIGEST_COLS, sigs=_SIG_COLS,
-                       bands=_BAND_SELECTS)},
+WITH {SHINGLES_CTE},
+{_LSH_PAIRS_CTE.format(digests=DIGEST_COLS, sigs=SIG_COLS,
+                       bands=BAND_SELECTS)},
 d AS (SELECT DISTINCT doc_id, shingle FROM sh),
 sizes AS (SELECT doc_id, count(*) AS n_sh FROM d GROUP BY doc_id),
 inter AS (
@@ -186,7 +198,7 @@ def q_dedup_simhash_hamming1(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query("dedup_ngram_jaccard", f"""
-WITH {_SHINGLES_CTE},
+WITH {SHINGLES_CTE},
 d AS (SELECT DISTINCT doc_id, shingle FROM sh),
 sizes AS (SELECT doc_id, count(*) AS n_sh FROM d GROUP BY doc_id),
 inter AS (
@@ -294,9 +306,9 @@ def q_dedup_simhash_hamming3(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query("dedup_cc_clusters", f"""
-WITH RECURSIVE {_SHINGLES_CTE},
-{_LSH_PAIRS_CTE.format(digests=_DIGEST_COLS, sigs=_SIG_COLS,
-                       bands=_BAND_SELECTS)},
+WITH RECURSIVE {SHINGLES_CTE},
+{_LSH_PAIRS_CTE.format(digests=DIGEST_COLS, sigs=SIG_COLS,
+                       bands=BAND_SELECTS)},
 und AS (
   SELECT id_a AS s, id_b AS t FROM pairs
   UNION ALL
@@ -317,10 +329,6 @@ def q_dedup_cc_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     representative. The oracle walks the same pair list with a recursive
     transitive-closure CTE (tractable at oracle scale; the Spark side is
     the iterative formulation that survives 100 TB)."""
-    from left_join_on_timeout_spark.operators.components import (
-        connected_components,
-    )
-
     docs = load_table(spark, sf_dir, "documents")
     sig = minhash_signature(docs, "doc_id", "text")
     pairs = lsh_candidate_pairs(sig, "doc_id")
@@ -330,9 +338,9 @@ def q_dedup_cc_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query("dedup_keep_canonical", f"""
-WITH RECURSIVE {_SHINGLES_CTE},
-{_LSH_PAIRS_CTE.format(digests=_DIGEST_COLS, sigs=_SIG_COLS,
-                       bands=_BAND_SELECTS)},
+WITH RECURSIVE {SHINGLES_CTE},
+{_LSH_PAIRS_CTE.format(digests=DIGEST_COLS, sigs=SIG_COLS,
+                       bands=BAND_SELECTS)},
 und AS (
   SELECT id_a AS s, id_b AS t FROM pairs
   UNION ALL
@@ -356,10 +364,6 @@ def q_dedup_keep_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcastable anti-join against the (tiny relative to the corpus)
     non-canonical id list — the full pipeline a 100 TB dedup run
     materializes, not just the cluster labels."""
-    from left_join_on_timeout_spark.operators.components import (
-        connected_components,
-    )
-
     docs = load_table(spark, sf_dir, "documents")
     sig = minhash_signature(docs, "doc_id", "text")
     pairs = lsh_candidate_pairs(sig, "doc_id")
@@ -435,9 +439,9 @@ epairs AS (
 
 
 @query("dedup_multi_signal_clusters", f"""
-WITH RECURSIVE {_SHINGLES_CTE},
-{_LSH_PAIRS_CTE.format(digests=_DIGEST_COLS, sigs=_SIG_COLS,
-                       bands=_BAND_SELECTS)},
+WITH RECURSIVE {SHINGLES_CTE},
+{_LSH_PAIRS_CTE.format(digests=DIGEST_COLS, sigs=SIG_COLS,
+                       bands=BAND_SELECTS)},
 {_EDIT_PAIRS_CTE},
 allp AS (
   SELECT id_a, id_b FROM pairs
@@ -466,10 +470,6 @@ def q_dedup_multi_signal_clusters(spark: SparkSession,
     independently bounded equi-joins; the union is a distinct over
     (id, id) edges — composition adds zero quadratic stages. The oracle
     walks the identical union graph with a recursive closure CTE."""
-    from left_join_on_timeout_spark.operators.components import (
-        connected_components,
-    )
-
     docs = load_table(spark, sf_dir, "documents")
     sig = minhash_signature(docs, "doc_id", "text")
     lsh = lsh_candidate_pairs(sig, "doc_id").select("id_a", "id_b")
@@ -482,9 +482,9 @@ def q_dedup_multi_signal_clusters(spark: SparkSession,
 
 
 @query("dedup_graph_triangles", f"""
-WITH {_SHINGLES_CTE},
-{_LSH_PAIRS_CTE.format(digests=_DIGEST_COLS, sigs=_SIG_COLS,
-                       bands=_BAND_SELECTS)},
+WITH {SHINGLES_CTE},
+{_LSH_PAIRS_CTE.format(digests=DIGEST_COLS, sigs=SIG_COLS,
+                       bands=BAND_SELECTS)},
 verts AS (SELECT id_a AS v FROM pairs UNION SELECT id_b AS v FROM pairs),
 tri AS (
   SELECT count(*) AS n_triangles
@@ -508,8 +508,6 @@ def q_dedup_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate edge list is persisted: three self-join sides would
     otherwise plan the whole MinHash pipeline three times
     (ReusedExchange never fires across self-join sides)."""
-    from pyspark import StorageLevel
-
     docs = load_table(spark, sf_dir, "documents")
     sig = minhash_signature(docs, "doc_id", "text")
     e = (lsh_candidate_pairs(sig, "doc_id").select("id_a", "id_b")
@@ -529,7 +527,7 @@ def q_dedup_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query("dedup_prefix_jaccard", f"""
-WITH {_SHINGLES_CTE},
+WITH {SHINGLES_CTE},
 d AS (SELECT DISTINCT doc_id, shingle FROM sh),
 sizes AS (SELECT doc_id, count(*) AS n_sh FROM d GROUP BY doc_id),
 inter AS (
@@ -552,9 +550,6 @@ def q_dedup_prefix_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     no missed pairs, candidate volume bounded by rare-token bucket
     sizes instead of banding probabilities
     (operators/dedup.py::prefix_filter_jaccard_pairs)."""
-    from left_join_on_timeout_spark.operators.dedup import (
-        prefix_filter_jaccard_pairs,
-    )
     docs = load_table(spark, sf_dir, "documents")
     return prefix_filter_jaccard_pairs(docs, "doc_id", "text",
                                        threshold=0.5)
@@ -565,10 +560,10 @@ def q_dedup_prefix_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _INCR_PROBE_ORACLE = f"""
-WITH {_SHINGLES_CTE},
-hashed AS (SELECT doc_id, {_DIGEST_COLS} FROM sh),
-sig AS (SELECT doc_id, {_SIG_COLS} FROM hashed GROUP BY doc_id),
-bands AS ({_BAND_SELECTS}),
+WITH {SHINGLES_CTE},
+hashed AS (SELECT doc_id, {DIGEST_COLS} FROM sh),
+sig AS (SELECT doc_id, {SIG_COLS} FROM hashed GROUP BY doc_id),
+bands AS ({BAND_SELECTS}),
 idx AS (
   SELECT doc_id, band, h FROM (
     SELECT doc_id, band, h,
@@ -620,15 +615,6 @@ def q_dedup_incremental_probe(spark: SparkSession,
     Jaccard runs only on candidates via ``array_intersect``; the final
     best-match is a per-new-doc window over candidate matches (bounded
     by bands × cap). Nothing re-indexes the standing corpus."""
-    from pyspark import StorageLevel
-    from pyspark.sql import Window
-
-    from left_join_on_timeout_spark.operators.dedup import (
-        with_minhash,
-        lsh_probe_pairs,
-        shingle_sets,
-    )
-
     docs = load_table(spark, sf_dir, "documents")
     sets = shingle_sets(docs, "doc_id", "text") \
         .persist(StorageLevel.MEMORY_AND_DISK)
@@ -666,9 +652,9 @@ def q_dedup_incremental_probe(spark: SparkSession,
 # ---------------------------------------------------------------------------
 
 @query("cluster_aware_split", f"""
-WITH RECURSIVE {_SHINGLES_CTE},
-{_LSH_PAIRS_CTE.format(digests=_DIGEST_COLS, sigs=_SIG_COLS,
-                       bands=_BAND_SELECTS)},
+WITH RECURSIVE {SHINGLES_CTE},
+{_LSH_PAIRS_CTE.format(digests=DIGEST_COLS, sigs=SIG_COLS,
+                       bands=BAND_SELECTS)},
 und AS (
   SELECT id_a AS s, id_b AS t FROM pairs
   UNION ALL
@@ -702,10 +688,6 @@ def q_cluster_aware_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     some pair carry a cluster row) plus row-local hashing. The gate
     hashes the *group*, so membership changes upstream never reshuffle
     unrelated groups between splits."""
-    from left_join_on_timeout_spark.operators.components import (
-        connected_components,
-    )
-
     docs = load_table(spark, sf_dir, "documents")
     sig = minhash_signature(docs, "doc_id", "text")
     pairs = lsh_candidate_pairs(sig, "doc_id")
@@ -727,7 +709,7 @@ def q_cluster_aware_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 @query("containment_pairs", f"""
-WITH {_SHINGLES_CTE},
+WITH {SHINGLES_CTE},
 d AS (SELECT DISTINCT doc_id, md5(shingle) AS h FROM sh),
 dfreq AS (SELECT h, count(*) AS df FROM d GROUP BY h),
 ord AS (
@@ -769,10 +751,6 @@ def q_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     container side is the full postings relation, with a size filter
     pruning impossible containers before the exact
     ``array_intersect`` verify."""
-    from left_join_on_timeout_spark.operators.dedup import (
-        prefix_filter_containment_pairs,
-    )
-
     docs = load_table(spark, sf_dir, "documents")
     return prefix_filter_containment_pairs(docs, "doc_id", "text", 0.8)
 
@@ -797,9 +775,9 @@ pr{_i} AS (
 
 
 @query("pagerank_candidates", f"""
-WITH {_SHINGLES_CTE},
-{_LSH_PAIRS_CTE.format(digests=_DIGEST_COLS, sigs=_SIG_COLS,
-                       bands=_BAND_SELECTS)},
+WITH {SHINGLES_CTE},
+{_LSH_PAIRS_CTE.format(digests=DIGEST_COLS, sigs=SIG_COLS,
+                       bands=BAND_SELECTS)},
 und AS (
   SELECT id_a AS s, id_b AS t FROM pairs
   UNION ALL
@@ -828,8 +806,6 @@ def q_pagerank_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle unrolls them as CTEs. Determinism: per-edge contributions
     round to 9 dp and sum as DECIMAL (order-free), each new rank rounds
     to 9 dp — both engines iterate bit-identical vectors."""
-    from pyspark import StorageLevel
-
     docs = load_table(spark, sf_dir, "documents")
     sig = minhash_signature(docs, "doc_id", "text")
     pairs = lsh_candidate_pairs(sig, "doc_id")
@@ -869,9 +845,9 @@ _AGREE = " + ".join(
 
 
 @query("containment_minhash_est", f"""
-WITH {_SHINGLES_CTE},
-{_LSH_PAIRS_CTE.format(digests=_DIGEST_COLS, sigs=_SIG_COLS,
-                       bands=_BAND_SELECTS)},
+WITH {SHINGLES_CTE},
+{_LSH_PAIRS_CTE.format(digests=DIGEST_COLS, sigs=SIG_COLS,
+                       bands=BAND_SELECTS)},
 d AS (SELECT DISTINCT doc_id, shingle FROM sh),
 sizes AS (SELECT doc_id, count(*) AS n_sh FROM d GROUP BY doc_id),
 ag AS (
@@ -915,13 +891,6 @@ def q_containment_minhash_est(spark: SparkSession,
     12-column compare against the signature relation (id-keyed joins,
     signature rows are 12×8 hex chars); the exact-verify join exists
     only for the error column and a screening deployment drops it."""
-    from pyspark import StorageLevel
-
-    from left_join_on_timeout_spark.operators.dedup import (
-        with_minhash,
-        shingle_sets,
-    )
-
     docs = load_table(spark, sf_dir, "documents")
 
     sets = shingle_sets(docs, "doc_id", "text") \
@@ -965,9 +934,9 @@ def q_containment_minhash_est(spark: SparkSession,
 # ---------------------------------------------------------------------------
 
 @query("dedup_savings_report", f"""
-WITH RECURSIVE {_SHINGLES_CTE},
-{_LSH_PAIRS_CTE.format(digests=_DIGEST_COLS, sigs=_SIG_COLS,
-                       bands=_BAND_SELECTS)},
+WITH RECURSIVE {SHINGLES_CTE},
+{_LSH_PAIRS_CTE.format(digests=DIGEST_COLS, sigs=SIG_COLS,
+                       bands=BAND_SELECTS)},
 und AS (
   SELECT id_a AS s, id_b AS t FROM pairs
   UNION ALL
@@ -1006,11 +975,6 @@ def q_dedup_savings_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     the run already executed — and its numbers are definitionally
     consistent with ``dedup_exact`` / ``dedup_keep_canonical`` because
     they ARE those queries' aggregates."""
-    from left_join_on_timeout_spark.operators.components import (
-        connected_components,
-    )
-    from left_join_on_timeout_spark.functions.text import n_words
-
     docs = load_table(spark, sf_dir, "documents")
     nw = docs.select(
         "doc_id",
@@ -1046,13 +1010,11 @@ def q_dedup_savings_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Quality ↔ duplication calibration
 # ---------------------------------------------------------------------------
 
-from left_join_on_timeout_spark.queries_text import _QUALITY  # noqa: E402
-
 
 @query("quality_dup_calibration", f"""
-WITH {_SHINGLES_CTE},
-{_LSH_PAIRS_CTE.format(digests=_DIGEST_COLS, sigs=_SIG_COLS,
-                       bands=_BAND_SELECTS)},
+WITH {SHINGLES_CTE},
+{_LSH_PAIRS_CTE.format(digests=DIGEST_COLS, sigs=SIG_COLS,
+                       bands=BAND_SELECTS)},
 dup AS (SELECT DISTINCT doc_id FROM (
           SELECT id_a AS doc_id FROM pairs
           UNION ALL SELECT id_b AS doc_id FROM pairs)),
@@ -1071,7 +1033,7 @@ SELECT CAST((rnk - 1) * 4 // n AS BIGINT) AS quartile,
                   AS DOUBLE) / count(*), 6) AS dup_frac
 FROM ranked r LEFT JOIN dup d ON d.doc_id = r.doc_id
 GROUP BY (rnk - 1) * 4 // n
-""".replace("{q}", _QUALITY))
+""".replace("{q}", QUALITY_SQL))
 def q_quality_dup_calibration(spark: SparkSession,
                               sf_dir: str) -> DataFrame:
     """Cross-signal calibration: does the quality score PREDICT
@@ -1085,9 +1047,6 @@ def q_quality_dup_calibration(spark: SparkSession,
     Rank via the distributed ``global_rank`` (range exchange, never a
     single-partition window); dup membership is a broadcast-sized
     distinct-id join."""
-    from left_join_on_timeout_spark.functions.text import quality_score
-    from left_join_on_timeout_spark.operators.ranking import global_rank
-
     docs = load_table(spark, sf_dir, "documents")
     q3 = F.round(quality_score("text"), 3).cast("decimal(12,3)")
     q = docs.select("doc_id", q3.alias("q3"))
@@ -1127,20 +1086,6 @@ def q_dedup_lsh_probe_saved(spark: SparkSession,
     a refactoring of the plan, not a new approximation; the probe
     plan reads the index from a FileScan instead of re-banding the
     corpus (plan-gated in tests/test_plans.py)."""
-    import os
-
-    from pyspark import StorageLevel
-    from pyspark.sql import Window
-
-    from left_join_on_timeout_spark.operators.index_store import (
-        default_index_root,
-    )
-    from left_join_on_timeout_spark.operators.dedup import shingle_sets
-    from left_join_on_timeout_spark.operators.lsh_index import (
-        lsh_index_build,
-        lsh_index_probe,
-    )
-
     docs = load_table(spark, sf_dir, "documents")
     old_docs = docs.where(F.col("doc_id") % 10 != 0)
     new_docs = docs.where(F.col("doc_id") % 10 == 0)

@@ -13,7 +13,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from left_join_on_timeout_spark.queries import query
+from left_join_on_timeout_spark.registry import query
 from left_join_on_timeout_spark.sources.formats import read_format, stage_as
 from left_join_on_timeout_spark.sources.tables import load_table
 from left_join_on_timeout_spark.streaming.harness import scratch_dir

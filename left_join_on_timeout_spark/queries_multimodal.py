@@ -22,9 +22,10 @@ from left_join_on_timeout_spark.operators.multimodal import (
     extract_features,
     sample_frames,
 )
-from left_join_on_timeout_spark.queries import query
+from left_join_on_timeout_spark.registry import query
 from left_join_on_timeout_spark.sinks import encode_json_records
 from left_join_on_timeout_spark.sources.tables import load_table
+from left_join_on_timeout_spark.streaming.harness import drain_stream
 
 _TYPES = list(MAGIC_HEX.values())       # cycled by doc_id % len
 _TYPE_LIST = "[" + ", ".join(f"'{t}'" for t in _TYPES) + "]"
@@ -196,8 +197,6 @@ def q_stream_payload_dedup(spark: SparkSession,
     never payloads; at 100 TB a deployment scopes it with
     ``dropDuplicatesWithinWatermark`` on arrival time exactly like
     ``stream_dedup_keys``."""
-    from left_join_on_timeout_spark.streaming.harness import drain_stream
-
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "lang", "source", "n_chars")
 

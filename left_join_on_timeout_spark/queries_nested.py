@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from left_join_on_timeout_spark.operators.ranking import global_rank
-from left_join_on_timeout_spark.queries import query
+from left_join_on_timeout_spark.registry import query
 from left_join_on_timeout_spark.sources.tables import load_table
 
 

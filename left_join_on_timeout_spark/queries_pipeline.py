@@ -14,17 +14,72 @@ from __future__ import annotations
 
 import os
 
+from py4j.protocol import Py4JJavaError
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from left_join_on_timeout_spark import fsio
-from left_join_on_timeout_spark.functions.text import fingerprint, words
+from left_join_on_timeout_spark.concurrency import overlap
+from left_join_on_timeout_spark.functions.text import (
+    BPE_TOKEN_RE,
+    fingerprint,
+    gram_digest_set,
+    gram_rows,
+    quality_score,
+    token_count,
+    words,
+)
+from left_join_on_timeout_spark.functions.vectors import (
+    as_double,
+    dot,
+    l2_norm,
+    srp_bucket_sql,
+    srp_planes,
+)
+from left_join_on_timeout_spark.operators.asof_join import asof_join
+from left_join_on_timeout_spark.operators.components import (
+    connected_components,
+)
+from left_join_on_timeout_spark.operators.dedup import (
+    DEFAULT_LSH_BUCKET_CAP,
+    lsh_candidate_pairs,
+    minhash_signature,
+    shingle_sets,
+)
+from left_join_on_timeout_spark.operators.index_store import default_index_root
+from left_join_on_timeout_spark.operators.lsh_index import (
+    lsh_index_build,
+    lsh_index_probe,
+)
 from left_join_on_timeout_spark.operators.ranking import global_rank
 from left_join_on_timeout_spark.operators.sampling import sample_gate
+from left_join_on_timeout_spark.operators.similarity import (
+    DEFAULT_BANDS,
+    DEFAULT_BITS,
+    DEFAULT_BUCKET_CAP,
+    DEFAULT_SEED,
+)
+from left_join_on_timeout_spark.operators.srp_index import (
+    srp_index_build,
+    srp_index_probe,
+)
+from left_join_on_timeout_spark.operators.text_index import (
+    contamination_screen,
+    text_index_build,
+    text_index_gram_probe,
+)
 from left_join_on_timeout_spark.partitioning import fan_out
-from left_join_on_timeout_spark.queries import query
+from left_join_on_timeout_spark.queries_text import QUALITY_SQL
+from left_join_on_timeout_spark.registry import query
 from left_join_on_timeout_spark.sources.tables import load_table
+from left_join_on_timeout_spark.sql_lsh import (
+    BAND_SELECTS,
+    DIGEST_COLS,
+    NULLSAFE_SHINGLES_CTE,
+    SIG_COLS,
+)
+from left_join_on_timeout_spark.streaming.harness import drain_stream
 
 _T_NORM = "trim(lower(text))"
 
@@ -78,18 +133,23 @@ def release_tracked_persists() -> None:
     index tree — a previous curation-family query left behind (safe
     while no such query's returned frame is still being materialized —
     the per-invocation contract of the bench, the oracle runner, and
-    any sequential serving loop)."""
+    any sequential serving loop). Every cleanup runs; the first one
+    that failed is then re-raised (``fsio.delete`` ignores missing
+    paths, so its errors are real)."""
     while _TRACKED_PERSISTS:
         df = _TRACKED_PERSISTS.pop()
         try:
             df.unpersist()
-        except Exception:
-            pass
+        except Py4JJavaError:
+            pass  # persisted by a stopped session: nothing left to free
+    first = None
     while _TRACKED_CLEANUPS:
         try:
             _TRACKED_CLEANUPS.pop()()
-        except Exception:
-            pass
+        except Exception as e:  # re-raised below, after the others run
+            first = first or e
+    if first is not None:
+        raise first
 
 
 # ---------------------------------------------------------------------------
@@ -233,7 +293,6 @@ def q_stream_source_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     flows continuously). Stateless per row beyond the broadcast, so the
     drained output is row-identical to the batch mix — the exact
     oracle."""
-    from left_join_on_timeout_spark.streaming.harness import drain_stream
     docs = load_table(spark, sf_dir, "documents")
     mix = _mix_table(docs)  # static side, computed once
     stream_in = docs.select("doc_id", "source")
@@ -422,7 +481,6 @@ def q_stream_pii_redaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     data lands, before anything persists. Stateless per-row regex, so no
     watermark or state store; the drained output is row-identical to
     the batch scrub, which is the exact oracle."""
-    from left_join_on_timeout_spark.streaming.harness import drain_stream
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     return drain_stream(spark, docs, pii_redact)
 
@@ -474,14 +532,14 @@ def q_doc_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
           .persist(StorageLevel.MEMORY_AND_DISK))
     tc = tf.groupBy("term").agg(F.sum("tf").cast("bigint").alias("c"))
     tot = tc.agg(F.sum("c").cast("bigint").alias("total"))
-    nll = _r6(
+    nll = r6(
         F.log(F.col("total").cast("double") / F.col("c"))) \
         .cast("decimal(25,6)")
     scored = (tf.join(tc, "term").crossJoin(F.broadcast(tot))
               .select("doc_id", "tf", nll.alias("nll")))
     return scored.groupBy("doc_id").agg(
         F.sum("tf").cast("bigint").alias("n_tok"),
-        _r6(
+        r6(
             F.sum(F.col("nll") * F.col("tf")).cast("double")
             / F.sum("tf").cast("bigint")).alias("lm_score"))
 
@@ -558,8 +616,6 @@ def q_events_fir_smoothing(spark: SparkSession, sf_dir: str) -> DataFrame:
     pow() overflow trick) and replays bit-identically in the oracle.
     Daily totals go through DECIMAL before the (fixed-order) double
     kernel, so partition order can't move the result."""
-    from pyspark.sql import Window
-
     ev = load_table(spark, sf_dir, "events")
     daily = (ev.groupBy("user_id",
                         F.date_trunc("day", F.col("ts")).alias("day"))
@@ -626,7 +682,6 @@ def q_stream_json_dead_letter(spark: SparkSession, sf_dir: str) -> DataFrame:
     lands while good rows continue (a real deployment writes each side
     to its own sink; the harness drains the dead-letter side).
     Stateless, so the batch split is the exact oracle."""
-    from left_join_on_timeout_spark.streaming.harness import drain_stream
     events = load_table(spark, sf_dir, "events").select("event_id", "props")
     return drain_stream(spark, events, _dead_letter)
 
@@ -660,8 +715,6 @@ def q_scd2_user_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     the SAME keyed ordering, so the second window reuses the first's
     shuffle. Ties in ts break on event_id so the version sequence is a
     total order on both engines."""
-    from pyspark.sql import Window
-
     ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     changes = (ev.select("user_id", "event_type", "ts", "event_id")
@@ -715,8 +768,6 @@ def q_user_value_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     DECIMALs (order-free), and the final slope is one fixed-order
     double expression rounded to 6 dp. Single-day users get slope 0
     (denominator zero)."""
-    from pyspark.sql import Window
-
     ev = load_table(spark, sf_dir, "events")
     daily = (ev.groupBy("user_id",
                         F.date_trunc("day", F.col("ts")).alias("day"))
@@ -870,8 +921,6 @@ def q_ordered_funnel_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     keyed window pass plus one grouped aggregate, no self-join, no
     per-row state machine. NULL `converted` = session lacking one leg
     (SQL three-valued logic, identical both engines)."""
-    from pyspark.sql import Window
-
     ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     prev = F.lag("ts").over(w)
@@ -896,12 +945,10 @@ def q_ordered_funnel_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Quantile normalization across sources
 # ---------------------------------------------------------------------------
 
-from left_join_on_timeout_spark.queries_text import _QUALITY  # noqa: E402
-
 
 @query("quantile_normalize_quality", f"""
 WITH q AS (
-  SELECT doc_id, source, round({_QUALITY}, 6) AS qual FROM documents),
+  SELECT doc_id, source, round({QUALITY_SQL}, 6) AS qual FROM documents),
 ref AS (
   SELECT quantile_cont(qual, [{", ".join(f"{k}/100.0" for k in range(101))}])
            AS arr
@@ -933,10 +980,6 @@ def q_quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     production shape: curve resolution is a knob, corpus size is not.
     Index rounding is explicit floor(x + 0.5) so both engines pick the
     same point."""
-    from pyspark.sql import Window
-
-    from left_join_on_timeout_spark.functions.text import quality_score
-
     docs = load_table(spark, sf_dir, "documents")
     q = docs.select("doc_id", "source",
                     F.round(quality_score("text"), 6).alias("qual"))
@@ -1004,11 +1047,11 @@ def q_rolling_7d_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
 # DSIR: data selection via importance resampling
 # ---------------------------------------------------------------------------
 
-_DSIR_HEX = 2     # 16^2 = 256 hashed feature buckets
-_DSIR_B = 256
+DSIR_HEX = 2     # 16^2 = 256 hashed feature buckets
+DSIR_B = 256
 
 
-def _r6(c):
+def r6(c):
     """Engine-portable 6-dp rounding: ``floor(x*1e6 + 0.5)/1e6`` — pure
     IEEE binary64 ops, bit-identical in Spark and DuckDB. Spark's
     ``round()`` (BigDecimal HALF_UP on the double's shortest decimal
@@ -1036,7 +1079,7 @@ def dsir_tf_and_model(spark: SparkSession, sf_dir: str):
         "doc_id", F.explode(words("text")).alias("term"))
     tf = (toks.groupBy(
         "doc_id",
-        F.substring(F.md5("term"), 1, _DSIR_HEX).alias("b"))
+        F.substring(F.md5("term"), 1, DSIR_HEX).alias("b"))
         .agg(F.count(F.lit(1)).alias("tf"))
         .persist(StorageLevel.MEMORY_AND_DISK))
     raw = tf.groupBy("b").agg(F.sum("tf").cast("bigint").alias("cr"))
@@ -1046,9 +1089,9 @@ def dsir_tf_and_model(spark: SparkSession, sf_dir: str):
            .crossJoin(tgt.agg(F.coalesce(F.sum("ct"), F.lit(0))
                               .cast("bigint").alias("tt"))))
     ct = F.coalesce(F.col("ct"), F.lit(0))
-    lr_val = _r6(
-        F.log((ct + 1.0) / (F.col("tt") + float(_DSIR_B)))
-        - F.log((F.col("cr") + 1.0) / (F.col("tr") + float(_DSIR_B)))
+    lr_val = r6(
+        F.log((ct + 1.0) / (F.col("tt") + float(DSIR_B)))
+        - F.log((F.col("cr") + 1.0) / (F.col("tr") + float(DSIR_B)))
         ).cast("decimal(25,6)")
     lr = (raw.join(tgt, "b", "left")
           .crossJoin(F.broadcast(tot))
@@ -1060,16 +1103,16 @@ DSIR_SQL = f"""
 WITH toks AS (
   SELECT doc_id, unnest(regexp_split_to_array({_T_NORM}, '\\s+')) AS term
   FROM documents),
-tf AS (SELECT doc_id, substr(md5(term), 1, {_DSIR_HEX}) AS b,
+tf AS (SELECT doc_id, substr(md5(term), 1, {DSIR_HEX}) AS b,
               CAST(count(*) AS BIGINT) AS tf
-       FROM toks GROUP BY doc_id, substr(md5(term), 1, {_DSIR_HEX})),
+       FROM toks GROUP BY doc_id, substr(md5(term), 1, {DSIR_HEX})),
 raw AS (SELECT b, sum(tf) AS cr FROM tf GROUP BY b),
 tgt AS (SELECT b, sum(tf) AS ct FROM tf WHERE doc_id % 20 = 0 GROUP BY b),
 tot AS (SELECT (SELECT sum(cr) FROM raw) AS tr,
                (SELECT coalesce(sum(ct), 0) FROM tgt) AS tt),
 lr AS (SELECT r.b,
-              CAST(floor((ln((coalesce(t.ct, 0) + 1.0) / (tt + {_DSIR_B}.0))
-                          - ln((r.cr + 1.0) / (tr + {_DSIR_B}.0)))
+              CAST(floor((ln((coalesce(t.ct, 0) + 1.0) / (tt + {DSIR_B}.0))
+                          - ln((r.cr + 1.0) / (tr + {DSIR_B}.0)))
                          * 1000000 + 0.5) / 1000000.0
                    AS DECIMAL(25,6)) AS lr
        FROM raw r LEFT JOIN tgt t ON r.b = t.b CROSS JOIN tot)
@@ -1093,12 +1136,12 @@ def q_dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     unigram model than under the raw-corpus model, then keep the
     target-like docs. Target sample = ``doc_id % 20 = 0`` (the same
     held-out-domain convention as ``contamination_ngram_overlap``'s
-    benchmark set); features = term counts hashed into {_DSIR_B}
+    benchmark set); features = term counts hashed into {DSIR_B}
     md5-prefix buckets (the ``feature_hash_docs`` trick, so the model
     is vocabulary-free); both bucket LMs are add-one smoothed.
 
     Plan: ONE tokenize+hash pass builds the (doc, bucket, tf) relation;
-    both the raw and target bucket models derive from it ({_DSIR_B}-row
+    both the raw and target bucket models derive from it ({DSIR_B}-row
     aggregates — map-side partials, then broadcast), totals are a
     one-row broadcast cross. The per-doc score is then a broadcast-join
     + keyed sum: nothing vocabulary- or corpus-scale ever sits on the
@@ -1108,7 +1151,7 @@ def q_dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     round per row; ``selected`` compares the same rounded value, so
     both engines decide identically."""
     tf, lr = dsir_tf_and_model(spark, sf_dir)
-    score = _r6(
+    score = r6(
         F.sum(F.col("lr") * F.col("tf")).cast("double")
         / F.sum("tf").cast("bigint"))
     return (tf.join(F.broadcast(lr), "b")
@@ -1163,8 +1206,6 @@ def q_doc_lm2_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle digest-sized keys, never the corpus. Determinism is the
     ``doc_lm_score`` recipe: per-gram -ln p rounded to 6 dp as DECIMAL,
     exact decimal·int sums, one final IEEE divide + round per row."""
-    from left_join_on_timeout_spark.functions.text import gram_rows
-
     docs = load_table(spark, sf_dir, "documents")
     bi = gram_rows(fan_out(docs), "text", 2, id_col="doc_id")
     tf2 = (bi.groupBy("doc_id", "g")
@@ -1176,7 +1217,7 @@ def q_doc_lm2_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     c1 = (c2.groupBy(w1.alias("w1"))
           .agg(F.sum("c2").cast("bigint").alias("c1")))
     v = c2.agg(F.countDistinct(w2).cast("bigint").alias("v"))
-    nll = _r6(
+    nll = r6(
         F.log((F.col("c1") + F.col("v")).cast("double")
               / (F.col("c2") + F.lit(1)))).cast("decimal(25,6)")
     gs = (c2.withColumn("w1", w1).join(c1, "w1")
@@ -1185,7 +1226,7 @@ def q_doc_lm2_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (tf2.join(gs, "g")
             .groupBy("doc_id")
             .agg(F.sum("tf").cast("bigint").alias("n_bi"),
-                 _r6(
+                 r6(
                      F.sum(F.col("nll") * F.col("tf")).cast("double")
                      / F.sum("tf").cast("bigint")).alias("lm2_score")))
 
@@ -1227,10 +1268,6 @@ def q_events_pit_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     enrichment is ONE keyed exchange, not a range join per event. Ties
     at identical (user, valid_from) resolve to the greatest state in
     both engines."""
-    from pyspark.sql import Window
-
-    from left_join_on_timeout_spark.operators.asof_join import asof_join
-
     ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     versions = (ev.select("user_id", "event_type", "ts", "event_id")
@@ -1281,17 +1318,6 @@ def _check_spike_offset(docs: DataFrame) -> None:
 
 
 def _curation_capstone_sql() -> str:
-    from left_join_on_timeout_spark.functions.text import BPE_TOKEN_RE
-    from left_join_on_timeout_spark.operators.dedup import (
-        DEFAULT_LSH_BUCKET_CAP,
-    )
-    from left_join_on_timeout_spark.sql_lsh import (
-        BAND_SELECTS,
-        DIGEST_COLS,
-        NULLSAFE_SHINGLES_CTE,
-        SIG_COLS,
-    )
-
     # NULLSAFE tokenizer (ADVICE r13): the Spark side's normalize()
     # maps NULL text to '', so the oracle's toks/grams CTEs must too —
     # a NULL-text document otherwise diverges the two sides.
@@ -1470,34 +1496,6 @@ def q_curation_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch, audit-hit-bounded decontamination broadcast, CC on capped
     candidate pairs only, packing a keyed window) — no stage
     introduces a corpus self-join or a global sort."""
-    from pyspark.sql import Window
-
-    from left_join_on_timeout_spark.functions.text import (
-        gram_digest_set,
-        token_count,
-        words,
-    )
-    from left_join_on_timeout_spark.operators.index_store import (
-        default_index_root,
-    )
-    from left_join_on_timeout_spark.operators.components import (
-        connected_components,
-    )
-    from left_join_on_timeout_spark.operators.dedup import (
-        lsh_candidate_pairs,
-        minhash_signature,
-        shingle_sets,
-    )
-    from left_join_on_timeout_spark.operators.lsh_index import (
-        lsh_index_build,
-        lsh_index_probe,
-    )
-    from left_join_on_timeout_spark.operators.text_index import (
-        contamination_screen,
-        text_index_build,
-        text_index_gram_probe,
-    )
-
     # release the PREVIOUS curation-family invocation's decision-set
     # persists (VERDICT r14 wrong #3 — bounded cache churn in a
     # long-lived session); this invocation re-registers its own below
@@ -1536,8 +1534,6 @@ def q_curation_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     # postings) depend only on the standing slice — build them up
     # front, overlapped from driver threads (disjoint roots;
     # guide §2.6), instead of serializing one inside each stage
-    from left_join_on_timeout_spark.concurrency import overlap
-
     base = os.path.basename(os.path.normpath(sf_dir))
     root = default_index_root()
     lpath = tracked_index_path(spark, root, "caplsh_" + base)
@@ -1692,7 +1688,7 @@ SEM_SPIKE_OFFSET = 2 * SPIKE_OFFSET
 SEM_DUP_THRESHOLD = 0.95
 
 
-def _curation_semantic_ctes() -> str:
+def curation_semantic_ctes() -> str:
     """Shared WITH-chain of the lexical+semantic ingest oracle — from
     tokenization through the per-source accounting CTEs (`srcs` last,
     no trailing comma); `_curation_semantic_sql` appends the batch
@@ -1703,26 +1699,6 @@ def _curation_semantic_ctes() -> str:
     `bitext_margin_mine` twin) over the standing slice, probe-caps the
     arrival side like `srp_index_probe`, and exact-cosine-verifies the
     bucket candidates at the drop threshold."""
-    from left_join_on_timeout_spark.functions.vectors import (
-        srp_bucket_sql,
-        srp_planes,
-    )
-    from left_join_on_timeout_spark.operators.dedup import (
-        DEFAULT_LSH_BUCKET_CAP,
-    )
-    from left_join_on_timeout_spark.operators.similarity import (
-        DEFAULT_BANDS,
-        DEFAULT_BITS,
-        DEFAULT_BUCKET_CAP,
-        DEFAULT_SEED,
-    )
-    from left_join_on_timeout_spark.sql_lsh import (
-        BAND_SELECTS,
-        DIGEST_COLS,
-        NULLSAFE_SHINGLES_CTE,
-        SIG_COLS,
-    )
-
     def srp_bands(src: str) -> str:
         return "\nUNION ALL\n".join(
             f"SELECT vec_id, v, {b} AS band, "
@@ -1846,7 +1822,7 @@ srcs AS (SELECT DISTINCT source FROM arr)"""
 
 
 def _curation_semantic_sql() -> str:
-    return f"""{_curation_semantic_ctes()}
+    return f"""{curation_semantic_ctes()}
 SELECT s.source AS source,
        CAST(coalesce(ac.n, 0) AS BIGINT) AS n_candidates,
        CAST(coalesce(sc.n, 0) AS BIGINT) AS n_screened_out,
@@ -1862,18 +1838,13 @@ LEFT JOIN aadm am ON am.source = s.source
 """
 
 
-def _curation_fixtures(spark: SparkSession, sf_dir: str) -> dict:
+def curation_fixtures(spark: SparkSession, sf_dir: str) -> dict:
     """Shared fixtures of the lexical+semantic ingest chain (batch and
     streaming twins): the persisted eval gram set, the arrival batch
     (organic + contaminated gram spike + semantic vector spike, each
     carrying its ``gid`` source-doc mapping), and the standing
     corpus/vector slices. ``bench`` and ``arrivals`` come back
     PERSISTED (each feeds several stages)."""
-    from left_join_on_timeout_spark.functions.text import (
-        gram_digest_set,
-        words,
-    )
-
     docs = load_table(spark, sf_dir, "documents")
     emb = load_table(spark, sf_dir, "embeddings")
     _check_spike_offset(docs)
@@ -1945,33 +1916,10 @@ def q_curation_pipeline_semantic(spark: SparkSession,
     The IVF2 retrieval tier stays the top-k serving surface
     (`decontaminate_all_tiers_saved`); candidate GENERATION for dedup
     is the banded tier's job."""
-    from left_join_on_timeout_spark.functions.vectors import (
-        as_double,
-        dot,
-        l2_norm,
-    )
-    from left_join_on_timeout_spark.operators.index_store import (
-        default_index_root,
-    )
-    from left_join_on_timeout_spark.operators.dedup import shingle_sets
-    from left_join_on_timeout_spark.operators.lsh_index import (
-        lsh_index_build,
-        lsh_index_probe,
-    )
-    from left_join_on_timeout_spark.operators.srp_index import (
-        srp_index_build,
-        srp_index_probe,
-    )
-    from left_join_on_timeout_spark.operators.text_index import (
-        contamination_screen,
-    )
-
-    from left_join_on_timeout_spark.concurrency import overlap
-
     # release the previous curation-family invocation's persists
     # (VERDICT r14 wrong #3) before the fixtures register this one's
     release_tracked_persists()
-    fx = _curation_fixtures(spark, sf_dir)
+    fx = curation_fixtures(spark, sf_dir)
     bench, arrivals = fx["bench"], fx["arrivals"]
     emb, standing = fx["emb"], fx["standing"]
     emb_standing = fx["emb_standing"]

@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 from left_join_on_timeout_spark.operators.range_join import (
     interval_overlap_join,
 )
-from left_join_on_timeout_spark.queries import query
+from left_join_on_timeout_spark.registry import query
 from left_join_on_timeout_spark.sources.tables import load_table
 
 

@@ -13,9 +13,11 @@ aggregations are partial (map-side) before the shuffle.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from left_join_on_timeout_spark.queries import query
+from left_join_on_timeout_spark.operators.merge import merge_into
+from left_join_on_timeout_spark.registry import query
 from left_join_on_timeout_spark.sources.tables import load_table
 
 
@@ -566,8 +568,6 @@ def q_merge_upsert_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     full-outer join + CASE projection, the same physical plan Delta runs
     for a non-pruning merge. The full merged table is hashed, so every
     clause's effect on every row is oracle-checked."""
-    from left_join_on_timeout_spark.operators.merge import merge_into
-
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
     key = F.col("o_orderkey")
@@ -656,8 +656,6 @@ def q_analytic_order_moves(spark: SparkSession, sf_dir: str) -> DataFrame:
     within-customer price quartiles. Windows are partitioned by customer,
     so the sort is per-key and scales with the largest key, not the
     table."""
-    from pyspark.sql import Window
-
     o = load_table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     wp = Window.partitionBy("o_custkey").orderBy("o_totalprice",
@@ -1096,8 +1094,6 @@ def q_user_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     of magnitude smaller than events), and monetary sums are exact
     decimals. 4 = best in every dimension (most recent, most frequent,
     highest spend)."""
-    from pyspark.sql import Window as W
-
     ev = load_table(spark, sf_dir, "events")
     t = ev.agg(F.max("ts").alias("tmax"))
     base = (ev.where(F.col("event_type") == "purchase")

@@ -6,14 +6,20 @@ engine-dependent rand() stream.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from left_join_on_timeout_spark.functions.text import (
+    quality_score,
+    token_count,
+)
 from left_join_on_timeout_spark.operators.sampling import (
     hash_sample,
+    sample_gate,
     stratified_sample,
 )
-from left_join_on_timeout_spark.queries import query
+from left_join_on_timeout_spark.queries_text import QUALITY_SQL
+from left_join_on_timeout_spark.registry import query
 from left_join_on_timeout_spark.sources.tables import load_table
 
 
@@ -57,10 +63,6 @@ def q_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     is a *keyed* window (partitioned by source), so packing
     parallelizes across shards — exactly how a 1000-executor packing
     job would run, one shard per task, no global sort."""
-    from pyspark.sql import Window
-
-    from left_join_on_timeout_spark.functions.text import token_count
-
     docs = load_table(spark, sf_dir, "documents")
     w = (Window.partitionBy("source").orderBy("doc_id")
          .rowsBetween(Window.unboundedPreceding, Window.currentRow))
@@ -77,9 +79,6 @@ def quality_gate(docs: DataFrame) -> DataFrame:
     """The quality-tiered curation cut as a stateless transform (shared
     by the batch query and its streaming twin): keep every high-quality
     doc, hash-sample 50% of the middle tier, 10% of the tail."""
-    from left_join_on_timeout_spark.functions.text import quality_score
-    from left_join_on_timeout_spark.operators.sampling import sample_gate
-
     q = docs.select(
         "doc_id", "lang", "source",
         F.round(quality_score("text"), 6).alias("quality"))
@@ -152,12 +151,9 @@ def q_sample_stratified_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("doc_id", "lang", "source")
 
 
-from left_join_on_timeout_spark.queries_text import _QUALITY  # noqa: E402
-
-
 @query("weighted_sample_docs", f"""
 WITH q AS (
-  SELECT doc_id, source, round({_QUALITY}, 6) AS w FROM documents),
+  SELECT doc_id, source, round({QUALITY_SQL}, 6) AS w FROM documents),
 keyed AS (
   SELECT doc_id, source, w,
          round(ln((CAST('0x' || substr(md5('es#' || CAST(doc_id AS VARCHAR)),
@@ -182,8 +178,6 @@ def q_weighted_sample_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounded to 6 dp before ranking (libm ln() isn't bit-specified
     across engines) with doc_id as tiebreak, the same discipline as
     TF-IDF's idf ranking."""
-    from left_join_on_timeout_spark.functions.text import quality_score
-
     docs = load_table(spark, sf_dir, "documents")
     w = F.round(quality_score("text"), 6)
     u_int = F.conv(F.substring(
@@ -204,7 +198,7 @@ def q_weighted_sample_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query("neyman_allocation_sample", f"""
 WITH q AS (
   SELECT doc_id, source,
-         CAST(round({_QUALITY}, 3) AS DECIMAL(12,3)) AS q3
+         CAST(round({QUALITY_SQL}, 3) AS DECIMAL(12,3)) AS q3
   FROM documents),
 st AS (
   SELECT source,
@@ -261,8 +255,6 @@ def q_neyman_allocation_sample(spark: SparkSession,
     textually in both engines, and the gate threshold renders it as
     fixed-width hex (the ``source_mix_temperature`` mechanism). All
     reported stats floor-quantize — no round() ties anywhere."""
-    from left_join_on_timeout_spark.functions.text import quality_score
-
     docs = load_table(spark, sf_dir, "documents")
     q3 = F.round(quality_score("text"), 3).cast("decimal(12,3)")
     st = (docs.select("doc_id", "source", q3.alias("q3"))
@@ -344,7 +336,7 @@ SELECT (SELECT point FROM pt) AS mean_quality,
        (SELECT m FROM ranked
         WHERE rnk = CAST(ceil(0.975 * nb) AS BIGINT)) AS ci_hi,
        CAST((SELECT max(nb) FROM ranked) AS BIGINT) AS n_replicas
-""".replace("{_Q}", _QUALITY))
+""".replace("{_Q}", QUALITY_SQL))
 def q_bootstrap_mean_quality(spark: SparkSession,
                              sf_dir: str) -> DataFrame:
     """Poisson bootstrap (the distributed bootstrap: per replica, each
@@ -362,10 +354,6 @@ def q_bootstrap_mean_quality(spark: SparkSession,
     decimal·int sums; means and the point estimate floor-quantize; the
     CI bounds are exact order statistics (rank ⌈0.025·B⌉ / ⌈0.975·B⌉,
     replica-id tiebreak)."""
-    from pyspark.sql import Window
-
-    from left_join_on_timeout_spark.functions.text import quality_score
-
     docs = load_table(spark, sf_dir, "documents")
     q3 = F.round(quality_score("text"), 3).cast("decimal(12,3)")
     q = docs.select("doc_id", q3.alias("q3"))

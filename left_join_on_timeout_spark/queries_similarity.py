@@ -9,16 +9,36 @@ bit-identical), so cosine scores and bucket signs compare exactly.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import os
+
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from left_join_on_timeout_spark.functions.vectors import (
     as_double,
+    dot,
     l2_norm,
     srp_bucket_sql,
     srp_planes,
 )
-from left_join_on_timeout_spark.partitioning import fan_out
+from left_join_on_timeout_spark.operators.ann_index import (
+    ivf2_index_append,
+    ivf2_index_build,
+    ivf2_index_delete,
+    ivf2_index_load,
+    ivf2_index_rebuild,
+    ivf2_index_search,
+    ivf2_self_search_saved,
+    pq_index_build,
+    pq_index_search,
+    pq_self_search_saved,
+)
+from left_join_on_timeout_spark.operators.index_store import default_index_root
+from left_join_on_timeout_spark.operators.sampling import (
+    HASH_WIDTH,
+    gate_threshold,
+    sample_key,
+)
 from left_join_on_timeout_spark.operators.similarity import (
     DEFAULT_BANDS,
     DEFAULT_BITS,
@@ -29,10 +49,21 @@ from left_join_on_timeout_spark.operators.similarity import (
     ann_top_neighbor,
     brute_force_knn,
     embedding_near_dup_pairs,
+    ivf2_top_neighbor,
     ivf_top_neighbor,
+    ivf_top_neighbors,
     kmeans_refined_cells,
+    margin_mine_pairs,
+    pq_codes,
+    pq_sdc_top_neighbor,
+    srp_cross_candidates,
 )
-from left_join_on_timeout_spark.queries import query
+from left_join_on_timeout_spark.operators.srp_index import (
+    srp_index_build,
+    srp_index_probe,
+)
+from left_join_on_timeout_spark.partitioning import fan_out
+from left_join_on_timeout_spark.registry import query
 from left_join_on_timeout_spark.sources.tables import load_table
 
 _DIM = 64
@@ -254,10 +285,6 @@ def q_ann_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     cosine, ties to the smaller id) with an explicit pair dedup so
     multi-probe can never rank the same neighbor twice. Knobs pinned
     to the static oracle's constants (ADVICE r5 rule)."""
-    from left_join_on_timeout_spark.operators.similarity import (
-        ivf_top_neighbors,
-    )
-
     emb = load_table(spark, sf_dir, "embeddings")
     return ivf_top_neighbors(emb, k=3, n_cells=DEFAULT_IVF_CELLS)
 
@@ -330,11 +357,11 @@ def _kmeans_oracle(n_cells: int, iters: int, dim: int = 64) -> str:
             f"GROUP BY g.cell, a.anrm")
 
 
-def _ivf2_train_prefix(n_super: int, k2: int, dim: int = 64,
-                       cell_cap: int = DEFAULT_CELL_CAP,
-                       nprobe: int = 1,
-                       train_frac: float | None = None,
-                       train_seed: str = "42") -> str:
+def ivf2_train_prefix(n_super: int, k2: int, dim: int = 64,
+                      cell_cap: int = DEFAULT_CELL_CAP,
+                      nprobe: int = 1,
+                      train_frac: float | None = None,
+                      train_seed: str = "42") -> str:
     """The shared TRAINING half of every two-level oracle: the
     ``WITH``-chain from parsed vectors through Lloyd passes, final
     assignment, and the two-sided cell cap, ending at the ``capped``
@@ -349,11 +376,7 @@ def _ivf2_train_prefix(n_super: int, k2: int, dim: int = 64,
     on dense integer ids the two rules pick the same rows, on subset
     builds — the rebuild/as-of arcs — only the rank form is right)."""
     if train_frac is not None and train_frac < 1.0:
-        from left_join_on_timeout_spark.operators.sampling import (
-            HASH_WIDTH,
-            _threshold,
-        )
-        thr = _threshold(train_frac)
+        thr = gate_threshold(train_frac)
         gate = (f"substr(md5('{train_seed}#' || "
                 f"CAST(vec_id AS VARCHAR)), 1, {HASH_WIDTH}) < '{thr}'")
         vt_cte = f"vt AS (SELECT * FROM v WHERE {gate}),\n"
@@ -487,8 +510,8 @@ def _ivf2_oracle(n_super: int, k2: int, dim: int = 64,
     ``rank`` column instead of the argmax — with an explicit DISTINCT
     pair dedup, mirroring ``bidir_topk``'s (exact: cos_sim is a pure
     function of the pair)."""
-    prefix = _ivf2_train_prefix(n_super, k2, dim, cell_cap, nprobe,
-                                train_frac, train_seed)
+    prefix = ivf2_train_prefix(n_super, k2, dim, cell_cap, nprobe,
+                               train_frac, train_seed)
     if topk > 1:
         tail = f""",
 scored AS (
@@ -561,7 +584,7 @@ def _ivf2_served_oracle(n_super: int, k2: int, dim: int = 64,
     nprobe also multi-indexes the postings). The ``post`` CTE rebuilds
     exactly the nprobe=1 ``capped`` relation from the probed
     assignment."""
-    prefix = _ivf2_train_prefix(n_super, k2, dim, cell_cap, nprobe)
+    prefix = ivf2_train_prefix(n_super, k2, dim, cell_cap, nprobe)
     qf = f"\n  WHERE {query_pred}" if query_pred else ""
     nj = (f"\n  JOIN embeddings lb ON lb.vec_id = b.vec_id "
           f"AND ({nbr_pred})" if nbr_pred else "")
@@ -612,7 +635,7 @@ def _ivf2_rebuilt_oracle(n_super: int, k2: int, dim: int = 64,
     ``ivf2_index_rebuild``. A base cell dropped at build whose batch
     members alone fit the cap REAPPEARS batch-only after the rebuild —
     the compaction semantics, replayed."""
-    prefix = _ivf2_train_prefix(n_super, k2, dim, cell_cap).replace(
+    prefix = ivf2_train_prefix(n_super, k2, dim, cell_cap).replace(
         "FROM embeddings)", f"FROM embeddings WHERE {base_pred})")
     tail = f""",
 vall AS (SELECT vec_id, embedding::DOUBLE[] AS v,
@@ -678,10 +701,6 @@ def q_ann_top1_ivf2(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the ADVICE r5 rule); the auto path sizes ``n_super ≈
     sqrt(n_cells)`` via ``two_level_knobs`` and is A/B-measured at the
     third decade in PLANS.md."""
-    from left_join_on_timeout_spark.operators.similarity import (
-        ivf2_top_neighbor,
-    )
-
     emb = load_table(spark, sf_dir, "embeddings")
     return ivf2_top_neighbor(emb, n_super=_IVF2_SUPER, k2=_IVF2_K2)
 
@@ -696,10 +715,6 @@ def q_ann_top1_ivf2_probe2(spark: SparkSession, sf_dir: str) -> DataFrame:
     in BOTH of its two nearest super-cells; training stays on the
     primary assignment. Knobs pinned to the static oracle's constants
     (ADVICE r5 rule)."""
-    from left_join_on_timeout_spark.operators.similarity import (
-        ivf2_top_neighbor,
-    )
-
     emb = load_table(spark, sf_dir, "embeddings")
     return ivf2_top_neighbor(emb, n_super=_IVF2_SUPER, k2=_IVF2_K2,
                              nprobe=2)
@@ -718,15 +733,6 @@ def q_ann_top1_ivf2_saved(spark: SparkSession, sf_dir: str) -> DataFrame:
     build-and-search oracle row-for-row — the lifecycle is a
     refactoring of the plan, not a new approximation. Knobs pinned to
     the static oracle's constants (ADVICE r5 rule)."""
-    import os
-
-    from left_join_on_timeout_spark.operators.ann_index import (
-        ivf2_self_search_saved,
-    )
-    from left_join_on_timeout_spark.operators.index_store import (
-        default_index_root,
-    )
-
     emb = load_table(spark, sf_dir, "embeddings")
     root = default_index_root()
     path = os.path.join(
@@ -746,15 +752,6 @@ def q_ann_topk_ivf2_saved(spark: SparkSession, sf_dir: str) -> DataFrame:
     the top-1 query's answer (consistency pinned in
     tests/test_ann_index.py). Knobs pinned to the static oracle's
     constants (ADVICE r5 rule)."""
-    import os
-
-    from left_join_on_timeout_spark.operators.ann_index import (
-        ivf2_self_search_saved,
-    )
-    from left_join_on_timeout_spark.operators.index_store import (
-        default_index_root,
-    )
-
     emb = load_table(spark, sf_dir, "embeddings")
     root = default_index_root()
     path = os.path.join(
@@ -777,16 +774,6 @@ def q_ann_filtered_ivf2_saved(spark: SparkSession,
     Serving semantics: every corpus vector queries, neighbors come
     only from the filtered postings, per-query exact-cosine argmax
     (one-directional — the ``ivf2_index_search`` shape)."""
-    import os
-
-    from left_join_on_timeout_spark.operators.ann_index import (
-        ivf2_index_build,
-        ivf2_index_search,
-    )
-    from left_join_on_timeout_spark.operators.index_store import (
-        default_index_root,
-    )
-
     emb = load_table(spark, sf_dir, "embeddings")
     root = default_index_root()
     path = os.path.join(
@@ -811,16 +798,6 @@ def q_ann_pruned_ivf2_saved(spark: SparkSession,
     measurement is in PLANS.md). Pruning is pure routing — results
     are identical to the unpruned search (the oracle knows nothing
     about it)."""
-    import os
-
-    from left_join_on_timeout_spark.operators.ann_index import (
-        ivf2_index_build,
-        ivf2_index_search,
-    )
-    from left_join_on_timeout_spark.operators.index_store import (
-        default_index_root,
-    )
-
     emb = load_table(spark, sf_dir, "embeddings")
     root = default_index_root()
     path = os.path.join(
@@ -843,16 +820,6 @@ def q_ann_top1_ivf2_saved_probe2(spark: SparkSession,
     super-cells and takes the argmax over the union of candidates.
     The oracle's query side replays the two-probe assignment while its
     postings stay the primary build — exactly the saved-index split."""
-    import os
-
-    from left_join_on_timeout_spark.operators.ann_index import (
-        ivf2_index_build,
-        ivf2_index_search,
-    )
-    from left_join_on_timeout_spark.operators.index_store import (
-        default_index_root,
-    )
-
     emb = load_table(spark, sf_dir, "embeddings")
     root = default_index_root()
     path = os.path.join(
@@ -875,18 +842,6 @@ def q_ann_deleted_ivf2_saved(spark: SparkSession,
     scan. The oracle knows nothing about tombstones; it simply
     excludes the deleted ids from the NEIGHBOR side — delete
     semantics expressed as serving semantics."""
-    import os
-
-    from left_join_on_timeout_spark.operators.ann_index import (
-        ivf2_index_build,
-        ivf2_index_delete,
-        ivf2_index_load,
-        ivf2_index_search,
-    )
-    from left_join_on_timeout_spark.operators.index_store import (
-        default_index_root,
-    )
-
     emb = load_table(spark, sf_dir, "embeddings")
     root = default_index_root()
     path = os.path.join(
@@ -913,18 +868,6 @@ def q_ann_rebuild_ivf2_saved(spark: SparkSession,
     tests/test_plans.py); the oracle replays train-on-base,
     assign-batch-through-anchors, and the rebuild's one-sided re-cap
     deterministically."""
-    import os
-
-    from left_join_on_timeout_spark.operators.ann_index import (
-        ivf2_index_append,
-        ivf2_index_build,
-        ivf2_index_rebuild,
-        ivf2_index_search,
-    )
-    from left_join_on_timeout_spark.operators.index_store import (
-        default_index_root,
-    )
-
     emb = load_table(spark, sf_dir, "embeddings")
     base = emb.where(F.col("vec_id") % 5 != 4)
     batch = emb.where(F.col("vec_id") % 5 == 4)
@@ -951,7 +894,7 @@ def _ivf2_asof_oracle(n_super: int, k2: int, dim: int = 64,
     the final anchors with :func:`_ivf2_rebuilt_oracle`'s probe
     chain, and the serve joins the pre-compaction union (``pv1``) —
     snapshot semantics expressed as pre-rebuild serving semantics."""
-    prefix = _ivf2_train_prefix(n_super, k2, dim, cell_cap).replace(
+    prefix = ivf2_train_prefix(n_super, k2, dim, cell_cap).replace(
         "FROM embeddings)", f"FROM embeddings WHERE {base_pred})")
     tail = f""",
 vall AS (SELECT vec_id, embedding::DOUBLE[] AS v,
@@ -1013,19 +956,6 @@ def q_ann_asof_ivf2_saved(spark: SparkSession, sf_dir: str) -> DataFrame:
     retrieval against yesterday's index state. The oracle replays
     train-on-base + assign-batch-through-anchors + serve against the
     pre-compaction postings union."""
-    import os
-
-    from left_join_on_timeout_spark.operators.ann_index import (
-        ivf2_index_append,
-        ivf2_index_build,
-        ivf2_index_load,
-        ivf2_index_rebuild,
-        ivf2_index_search,
-    )
-    from left_join_on_timeout_spark.operators.index_store import (
-        default_index_root,
-    )
-
     emb = load_table(spark, sf_dir, "embeddings")
     base = emb.where(F.col("vec_id") % 5 != 4)
     batch = emb.where(F.col("vec_id") % 5 == 4)
@@ -1056,10 +986,6 @@ def q_ann_top1_ivf2_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     fallback union). The bench-scale frac is 0.5 to keep small-SF cells
     populated; the fourth-decade A/B in PLANS.md runs the deployment
     frac."""
-    from left_join_on_timeout_spark.operators.similarity import (
-        ivf2_top_neighbor,
-    )
-
     emb = load_table(spark, sf_dir, "embeddings")
     return ivf2_top_neighbor(emb, n_super=_IVF2_SUPER, k2=_IVF2_K2,
                              train_frac=_IVF2_TRAIN_FRAC)
@@ -1164,8 +1090,6 @@ def q_ann_recall_srp(spark: SparkSession, sf_dir: str) -> DataFrame:
     12/6, 0.83 at 16/4 which would blow the bucket cap at larger SF).
     That cost/recall knob, measured rather than guessed, is what this
     query exists to expose."""
-    from left_join_on_timeout_spark.operators.sampling import sample_key
-
     emb = load_table(spark, sf_dir, "embeddings")
     v = fan_out(emb).select(
         "vec_id", as_double("embedding").alias("v"))
@@ -1179,7 +1103,6 @@ def q_ann_recall_srp(spark: SparkSession, sf_dir: str) -> DataFrame:
                         F.zip_with("sv", "v", lambda a, b: a * b),
                         F.lit(0.0), lambda acc, x: acc + x)
                         / (F.col("snrm") * F.col("nrm")), 6).alias("sim")))
-    from pyspark.sql import Window
     w = Window.partitionBy("s_id").orderBy(F.desc("sim"), F.asc("nbr"))
     truth = (sims.withColumn("rn", F.row_number().over(w))
              .where(F.col("rn") == 1).select("s_id", "nbr"))
@@ -1261,9 +1184,6 @@ def q_ann_recall_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     become directly comparable, measured not guessed. Truth pass is
     O(|S|·N) on the hash-gated sample, linear in the corpus.
     ``n_cells`` pinned to the static oracle's constant (ADVICE r5)."""
-    from left_join_on_timeout_spark.operators.sampling import sample_key
-    from pyspark.sql import Window
-
     emb = load_table(spark, sf_dir, "embeddings")
     v = fan_out(emb).select(
         "vec_id", as_double("embedding").alias("v"))
@@ -1326,7 +1246,6 @@ def q_pq_codes_recon(spark: SparkSession, sf_dir: str) -> DataFrame:
     reconstruction error — the PQ compression pass of an IVF-PQ index
     build (see operators.similarity.pq_codes for the 100 TB shape:
     broadcast codebook, per-row transform, zero data shuffles)."""
-    from left_join_on_timeout_spark.operators.similarity import pq_codes
     emb = load_table(spark, sf_dir, "embeddings")
     return pq_codes(emb, dim=_DIM, m=_PQ_M, k=_PQ_K)
 
@@ -1413,11 +1332,7 @@ def _ivfpq_trained_oracle(train_frac: float | None = None,
     (encode, cap, LUT, SDC argmin) is byte-identical to
     ``_IVFPQ_ORACLE``."""
     if train_frac is not None and train_frac < 1.0:
-        from left_join_on_timeout_spark.operators.sampling import (
-            HASH_WIDTH,
-            _threshold,
-        )
-        thr = _threshold(train_frac)
+        thr = gate_threshold(train_frac)
         gate = (f"WHERE substr(md5('{train_seed}#' || "
                 f"CAST(vec_id AS VARCHAR)), 1, {HASH_WIDTH}) < '{thr}'")
     else:
@@ -1461,9 +1376,6 @@ def q_ann_top1_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     lookups per pair) — the full compressed-domain search pipeline of a
     billion-vector deployment. The pairing stage shuffles (id, cell,
     4 bytes of codes) instead of 64-double vectors."""
-    from left_join_on_timeout_spark.operators.similarity import (
-        pq_sdc_top_neighbor,
-    )
     emb = load_table(spark, sf_dir, "embeddings")
     return pq_sdc_top_neighbor(emb, dim=_DIM, m=_PQ_M, k=_PQ_K)
 
@@ -1479,15 +1391,6 @@ def q_ann_top1_ivfpq_saved(spark: SparkSession, sf_dir: str) -> DataFrame:
     codes alone. Hash-matches the fused ``ann_top1_ivfpq`` oracle
     row-for-row — the lifecycle is a refactoring of the plan, not a new
     approximation."""
-    import os
-
-    from left_join_on_timeout_spark.operators.ann_index import (
-        pq_self_search_saved,
-    )
-    from left_join_on_timeout_spark.operators.index_store import (
-        default_index_root,
-    )
-
     emb = load_table(spark, sf_dir, "embeddings")
     root = default_index_root()
     path = os.path.join(
@@ -1510,9 +1413,6 @@ def q_ann_top1_ivfpq_trained(spark: SparkSession,
     ties, empty codewords keep their seed). The measured recall lift
     over the seed codebook is in PLANS.md; the bench-scale frac is 0.5
     like the IVF2 sampled twin."""
-    from left_join_on_timeout_spark.operators.similarity import (
-        pq_sdc_top_neighbor,
-    )
     emb = load_table(spark, sf_dir, "embeddings")
     return pq_sdc_top_neighbor(emb, dim=_DIM, m=_PQ_M, k=_PQ_K,
                                train_iters=1, train_frac=_PQ_TRAIN_FRAC)
@@ -1616,16 +1516,6 @@ def q_ann_filtered_pq_saved(spark: SparkSession,
     cutting candidate I/O in the compressed domain. Serving
     semantics: every corpus vector queries, neighbors come only from
     filtered postings, per-query SDC argmin."""
-    import os
-
-    from left_join_on_timeout_spark.operators.ann_index import (
-        pq_index_build,
-        pq_index_search,
-    )
-    from left_join_on_timeout_spark.operators.index_store import (
-        default_index_root,
-    )
-
     emb = load_table(spark, sf_dir, "embeddings")
     root = default_index_root()
     path = os.path.join(
@@ -1647,16 +1537,6 @@ def q_ann_pruned_pq_saved(spark: SparkSession,
     reads ONLY the probed directories. Pruning is pure routing —
     results are identical to the unpruned search (the oracle knows
     nothing about it)."""
-    import os
-
-    from left_join_on_timeout_spark.operators.ann_index import (
-        pq_index_build,
-        pq_index_search,
-    )
-    from left_join_on_timeout_spark.operators.index_store import (
-        default_index_root,
-    )
-
     emb = load_table(spark, sf_dir, "embeddings")
     root = default_index_root()
     path = os.path.join(
@@ -1682,16 +1562,6 @@ def q_ann_rerank_pq_saved(spark: SparkSession,
     measured recall at the rerank arm is 3-10× the raw-SDC arm
     (PLANS.md §trained-PQ A/B) while exact-scoring ~R rows per query
     instead of the whole cell."""
-    import os
-
-    from left_join_on_timeout_spark.operators.ann_index import (
-        pq_index_build,
-        pq_index_search,
-    )
-    from left_join_on_timeout_spark.operators.index_store import (
-        default_index_root,
-    )
-
     emb = load_table(spark, sf_dir, "embeddings")
     root = default_index_root()
     path = os.path.join(
@@ -1713,16 +1583,6 @@ def q_ann_top1_ivfpq_saved_probe2(spark: SparkSession,
     query side ranks two cells per vector (sim DESC, lowest cell on
     ties — the successive-argmax order) against the primary capped
     postings."""
-    import os
-
-    from left_join_on_timeout_spark.operators.ann_index import (
-        pq_index_build,
-        pq_index_search,
-    )
-    from left_join_on_timeout_spark.operators.index_store import (
-        default_index_root,
-    )
-
     emb = load_table(spark, sf_dir, "embeddings")
     root = default_index_root()
     path = os.path.join(
@@ -1863,12 +1723,6 @@ def q_ann_recall_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact-within-cell ceiling (0.198) at ~R exact scores per vector —
     which is why every real IVF-PQ deployment reranks. Truth pass is
     O(|S|·N) on the hash-gated sample."""
-    from left_join_on_timeout_spark.operators.sampling import sample_key
-    from left_join_on_timeout_spark.operators.similarity import (
-        pq_sdc_top_neighbor,
-    )
-    from pyspark.sql import Window
-
     emb = load_table(spark, sf_dir, "embeddings")
     v = fan_out(emb).select(
         "vec_id", as_double("embedding").alias("v"))
@@ -1989,8 +1843,6 @@ def q_embedding_norm_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     reduce the array in the same order, so the doubles agree
     bit-for-bit (the ``knn_brute_cosine`` parity surface) — and min/max
     are order-free; outputs floor-quantize."""
-    from left_join_on_timeout_spark.functions.vectors import dot
-
     emb = load_table(spark, sf_dir, "embeddings")
     v = F.transform("embedding", lambda x: x.cast("double"))
     nrm = F.sqrt(dot(v, v))
@@ -2084,11 +1936,6 @@ def q_bitext_margin_mine(spark: SparkSession, sf_dir: str) -> DataFrame:
     shaped, not a bench-only baseline. Neighborhood means divide
     exact decimal sums (summation-order-proof); every rank breaks
     ties on the partner id."""
-    from left_join_on_timeout_spark.operators.similarity import (
-        margin_mine_pairs,
-        srp_cross_candidates,
-    )
-
     emb = load_table(spark, sf_dir, "embeddings")
     x = emb.where(F.col("label") % 2 == 0)
     y = emb.where(F.col("label") % 2 == 1)
@@ -2202,20 +2049,6 @@ def q_bitext_margin_mine_saved(spark: SparkSession,
     side independently (build cap on y, probe-time self-cap on x —
     ≤ cap² candidates per bucket), the documented contract
     difference from the fused query's single global cap."""
-    import os
-
-    from left_join_on_timeout_spark.operators.index_store import (
-        default_index_root,
-    )
-    from left_join_on_timeout_spark.operators.srp_index import (
-        srp_index_build,
-        srp_index_probe,
-    )
-
-    from left_join_on_timeout_spark.operators.similarity import (
-        margin_mine_pairs,
-    )
-
     emb = load_table(spark, sf_dir, "embeddings")
     x = emb.where(F.col("label") % 2 == 0)
     y = emb.where(F.col("label") % 2 == 1)

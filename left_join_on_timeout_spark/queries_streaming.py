@@ -12,21 +12,101 @@ aggregation — both with watermark-evicted (bounded) state.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import math
+import os
+from decimal import Decimal
+
+from pyspark import StorageLevel
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from left_join_on_timeout_spark.operators.dedup import streaming_exact_dedup
-from left_join_on_timeout_spark.queries import query
+from left_join_on_timeout_spark.concurrency import overlap
+from left_join_on_timeout_spark.functions.text import gram_digest_set, words
+from left_join_on_timeout_spark.functions.vectors import (
+    as_double,
+    dot,
+    l2_norm,
+)
+from left_join_on_timeout_spark.operators.ann_index import (
+    ivf2_index_build,
+    ivf2_index_probe_hits,
+    ivf2_index_rebuild,
+    pq_index_build,
+    pq_index_probe_hits,
+)
+from left_join_on_timeout_spark.operators.dedup import (
+    DEFAULT_LSH_BUCKET_CAP,
+    band_rows,
+    minhash_signature,
+    shingle_sets,
+    streaming_exact_dedup,
+)
+from left_join_on_timeout_spark.operators.index_admin import (
+    refreshing_probe_sink,
+)
+from left_join_on_timeout_spark.operators.index_store import default_index_root
+from left_join_on_timeout_spark.operators.lsh_index import (
+    lsh_index_build,
+    lsh_index_probe,
+    lsh_index_rebuild,
+)
+from left_join_on_timeout_spark.operators.retrieval import (
+    DEFAULT_BM25_B,
+    DEFAULT_BM25_K1,
+)
+from left_join_on_timeout_spark.operators.srp_index import (
+    srp_index_build,
+    srp_index_probe,
+)
+from left_join_on_timeout_spark.operators.text_index import (
+    DuplicateIdsError,
+    contamination_screen,
+    text_index_append,
+    text_index_build,
+    text_index_load,
+    text_index_rebuild,
+)
+from left_join_on_timeout_spark.operators.timeout_join import (
+    dynamic_left_join_on_timeout,
+)
+from left_join_on_timeout_spark.queries_pipeline import (
+    DSIR_B,
+    DSIR_HEX,
+    DSIR_SQL,
+    SEM_DUP_THRESHOLD,
+    curation_fixtures,
+    curation_semantic_ctes,
+    dsir_tf_and_model,
+    r6,
+    release_tracked_persists,
+    tracked_index_path,
+)
 from left_join_on_timeout_spark.queries_sampling import (
     QUALITY_GATE_SQL,
     quality_gate,
 )
-from left_join_on_timeout_spark.sources.tables import load_table
+from left_join_on_timeout_spark.queries_text import (
+    CHUNK_SQL,
+    SWEEP_QUERIES,
+    chunk_windows,
+)
+from left_join_on_timeout_spark.registry import query
+from left_join_on_timeout_spark.sources.tables import events_split, load_table
+from left_join_on_timeout_spark.sql_lsh import (
+    BAND_SELECTS,
+    DIGEST_COLS,
+    SHINGLES_CTE,
+    SIG_COLS,
+)
 from left_join_on_timeout_spark.streaming.harness import (
     drain_stream,
     drain_two_streams,
     scratch_dir,
     with_flush_row,
+)
+from left_join_on_timeout_spark.streaming.timeout_join import (
+    semi_join_stream,
+    timeout_only_stream,
 )
 
 
@@ -154,11 +234,7 @@ def q_stream_timeout_only(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermarked stream-stream plan (outer join filtered to null-padded
     rows — stream-stream LEFT ANTI isn't supported, the filter drops
     matches before the sink). Same oracle as the batch ``timeout_only``."""
-    from left_join_on_timeout_spark.queries import _events_split
-    from left_join_on_timeout_spark.streaming.timeout_join import (
-        timeout_only_stream,
-    )
-    left, right = _events_split(spark, sf_dir)
+    left, right = events_split(spark, sf_dir)
     out = drain_two_streams(
         spark, left, right, on="user_id",
         build=lambda ls, rs: timeout_only_stream(
@@ -181,11 +257,7 @@ def q_stream_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``stream_timeout_only`` this partitions the left stream exactly —
     the reference's matched/timeout dichotomy as two driver-checked
     queries."""
-    from left_join_on_timeout_spark.queries import _events_split
-    from left_join_on_timeout_spark.streaming.timeout_join import (
-        semi_join_stream,
-    )
-    left, right = _events_split(spark, sf_dir)
+    left, right = events_split(spark, sf_dir)
     out = drain_two_streams(
         spark, left, right, on="user_id",
         build=lambda ls, rs: semi_join_stream(
@@ -231,12 +303,6 @@ def q_stream_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     return drain_stream(spark, docs, quality_gate)
 
 
-from left_join_on_timeout_spark.queries_text import (  # noqa: E402
-    CHUNK_SQL,
-    chunk_windows,
-)
-
-
 @query("stream_chunk_documents", CHUNK_SQL)
 def q_stream_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ingest-time chunking: the 64-word / stride-48 embedding-prep
@@ -248,22 +314,11 @@ def q_stream_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     return drain_stream(spark, docs, chunk_windows)
 
 
-from left_join_on_timeout_spark.sql_lsh import (  # noqa: E402
-    BAND_SELECTS as _BAND_SELECTS,
-    DIGEST_COLS as _DIGEST_COLS,
-    SHINGLES_CTE as _SHINGLES_CTE,
-    SIG_COLS as _SIG_COLS,
-)
-from left_join_on_timeout_spark.operators.dedup import (  # noqa: E402
-    DEFAULT_LSH_BUCKET_CAP,
-)
-
-
 @query("stream_incremental_probe", f"""
-WITH {_SHINGLES_CTE},
-hashed AS (SELECT doc_id, {_DIGEST_COLS} FROM sh),
-sig AS (SELECT doc_id, {_SIG_COLS} FROM hashed GROUP BY doc_id),
-bands AS ({_BAND_SELECTS}),
+WITH {SHINGLES_CTE},
+hashed AS (SELECT doc_id, {DIGEST_COLS} FROM sh),
+sig AS (SELECT doc_id, {SIG_COLS} FROM hashed GROUP BY doc_id),
+bands AS ({BAND_SELECTS}),
 idx AS (
   SELECT doc_id, band, h FROM (
     SELECT doc_id, band, h,
@@ -289,13 +344,6 @@ def q_stream_incremental_probe(spark: SparkSession,
     doc can hit the same index doc through several bands); its state is
     bounded by live candidate pairs, and at 100 TB a deployment would
     scope it with a watermark on arrival time."""
-    from left_join_on_timeout_spark.operators.dedup import (
-        band_rows,
-        minhash_signature,
-    )
-    from pyspark import StorageLevel
-    from pyspark.sql import Window
-
     docs = load_table(spark, sf_dir, "documents")
     corpus = docs.where(F.col("doc_id") % 10 != 0)
     sig_old = minhash_signature(corpus, "doc_id", "text")
@@ -320,11 +368,6 @@ def q_stream_incremental_probe(spark: SparkSession,
     return drain_stream(spark, batch, probe)
 
 
-from left_join_on_timeout_spark.queries_pipeline import (  # noqa: E402
-    DSIR_SQL,
-)
-
-
 @query("stream_dsir_score", DSIR_SQL)
 def q_stream_dsir_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Train-batch / apply-stream: the DSIR importance model (256
@@ -338,19 +381,6 @@ def q_stream_dsir_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle — per-arriving-doc scoring at ingest throughput. The
     drained rows are bit-identical to the batch scorer's (same rounded
     decimal model, same exact sums), which is the oracle."""
-    from decimal import Decimal
-
-    from left_join_on_timeout_spark.functions.text import words
-    from left_join_on_timeout_spark.queries_pipeline import (
-        _DSIR_HEX,
-        _r6,
-        dsir_tf_and_model,
-    )
-
-    import math
-
-    from left_join_on_timeout_spark.queries_pipeline import _DSIR_B
-
     tf, lr = dsir_tf_and_model(spark, sf_dir)
     model = {r["b"]: r["lr"] for r in lr.collect()}  # O(256) snapshot
     pairs: list = []
@@ -369,8 +399,8 @@ def q_stream_dsir_score(spark: SparkSession, sf_dir: str) -> DataFrame:
                    F.lit(0)).cast("bigint").alias("tt"))
         .collect()[0])
     floor = Decimal(math.floor(
-        (math.log(1.0 / (tots["tt"] + _DSIR_B))
-         - math.log(1.0 / (tots["tr"] + _DSIR_B)))
+        (math.log(1.0 / (tots["tt"] + DSIR_B))
+         - math.log(1.0 / (tots["tr"] + DSIR_B)))
         * 1000000 + 0.5)) / Decimal(1000000)
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -381,14 +411,14 @@ def q_stream_dsir_score(spark: SparkSession, sf_dir: str) -> DataFrame:
             toks,
             lambda t: F.coalesce(
                 F.element_at(
-                    lr_map, F.substring(F.md5(t), 1, _DSIR_HEX)),
+                    lr_map, F.substring(F.md5(t), 1, DSIR_HEX)),
                 F.lit(floor).cast("decimal(25,6)")))
         total = F.aggregate(
             vals,
             F.lit(Decimal(0)).cast("decimal(38,6)"),
             lambda acc, x: acc + x)
         n_tok = F.size(toks).cast("bigint")
-        mean = _r6(total.cast("double") / n_tok)
+        mean = r6(total.cast("double") / n_tok)
         return stream.select(
             "doc_id",
             n_tok.alias("n_tok"),
@@ -440,12 +470,7 @@ def q_dynamic_timeout_left_join(spark: SparkSession,
     equi-key join whose range bounds read the left row (fuzz-verified
     against a per-row brute-force evaluator over 200+ random
     interleavings, ``tests/test_dynamic_window_fuzz.py``)."""
-    from left_join_on_timeout_spark.operators.timeout_join import (
-        dynamic_left_join_on_timeout,
-    )
-    from left_join_on_timeout_spark.queries import _events_split
-
-    left, right = _events_split(spark, sf_dir)
+    left, right = events_split(spark, sf_dir)
     wmin = _dyn_window_min(F.col("user_id"))
     out = dynamic_left_join_on_timeout(
         left.select("user_id", "event_id", "ts"),
@@ -467,9 +492,7 @@ def q_stream_dynamic_timeout_left_join(spark: SparkSession,
     timeout rows for a tight-window key still emit only at its own
     window's edge because the CASE fails beyond it. Same oracle as the
     batch form."""
-    from left_join_on_timeout_spark.queries import _events_split
-
-    left, right = _events_split(spark, sf_dir)
+    left, right = events_split(spark, sf_dir)
 
     def build(ls: DataFrame, rs: DataFrame) -> DataFrame:
         l = ls.withWatermark("ts", "0.1 seconds").alias("l")
@@ -620,16 +643,6 @@ def q_stream_ann_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded by batch × own-cell postings. Top-1 reduction (a stateful
     agg under streaming semantics) belongs downstream in batch, as
     with the LSH twin's exact-Jaccard verify."""
-    import os
-
-    from left_join_on_timeout_spark.operators.ann_index import (
-        ivf2_index_build,
-        ivf2_index_probe_hits,
-    )
-    from left_join_on_timeout_spark.operators.index_store import (
-        default_index_root,
-    )
-
     emb = load_table(spark, sf_dir, "embeddings")
     corpus = emb.where(F.col("vec_id") % 10 != 0)
     batch = (emb.where(F.col("vec_id") % 10 == 0)
@@ -766,16 +779,6 @@ def q_stream_pq_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     network cost is (cell, m codes) per candidate, the PQ memory
     contract extended to ingest. Downstream exact rerank belongs in
     batch, as with the LSH and IVF2 ingest screens."""
-    import os
-
-    from left_join_on_timeout_spark.operators.ann_index import (
-        pq_index_build,
-        pq_index_probe_hits,
-    )
-    from left_join_on_timeout_spark.operators.index_store import (
-        default_index_root,
-    )
-
     emb = load_table(spark, sf_dir, "embeddings")
     corpus = emb.where(F.col("vec_id") % 10 != 0)
     batch = (emb.where(F.col("vec_id") % 10 == 0)
@@ -808,19 +811,6 @@ def q_stream_ann_probe_refresh(spark: SparkSession,
     ``postings_v2`` through a bumped manifest: the oracle is the
     UNCHANGED ``stream_ann_probe`` replay, and a match proves both the
     re-resolution plumbing and serve-after-rebuild row equality."""
-    import os
-
-    from left_join_on_timeout_spark.operators.ann_index import (
-        ivf2_index_build,
-        ivf2_index_rebuild,
-    )
-    from left_join_on_timeout_spark.operators.index_store import (
-        default_index_root,
-    )
-    from left_join_on_timeout_spark.operators.index_admin import (
-        refreshing_probe_sink,
-    )
-
     emb = load_table(spark, sf_dir, "embeddings")
     corpus = emb.where(F.col("vec_id") % 10 != 0)
     batch = (emb.where(F.col("vec_id") % 10 == 0)
@@ -843,21 +833,11 @@ def _stream_lsh_probe_sql() -> str:
     buckets — the `cand` stage of the incremental-probe oracle, pairs
     only (the streaming probe emits candidates; verification is the
     batch consumer's stage)."""
-    from left_join_on_timeout_spark.operators.dedup import (
-        DEFAULT_LSH_BUCKET_CAP,
-    )
-    from left_join_on_timeout_spark.queries_dedup import (
-        _BAND_SELECTS,
-        _DIGEST_COLS,
-        _SHINGLES_CTE,
-        _SIG_COLS,
-    )
-
     return f"""
-WITH {_SHINGLES_CTE},
-hashed AS (SELECT doc_id, {_DIGEST_COLS} FROM sh),
-sig AS (SELECT doc_id, {_SIG_COLS} FROM hashed GROUP BY doc_id),
-bands AS ({_BAND_SELECTS}),
+WITH {SHINGLES_CTE},
+hashed AS (SELECT doc_id, {DIGEST_COLS} FROM sh),
+sig AS (SELECT doc_id, {SIG_COLS} FROM hashed GROUP BY doc_id),
+bands AS ({BAND_SELECTS}),
 idx AS (
   SELECT doc_id, band, h FROM (
     SELECT doc_id, band, h,
@@ -884,19 +864,6 @@ def q_stream_lsh_probe_refresh(spark: SparkSession,
     banding against the v1-content (rebuild row-identity makes v2
     equal — pinned in pytest), so a match proves the re-resolution
     plumbing AND probe-after-rebuild row equality on the dedup tier."""
-    import os
-
-    from left_join_on_timeout_spark.operators.index_store import (
-        default_index_root,
-    )
-    from left_join_on_timeout_spark.operators.index_admin import (
-        refreshing_probe_sink,
-    )
-    from left_join_on_timeout_spark.operators.lsh_index import (
-        lsh_index_build,
-        lsh_index_rebuild,
-    )
-
     docs = load_table(spark, sf_dir, "documents")
     old_docs = docs.where(F.col("doc_id") % 10 != 0)
     new_docs = (docs.where(F.col("doc_id") % 10 == 0)
@@ -919,12 +886,6 @@ def _stream_text_probe_sql() -> str:
     oracle WITHOUT its top-k cut (the streaming probe emits every
     scored (query, doc) pair; ranking is the batch consumer's
     stage)."""
-    from left_join_on_timeout_spark.queries_text import (
-        _BM25_B,
-        _BM25_K1,
-        SWEEP_QUERIES,
-    )
-
     vals = ", ".join(f"({qid}, '{t}')"
                      for qid, terms in SWEEP_QUERIES for t in terms)
     all_terms = sorted({t for _, terms in SWEEP_QUERIES for t in terms})
@@ -947,9 +908,9 @@ ndft AS (SELECT term, CAST(count(DISTINCT doc_id) AS DOUBLE) AS df
 nsc AS (SELECT q.query_id, ntf.doc_id,
                round(ln((c.n_docs - ndft.df + 0.5)
                         / (ndft.df + 0.5) + 1.0), 6)
-               * ntf.tf * {_BM25_K1 + 1.0}
-               / (ntf.tf + {_BM25_K1} * ({1.0 - _BM25_B}
-                  + {_BM25_B} * ndl.dl / c.avgdl)) AS s
+               * ntf.tf * {DEFAULT_BM25_K1 + 1.0}
+               / (ntf.tf + {DEFAULT_BM25_K1} * ({1.0 - DEFAULT_BM25_B}
+                  + {DEFAULT_BM25_B} * ndl.dl / c.avgdl)) AS s
         FROM ntf
         JOIN qdef q USING (term)
         JOIN ndft USING (term)
@@ -978,20 +939,6 @@ def q_stream_text_probe_refresh(spark: SparkSession,
     The oracle replays the sweep against the corpus, so a match
     proves the re-resolution plumbing AND serve-after-rebuild value
     equality (stats refresh included) on the lexical tier."""
-    import os
-
-    from left_join_on_timeout_spark.operators.index_store import (
-        default_index_root,
-    )
-    from left_join_on_timeout_spark.operators.index_admin import (
-        refreshing_probe_sink,
-    )
-    from left_join_on_timeout_spark.operators.text_index import (
-        text_index_build,
-        text_index_rebuild,
-    )
-    from left_join_on_timeout_spark.queries_text import SWEEP_QUERIES
-
     docs = load_table(spark, sf_dir, "documents")
     root = default_index_root()
     path = os.path.join(
@@ -1058,11 +1005,6 @@ def q_stream_contamination_screen(spark: SparkSession,
     NULL-text candidates are covered by the oracle, not by dataset
     accident (the zero-gram arm also stays a semantics test in
     tests/test_text_index.py)."""
-    from left_join_on_timeout_spark.functions.text import gram_digest_set
-    from left_join_on_timeout_spark.operators.text_index import (
-        contamination_screen,
-    )
-
     docs = load_table(spark, sf_dir, "documents")
     bench = gram_digest_set(docs.where(F.col("doc_id") % 20 == 0))
     arrivals = (docs.where(F.col("doc_id") % 10 == 5)
@@ -1087,11 +1029,7 @@ def _stream_curation_sql() -> str:
     with at least one gram must be serving from the standing gram
     index after the stream (the per-batch append landed), so
     ``n_indexed`` replays as "admitted ∧ gram-bearing"."""
-    from left_join_on_timeout_spark.queries_pipeline import (
-        _curation_semantic_ctes,
-    )
-
-    return f"""{_curation_semantic_ctes()},
+    return f"""{curation_semantic_ctes()},
 anidx AS (SELECT a.source, count(*) AS n
           FROM fin f JOIN arr a ON a.doc_id = f.doc_id
           WHERE a.kind <> 'sem'
@@ -1144,45 +1082,10 @@ def q_stream_curation_ingest(spark: SparkSession,
     corpus size; results are batch-split independent because probes
     only ever face the STANDING indexes, so the oracle replays the
     union regardless of how the stream chopped the arrivals."""
-    import os
-
-    from pyspark import StorageLevel
-
-    from left_join_on_timeout_spark.functions.vectors import (
-        as_double,
-        dot,
-        l2_norm,
-    )
-    from left_join_on_timeout_spark.operators.index_store import (
-        default_index_root,
-    )
-    from left_join_on_timeout_spark.operators.dedup import shingle_sets
-    from left_join_on_timeout_spark.operators.lsh_index import (
-        lsh_index_build,
-        lsh_index_probe,
-    )
-    from left_join_on_timeout_spark.operators.srp_index import (
-        srp_index_build,
-        srp_index_probe,
-    )
-    from left_join_on_timeout_spark.operators.text_index import (
-        DuplicateIdsError,
-        contamination_screen,
-        text_index_append,
-        text_index_build,
-        text_index_load,
-    )
-    from left_join_on_timeout_spark.queries_pipeline import (
-        SEM_DUP_THRESHOLD,
-        _curation_fixtures,
-        release_tracked_persists,
-        tracked_index_path,
-    )
-
     # release the previous curation-family invocation's persists
     # (VERDICT r14 wrong #3) before the fixtures register this one's
     release_tracked_persists()
-    fx = _curation_fixtures(spark, sf_dir)
+    fx = curation_fixtures(spark, sf_dir)
     bench, arrivals = fx["bench"], fx["arrivals"]
     emb, standing = fx["emb"], fx["standing"]
     emb_standing = fx["emb_standing"]
@@ -1193,7 +1096,6 @@ def q_stream_curation_ingest(spark: SparkSession,
     gpath = tracked_index_path(spark, root, "strgix_" + base)
     # three independent standing-index builds (disjoint roots) —
     # overlap them from driver threads (guide §2.6)
-    from left_join_on_timeout_spark.concurrency import overlap
     lidx, sidx, gidx = overlap([
         lambda: lsh_index_build(standing, lpath),
         lambda: srp_index_build(emb_standing, spath, dim=64),

@@ -11,23 +11,63 @@ final scores are rounded to 6 dp on both sides.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import os
+
+from pyspark import StorageLevel
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from left_join_on_timeout_spark.concurrency import overlap
 from left_join_on_timeout_spark.functions.text import (
     BPE_TOKEN_RE,
     LANG_MARKERS,
     STOPWORDS,
     fingerprint,
+    gram_digest_set,
+    gram_rows,
     lang_id,
     n_words,
     quality_score,
     token_count,
-    gram_digest_set,
-    gram_rows,
     words,
 )
-from left_join_on_timeout_spark.queries import query
+from left_join_on_timeout_spark.functions.vectors import (
+    as_double,
+    dot,
+    l2_norm,
+)
+from left_join_on_timeout_spark.operators.ann_index import (
+    ivf2_index_build,
+    ivf2_index_load,
+    ivf2_index_search,
+)
+from left_join_on_timeout_spark.operators.index_admin import (
+    delete_from_indexes,
+)
+from left_join_on_timeout_spark.operators.index_store import default_index_root
+from left_join_on_timeout_spark.operators.ranking import global_rank
+from left_join_on_timeout_spark.operators.retrieval import (
+    DEFAULT_BM25_B,
+    DEFAULT_BM25_K1,
+    bm25_scores,
+    rrf_fuse,
+    top_k_ranked,
+)
+from left_join_on_timeout_spark.operators.text_index import (
+    text_index_append,
+    text_index_build,
+    text_index_delete,
+    text_index_dup_stats,
+    text_index_gram_probe,
+    text_index_gram_probe_many,
+    text_index_load,
+    text_index_rebuild,
+    text_index_search,
+    text_index_search_many,
+)
+from left_join_on_timeout_spark.partitioning import fan_out
+from left_join_on_timeout_spark.queries_similarity import ivf2_train_prefix
+from left_join_on_timeout_spark.registry import query
 from left_join_on_timeout_spark.sources.tables import load_table
 from left_join_on_timeout_spark.streaming.harness import drain_stream
 
@@ -43,7 +83,7 @@ _AVG_WLEN = (f"length(regexp_replace({_T_NORM}, '\\s+', '', 'g'))"
              f" / greatest({_N_WORDS}, 1)")
 
 # quality_score mirror — same operation order as functions.text.quality_score
-_QUALITY = f"""(
+QUALITY_SQL = f"""(
   0.3 * least(CAST({_N_WORDS} AS DOUBLE) / 100.0, 1.0)
 + 0.3 * greatest(0.0, 1.0 - 4.0 * ({_PUNCT_RATIO}))
 + 0.2 * least(3.0 * CAST({_STOP_CNT} AS DOUBLE)
@@ -88,7 +128,7 @@ pred AS (
 SELECT doc_id,
        {_N_WORDS} AS n_words,
        {_N_TOKENS} AS n_tokens,
-       round({_QUALITY}, 6) AS quality
+       round({QUALITY_SQL}, 6) AS quality
 FROM documents
 """)
 def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -122,7 +162,7 @@ SELECT source,
        count(DISTINCT md5(regexp_replace({_T_NORM}, '\\s+', ' ', 'g')))
          AS n_unique,
        CAST(sum({_N_TOKENS}) AS BIGINT) AS total_tokens,
-       CAST(sum(CAST(round({_QUALITY}, 6) AS DECIMAL(25,6))) AS DOUBLE)
+       CAST(sum(CAST(round({QUALITY_SQL}, 6) AS DECIMAL(25,6))) AS DOUBLE)
          AS sum_quality
 FROM documents
 GROUP BY source
@@ -169,17 +209,12 @@ def q_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     tf multiply, so ranking compares bit-identical doubles (int x
     rounded-double is one IEEE multiply in both engines); ties break on
     the term string."""
-    from left_join_on_timeout_spark.functions.text import words
-    from left_join_on_timeout_spark.partitioning import fan_out
-    from pyspark.sql import Window
-
     docs = load_table(spark, sf_dir, "documents")
     toks = fan_out(docs).select(
         "doc_id", F.explode(words("text")).alias("term"))
     # tokenize once: tf is persisted and df derives from it — one row
     # per (doc, term) in tf means count(*) per term IS the distinct-doc
     # frequency, so the explode/tokenize subtree isn't planned twice
-    from pyspark import StorageLevel
     tf = toks.groupBy("doc_id", "term").agg(
         F.count(F.lit(1)).alias("tf")).persist(StorageLevel.MEMORY_AND_DISK)
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
@@ -271,8 +306,6 @@ def q_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side semi-join against every training shard: one shuffle total
     (the per-doc count), nothing corpus-quadratic. Grams travel as md5
     digests, not strings."""
-    from left_join_on_timeout_spark.partitioning import fan_out
-
     docs = load_table(spark, sf_dir, "documents")
     grams = (gram_rows(fan_out(docs), "text", 5, id_col="doc_id")
              .select("doc_id", F.md5("g").alias("h"))
@@ -327,9 +360,6 @@ def q_repetition_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     token/bigram streams (both partial-aggregate map-side before their
     shuffle); flags compare the 6-dp-rounded values so the engines
     agree at thresholds."""
-    from left_join_on_timeout_spark.functions.text import words
-    from left_join_on_timeout_spark.partitioning import fan_out
-
     docs = fan_out(load_table(spark, sf_dir, "documents"))
     tf = (docs.select("doc_id", F.explode(words("text")).alias("term"))
           .groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf")))
@@ -377,10 +407,6 @@ def q_crossdoc_dup_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     formulation would scan and shingle the corpus twice (the two
     aggregate subtrees canonicalize differently, so exchange reuse
     never kicks in)."""
-    from pyspark.sql import Window
-
-    from left_join_on_timeout_spark.partitioning import fan_out
-
     docs = load_table(spark, sf_dir, "documents")
     grams = (gram_rows(fan_out(docs), "text", 8, id_col="doc_id")
              .select("doc_id", F.md5("g").alias("h"))
@@ -410,8 +436,6 @@ def chunk_windows(docs: DataFrame) -> DataFrame:
     """The 64-word / stride-48 chunker as a stateless transform (shared
     by the batch query and its streaming twin) — all row-local array
     ops, zero shuffles; chunks identified by content hash."""
-    from left_join_on_timeout_spark.functions.text import words
-
     w = words("text")
     out = docs.select(
         "doc_id", w.alias("w"),
@@ -432,8 +456,6 @@ def q_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     chunker. Chunk starts come from ``sequence(1, n, 48)`` and the
     window from ``slice`` — see :func:`chunk_windows`; one scan, zero
     shuffles."""
-    from left_join_on_timeout_spark.partitioning import fan_out
-
     return chunk_windows(fan_out(load_table(spark, sf_dir, "documents")))
 
 
@@ -456,9 +478,6 @@ def q_text_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     the entropy sum) over the exploded token stream; the per-term
     p·ln p values are identical doubles in both engines, and the final
     sum is rounded to 6 dp to absorb association-order noise."""
-    from left_join_on_timeout_spark.functions.text import words
-    from left_join_on_timeout_spark.partitioning import fan_out
-
     docs = load_table(spark, sf_dir, "documents")
     toks = fan_out(docs).select(
         "doc_id", F.explode(words("text")).alias("term"))
@@ -507,10 +526,6 @@ def q_bigram_pmi_top(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixed-order IEEE expression over exact counts, rounded before the
     ranking, so both engines order identically (gram string breaks
     ties)."""
-    from pyspark import StorageLevel
-
-    from left_join_on_timeout_spark.partitioning import fan_out
-
     docs = load_table(spark, sf_dir, "documents")
     toks = fan_out(docs).select(F.explode(words("text")).alias("term"))
     uni = (toks.groupBy("term").agg(F.count(F.lit(1)).alias("c"))
@@ -579,9 +594,6 @@ def q_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     the {_CMS_D} rows, overestimate ≥ 0 always (CMS never
     undercounts). Hash functions are md5-derived, so the grid — and
     every estimate — is bit-identical in the oracle."""
-    from left_join_on_timeout_spark.partitioning import fan_out
-    from pyspark import StorageLevel
-
     docs = load_table(spark, sf_dir, "documents")
     toks = fan_out(docs).select(F.explode(words("text")).alias("term"))
     tf = (toks.groupBy("term").agg(F.count(F.lit(1)).alias("c"))
@@ -636,8 +648,6 @@ def q_feature_hash_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the sorted bucket:count pairs) so the oracle verifies every
     vector exactly. Two partial-aggregated shuffles, nothing
     vocabulary-scale."""
-    from left_join_on_timeout_spark.partitioning import fan_out
-
     docs = load_table(spark, sf_dir, "documents")
     toks = fan_out(docs).select(
         "doc_id", F.explode(words("text")).alias("term"))
@@ -709,11 +719,6 @@ def q_dup_span_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
     parallel at 100 TB. Only digests and int positions ever shuffle;
     the ``nd >= 2`` filter cuts the relation before the per-doc pass.
     Output is int-exact, so the oracle hash is arithmetic-free."""
-    from pyspark.sql import Window
-
-    from left_join_on_timeout_spark.functions.text import words
-    from left_join_on_timeout_spark.partitioning import fan_out
-
     k = _SPAN_K
     docs = load_table(spark, sf_dir, "documents")
     toks = (fan_out(docs)
@@ -789,11 +794,6 @@ def q_dup_span_removal_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     no duplicated span keep 100%. Same one-shingle-pass / one
     digest-window plan as the detector, plus a per-doc rollup and a
     left join back to per-doc word counts."""
-    from pyspark.sql import Window
-
-    from left_join_on_timeout_spark.functions.text import words
-    from left_join_on_timeout_spark.partitioning import fan_out
-
     k = _SPAN_K
     docs = load_table(spark, sf_dir, "documents")
     toks = fan_out(docs).select("doc_id", words("text").alias("w"))
@@ -865,9 +865,6 @@ def q_oov_rate_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-vocabulary-sized, so no single-partition sort anywhere),
     whose top-V is a broadcast table, and a map-side left join — the
     corpus never shuffles for the vocabulary lookup."""
-    from left_join_on_timeout_spark.operators.ranking import global_rank
-    from left_join_on_timeout_spark.partitioning import fan_out
-
     docs = load_table(spark, sf_dir, "documents")
     toks = fan_out(docs).select(
         "doc_id", F.explode(words("text")).alias("term"))
@@ -911,10 +908,6 @@ def q_novelty_score_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     window-free join back — the same single-shuffle discipline as the
     crossdoc query; the novelty test is ``first_doc = doc_id``, so no
     per-pair or per-position state exists anywhere."""
-    from pyspark.sql import Window
-
-    from left_join_on_timeout_spark.partitioning import fan_out
-
     docs = load_table(spark, sf_dir, "documents")
     grams = (gram_rows(fan_out(docs), "text", 8, id_col="doc_id")
              .select("doc_id", F.md5("g").alias("h"))
@@ -992,8 +985,6 @@ def q_source_length_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
     two running-sum windows keyed by source and one max-aggregate.
     Determinism: CDF values are exact integer ratios; the output
     floor-quantizes (no round ties)."""
-    from pyspark.sql import Window
-
     docs = load_table(spark, sf_dir, "documents")
     vals = docs.select(F.col("n_chars").alias("v")).distinct()
     srcs = docs.groupBy("source").agg(
@@ -1025,7 +1016,7 @@ def q_source_length_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query("source_influence_loo", f"""
 WITH q AS (
-  SELECT source, CAST(round({_QUALITY}, 3) AS DECIMAL(12,3)) AS q3
+  SELECT source, CAST(round({QUALITY_SQL}, 3) AS DECIMAL(12,3)) AS q3
   FROM documents),
 per AS (SELECT source,
                CAST(count(*) AS BIGINT) AS n_s,
@@ -1109,10 +1100,6 @@ def q_source_term_logodds(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs on bit-identical doubles mirrored textually, and the z
     floor-quantizes BEFORE ranking so ordering ties resolve on the
     term string identically in both engines."""
-    from pyspark.sql import Window
-
-    from left_join_on_timeout_spark.partitioning import fan_out
-
     docs = load_table(spark, sf_dir, "documents")
     toks = fan_out(docs).select(
         "source", F.explode(words("text")).alias("term"))
@@ -1143,7 +1130,7 @@ def q_source_term_logodds(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query("length_quality_corr", f"""
 WITH q AS (
   SELECT CAST(n_chars AS BIGINT) AS x,
-         CAST(round({_QUALITY}, 3) AS DECIMAL(12,3)) AS y
+         CAST(round({QUALITY_SQL}, 3) AS DECIMAL(12,3)) AS y
   FROM documents),
 s AS (
   SELECT CAST(count(*) AS BIGINT) AS n,
@@ -1195,7 +1182,7 @@ def q_length_quality_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query("corpus_health_dashboard", f"""
 WITH q AS (
   SELECT doc_id, source,
-         CAST(round({_QUALITY}, 3) AS DECIMAL(12,3)) AS q3,
+         CAST(round({QUALITY_SQL}, 3) AS DECIMAL(12,3)) AS q3,
          CAST(len(regexp_split_to_array({_T_NORM}, '\\s+')) AS BIGINT)
            AS n_words,
          md5(regexp_replace({_T_NORM}, '\\s+', ' ', 'g')) AS cfp
@@ -1239,8 +1226,6 @@ def q_corpus_health_dashboard(spark: SparkSession,
 # --- BM25 text retrieval (round 10) -----------------------------------------
 
 BM25_TERMS = ("spark", "join", "window")
-_BM25_K1 = 1.2
-_BM25_B = 0.75
 
 # Shared normalized-tokenization BM25 WITH-chain (round 12 — the FUSED
 # arm now tokenizes through the shared normalizer too, closing VERDICT
@@ -1266,9 +1251,9 @@ ndft AS (SELECT term, CAST(count(DISTINCT doc_id) AS DOUBLE) AS df
 nsc AS (SELECT ntf.doc_id,
                round(ln((c.n_docs - ndft.df + 0.5)
                         / (ndft.df + 0.5) + 1.0), 6)
-               * ntf.tf * {_BM25_K1 + 1.0}
-               / (ntf.tf + {_BM25_K1} * ({1.0 - _BM25_B}
-                  + {_BM25_B} * ndl.dl / c.avgdl)) AS s
+               * ntf.tf * {DEFAULT_BM25_K1 + 1.0}
+               / (ntf.tf + {DEFAULT_BM25_K1} * ({1.0 - DEFAULT_BM25_B}
+                  + {DEFAULT_BM25_B} * ndl.dl / c.avgdl)) AS s
         FROM ntf
         JOIN ndft USING (term)
         JOIN ndl ON ndl.doc_id = ntf.doc_id, ncorp c),
@@ -1295,14 +1280,9 @@ def q_text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounds to 6 dp where it enters the score and the per-doc sum
     rounds to 6 dp before ranking — the engine-portable discipline of
     the TF-IDF twins."""
-    from left_join_on_timeout_spark.operators.retrieval import (
-        bm25_scores,
-        top_k_ranked,
-    )
-
     docs = load_table(spark, sf_dir, "documents")
     scored = bm25_scores(docs, list(BM25_TERMS),
-                         k1=_BM25_K1, b=_BM25_B)
+                         k1=DEFAULT_BM25_K1, b=DEFAULT_BM25_B)
     return top_k_ranked(scored, "bm25", "doc_id", 20)
 
 
@@ -1353,21 +1333,11 @@ def q_hybrid_search_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     brute-force baseline for oracle checkability — at deployment
     scale it swaps for ``ann_index.ivf2_index_search`` over the saved
     index, same (id, rank) contract."""
-    from left_join_on_timeout_spark.functions.vectors import (
-        as_double,
-        dot,
-        l2_norm,
-    )
-    from left_join_on_timeout_spark.operators.retrieval import (
-        bm25_scores,
-        rrf_fuse,
-        top_k_ranked,
-    )
-
     docs = load_table(spark, sf_dir, "documents")
     emb = load_table(spark, sf_dir, "embeddings")
     text_arm = top_k_ranked(
-        bm25_scores(docs, list(BM25_TERMS), k1=_BM25_K1, b=_BM25_B),
+        bm25_scores(docs, list(BM25_TERMS), k1=DEFAULT_BM25_K1,
+                    b=DEFAULT_BM25_B),
         "bm25", "doc_id", 20)
     qv = (emb.where(F.col("vec_id") == 0)
           .select(as_double("embedding").alias("qv")))
@@ -1414,26 +1384,13 @@ def q_text_bm25_saved(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the lifecycle (the fused arm re-tokenizes per call; this one
     serves from the standing index with zero corpus passes).
     The global top-k stays a distributed TakeOrdered (plan-gated)."""
-    import os
-
-    from left_join_on_timeout_spark.operators.index_store import (
-        default_index_root,
-    )
-    from left_join_on_timeout_spark.operators.retrieval import (
-        top_k_ranked,
-    )
-    from left_join_on_timeout_spark.operators.text_index import (
-        text_index_build,
-        text_index_search,
-    )
-
     docs = load_table(spark, sf_dir, "documents")
     path = os.path.join(
         default_index_root(),
         "textidx_" + os.path.basename(os.path.normpath(sf_dir)))
     index = text_index_build(docs, path)
     scored = text_index_search(index, list(BM25_TERMS),
-                               k1=_BM25_K1, b=_BM25_B)
+                               k1=DEFAULT_BM25_K1, b=DEFAULT_BM25_B)
     return top_k_ranked(scored, "bm25", "doc_id", 20)
 
 
@@ -1443,15 +1400,11 @@ def _hybrid_saved_oracle() -> str:
     """DuckDB twin of the fully-SAVED hybrid stack (VERDICT r10
     missing #2): the lexical arm replays the normalized-tokenization
     BM25 build (``NBM25_CTES``) and the vector arm replays the IVF2
-    index build + serve — ``queries_similarity._ivf2_train_prefix``'s
+    index build + serve — ``queries_similarity.ivf2_train_prefix``'s
     training chain, then vec 0's probed (sid, sub) cell joined against
     the capped postings with self excluded — before the two (id, rank)
     heads fuse through the standard RRF sum."""
-    from left_join_on_timeout_spark.queries_similarity import (
-        _ivf2_train_prefix,
-    )
-
-    vec_ctes = _ivf2_train_prefix(8, 8).replace("\nWITH ", ",\n", 1)
+    vec_ctes = ivf2_train_prefix(8, 8).replace("\nWITH ", ",\n", 1)
     return f"""
 WITH {NBM25_CTES},
 tarm AS (SELECT doc_id, rank FROM (
@@ -1504,26 +1457,6 @@ def q_hybrid_search_rrf_saved(spark: SparkSession,
     the RRF join touches ≤ 40 rows regardless of corpus size. Unlike
     ``hybrid_search_rrf``'s brute-force baseline the vector arm is
     honest ANN: candidates come from the query's probed cell only."""
-    import os
-
-    from left_join_on_timeout_spark.operators.ann_index import (
-        ivf2_index_build,
-        ivf2_index_search,
-    )
-    from left_join_on_timeout_spark.operators.index_store import (
-        default_index_root,
-    )
-    from left_join_on_timeout_spark.operators.retrieval import (
-        rrf_fuse,
-        top_k_ranked,
-    )
-    from left_join_on_timeout_spark.operators.text_index import (
-        text_index_build,
-        text_index_search,
-    )
-
-    from left_join_on_timeout_spark.concurrency import overlap
-
     docs = load_table(spark, sf_dir, "documents")
     emb = load_table(spark, sf_dir, "embeddings")
     root = default_index_root()
@@ -1538,7 +1471,8 @@ def q_hybrid_search_rrf_saved(spark: SparkSession,
     ])
     text_arm = top_k_ranked(
         text_index_search(tidx,
-                          list(BM25_TERMS), k1=_BM25_K1, b=_BM25_B),
+                          list(BM25_TERMS), k1=DEFAULT_BM25_K1,
+                          b=DEFAULT_BM25_B),
         "bm25", "doc_id", 20)
     vec_arm = (ivf2_index_search(emb.where(F.col("vec_id") == 0),
                                  vidx, k=20)
@@ -1582,9 +1516,9 @@ ndft AS (SELECT term, CAST(count(DISTINCT doc_id) AS DOUBLE) AS df
 nsc AS (SELECT q.query_id, ntf.doc_id,
                round(ln((c.n_docs - ndft.df + 0.5)
                         / (ndft.df + 0.5) + 1.0), 6)
-               * ntf.tf * {_BM25_K1 + 1.0}
-               / (ntf.tf + {_BM25_K1} * ({1.0 - _BM25_B}
-                  + {_BM25_B} * ndl.dl / c.avgdl)) AS s
+               * ntf.tf * {DEFAULT_BM25_K1 + 1.0}
+               / (ntf.tf + {DEFAULT_BM25_K1} * ({1.0 - DEFAULT_BM25_B}
+                  + {DEFAULT_BM25_B} * ndl.dl / c.avgdl)) AS s
         FROM ntf
         JOIN qdef q USING (term)
         JOIN ndft USING (term)
@@ -1620,18 +1554,6 @@ def q_text_bm25_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     an equi-join on term and aggregate per (query, doc). Top-k per
     query is a window PARTITIONED by query_id — parallel across
     queries, never a global single-partition sort."""
-    import os
-
-    from pyspark.sql import Window
-
-    from left_join_on_timeout_spark.operators.index_store import (
-        default_index_root,
-    )
-    from left_join_on_timeout_spark.operators.text_index import (
-        text_index_build,
-        text_index_search_many,
-    )
-
     docs = load_table(spark, sf_dir, "documents")
     path = os.path.join(
         default_index_root(),
@@ -1668,9 +1590,9 @@ ndft AS (SELECT term, CAST(count(DISTINCT doc_id) AS DOUBLE) AS df
 nsc AS (SELECT ntf.doc_id,
                round(ln((c.n_docs - ndft.df + 0.5)
                         / (ndft.df + 0.5) + 1.0), 6)
-               * ntf.tf * {_BM25_K1 + 1.0}
-               / (ntf.tf + {_BM25_K1} * ({1.0 - _BM25_B}
-                  + {_BM25_B} * ndl.dl / c.avgdl)) AS s
+               * ntf.tf * {DEFAULT_BM25_K1 + 1.0}
+               / (ntf.tf + {DEFAULT_BM25_K1} * ({1.0 - DEFAULT_BM25_B}
+                  + {DEFAULT_BM25_B} * ndl.dl / c.avgdl)) AS s
         FROM ntf
         JOIN ndft USING (term)
         JOIN ndl ON ndl.doc_id = ntf.doc_id, bcorp c),
@@ -1697,21 +1619,6 @@ def q_stream_text_index_append(spark: SparkSession,
     (the oracle's corpus CTE is the 90% base) until a rebuild
     republishes them — the bounded-staleness contract every appending
     tier documents, here driver-adjudicated through the value hash."""
-    import os
-
-    from left_join_on_timeout_spark.operators.index_store import (
-        default_index_root,
-    )
-    from left_join_on_timeout_spark.operators.retrieval import (
-        top_k_ranked,
-    )
-    from left_join_on_timeout_spark.operators.text_index import (
-        text_index_append,
-        text_index_build,
-        text_index_load,
-        text_index_search,
-    )
-
     docs = load_table(spark, sf_dir, "documents")
     base = docs.where(F.col("doc_id") % 10 != 0)
     arrivals = (docs.where(F.col("doc_id") % 10 == 0)
@@ -1729,7 +1636,7 @@ def q_stream_text_index_append(spark: SparkSession,
     drain_stream(spark, arrivals, foreach_batch=_append)
     index = text_index_load(spark, path)
     scored = text_index_search(index, list(BM25_TERMS),
-                               k1=_BM25_K1, b=_BM25_B)
+                               k1=DEFAULT_BM25_K1, b=DEFAULT_BM25_B)
     return top_k_ranked(scored, "bm25", "doc_id", 20)
 
 
@@ -1769,16 +1676,6 @@ def q_contamination_sweep_saved(spark: SparkSession,
     contaminated docs (zero-hit docs are implicitly clean — the
     audit's deliverable is bounded by the hits); same per-doc
     arithmetic as ``contamination_ngram_overlap``."""
-    import os
-
-    from left_join_on_timeout_spark.operators.index_store import (
-        default_index_root,
-    )
-    from left_join_on_timeout_spark.operators.text_index import (
-        text_index_build,
-        text_index_gram_probe,
-    )
-
     docs = load_table(spark, sf_dir, "documents")
     train = docs.where(F.col("doc_id") % 20 != 0)
     path = os.path.join(
@@ -1825,22 +1722,6 @@ def q_text_bm25_rebuilt_saved(spark: SparkSession,
     match pins that the rebuilt index scores with the refreshed
     statistics, not the build-time 90% ones, and that deleted docs
     neither score nor support df."""
-    import os
-
-    from left_join_on_timeout_spark.operators.index_store import (
-        default_index_root,
-    )
-    from left_join_on_timeout_spark.operators.retrieval import (
-        top_k_ranked,
-    )
-    from left_join_on_timeout_spark.operators.text_index import (
-        text_index_append,
-        text_index_build,
-        text_index_delete,
-        text_index_rebuild,
-        text_index_search,
-    )
-
     docs = load_table(spark, sf_dir, "documents")
     base = docs.where(F.col("doc_id") % 10 != 0)
     arrivals = (docs.where(F.col("doc_id") % 10 == 0)
@@ -1854,7 +1735,7 @@ def q_text_bm25_rebuilt_saved(spark: SparkSession,
     text_index_delete(spark, path, dead)
     index = text_index_rebuild(spark, path)
     scored = text_index_search(index, list(BM25_TERMS),
-                               k1=_BM25_K1, b=_BM25_B)
+                               k1=DEFAULT_BM25_K1, b=DEFAULT_BM25_B)
     return top_k_ranked(scored, "bm25", "doc_id", 20)
 
 
@@ -1870,11 +1751,7 @@ def _hybrid_sweep_oracle() -> str:
     serve (each query vector's probed (sid, sub) cell joined against
     the capped postings, self excluded), and the per-query top-20
     heads fuse through the standard RRF sum, cut to 10 per query."""
-    from left_join_on_timeout_spark.queries_similarity import (
-        _ivf2_train_prefix,
-    )
-
-    vec_ctes = _ivf2_train_prefix(8, 8).replace("\nWITH ", ",\n", 1)
+    vec_ctes = ivf2_train_prefix(8, 8).replace("\nWITH ", ",\n", 1)
     qv = ", ".join(str(q) for q in _HS_QVECS)
     return f"""
 WITH {_sweep_ctes()},
@@ -1939,25 +1816,6 @@ def q_hybrid_search_sweep_saved(spark: SparkSession,
     query-partitioned window, parallel across queries. Per-arm cost
     is one pass regardless of N; the fusion join touches ≤ 40 rows
     per query."""
-    import os
-
-    from pyspark.sql import Window
-
-    from left_join_on_timeout_spark.operators.ann_index import (
-        ivf2_index_build,
-        ivf2_index_search,
-    )
-    from left_join_on_timeout_spark.operators.index_store import (
-        default_index_root,
-    )
-    from left_join_on_timeout_spark.operators.retrieval import (
-        rrf_fuse,
-    )
-    from left_join_on_timeout_spark.operators.text_index import (
-        text_index_build,
-        text_index_search_many,
-    )
-
     docs = load_table(spark, sf_dir, "documents")
     emb = load_table(spark, sf_dir, "embeddings")
     root = default_index_root()
@@ -1965,7 +1823,6 @@ def q_hybrid_search_sweep_saved(spark: SparkSession,
     tpath = os.path.join(root, "textidx_" + base)
     vpath = os.path.join(root, "hybivf_" + base)
     # independent builds, disjoint roots — overlap (guide §2.6)
-    from left_join_on_timeout_spark.concurrency import overlap
     tidx, vidx = overlap([
         lambda: text_index_build(docs, tpath),
         lambda: ivf2_index_build(emb, vpath, n_super=8, k2=8),
@@ -2011,16 +1868,6 @@ def q_crossdoc_dup_saved(spark: SparkSession, sf_dir: str) -> DataFrame:
     tokenize/shingle/distinct pipeline amortized away (plan-gated: no
     documents scan anywhere in the serve plan). Same oracle as the
     fused query: identical per-doc numbers, different lifecycle."""
-    import os
-
-    from left_join_on_timeout_spark.operators.index_store import (
-        default_index_root,
-    )
-    from left_join_on_timeout_spark.operators.text_index import (
-        text_index_build,
-        text_index_dup_stats,
-    )
-
     docs = load_table(spark, sf_dir, "documents")
     path = os.path.join(
         default_index_root(),
@@ -2059,16 +1906,6 @@ def q_contamination_suites_saved(spark: SparkSession,
     regardless of suite count (plan-gated; K sequential single-suite
     probes would pay K scans). Per-(suite, doc) arithmetic is exactly
     ``contamination_sweep_saved``'s."""
-    import os
-
-    from left_join_on_timeout_spark.operators.index_store import (
-        default_index_root,
-    )
-    from left_join_on_timeout_spark.operators.text_index import (
-        text_index_build,
-        text_index_gram_probe_many,
-    )
-
     docs = load_table(spark, sf_dir, "documents")
     train = docs.where(F.col("doc_id") % 20 != 0)
     path = os.path.join(
@@ -2120,16 +1957,6 @@ def q_decontaminate_corpus_saved(spark: SparkSession,
     checkable. Totals count every training doc, including the
     gram-less ones the index never holds (they can never be flagged
     but must appear in the denominator)."""
-    import os
-
-    from left_join_on_timeout_spark.operators.index_store import (
-        default_index_root,
-    )
-    from left_join_on_timeout_spark.operators.text_index import (
-        text_index_build,
-        text_index_gram_probe,
-    )
-
     docs = load_table(spark, sf_dir, "documents")
     train = docs.where(F.col("doc_id") % 20 != 0)
     path = os.path.join(
@@ -2193,19 +2020,6 @@ def q_contamination_rebuilt_saved(spark: SparkSession,
     value-hash match pins that appended docs audit with their
     append-time denominators and deleted docs are physically gone —
     the same arc ``text_bm25_rebuilt_saved`` pins for the word tier."""
-    import os
-
-    from left_join_on_timeout_spark.operators.index_store import (
-        default_index_root,
-    )
-    from left_join_on_timeout_spark.operators.text_index import (
-        text_index_append,
-        text_index_build,
-        text_index_delete,
-        text_index_gram_probe,
-        text_index_rebuild,
-    )
-
     docs = load_table(spark, sf_dir, "documents")
     train = docs.where(F.col("doc_id") % 20 != 0)
     base = train.where(F.col("doc_id") % 10 != 1)
@@ -2255,18 +2069,6 @@ def q_stream_gram_index_append(spark: SparkSession,
     FULL training corpus, so the value hash pins the
     streamed-appends-audit-now contract (the gram twin of
     ``stream_text_index_append``'s tf/df-live pin)."""
-    import os
-
-    from left_join_on_timeout_spark.operators.index_store import (
-        default_index_root,
-    )
-    from left_join_on_timeout_spark.operators.text_index import (
-        text_index_append,
-        text_index_build,
-        text_index_gram_probe,
-        text_index_load,
-    )
-
     docs = load_table(spark, sf_dir, "documents")
     train = docs.where(F.col("doc_id") % 20 != 0)
     base = train.where(F.col("doc_id") % 10 != 1)
@@ -2341,20 +2143,6 @@ def q_decontaminate_indexes_saved(spark: SparkSession,
     postings scan, never a corpus pass. The same loop closes the
     word/vector tiers in pytest (a flagged doc stops serving from
     BM25 search and IVF2 neighbors at the next load)."""
-    import os
-
-    from left_join_on_timeout_spark.operators.index_store import (
-        default_index_root,
-    )
-    from left_join_on_timeout_spark.operators.text_index import (
-        text_index_build,
-        text_index_delete,
-        text_index_gram_probe,
-        text_index_load,
-    )
-
-    from pyspark import StorageLevel
-
     docs = load_table(spark, sf_dir, "documents")
     train = docs.where(F.col("doc_id") % 20 != 0)
     path = os.path.join(
@@ -2401,16 +2189,12 @@ def _decontaminate_all_tiers_sql() -> str:
     BM25 replay (build-time corpus stats over the FULL train corpus,
     tf/df over live postings only — the manifest's bounded-staleness
     contract under deletes), and a post-delete ANN serve replay (the
-    shared `_ivf2_train_prefix` patched onto the train slice of
+    shared `ivf2_train_prefix` patched onto the train slice of
     ``embeddings``, queries and postings both minus the flagged
     ids). Each tier contributes one report row whose checksum is a
     DECIMAL sum over its serve output, so a flagged doc surviving in
     ANY tier — or a live doc wrongly dropped — moves the value hash."""
-    from left_join_on_timeout_spark.queries_similarity import (
-        _ivf2_train_prefix,
-    )
-
-    prefix = _ivf2_train_prefix(8, 8)
+    prefix = ivf2_train_prefix(8, 8)
     assert prefix.count("FROM embeddings") == 1
     prefix = prefix.replace(
         "FROM embeddings",
@@ -2451,9 +2235,9 @@ wdf AS (SELECT term, CAST(count(DISTINCT doc_id) AS DOUBLE) AS df
 wsc AS (SELECT wtf.doc_id,
                round(ln((c.n_docs - wdf.df + 0.5)
                         / (wdf.df + 0.5) + 1.0), 6)
-               * wtf.tf * {_BM25_K1 + 1.0}
-               / (wtf.tf + {_BM25_K1} * ({1.0 - _BM25_B}
-                  + {_BM25_B} * wdl.dl / c.avgdl)) AS s
+               * wtf.tf * {DEFAULT_BM25_K1 + 1.0}
+               / (wtf.tf + {DEFAULT_BM25_K1} * ({1.0 - DEFAULT_BM25_B}
+                  + {DEFAULT_BM25_B} * wdl.dl / c.avgdl)) AS s
         FROM wtf JOIN wdf USING (term)
         JOIN wdl ON wdl.doc_id = wtf.doc_id, wcorp c),
 wbm AS (SELECT doc_id, round(sum(s), 6) AS bm25 FROM wsc
@@ -2532,29 +2316,6 @@ def q_decontaminate_all_tiers_saved(spark: SparkSession,
     everywhere), each tombstone append is MB-sized, and every
     post-delete serve keeps its standalone plan shape — the whole
     loop adds zero corpus passes beyond the three builds."""
-    import os
-
-    from pyspark import StorageLevel
-
-    from left_join_on_timeout_spark.operators.ann_index import (
-        ivf2_index_build,
-        ivf2_index_load,
-        ivf2_index_search,
-    )
-    from left_join_on_timeout_spark.operators.index_store import (
-        default_index_root,
-    )
-    from left_join_on_timeout_spark.concurrency import overlap
-    from left_join_on_timeout_spark.operators.index_admin import (
-        delete_from_indexes,
-    )
-    from left_join_on_timeout_spark.operators.text_index import (
-        text_index_build,
-        text_index_gram_probe,
-        text_index_load,
-        text_index_search,
-    )
-
     docs = load_table(spark, sf_dir, "documents")
     emb = load_table(spark, sf_dir, "embeddings")
     train = docs.where(F.col("doc_id") % 20 != 0)
@@ -2601,7 +2362,8 @@ def q_decontaminate_all_tiers_saved(spark: SparkSession,
              .withColumn("tier", F.lit("gram")))
 
     wa = text_index_search(text_index_load(spark, wx),
-                           list(BM25_TERMS), k1=_BM25_K1, b=_BM25_B)
+                           list(BM25_TERMS), k1=DEFAULT_BM25_K1,
+                           b=DEFAULT_BM25_B)
     w_row = (wa.join(fdoc, "doc_id", "left")
              .agg(F.count(F.lit(1)).alias("n_results_after"),
                   F.coalesce(F.sum("_f"), z).cast("bigint")

@@ -8,6 +8,7 @@ Catalyst gets predicate pushdown + column pruning on every scan.
 
 from __future__ import annotations
 
+import glob
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -27,10 +28,9 @@ def _nanos_ts_columns(path: str) -> list[str]:
     regardless of data size. Accepts a single file or a Spark-style
     directory dataset (first part file's footer — Spark writes one
     schema per dataset)."""
-    import glob
-
-    import pyarrow.parquet as pq
+    # deferred: only a footer read needs pyarrow, not the package import
     import pyarrow as pa
+    import pyarrow.parquet as pq
 
     if os.path.isdir(path):
         parts = sorted(glob.glob(os.path.join(path, "*.parquet")))
@@ -90,6 +90,18 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     for c in ns_cols:
         df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
     return df
+
+
+def events_split(spark: SparkSession,
+                 sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """Flagship fixture (FIXTURES.md F6): views = left stream, purchases =
+    right stream, keyed by user_id with event-time ts."""
+    events = load_table(spark, sf_dir, "events")
+    left = events.where(F.col("event_type") == "view").select(
+        "user_id", "event_id", "ts")
+    right = events.where(F.col("event_type") == "purchase").select(
+        "user_id", "event_id", "ts")
+    return left, right
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -1,8 +1,9 @@
 """Shared DuckDB-SQL fragments for the MinHash/LSH oracle family —
 the SQL twins of ``operators/dedup.py``'s shingle/signature/banding
-helpers. Kept in a leaf module (imports only the dedup operator
-constants, never the query registry) so every ``queries_*`` module can
-compose oracle CTEs from them without import cycles."""
+helpers. A leaf module, like ``registry``: it imports only the dedup
+operator constants, never ``registry`` or a ``queries*`` module, so
+every ``queries_*`` module can compose oracle CTEs from them without
+import cycles."""
 
 from __future__ import annotations
 

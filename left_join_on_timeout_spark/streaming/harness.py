@@ -53,6 +53,10 @@ from left_join_on_timeout_spark.streaming.timeout_join import (
     start_conf,
     state_partitions,
 )
+from left_join_on_timeout_spark.streaming.timer_join import (
+    left_join_on_timeout_timers,
+    left_join_on_timeout_tws,
+)
 
 FLUSH_TS = "2100-01-01 00:00:00"
 
@@ -209,10 +213,6 @@ def run_tws_join_stream(
     session's provider conf is restored once it has started. Same
     SQL-equivalent mode and flush discipline as
     :func:`run_timer_join_stream`."""
-    from left_join_on_timeout_spark.streaming.timer_join import (
-        left_join_on_timeout_tws,
-    )
-
     return drain_two_streams(
         spark, left, right, on,
         lambda l, r: left_join_on_timeout_tws(
@@ -240,10 +240,6 @@ def run_timer_join_stream(
     Runs with ``strict_reference_semantics=False`` (cancel only the
     matched left), the SQL-equivalent mode whose drained output is the
     batch left join's multiset."""
-    from left_join_on_timeout_spark.streaming.timer_join import (
-        left_join_on_timeout_timers,
-    )
-
     return drain_two_streams(
         spark, left, right, on,
         lambda l, r: left_join_on_timeout_timers(

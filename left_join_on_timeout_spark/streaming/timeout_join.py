@@ -51,7 +51,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from left_join_on_timeout_spark.config import TimeoutJoinConfig
-from left_join_on_timeout_spark.operators.timeout_join import Joiner, _prepare
+from left_join_on_timeout_spark.operators.timeout_join import Joiner, prepare
 
 
 # stateful operators whose per-batch work is Python per group, one task
@@ -147,7 +147,7 @@ def left_join_on_timeout_stream(
     l = left.withWatermark(left_ts, _delay_str(delay_ms))
     # rename-before-join keeps self-carved streams unambiguous (same
     # trick as the batch operator) and lets us watermark the renamed col
-    r, cond, l_side, r_side = _prepare(
+    r, cond, l_side, r_side = prepare(
         l, right, on, left_ts, right_ts, cfg.window_ms, right_prefix)
     r = r.withWatermark(f"{right_prefix}{right_ts}", _delay_str(delay_ms))
     out = l.join(r, cond, how)
@@ -203,7 +203,7 @@ def semi_join_stream(
     cfg = TimeoutJoinConfig.of(window, timeout)
     delay_ms = cfg.timeout_ms - cfg.window_ms
     l = left.withWatermark(left_ts, _delay_str(delay_ms))
-    r, cond, _, _ = _prepare(
+    r, cond, _, _ = prepare(
         l, right, on, left_ts, right_ts, cfg.window_ms, right_prefix)
     r = r.withWatermark(f"{right_prefix}{right_ts}", _delay_str(delay_ms))
     return l.join(r, cond, "leftSemi")

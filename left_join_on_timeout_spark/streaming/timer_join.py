@@ -61,9 +61,9 @@ import json
 from typing import Iterator
 
 import pandas as pd
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.streaming.state import GroupStateTimeout
 from pyspark.sql.types import (
     StringType,
     StructField,
@@ -72,7 +72,18 @@ from pyspark.sql.types import (
 )
 
 from left_join_on_timeout_spark.config import TimeoutJoinConfig
+from left_join_on_timeout_spark.operators.timeout_join import Side
 from left_join_on_timeout_spark.streaming import timer_core, tws_runtime
+
+try:
+    from pyspark.sql.streaming.stateful_processor import (
+        ExpiredTimerInfo,
+        StatefulProcessor,
+        StatefulProcessorHandle,
+        TimerValues,
+    )
+except ImportError:  # very old PySpark — adapter simply absent
+    StatefulProcessor = object  # type: ignore[assignment,misc]
 
 # Module-level so Python *workers* (which import this module while
 # unpickling TimeoutJoinProcessor) get google.protobuf on their import
@@ -144,9 +155,8 @@ def _expand(raw: DataFrame, left: DataFrame, right: DataFrame,
         *[l_struct[c].alias(c) for c in left.columns],
         *[r_struct[c].alias(f"{right_prefix}{c}") for c in right.columns])
     if joiner is not None:
-        from left_join_on_timeout_spark.operators.timeout_join import _Side
-        l_side = _Side({c: c for c in left.columns})
-        r_side = _Side({c: f"{right_prefix}{c}" for c in right.columns})
+        l_side = Side({c: c for c in left.columns})
+        r_side = Side({c: f"{right_prefix}{c}" for c in right.columns})
         out = out.withColumn(joined_col, joiner(l_side, r_side))
     return out
 
@@ -285,8 +295,6 @@ def left_join_on_timeout_timers(
     Output column layout matches the other tiers: all left columns,
     right columns under ``{right_prefix}`` (null on timeout), plus
     ``joined_col`` when a joiner is given."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
     cfg, delay_ms = _validated(window, timeout, scheduled_capacity,
                                capacity_policy, time_mode)
     event_time = time_mode == "EventTime"
@@ -308,19 +316,8 @@ def left_join_on_timeout_timers(
 # native tier; its worker protocol needs `protobuf` at runtime
 # ---------------------------------------------------------------------------
 
-def _tws_available() -> bool:
+def tws_available() -> bool:
     return _TWS_READY or tws_runtime.ensure_protobuf()
-
-
-try:
-    from pyspark.sql.streaming.stateful_processor import (
-        ExpiredTimerInfo,
-        StatefulProcessor,
-        StatefulProcessorHandle,
-        TimerValues,
-    )
-except ImportError:  # very old PySpark — adapter simply absent
-    StatefulProcessor = object  # type: ignore[assignment,misc]
 
 
 class TimeoutJoinProcessor(StatefulProcessor):
@@ -440,7 +437,7 @@ def left_join_on_timeout_tws(
     """The ``transformWithStateInPandas`` build of the exact-timer join —
     structurally closest to the reference (ListState + native per-record
     timers). Requires ``protobuf`` in the Python environment."""
-    if not _tws_available():
+    if not tws_available():
         raise ImportError(
             "transformWithStateInPandas needs `google.protobuf` for its "
             "Python worker protocol; neither the pip package nor a host "

@@ -58,6 +58,7 @@ def _pb_real() -> bool:
     if pb is not None and getattr(pb, "__file__", None) is None:
         return False  # cached empty-namespace shadow
     try:
+        # the probe itself: protobuf is optional and may be a shadow
         from google.protobuf import descriptor  # noqa: F401
         return True
     except ImportError:
@@ -66,7 +67,7 @@ def _pb_real() -> bool:
 
 def ensure_protobuf() -> bool:
     """Make ``google.protobuf`` importable; True if it (now) is."""
-    import importlib.util
+    import importlib.util  # only a host-root protobuf load needs it
 
     if _pb_real():
         return True

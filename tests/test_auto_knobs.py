@@ -250,7 +250,6 @@ def test_ivf_binding_cap_counts_primaries_only(spark):
     and the parametric DuckDB oracle agrees exactly. Under the old
     count(*)-over-all-probe-rows semantics both cells here would be
     evicted and the result would be empty."""
-    import left_join_on_timeout_spark.queries  # noqa: F401 (registry import order)
     from left_join_on_timeout_spark.queries_similarity import _ivf_oracle
     from tools.check_oracle import compare
 
@@ -294,7 +293,6 @@ def test_ivf2_binding_cap_matches_oracle(spark):
     on the 24-row corpus — both engines drop exactly the same rows."""
     import pandas as pd
 
-    import left_join_on_timeout_spark.queries  # noqa: F401 (registry import order)
     from left_join_on_timeout_spark.operators.similarity import (
         ivf2_top_neighbor,
     )

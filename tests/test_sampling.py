@@ -6,7 +6,7 @@ from __future__ import annotations
 import pytest
 
 from left_join_on_timeout_spark.operators.sampling import (
-    _threshold,
+    gate_threshold,
     hash_sample,
     stratified_sample,
 )
@@ -18,12 +18,12 @@ def ids(spark):
 
 
 def test_threshold_encoding():
-    assert _threshold(0.0) == "0000"
-    assert _threshold(0.1) == "1999"
-    assert _threshold(0.5) == "8000"
-    assert _threshold(1.0) == "ffff"  # clamped; rate>=1 bypasses the gate
+    assert gate_threshold(0.0) == "0000"
+    assert gate_threshold(0.1) == "1999"
+    assert gate_threshold(0.5) == "8000"
+    assert gate_threshold(1.0) == "ffff"  # clamped; rate>=1 bypasses the gate
     with pytest.raises(ValueError):
-        _threshold(1.5)
+        gate_threshold(1.5)
 
 
 def test_uniform_rate_and_determinism(ids):

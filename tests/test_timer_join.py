@@ -375,9 +375,9 @@ def test_tws_join_and_timeout_e2e(spark):
     reference's per-record ``ScheduledFuture``s): one left matches
     in-window, the other's timer fires a timeout emission."""
     from left_join_on_timeout_spark.streaming.timer_join import (
-        _tws_available,
+        tws_available,
     )
-    if not _tws_available():
+    if not tws_available():
         pytest.skip("no google.protobuf for the tws worker protocol")
     from left_join_on_timeout_spark.streaming.harness import (
         run_tws_join_stream,
@@ -402,9 +402,9 @@ def test_tws_processing_time_mode(spark, tmp_path):
     its trigger and the sink polled (the reference's Awaitility
     polling, ``LeftJoinOnTimeoutTest.java:221-235``)."""
     from left_join_on_timeout_spark.streaming.timer_join import (
-        _tws_available,
+        tws_available,
     )
-    if not _tws_available():
+    if not tws_available():
         pytest.skip("no google.protobuf for the tws worker protocol")
     import time
 
@@ -458,10 +458,10 @@ def test_tws_checkpoint_restart(spark, tmp_path):
     structurally-matching store. After restart one pending left matches,
     the other's native timer fires — each exactly once."""
     from left_join_on_timeout_spark.streaming.timer_join import (
-        _tws_available,
+        tws_available,
         left_join_on_timeout_tws,
     )
-    if not _tws_available():
+    if not tws_available():
         pytest.skip("no google.protobuf for the tws worker protocol")
 
     base = str(tmp_path)

@@ -6,8 +6,7 @@ from __future__ import annotations
 
 import os
 
-# the query registry first: it imports queries_pipeline in its order
-import left_join_on_timeout_spark.queries  # noqa: F401
+import pytest
 
 
 def test_tracked_persists_release(spark):
@@ -43,3 +42,23 @@ def test_tracked_index_tree_under_a_file_uri_root_is_removed(spark, tmp_path):
     release_tracked_persists()
     assert not os.path.exists(local)
     assert os.path.isdir(tmp_path)
+
+
+def test_release_runs_every_cleanup_then_raises_the_first_failure(spark):
+    from left_join_on_timeout_spark.queries_pipeline import (
+        _TRACKED_CLEANUPS,
+        release_tracked_persists,
+    )
+
+    release_tracked_persists()
+    ran = []
+
+    def fail():
+        raise OSError("delete failed")
+
+    _TRACKED_CLEANUPS.extend(
+        [lambda: ran.append("a"), fail, lambda: ran.append("b")])
+    with pytest.raises(OSError, match="delete failed"):
+        release_tracked_persists()
+    assert sorted(ran) == ["a", "b"]
+    assert not _TRACKED_CLEANUPS

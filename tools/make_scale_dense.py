@@ -50,7 +50,7 @@ OFFSET = 10_000_000
 
 
 def main() -> None:
-    from left_join_on_timeout_spark.operators.sampling import _threshold
+    from left_join_on_timeout_spark.operators.sampling import gate_threshold
 
     out = sys.argv[1] if len(sys.argv) > 1 else "/root/repo/.scale/sf100x_dense"
     factor = int(sys.argv[2]) if len(sys.argv) > 2 else 100
@@ -58,7 +58,7 @@ def main() -> None:
     # the library's md5-gate threshold (clamped to the 4-hex space — a
     # hand-rolled format() would emit a 5-char string at dup_rate=1.0
     # and the lexicographic compare would silently gate ~6%)
-    gate_hex = _threshold(dup_rate)
+    gate_hex = gate_threshold(dup_rate)
     os.makedirs(out, exist_ok=True)
     spark = get_spark(app_name="make_scale_dense")
     spark.sparkContext.setLogLevel("ERROR")

@@ -25,9 +25,6 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import left_join_on_timeout_spark.queries  # noqa: F401  (registry first:
-# queries_text cannot be imported standalone — its decorator import
-# triggers the registry's ordered module chain, which re-enters it)
 from left_join_on_timeout_spark.operators.retrieval import (
     bm25_scores,
     top_k_ranked,

@@ -29,7 +29,6 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import left_join_on_timeout_spark.queries  # noqa: F401  (registry first)
 from left_join_on_timeout_spark.operators.retrieval import (
     bm25_scores,
     top_k_ranked,
